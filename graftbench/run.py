@@ -1,6 +1,6 @@
 """graft benchmark: one command per named workload.
 
-    python3 graftbench/run.py --workload <inventory|flagship|serve|scenario> \
+    python3 graftbench/run.py --workload <inventory|serve> \
         --seed <n> --seconds <s> --trace <0|1>
     python3 graftbench/run.py --selftest      # the benchmark's own tests
 
@@ -14,6 +14,7 @@ import argparse
 import json
 import os
 import re
+import signal
 import subprocess
 import sys
 
@@ -21,7 +22,7 @@ sys.dont_write_bytecode = True  # keep the checkout free of __pycache__
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 import build  # noqa: E402
 
-WORKLOADS = ("inventory", "flagship", "serve", "scenario")
+WORKLOADS = ("inventory", "serve")
 SF_TABLES = ("customer", "documents", "embeddings", "events", "lineitem",
              "nation", "orders", "part", "region", "supplier")
 MAX_HEAP_GB = 24  # above 32g CompressedOops turn off; keep well below
@@ -70,6 +71,9 @@ def nproc():
 
 
 def main():
+    # a SIGTERM unwinds like an exception, so the build or benchmark JVM in
+    # flight is stopped and waited for below
+    signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
     ap = argparse.ArgumentParser()
     ap.add_argument("--workload", choices=WORKLOADS)
     ap.add_argument("--seed", type=int, default=1)

@@ -13,18 +13,18 @@ import graft.render.Renderers.{World, WorldRegistry}
   * it runs on the program's outputs. */
 object Inputs {
 
-  /** Centre of the hot point cluster that imagesMeta and the sf points share. */
+  /** Centre of the hot point cluster of the sf points (`Fixtures.points`). */
   val HotLat = 51.53535
   val HotLng = -0.12575
 
   /**
-   * A seeded fleet of `n` pentagons shaped like `Fixtures.benchPolygons`
-   * (radius 0.15–1.25 km). The radii are a seeded permutation of a fixed
-   * evenly spaced list, and exactly one pentagon covers the hot point
-   * cluster, so that every seed asks the join for about the same work.
+   * The serving world's fleet of `n` pentagons shaped like
+   * `Fixtures.benchPolygons` (radius 0.15–1.25 km), the same for every seed:
+   * evenly spaced radii at fixed random places, and one pentagon over the
+   * hot point cluster.
    */
-  def fleet(seed: Long, n: Int = 200): Vector[(Long, Geometry)] = {
-    val rnd = new scala.util.Random(seed * 7919L + 17L)
+  def fleet(n: Int = 200): Vector[(Long, Geometry)] = {
+    val rnd = new scala.util.Random(20240917L)
     val radii = rnd.shuffle((1 until n).map(i => 0.15 + 1.1 * i / (n - 1)).toVector)
     def pentagon(cLat: Double, cLng: Double, rKm: Double): Geometry = {
       val rLat = rKm / 111.19

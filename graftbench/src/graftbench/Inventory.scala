@@ -4,13 +4,14 @@ import scala.collection.mutable.ArrayBuffer
 import graft.SparkEntry
 
 /**
- * `inventory`: closed loop, one client, over the sf0.1 tables. A warm-up pass
- * (which is also the output check) runs every query once; timed passes then
- * repeat the query set in a seeded order until the time is up. The query set
+ * `inventory`: closed loop, one client, over the sf0.1 tables. Set-up builds
+ * every query's DataFrame from an empty cache, three times; a checked pass of
+ * every query follows as the warm-up; timed passes then repeat the query set
+ * in a seeded order until the time is up. The query set
  * is a fixed cross-section of `SparkEntry.queries`: query algebra, the PIP
  * join, three multi-job chains named for job-chain cuts (ag_percentiles,
- * gr_od_hist, sl_polygon) and tile rendering, small enough that the cold
- * pass and a few warm passes fit one run.
+ * gr_od_hist, sl_polygon) and tile rendering, small enough that the set-up
+ * and a few warm passes fit one run.
  */
 object Inventory {
 
@@ -31,6 +32,9 @@ object Inventory {
   case class Run(pass: Int, query: String, op: String, wallMs: Double, buildMs: Double,
                  traced: Boolean, startUs: Long, endUs: Long, outcome: Outcome)
 
+  /** How many times a run sets up; it reports the median. */
+  val SetupReps = 3
+
   def run(ctx: Ctx): Result = {
     val spark = ctx.spark
     val sf = ctx.args.sf
@@ -38,7 +42,18 @@ object Inventory {
     val want = expected()
     val outcomes = ArrayBuffer[Outcome]()
 
-    // warm-up pass = output check, outside the timed region
+    // set-up, `SetupReps` times from an empty cache: build every query's
+    // DataFrame, with the jobs the builders start eagerly
+    val reps = (1 to SetupReps).map { rep =>
+      val r0 = System.nanoTime()
+      spark.catalog.clearCache()
+      Queries.foreach { q =>
+        outcomes += Attempt { ctx.group(s"setup$rep-$q")(fns(q)(spark, sf)); Outcome.Ok }
+      }
+      (System.nanoTime() - r0) / 1e9
+    }
+    ctx.setupReps(reps)
+    // the output check, once, which is also the warm-up
     val coldMs = Queries.map { q =>
       val t0 = System.nanoTime()
       outcomes += Attempt {
@@ -52,13 +67,6 @@ object Inventory {
       (System.nanoTime() - t0) / 1e6
     }
 
-    ctx.mark("checked_warmup")
-    // one more untimed pass: the warm passes after the cold one still speed
-    // up (JIT, and data that PersistOnce keeps pinned), so start timing later
-    Queries.foreach { q =>
-      outcomes += Attempt { fns(q)(spark, sf).write.format("noop").mode("overwrite").save(); Outcome.Ok }
-    }
-    ctx.mark("warm_pass")
     val tracer = ctx.tracer
     val gc0 = ctx.gcSeconds()
     ctx.timedStart()
@@ -71,22 +79,25 @@ object Inventory {
     while (System.nanoTime() < deadline || (ctx.args.trace && pass < 2)) {
       val order = new scala.util.Random(ctx.args.seed * 1000003L + pass).shuffle(Queries)
       val traced = tracer.isDefined && pass % 2 == 1
-      tracer.foreach(_.on = traced)
       val p0 = System.nanoTime()
-      ctx.span(s"pass-$pass", "pass") {
+      ctx.span(s"pass-$pass", "pass", traced) {
         order.foreach { q =>
           val op = s"p$pass-$q"
           var buildMs = 0.0
           val s0 = tracer.map(_.nowUs()).getOrElse(0L)
           val t0 = System.nanoTime()
+          def body(): Unit = ctx.group(op) {
+            ctx.span(op, "query", traced) {
+              val b0 = System.nanoTime()
+              val df = ctx.span(op, "build", traced)(fns(q)(spark, sf))
+              buildMs = (System.nanoTime() - b0) / 1e6
+              ctx.span(op, "action", traced)(df.write.format("noop").mode("overwrite").save())
+            }
+          }
           val o = Attempt {
-            ctx.group(op) {
-              ctx.span(op, "query") {
-                val b0 = System.nanoTime()
-                val df = ctx.span(op, "build")(fns(q)(spark, sf))
-                buildMs = (System.nanoTime() - b0) / 1e6
-                ctx.span(op, "action")(df.write.format("noop").mode("overwrite").save())
-              }
+            tracer match {
+              case Some(t) if traced => t.traced(op)(body())
+              case _ => body()
             }
             Outcome.Ok
           }
@@ -97,7 +108,6 @@ object Inventory {
       passS += (System.nanoTime() - p0) / 1e9
       pass += 1
     }
-    tracer.foreach(_.on = false)
     val windowGc = ctx.gcSeconds() - gc0
     outcomes ++= runs.map(_.outcome)
 
@@ -126,10 +136,11 @@ object Inventory {
     }
     val e2e = Seq(Metric("setup_s", ctx.setupS, "s"), Metric("gmean_ms", Stats.gmean(perQueryMedian), "ms"))
     val layers = tracer.map { t =>
+      t.settle()
       val tr = runs.filter(_.traced).toSeq
       val wallS = tr.map(_.wallMs).sum / 1000
       val perQuery = tr.map { r =>
-        val c = t.countersOf(r.op)
+        val c = t.countersOf(Set(r.op))
         val eager = t.jobsOf(r.op).count(j => j.startUs >= r.startUs && j.startUs <= r.startUs + (r.buildMs * 1000).toLong)
         (r, c, eager, t.outsideJobsUs(r.op, r.startUs, r.endUs) / 1e6)
       }
@@ -143,7 +154,7 @@ object Inventory {
         if (a.isEmpty || b.isEmpty) None else Some(Stats.median(a) / Stats.median(b))
       }
       val n = tr.length.max(1)
-      t.operatorLayers(tr.map(_.op), tr.length, wallS, ctx.args.nproc) ++ ctx.storageLayers() ++ Map(
+      t.operatorLayers(tr.map(_.op), wallS, ctx.args.nproc) ++ ctx.storageLayers() ++ Map(
         "driver.outside_jobs_s" -> perQuery.map(_._4).sum / n,
         "operators.build_ms" -> tr.map(_.buildMs).sum / n,
         "operators.eager_jobs" -> perQuery.map(_._3).sum.toDouble / n,

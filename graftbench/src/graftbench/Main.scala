@@ -20,25 +20,24 @@ case class Result(outcomes: Seq[Outcome], e2e: Seq[Metric], layers: Map[String, 
 final class Ctx(val spark: SparkSession, val args: Args) {
   val tracer: Option[Tracer] = if (args.trace) Some(new Tracer(spark)) else None
   private val jvmStartMs = ManagementFactory.getRuntimeMXBean.getStartTime
+  private val sessionS = (System.currentTimeMillis() - jvmStartMs) / 1000.0
+  private var reps = Seq.empty[Double]
   private var firstTimedMs = 0L
 
-  private val marks = scala.collection.mutable.ArrayBuffer[(String, Long)]()
+  /** Records the seconds of each repetition of the workload's set-up. */
+  def setupReps(s: Seq[Double]): Unit = reps = s
 
-  /** Records the end of a set-up phase, for the `setup` detail line. */
-  def mark(phase: String): Unit = marks += phase -> System.currentTimeMillis()
+  /** Marks the start of the first timed operation. */
+  def timedStart(): Unit = if (firstTimedMs == 0L) firstTimedMs = System.currentTimeMillis()
 
-  def setupLine: String = {
-    val ends = marks.map(_._2)
-    val starts = jvmStartMs +: ends
-    "setup " + marks.zip(starts).map { case ((p, e), s) => f"$p=${(e - s) / 1000.0}%.2fs" }.mkString(" ")
-  }
+  /** Set-up time: JVM start to a ready Spark session, plus the median of the
+    * workload's set-up repetitions (`setupReps`). */
+  def setupS: Double = sessionS + Stats.median(reps)
 
-  /** Marks the start of the first timed operation: set-up ends here. */
-  def timedStart(): Unit = if (firstTimedMs == 0L) {
-    mark("rest")
-    firstTimedMs = System.currentTimeMillis()
-  }
-  def setupS: Double = (firstTimedMs - jvmStartMs) / 1000.0
+  def setupLine: String =
+    f"setup setup_s=$setupS%.3f session_s=$sessionS%.3f reps_s=${reps.map(x => f"$x%.3f").mkString(",")} " +
+      f"to_first_timed_s=${(firstTimedMs - jvmStartMs) / 1000.0}%.3f"
+
   def deadlineNs(from: Long): Long = from + args.seconds * 1000000000L
 
   /** Runs `body` with the Spark job group set to the operation id. */
@@ -48,9 +47,10 @@ final class Ctx(val spark: SparkSession, val args: Args) {
     try body finally sc.clearJobGroup()
   }
 
-  def span[T](op: String, name: String)(body: => T): T = tracer match {
-    case Some(t) => t.span(op, name)(body)
-    case None => body
+  /** Runs `body` in a span when `traced`. */
+  def span[T](op: String, name: String, traced: Boolean)(body: => T): T = tracer match {
+    case Some(t) if traced => t.span(op, name)(body)
+    case _ => body
   }
 
   /** Pinned RDDs and their storage: what PersistOnce and the workload's own
@@ -60,11 +60,6 @@ final class Ctx(val spark: SparkSession, val args: Args) {
     Map("functions.persisted_rdds" -> sc.getPersistentRDDs.size.toDouble,
       "functions.storage_mb" -> sc.getRDDStorageInfo.map(i => i.memSize + i.diskSize).sum / 1048576.0)
   }
-
-  /** 100 × (median traced / median untraced − 1). */
-  def overheadPct(traced: Seq[Double], untraced: Seq[Double]): Double =
-    if (traced.isEmpty || untraced.isEmpty) 0.0
-    else 100.0 * (Stats.median(traced) / Stats.median(untraced) - 1.0)
 
   def gcSeconds(): Double =
     ManagementFactory.getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime.max(0L)).sum / 1000.0
@@ -82,7 +77,7 @@ object Main {
     "operators.spill_mb", "operators.skew", "operators.busy",
     "shell.parse_ms", "shell.compile_ms", "query.find_ms",
     "render.tile_ms", "render.tile_kb", "render.apply_change_ms") ++
-    Serve.OpTypes.map(o => s"server.service_ms.$o") ++ Seq(
+    Serve.AllTypes.map(o => s"server.service_ms.$o") ++ Seq(
     "server.transport_ms", "server.wait_ms", "server.gen_lag_ms", "server.max_rps",
     "functions.persisted_rdds", "functions.storage_mb", "jvm.gc_s", "trace.overhead_pct")
 
@@ -130,12 +125,9 @@ object Main {
       s"jdk=${System.getProperty("java.version")} scala=${scala.util.Properties.versionNumberString} " +
       s"sf=${a.sf}")
     val ctx = new Ctx(spark, a)
-    ctx.mark("session")
     val r = a.workload match {
       case "inventory" => Inventory.run(ctx)
-      case "flagship" => Flagship.run(ctx)
       case "serve" => Serve.runServe(ctx)
-      case "scenario" => Serve.runScenario(ctx)
       case w => throw new IllegalArgumentException(s"unknown workload $w")
     }
     println(ctx.setupLine)

@@ -38,12 +38,14 @@ object Attempt {
 
 object OpenLoop {
 
-  /** A seeded Poisson process conditioned on its count: `n` arrivals over
-    * `seconds`, as sorted uniform offsets. Fixing the count lets a run hold
-    * whole blocks of the operation mix. */
+  /** Seeded Poisson arrivals: `n` offsets over `seconds`, whose gaps are the
+    * exponential distribution's n quantiles at (i + 0.5) / n, scaled to end
+    * where n uniform arrivals would on average, in an order the seed draws.
+    * Every seed gets the same gaps, so the same bursts, at other places. */
   def poissonArrivals(seed: Long, n: Int, seconds: Double): Vector[Double] = {
-    val rnd = new scala.util.Random(seed)
-    Vector.fill(n)(rnd.nextDouble() * seconds).sorted
+    val gaps = (0 until n).map(i => -math.log(1 - (i + 0.5) / n))
+    val scale = seconds * n / (n + 1) / gaps.sum
+    new scala.util.Random(seed).shuffle(gaps).scanLeft(0.0)(_ + _ * scale).tail.toVector
   }
 
   /** Send `ops(i)` at `offsets(i)` seconds after the start, whatever the state

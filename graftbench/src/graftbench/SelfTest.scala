@@ -64,15 +64,23 @@ object SelfTest {
       check(free.drop(1).forall(_.latencyMs < 300), "with spare connections later requests do not wait")
     }
 
-    test("seeded schedule: same seed, same arrivals, as many as asked") {
+    test("seeded schedule: same seed, same arrivals; every seed, the same gaps") {
       val a = OpenLoop.poissonArrivals(42, 1000, 500.0)
       check(a == OpenLoop.poissonArrivals(42, 1000, 500.0), "same seed differs")
       check(a != OpenLoop.poissonArrivals(43, 1000, 500.0), "different seeds agree")
-      check(a.length == 1000 && a == a.sorted && a.forall(t => t >= 0 && t < 500), "offsets sorted within the window")
-      // a Poisson process given its count: gaps are exponential, mean 0.5 s
-      val gaps = a.zip(a.tail).map { case (x, y) => y - x }
-      check(math.abs(Stats.mean(gaps) - 0.5) < 0.05, s"mean gap ${Stats.mean(gaps)}")
-      check(math.abs(Stats.median(gaps) - 0.5 * math.log(2)) < 0.06, s"median gap ${Stats.median(gaps)}")
+      check(a.length == 1000 && a == a.sorted && a.forall(t => t > 0 && t < 500), "offsets sorted within the window")
+      def gaps(xs: Vector[Double]) = (0.0 +: xs).zip(xs).map { case (x, y) => y - x }
+      val g = gaps(a)
+      check(gaps(OpenLoop.poissonArrivals(43, 1000, 500.0)).sorted.zip(g.sorted).forall { case (x, y) => close(x, y) },
+        "seeds differ in their gaps")
+      // exponential gaps, mean 500 / 1001 s
+      check(math.abs(Stats.mean(g) - 500.0 / 1001) < 1e-9, s"mean gap ${Stats.mean(g)}")
+      check(math.abs(Stats.median(g) / Stats.mean(g) - math.log(2)) < 0.01, s"median gap ${Stats.median(g)}")
+    }
+
+    test("serve figure: geometric mean over types of each type's median") {
+      val xs = Seq("a" -> 100.0, "a" -> 900.0, "a" -> 110.0, "b" -> 400.0, "b" -> 390.0, "b" -> 5000.0)
+      check(close(Serve.typeGmean(xs), math.sqrt(110.0 * 400.0)), s"typeGmean ${Serve.typeGmean(xs)}")
     }
 
     test("failure counting: exceptions and wrong outputs fail, and all are attempted") {

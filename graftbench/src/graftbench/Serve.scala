@@ -4,20 +4,30 @@ import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.time.Duration
 import scala.collection.mutable.ArrayBuffer
+import com.sun.net.httpserver.HttpServer
 import org.apache.spark.sql.DataFrame
 import org.locationtech.jts.geom.prep.PreparedGeometryFactory
 import graft.core.GeoOps
 import graft.operators.Changes
 import graft.query.{And, IntersectsCap, Keyed, QueryPlanner, Tagged}
 import graft.render.Renderers
-import graft.render.Renderers.WorldId
+import graft.render.Renderers.{WorldId, WorldRegistry}
 import graft.server.EvaluateService
 import graft.shell.Shell
 import Inputs.Pt
 
+/** The parameters of one request of the fixed list. `hot` requests are
+  * centred on the hot point cluster. */
+case class Req(kind: String, amenity: String, lat: Double, lng: Double, radius: Double, take: Int,
+               hot: Boolean) {
+  /** The type the request is summarised under. */
+  def group: String = if (hot) s"hot_$kind" else kind
+}
+
 /** A request the load generator sends, with the check of its response. */
-case class Op(kind: String, expr: String, world: Option[String], tile: Option[(Long, Long)],
-              query: Option[graft.query.Query], check: Reply => Outcome) {
+case class Op(req: Req, expr: String, tile: Option[(Long, Long)], query: Option[graft.query.Query],
+              check: Reply => Outcome) {
+  def kind: String = req.group
   def lazyExpr: String = expr.split(" \\| ").filterNot(s => s == "count" || s.startsWith("take")).mkString(" | ")
 }
 
@@ -26,28 +36,42 @@ case class Reply(status: Int, kind: String, json: String, bytes: Array[Byte])
 
 /**
  * The serving world and its two HTTP front doors (`EvaluateService.serve`,
- * `Renderers.serveTiles`), running in this process, plus a loopback client.
- * Shared by the `serve` and `scenario` workloads.
+ * `Renderers.serveTiles`), running in this process, plus a loopback client
+ * and the brute-force expectations of every request.
  */
 final class Served(ctx: Ctx) {
   val spark = ctx.spark
-  val fleet = Inputs.fleet(ctx.args.seed)
-  val world: DataFrame = Inputs.world(spark, ctx.args.sf, fleet).cache()
-  world.count()
-  ctx.mark("world")
-  val reg = Inputs.registry(spark, world)
-  val pts: Vector[Pt] = Inputs.points(world)
-  ctx.mark("points")
+  private val fleet = Inputs.fleet()
   private val polys = fleet.map { case (_, g) => (g.getEnvelopeInternal, PreparedGeometryFactory.prepare(g)) }
-  private val evalServer = EvaluateService.serve(reg)
-  private val tileServer = Renderers.serveTiles(reg)
-  private val evalUri = URI.create(s"http://127.0.0.1:${evalServer.getAddress.getPort}/evaluate")
-  private val tileBase = s"http://127.0.0.1:${tileServer.getAddress.getPort}/tiles"
+  var world: DataFrame = _
+  var reg: WorldRegistry = _
+  private var servers: Seq[HttpServer] = Nil
+  private var evalUri: URI = _
+  private var tileBase = ""
+  /** The world's points on the driver, for the brute-force checks. */
+  lazy val pts: Vector[Pt] = Inputs.points(world)
   private val client = HttpClient.newBuilder().version(HttpClient.Version.HTTP_1_1)
     .connectTimeout(Duration.ofSeconds(10)).build()
   val Timeout: Duration = Duration.ofSeconds(60)
 
-  def close(): Unit = { evalServer.stop(0); tileServer.stop(0) }
+  /** The program's set-up, from nothing: build and cache the world, make its
+    * registry, start both servers. Drops what an earlier call built. */
+  def buildWorld(): Unit = {
+    close()
+    if (world != null) world.unpersist(blocking = true)
+    world = Inputs.world(spark, ctx.args.sf, fleet).cache()
+    world.count()
+  }
+
+  def startServers(): Unit = {
+    reg = Inputs.registry(spark, world)
+    val (ev, tl) = (EvaluateService.serve(reg), Renderers.serveTiles(reg))
+    servers = Seq(ev, tl)
+    evalUri = URI.create(s"http://127.0.0.1:${ev.getAddress.getPort}/evaluate")
+    tileBase = s"http://127.0.0.1:${tl.getAddress.getPort}/tiles"
+  }
+
+  def close(): Unit = { servers.foreach(_.stop(0)); servers = Nil }
 
   private val ResultRe = "(?s)\\{\"type\":\"([^\"]*)\",\"result\":(.*)\\}".r
 
@@ -58,8 +82,7 @@ final class Served(ctx: Ctx) {
       val r = client.send(req, HttpResponse.BodyHandlers.ofByteArray())
       Reply(r.statusCode(), "tile", "", r.body())
     case None =>
-      val body = "{\"expression\":\"" + Json.esc(op.expr) + "\"" +
-        op.world.map(w => ",\"world\":\"" + Json.esc(w) + "\"").getOrElse("") + ",\"version\":\"1\"}"
+      val body = "{\"expression\":\"" + Json.esc(op.expr) + "\",\"version\":\"1\"}"
       val req = HttpRequest.newBuilder(evalUri).timeout(Timeout)
         .header("Content-Type", "application/json")
         .POST(HttpRequest.BodyPublishers.ofString(body)).build()
@@ -79,7 +102,7 @@ final class Served(ctx: Ctx) {
 
   def exchange(op: Op): Outcome = request(op)()
 
-  // ---- seeded operations and their expected results -------------------------
+  // ---- the fixed request list and its expected results ------------------------
 
   private def long(r: Reply): Option[Long] = if (r.kind == "long") r.json.trim.toLongOption else None
 
@@ -101,42 +124,58 @@ final class Served(ctx: Ctx) {
     polys.count { case (env, pg) => env.contains(p.lng, p.lat) && pg.covers(pt) }.toLong
   }.sum
 
-  /** Points away from the hot cluster: caps and tiles centred there would
-    * make one request 30× another and the per-run median a lottery. */
-  private lazy val diffuse = pts.filter(p =>
-    GeoOps.haversineMeters(p.lat, p.lng, Inputs.HotLat, Inputs.HotLng) > 1500)
+  private def near(p: Pt, m: Double): Boolean = GeoOps.haversineMeters(p.lat, p.lng, Inputs.HotLat, Inputs.HotLng) < m
 
-  def makeOp(kind: String, rnd: scala.util.Random): Op = {
-    val a = Inputs.Amenities(rnd.nextInt(Inputs.Amenities.length))
-    val c = diffuse(rnd.nextInt(diffuse.length))
-    val r = math.rint(400 + rnd.nextDouble() * 400)
-    val cap = f"(intersecting-cap ${c.lat}%.6f, ${c.lng}%.6f $r%.1f)"
+  /** Requests of block `k`, the same for every seed: one of each type, centred
+    * on points away from the hot cluster, plus a containing-areas count
+    * centred in it. A request centred in the cluster costs many times one
+    * outside, so every block holds the same number of them. */
+  def block(k: Int): Seq[Req] = {
+    val rnd = new scala.util.Random(7001L * (k + 1))
+    val diffuse = pts.filter(p => !near(p, 1500))
+    val normal = Serve.OpTypes.map { kind =>
+      val a = Inputs.Amenities(rnd.nextInt(Inputs.Amenities.length))
+      val cands = if (kind == "tile") diffuse.filter(_.amenity == a) else diffuse
+      val c = cands(rnd.nextInt(cands.length))
+      Req(kind, a, c.lat, c.lng, math.rint(400 + rnd.nextDouble() * 400), 5 + rnd.nextInt(46), hot = false)
+    }
+    val inside = pts.filter(p => near(p, Serve.HotCapM) && p.amenity == "cafe")
+    val hots = Serve.HotTypes.map(_.stripPrefix("hot_")).map { kind =>
+      val c = inside(rnd.nextInt(inside.length))
+      Req(kind, "cafe", c.lat, c.lng, Serve.HotCapM, 0, hot = true)
+    }
+    normal ++ hots
+  }
+
+  def op(q: Req): Op = {
+    val a = q.amenity
+    val cap = f"(intersecting-cap ${q.lat}%.6f, ${q.lng}%.6f ${q.radius}%.1f)"
     // the centre as printed, so the brute force sees the same cap
-    val (cLat, cLng) = (f"${c.lat}%.6f".toDouble, f"${c.lng}%.6f".toDouble)
+    val (cLat, cLng) = (f"${q.lat}%.6f".toDouble, f"${q.lng}%.6f".toDouble)
     val tagged = Tagged("#amenity", a)
-    val capQ = IntersectsCap(cLat, cLng, r)
-    kind match {
+    val capQ = IntersectsCap(cLat, cLng, q.radius)
+    val kind = q.group
+    q.kind match {
       case "tag_count" =>
         val want = pts.count(_.amenity == a).toLong
-        Op(kind, s"find [#amenity=$a] | count", None, None, Some(tagged), rep => inBand(kind, long(rep), want, want))
+        Op(q, s"find [#amenity=$a] | count", None, Some(tagged), rep => inBand(kind, long(rep), want, want))
       case "cap_count" =>
-        val (lo, hi) = capPts(cLat, cLng, r, Some(a))
-        Op(kind, s"find (and [#amenity=$a] $cap) | count", None, None, Some(And(Seq(tagged, capQ))),
+        val (lo, hi) = capPts(cLat, cLng, q.radius, Some(a))
+        Op(q, s"find (and [#amenity=$a] $cap) | count", None, Some(And(Seq(tagged, capQ))),
           rep => inBand(kind, long(rep), lo.length, hi.length))
       case "take" =>
-        val n = 5 + rnd.nextInt(46)
-        Op(kind, s"find [#amenity=$a] | take $n", None, None, Some(tagged), rep =>
+        val n = q.take
+        Op(q, s"find [#amenity=$a] | take $n", None, Some(tagged), rep =>
           if (rep.kind == "collection" && Inputs.jsonRows(rep.json) == n) Outcome.Ok
           else Outcome.fail(s"take: ${rep.kind} with ${Inputs.jsonRows(rep.json)} rows, expected $n"))
       case "containing_areas" =>
-        val (lo, hi) = capPts(cLat, cLng, r, Some(a))
+        val (lo, hi) = capPts(cLat, cLng, q.radius, Some(a))
         val (pl, ph) = (pairs(lo), pairs(hi))
-        Op(kind, s"find (and [#amenity=$a] $cap) | containing-areas | count", None, None,
-          Some(And(Seq(tagged, capQ))),
+        Op(q, s"find (and [#amenity=$a] $cap) | containing-areas | count", None, Some(And(Seq(tagged, capQ))),
           rep => inBand(kind, long(rep), pl, ph))
       case "count_values" =>
-        val (lo, hi) = capPts(cLat, cLng, r, None)
-        Op(kind, s"""find (and [#amenity] $cap) | map {f -> get f "#amenity"} | count-values""", None, None,
+        val (lo, hi) = capPts(cLat, cLng, q.radius, None)
+        Op(q, s"""find (and [#amenity] $cap) | map {f -> get f "#amenity"} | count-values""", None,
           Some(And(Seq(Keyed("#amenity"), capQ))), { rep =>
           val ns = "\"n\":(\\d+)".r.findAllMatchIn(rep.json).map(_.group(1).toLong).toSeq
           val rows = Inputs.jsonRows(rep.json)
@@ -145,168 +184,187 @@ final class Served(ctx: Ctx) {
           else Outcome.fail(s"count_values: ${rep.kind} rows=$rows sum=${ns.sum}, expected ${lo.length}..${hi.length}")
         })
       case "tile" =>
-        val p = diffuse.filter(_.amenity == a).apply(rnd.nextInt(diffuse.count(_.amenity == a)))
-        val (x, y) = (GeoOps.tileX(p.lng, 14), GeoOps.tileY(p.lat, 14))
+        val (x, y) = (GeoOps.tileX(q.lng, 14), GeoOps.tileY(q.lat, 14))
         // a feature belongs to every tile its cell union touches
         // (GeoOps.tileCoverWkb), so a point whose leaf cell straddles the
         // tile edge is drawn on both sides of it
         val tile = GeoOps.tileId(14, x, y)
-        val want = math.min(Renderers.MaxFeaturesPerTile, pts.count(q =>
-          q.amenity == a && math.abs(GeoOps.tileX(q.lng, 14) - x) <= 1 && math.abs(GeoOps.tileY(q.lat, 14) - y) <= 1 &&
-            GeoOps.tileCoverWkb(GeoOps.toWkb(GeoOps.point(q.lat, q.lng)), 14).contains(tile)))
-        Op(kind, s"[#amenity=$a]", None, Some((x, y)), Some(tagged), { rep =>
+        val want = math.min(Renderers.MaxFeaturesPerTile, pts.count(p =>
+          p.amenity == a && math.abs(GeoOps.tileX(p.lng, 14) - x) <= 1 && math.abs(GeoOps.tileY(p.lat, 14) - y) <= 1 &&
+            GeoOps.tileCoverWkb(GeoOps.toWkb(GeoOps.point(p.lat, p.lng)), 14).contains(tile)))
+        Op(q, s"[#amenity=$a]", Some((x, y)), Some(tagged), { rep =>
           val got = if (rep.bytes.isEmpty) 0 else Inputs.mvtFeatures(rep.bytes)
           if (got == want) Outcome.Ok else Outcome.fail(s"tile $x/$y: $got features, expected $want")
         })
     }
   }
 
-  /** `n` operations in blocks of one of each type, in seeded order. */
-  def mix(seed: Long, n: Int): Vector[Op] = {
-    val rnd = new scala.util.Random(seed)
-    Iterator.continually(rnd.shuffle(Serve.OpTypes)).flatten.take(n).map(makeOp(_, rnd)).toVector
-  }
+  /** Blocks `from` until `until` of the list as checked operations. */
+  def ops(from: Int, until: Int): Vector[Op] = (from until until).flatMap(block).map(op).toVector
 }
 
 object Serve {
 
   val OpTypes: Seq[String] = Seq("tag_count", "cap_count", "take", "containing_areas", "count_values", "tile")
-  /** Half a request per second: at 1 req/s (a third to a half of one
-    * dispatcher thread) one seed in four bunched enough requests to queue
-    * for seconds, and a run's figure swung by up to 70%. */
+  val HotTypes: Seq[String] = Seq("hot_containing_areas")
+  val AllTypes: Seq[String] = OpTypes ++ HotTypes
+  /** Radius of the hot caps, and of the area their centres are drawn from. */
+  val HotCapM = 400.0
+  /** Requests per second at the base rate, about an eighth of today's
+    * capacity: at about 1 req/s the waits behind other requests varied so
+    * much with the arrival order that a run's figure moved by a fifth from
+    * seed to seed. */
   val BaseRate = 0.5
-  /** Rates above the base for the capacity ladder (traced runs). Today's
-    * capacity, about 3 req/s on one dispatcher thread, sits well inside the
-    * 2–8 gap, so the result repeats. */
-  val Ladder: Seq[Double] = Seq(1.0, 2.0, 8.0, 32.0)
+  /** Blocks of the list a run sends at least, so that every type has two
+    * samples for its median; short runs send them faster than `BaseRate`. */
+  val MinBlocks = 2
+  /** Rates of the capacity ladder (traced runs) above the base. Today's
+    * capacity for the mix, about 3–4 req/s (one evaluate and one tile
+    * dispatcher thread), sits well between the base and the first rung, so
+    * the result repeats; a 4 req/s rung passed in some runs and not others. */
+  val Ladder: Seq[Double] = Seq(8.0, 32.0)
   val LimitMs = 2000.0
+  /** How many times a run sets up the serving world; it reports the median. */
+  val SetupReps = 3
 
   private def p50(xs: Seq[Double]): Double = if (xs.isEmpty) 0.0 else Stats.median(xs)
 
+  /** Geometric mean over request types of each type's median latency. */
+  def typeGmean(samples: Seq[(String, Double)]): Double =
+    Stats.gmean(samples.groupBy(_._1).values.map(xs => Stats.median(xs.map(_._2))).toSeq)
+
   /**
    * `serve`: open loop, seeded Poisson arrivals at `BaseRate` over at most
-   * nproc client connections, the six operation types in seeded blocks.
-   * Latency is timed from each request's due time.
+   * nproc client connections. Every seed sends the same requests (whole
+   * blocks of the fixed list); the seed sets only their order and arrival
+   * times. Latency is timed from each request's due time.
    */
   def runServe(ctx: Ctx): Result = {
     val s = new Served(ctx)
     val outcomes = ArrayBuffer[Outcome]()
+    val details = ArrayBuffer[String]()
     try {
-      // warm-up: one of each type, closed loop, checked like the rest
-      s.mix(ctx.args.seed + 7919, OpTypes.length).foreach(op => outcomes += Attempt(s.exchange(op)))
-      ctx.mark("warmup")
+      // set-up, `SetupReps` times from nothing: world, registry, servers
+      val reps = (1 to SetupReps).map { _ =>
+        val t0 = System.nanoTime()
+        s.buildWorld()
+        s.startServers()
+        (System.nanoTime() - t0) / 1e9
+      }
+      ctx.setupReps(reps)
+      // warm-up, once: block 0 of the list, checked like the rest
+      s.ops(0, 1).foreach(op => outcomes += Attempt(s.exchange(op)))
 
       val tracer = ctx.tracer
       val layers = scala.collection.mutable.Map[String, Double]()
+      val blocks = math.max(MinBlocks, math.round(BaseRate * ctx.args.seconds / AllTypes.length).toInt)
+      val list = s.ops(1, 1 + blocks)
+      val order = new scala.util.Random(ctx.args.seed).shuffle(list)
+      val offsets = OpenLoop.poissonArrivals(ctx.args.seed * 7919L + 1, order.length, ctx.args.seconds)
       val gc0 = ctx.gcSeconds()
       ctx.timedStart()
-      // whole blocks of the six types, at the base rate on average
-      val n = OpTypes.length * math.max(1, math.round(BaseRate * ctx.args.seconds / OpTypes.length).toInt)
-      val offsets = OpenLoop.poissonArrivals(ctx.args.seed, n, ctx.args.seconds)
-      val ops = s.mix(ctx.args.seed, offsets.length).zipWithIndex
-      val t0 = System.nanoTime()
-      val samples = OpenLoop.run(offsets, ops, ctx.args.nproc) { case (op, i) =>
-        // traced runs trace every other block of six requests
-        val traced = tracer.isDefined && (i / OpTypes.length) % 2 == 1
-        tracer.foreach(_.on = traced)
-        ctx.span(s"req-$i-${op.kind}", "request")(s.request(op))
+      val samples = OpenLoop.run(offsets, order.zipWithIndex, ctx.args.nproc) { case (op, i) =>
+        ctx.span(s"req-$i-${op.kind}", "request", tracer.isDefined)(s.request(op))
       }
-      val windowS = (System.nanoTime() - t0) / 1e9
-      tracer.foreach(_.on = false)
       outcomes ++= samples.map(_.outcome)
       val lat = samples.map(_.latencyMs)
-      val details = ArrayBuffer[String]()
-      details += f"serve rate=$BaseRate%.1f/s requests=${samples.length} connections=${ctx.args.nproc} " +
-        f"serve_p50_ms=${p50(lat)}%.1f serve_mean_ms=${Stats.mean(lat)}%.1f serve_gmean_ms=${Stats.gmean(lat)}%.1f " +
+      val byType = samples.map(x => x.op._1.kind -> x.latencyMs)
+      details += f"serve rate=${order.length / ctx.args.seconds.toDouble}%.2f/s requests=${samples.length} " +
+        f"connections=${ctx.args.nproc} serve_p50_ms=${p50(lat)}%.1f serve_mean_ms=${Stats.mean(lat)}%.1f " +
         Stats.tail(lat).filter(_._1 > 50).map { case (p, v) => f"serve_p${p}%.0f_ms=$v%.1f" }
           .getOrElse("serve_tail=none(<40 samples)") +
-        f" gen_lag_max_ms=${if (samples.isEmpty) 0.0 else samples.map(_.lagMs).max}%.2f"
-      OpTypes.foreach { k =>
-        val xs = samples.filter(_.op._1.kind == k).map(_.latencyMs)
+        f" gen_lag_max_ms=${samples.map(_.lagMs).max}%.2f req_gmean_ms=${Stats.gmean(lat)}%.1f"
+      AllTypes.foreach { k =>
+        val xs = byType.filter(_._1 == k).map(_._2)
         details += f"serve op=$k p50_ms=${p50(xs)}%.1f n=${xs.length}"
       }
 
-      val service = scala.collection.mutable.Map[String, ArrayBuffer[Double]]()
-      // traced runs: the per-layer breakdown with one client and no load, run
-      // after the open-loop window so that the server is as warm as it was there
-      def unloaded(t: Tracer): Unit = {
+      tracer.foreach { t =>
+        // the per-layer breakdown with one client and no load, after the
+        // open-loop window so that the server is as warm as it was there:
+        // each request untraced (service time) and traced (Spark counters,
+        // overhead), then the layer calls it makes, directly
+        val service = scala.collection.mutable.Map[String, ArrayBuffer[Double]]()
+        val ratios = scala.collection.mutable.Map[String, ArrayBuffer[Double]]()
         val transport = ArrayBuffer[Double]()
-        s.mix(ctx.args.seed + 104729, 3 * OpTypes.length).zipWithIndex.foreach { case (op, i) =>
+        val tracedOps = ArrayBuffer[String]()
+        var tracedS = 0.0
+        s.ops(0, 1).zipWithIndex.foreach { case (op, i) =>
           val id = s"unloaded-$i-${op.kind}"
-          t.aside {
-            t.span(id, "shell.parse")(Shell.parse(op.expr))
-            if (op.tile.isEmpty) {
-              t.span(id, "shell.compile")(Shell.run(s.world, op.lazyExpr))
-            }
-            op.query.foreach(q => t.span(id, "query.find")(QueryPlanner.find(s.world, q)))
+          def untraced(): Double = {
+            val u0 = System.nanoTime()
+            outcomes += Attempt(s.exchange(op))
+            (System.nanoTime() - u0) / 1e6
           }
+          // untraced, traced, untraced: the traced one is neither the first
+          // nor the last, so warming up does not count as overhead
+          val before = untraced()
           val t0 = System.nanoTime()
-          outcomes += Attempt(t.aside(t.span(id, "server.http")(s.exchange(op))))
-          val httpMs = (System.nanoTime() - t0) / 1e6
-          service.getOrElseUpdate(op.kind, ArrayBuffer()) += httpMs
+          outcomes += Attempt(t.traced(id)(t.span(id, "server.http")(s.exchange(op))))
+          val tracedMs = (System.nanoTime() - t0) / 1e6
+          val untracedMs = (before + untraced()) / 2
+          tracedOps += id; tracedS += tracedMs / 1000
+          service.getOrElseUpdate(op.kind, ArrayBuffer()) += untracedMs
+          ratios.getOrElseUpdate(op.kind, ArrayBuffer()) += tracedMs / untracedMs
+          t.span(id, "shell.parse")(Shell.parse(op.expr))
+          if (op.tile.isEmpty) t.span(id, "shell.compile")(Shell.run(s.world, op.lazyExpr))
+          op.query.foreach(q => t.span(id, "query.find")(QueryPlanner.find(s.world, q)))
           op.tile match {
             case Some((x, y)) =>
-              val bytes = t.aside(t.span(id, "render.tile")(
-                Renderers.queryTile(s.reg, Renderers.DefaultWorldId, 14, x, y, op.expr)))
-              layers("render.tile_kb") = layers.getOrElse("render.tile_kb", 0.0) + bytes.length / 1024.0 / 3
+              val bytes = t.span(id, "render.tile")(
+                Renderers.queryTile(s.reg, Renderers.DefaultWorldId, 14, x, y, op.expr))
+              layers("render.tile_kb") = layers.getOrElse("render.tile_kb", 0.0) + bytes.length / 1024.0
             case None =>
               val d0 = System.nanoTime()
-              t.aside(t.span(id, "server.evaluate")(EvaluateService.evaluate(s.reg, op.expr, None, "1")))
-              transport += httpMs - (System.nanoTime() - d0) / 1e6
+              t.span(id, "server.evaluate")(EvaluateService.evaluate(s.reg, op.expr, None, "1"))
+              transport += untracedMs - (System.nanoTime() - d0) / 1e6
           }
         }
+        layers("render.tile_kb") = layers.getOrElse("render.tile_kb", 0.0) / t.spansOf("render.tile").length.max(1)
         // the scenario write path on a shadow world: each change through
         // `applyChange`, then a checked read-back of the changed world
-        val shadow = WorldId("collection", "graft/bench-shadow", ctx.args.seed.abs % 100000)
+        val shadow = WorldId("collection", "graft/bench-shadow", 1L)
         val shadowName = s"/collection/graft/bench-shadow/${shadow.value}"
-        new scala.util.Random(ctx.args.seed + 17).shuffle(s.pts).take(4).zipWithIndex.foreach { case (p, i) =>
+        new scala.util.Random(17L).shuffle(s.pts).take(4).zipWithIndex.foreach { case (p, i) =>
           val id = s"shadow-${i + 1}"
           outcomes += Attempt {
-            val change = t.aside(t.span(id, "shell.run")(
-              Shell.run(s.world, s"with-change {-> add-tag /${p.ftype}/graft/events/${p.id} #bench=yes}")))
-            t.aside(t.span(id, "render.apply_change")(
-              s.reg.applyChange(shadow, change.asInstanceOf[Changes.ChangeSet])))
+            val change = t.span(id, "shell.run")(
+              Shell.run(s.world, s"with-change {-> add-tag /${p.ftype}/graft/events/${p.id} #bench=yes}"))
+            t.span(id, "render.apply_change")(s.reg.applyChange(shadow, change.asInstanceOf[Changes.ChangeSet]))
             val r = EvaluateService.evaluate(s.reg, "find [#bench] | count", Some(shadowName), "1")
             if (r.kind == "long" && r.json == (i + 1).toString) Outcome.Ok
             else Outcome.fail(s"shadow read after ${i + 1} changes: ${r.kind} ${r.json.take(100)}")
           }
         }
+        layers ++= t.operatorLayers(tracedOps.toSeq, tracedS, ctx.args.nproc)
         layers ++= Map(
           "render.apply_change_ms" -> t.medianMs("render.apply_change"),
           "shell.parse_ms" -> t.medianMs("shell.parse"), "shell.compile_ms" -> t.medianMs("shell.compile"),
           "query.find_ms" -> t.medianMs("query.find"), "render.tile_ms" -> t.medianMs("render.tile"),
           "server.transport_ms" -> p50(transport.toSeq))
         service.foreach { case (k, xs) => layers(s"server.service_ms.$k") = p50(xs.toSeq) }
-      }
-
-      tracer.foreach { t =>
-        val tr = samples.filter(x => (x.op._2 / OpTypes.length) % 2 == 1)
-        val un = samples.filterNot(x => (x.op._2 / OpTypes.length) % 2 == 1)
-        layers ++= t.operatorLayers(Seq(""), tr.length, windowS / 2, ctx.args.nproc)
-        unloaded(t)
         layers ++= ctx.storageLayers()
         layers("jvm.gc_s") = ctx.gcSeconds() - gc0
-        layers("server.gen_lag_ms") = if (samples.isEmpty) 0.0 else samples.map(_.lagMs).max
+        layers("server.gen_lag_ms") = samples.map(_.lagMs).max
         layers("server.wait_ms") = p50(samples.map(x =>
           x.latencyMs - service.get(x.op._1.kind).map(b => p50(b.toSeq)).getOrElse(0.0)))
-        // per type, traced median over untraced median; the types differ 7×
-        val ratios = OpTypes.flatMap { k =>
-          val a = tr.filter(_.op._1.kind == k).map(_.latencyMs); val b = un.filter(_.op._1.kind == k).map(_.latencyMs)
-          if (a.isEmpty || b.isEmpty) None else Some(p50(a) / p50(b))
-        }
-        layers("trace.overhead_pct") = if (ratios.isEmpty) 0.0 else 100 * (Stats.median(ratios) - 1)
+        // per type, traced over untraced service time, then the median
+        layers("trace.overhead_pct") = 100 * (Stats.median(ratios.values.map(b => p50(b.toSeq)).toSeq) - 1)
+
         // capacity ladder: the highest rate whose p90 stays within the limit
         // and whose backlog drains within the limit after the rung ends,
         // climbing from the base rate and stopping at the first rung that fails
-        var climbing = samples.nonEmpty && samples.forall(_.ok) && Stats.percentile(lat, 90) <= LimitMs
-        var best = if (climbing) BaseRate else 0.0
+        var climbing = samples.forall(_.ok) && Stats.percentile(lat, 90) <= LimitMs
+        var best = if (climbing) order.length / ctx.args.seconds.toDouble else 0.0
         Ladder.foreach { rate =>
           if (climbing) {
-            val secs = math.max(5.0, ctx.args.seconds / 2.5)
-            val offs = OpenLoop.poissonArrivals(ctx.args.seed + rate.toLong, math.round(rate * secs).toInt, secs)
+            val secs = math.max(5.0, ctx.args.seconds / 5.0)
+            val n = math.round(rate * secs).toInt
+            val rungOps = Iterator.continually(list).flatten.take(n).toVector
+            val offs = OpenLoop.poissonArrivals(ctx.args.seed + rate.toLong, n, secs)
             val r0 = System.nanoTime()
-            val rung = OpenLoop.run(offs, s.mix(ctx.args.seed + 31 * rate.toLong, offs.length), ctx.args.nproc)(
-              op => s.request(op))
+            val rung = OpenLoop.run(offs, new scala.util.Random(ctx.args.seed + 31).shuffle(rungOps),
+              ctx.args.nproc)(op => s.request(op))
             outcomes ++= rung.map(_.outcome)
             val p90 = Stats.percentile(rung.map(_.latencyMs), 90)
             val drainMs = (rung.map(_.doneNs).max - r0) / 1e6 - secs * 1000
@@ -320,113 +378,8 @@ object Serve {
         val path = java.nio.file.Paths.get(ctx.args.out, "trace", s"serve-s${ctx.args.seed}.jsonl")
         details += s"trace spans=${t.write(path)} file=$path"
       }
-      val e2e = Seq(Metric("setup_s", ctx.setupS, "s"), Metric("gmean_ms", Stats.gmean(lat), "ms"))
+      val e2e = Seq(Metric("setup_s", ctx.setupS, "s"), Metric("gmean_ms", typeGmean(byType), "ms"))
       Result(outcomes.toSeq, e2e, layers.toMap, details.toSeq)
-    } finally s.close()
-  }
-
-  val Depth = 4
-
-  /**
-   * `scenario`: closed loop, one client. Fresh scenario worlds
-   * /collection/graft/bench/<k>; each step writes one tag change through
-   * /evaluate (`with-change {-> add-tag …}`) and reads the changed world back,
-   * up to `Depth` changes per world. The read's count must equal the number
-   * of changes applied.
-   */
-  def runScenario(ctx: Ctx): Result = {
-    val s = new Served(ctx)
-    val outcomes = ArrayBuffer[Outcome]()
-    try {
-      val rnd = new scala.util.Random(ctx.args.seed * 31 + 5)
-      def worldOf(k: Int) = s"/collection/graft/bench/${ctx.args.seed.abs % 100000 * 1000 + k}"
-      def writeOp(p: Pt): Op = {
-        val fid = s"/${p.ftype}/graft/events/${p.id}"
-        Op("write", s"with-change {-> add-tag $fid #bench=yes}", None, None, None, rep =>
-          if (rep.kind == "change-applied" && rep.json.contains(fid)) Outcome.Ok
-          else Outcome.fail(s"write: ${rep.kind} ${rep.json.take(200)}"))
-      }
-      def readOp(depth: Int): Op = Op("read", "find [#bench] | count", None, None, Some(Keyed("#bench")), rep =>
-        if (rep.kind == "long" && rep.json.trim == depth.toString) Outcome.Ok
-        else Outcome.fail(s"read: ${rep.kind} ${rep.json.take(100)}, expected $depth"))
-
-      case class Step(world: Int, depth: Int, writeMs: Double, readMs: Double, traced: Boolean)
-      val steps = ArrayBuffer[Step]()
-      val tracer = ctx.tracer
-      var k = 0; var depth = 0
-      var used = Set.empty[Long]
-      val transport = ArrayBuffer[Double]()
-      def step(timed: Boolean): Unit = {
-        if (depth == Depth) { k += 1; depth = 0; used = Set.empty }
-        var p = s.pts(rnd.nextInt(s.pts.length))
-        while (used(p.id)) p = s.pts(rnd.nextInt(s.pts.length))
-        used += p.id; depth += 1
-        val w = Some(worldOf(k))
-        val traced = timed && tracer.isDefined && steps.length % 2 == 1
-        tracer.foreach(_.on = traced)
-        val op = s"w$k-d$depth"
-        val t0 = System.nanoTime()
-        val wo = Attempt(ctx.span(op, "scenario.write")(s.request(writeOp(p).copy(world = w)))())
-        val t1 = System.nanoTime()
-        val ro = Attempt(ctx.span(op, "scenario.read")(s.request(readOp(depth).copy(world = w)))())
-        val t2 = System.nanoTime()
-        tracer.foreach(_.on = false)
-        outcomes += wo; outcomes += ro
-        if (timed) steps += Step(k, depth, (t1 - t0) / 1e6, (t2 - t1) / 1e6, traced)
-        if (traced) tracer.foreach { t =>
-          // traced-only side calls on a shadow world: the same change through
-          // the registry directly, and the read's parse/compile/find/evaluate
-          t.aside {
-            val shadow = WorldId("collection", "graft/bench-shadow", k.toLong)
-            val change = t.span(op, "shell.run-write")(Shell.run(s.world, writeOp(p).expr))
-            t.span(op, "render.apply_change")(s.reg.applyChange(shadow, change.asInstanceOf[Changes.ChangeSet]))
-            val changed = s.reg.findOrCreate(WorldId("collection", "graft/bench",
-              ctx.args.seed.abs % 100000 * 1000 + k)).features
-            t.span(op, "shell.parse")(Shell.parse("find [#bench] | count"))
-            t.span(op, "shell.compile")(Shell.runDf(changed, "find [#bench]"))
-            t.span(op, "query.find")(QueryPlanner.find(changed, Keyed("#bench")))
-            val d0 = System.nanoTime()
-            t.span(op, "server.evaluate")(EvaluateService.evaluate(s.reg, "find [#bench] | count", w, "1"))
-            transport += (t2 - t1) / 1e6 - (System.nanoTime() - d0) / 1e6
-          }
-        }
-      }
-
-      // warm-up: two steps on a world of their own, outside the timed region
-      (1 to 2).foreach(_ => step(timed = false))
-      depth = Depth
-      ctx.mark("warmup")
-      val gc0 = ctx.gcSeconds()
-      ctx.timedStart()
-      val t0 = System.nanoTime()
-      val deadline = ctx.deadlineNs(t0)
-      while (System.nanoTime() < deadline || (tracer.isDefined && steps.length < 4)) step(timed = true)
-      val windowS = (System.nanoTime() - t0) / 1e9
-
-      val un = steps.filterNot(_.traced)
-      val stepMs = un.map(x => x.writeMs + x.readMs).toSeq
-      val details = ArrayBuffer[String]()
-      details += f"scenario steps=${steps.length} worlds=${k + 1} depth=$Depth " +
-        f"write_p50_ms=${p50(un.map(_.writeMs).toSeq)}%.1f scenario_read_p50_ms=${p50(un.map(_.readMs).toSeq)}%.1f " +
-        f"step_p50_ms=${p50(stepMs)}%.1f"
-      (1 to Depth).foreach { d =>
-        val xs = un.filter(_.depth == d).map(_.readMs).toSeq
-        if (xs.nonEmpty) details += f"scenario depth=$d read_p50_ms=${p50(xs)}%.1f n=${xs.length}"
-      }
-      val layers = tracer.map { t =>
-        val tr = steps.filter(_.traced)
-        details += s"trace spans=${t.write(java.nio.file.Paths.get(ctx.args.out, "trace", s"scenario-s${ctx.args.seed}.jsonl"))}"
-        t.operatorLayers(Seq(""), tr.length, windowS / 2, ctx.args.nproc) ++ ctx.storageLayers() ++ Map(
-          "render.apply_change_ms" -> t.medianMs("render.apply_change"),
-          "shell.parse_ms" -> t.medianMs("shell.parse"),
-          "shell.compile_ms" -> t.medianMs("shell.compile"),
-          "query.find_ms" -> t.medianMs("query.find"),
-          "server.transport_ms" -> p50(transport.toSeq),
-          "jvm.gc_s" -> (ctx.gcSeconds() - gc0),
-          "trace.overhead_pct" -> ctx.overheadPct(tr.map(x => x.writeMs + x.readMs).toSeq, stepMs))
-      }.getOrElse(Map.empty)
-      val e2e = Seq(Metric("setup_s", ctx.setupS, "s"), Metric("gmean_ms", Stats.gmean(stepMs), "ms"))
-      Result(outcomes.toSeq, e2e, layers, details.toSeq)
     } finally s.close()
   }
 }

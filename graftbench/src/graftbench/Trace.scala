@@ -28,16 +28,19 @@ final class Counters {
  * Tracing for the benchmark's traced runs: spans around the benchmark's own
  * calls into graft's layers, plus a SparkListener and a
  * QueryExecutionListener for job, stage, task and planning-phase counts.
- * Spans stay in memory until [[write]]. Everything is gated by `on`, so the
- * traced run can interleave traced and untraced operations and report the
- * difference as tracing overhead. Nothing is registered in untraced runs.
+ * Nothing is registered in untraced runs.
+ *
+ * Whether an operation is traced is decided on the thread that runs it, when
+ * it runs: [[traced]] records the operation's wall-clock window. The listeners
+ * only record raw events with the job group and the time they carry, and
+ * events are given to operations when counters are read, after [[settle]]:
+ * a job or stage whose job group is a traced operation's id belongs to it; one
+ * without a job group (work on the HTTP servers' threads) belongs to the
+ * traced operation whose window holds the event's own start time; a query
+ * execution belongs to the window that holds its analysis start. So a late
+ * delivery cannot move an event from one operation to another.
  */
 final class Tracer(spark: SparkSession) {
-  @volatile var on = false
-  /** Off while the benchmark makes extra traced-only calls (direct evaluate,
-    * shadow applyChange), so Spark counters stay those of the timed path. */
-  @volatile var counting = true
-  private def counted: Boolean = on && counting
 
   private val nano0 = System.nanoTime()
   private val epochUs0 = System.currentTimeMillis() * 1000L
@@ -50,7 +53,6 @@ final class Tracer(spark: SparkSession) {
   /** Runs `body` inside a span named `name` of operation `op`; nested calls
     * on the same thread become children. */
   def span[T](op: String, name: String)(body: => T): T = {
-    if (!on) return body
     val id = ids.incrementAndGet()
     val parent = stack.get.headOption.getOrElse(0)
     stack.set(id :: stack.get)
@@ -61,65 +63,51 @@ final class Tracer(spark: SparkSession) {
     }
   }
 
-  /** Runs `body` as a traced-only side call: spans recorded, Spark
-    * counters not. */
-  def aside[T](body: => T): T = {
-    val was = on
-    on = true; counting = false
-    try body finally { counting = true; on = was }
-  }
-
   def spansOf(name: String): Seq[Span] = spans.synchronized(spans.filter(_.name == name).toSeq)
   def medianMs(name: String): Double = {
     val xs = spansOf(name).map(_.durUs / 1000.0)
     if (xs.isEmpty) 0.0 else Stats.median(xs)
   }
 
-  // ---- Spark-side accounting, keyed by job group (= operation id) ----------
+  // ---- traced operations, recorded by the thread that runs them -------------
+
+  private case class Window(op: String, startMs: Long, endMs: Long)
+  private val windows = ArrayBuffer[Window]()
+
+  /** Runs `body` as traced operation `op`, recording its wall-clock window.
+    * Traced operations must not overlap in time. */
+  def traced[T](op: String)(body: => T): T = {
+    val s = System.currentTimeMillis()
+    try body finally windows.synchronized(windows += Window(op, s, System.currentTimeMillis()))
+  }
+
+  // ---- raw Spark events ------------------------------------------------------
 
   case class Job(id: Int, group: String, startUs: Long, var endUs: Long, stages: Seq[Int])
   case class Stage(id: Int, group: String, var startUs: Long, var endUs: Long,
-                   taskMs: ArrayBuffer[Long])
+                   tasks: ArrayBuffer[Task])
+  case class Task(ms: Long, cpuNs: Long, shuffleBytes: Long, spillBytes: Long)
+  private case class Exec(startMs: Long, analysisMs: Long, optimizeMs: Long, planningMs: Long, nodes: Int)
 
   private val lock = new Object
-  val total = new Counters
-  private val byGroup = mutable.Map[String, Counters]()
   private val jobs = mutable.Map[Int, Job]()
   private val stages = mutable.Map[Int, Stage]()
-
-  def countersOf(group: String): Counters = lock.synchronized(byGroup.getOrElse(group, new Counters))
-  def jobsOf(group: String): Seq[Job] = lock.synchronized(jobs.values.filter(_.group == group).toSeq)
-
-  /** The longest stage of an operation: max/median task time. */
-  def skewOf(group: String): Option[Double] = lock.synchronized {
-    val st = stages.values.filter(s => s.group == group && s.taskMs.nonEmpty)
-    if (st.isEmpty) None else {
-      val longest = st.maxBy(s => s.endUs - s.startUs)
-      val med = Stats.median(longest.taskMs.map(_.toDouble).toSeq)
-      Some(longest.taskMs.max / math.max(med, 1.0))
-    }
-  }
+  private val execs = ArrayBuffer[Exec]()
+  private val ended = mutable.Set[String]()
 
   private def groupOf(props: java.util.Properties): String =
     Option(props).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse("")
 
-  private def bump(group: String)(f: Counters => Unit): Unit = lock.synchronized {
-    f(total); f(byGroup.getOrElseUpdate(group, new Counters))
-  }
-
   private val sparkListener = new SparkListener {
-    override def onJobStart(e: SparkListenerJobStart): Unit = if (counted) {
-      val g = groupOf(e.properties)
-      lock.synchronized(jobs(e.jobId) = Job(e.jobId, g, e.time * 1000L, e.time * 1000L, e.stageIds))
-      bump(g)(_.jobs += 1)
+    override def onJobStart(e: SparkListenerJobStart): Unit = lock.synchronized {
+      jobs(e.jobId) = Job(e.jobId, groupOf(e.properties), e.time * 1000L, e.time * 1000L, e.stageIds)
     }
-    override def onJobEnd(e: SparkListenerJobEnd): Unit =
-      lock.synchronized(jobs.get(e.jobId).foreach(_.endUs = e.time * 1000L))
-    override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = if (counted) {
-      val g = groupOf(e.properties)
+    override def onJobEnd(e: SparkListenerJobEnd): Unit = lock.synchronized {
+      jobs.get(e.jobId).foreach { j => j.endUs = e.time * 1000L; ended += j.group }
+    }
+    override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = lock.synchronized {
       val t = e.stageInfo.submissionTime.getOrElse(System.currentTimeMillis()) * 1000L
-      lock.synchronized(stages(e.stageInfo.stageId) = Stage(e.stageInfo.stageId, g, t, t, ArrayBuffer()))
-      bump(g)(_.stages += 1)
+      stages(e.stageInfo.stageId) = Stage(e.stageInfo.stageId, groupOf(e.properties), t, t, ArrayBuffer())
     }
     override def onStageCompleted(e: SparkListenerStageCompleted): Unit = lock.synchronized {
       stages.get(e.stageInfo.stageId).foreach { s =>
@@ -127,36 +115,22 @@ final class Tracer(spark: SparkSession) {
       }
     }
     override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
-      val st = lock.synchronized(stages.get(e.stageId))
-      st.foreach { s =>
-        val m = e.taskMetrics
-        val dur = Option(e.taskInfo).map(_.duration).getOrElse(0L)
-        lock.synchronized(s.taskMs += dur)
-        bump(s.group) { c =>
-          c.tasks += 1
-          c.taskMs += dur
-          if (m != null) {
-            c.cpuNs += m.executorCpuTime
-            c.shuffleBytes += m.shuffleReadMetrics.totalBytesRead + m.shuffleWriteMetrics.bytesWritten
-            c.spillBytes += m.memoryBytesSpilled + m.diskBytesSpilled
-          }
-        }
-      }
+      val m = e.taskMetrics
+      val t = Task(Option(e.taskInfo).map(_.duration).getOrElse(0L),
+        if (m == null) 0L else m.executorCpuTime,
+        if (m == null) 0L else m.shuffleReadMetrics.totalBytesRead + m.shuffleWriteMetrics.bytesWritten,
+        if (m == null) 0L else m.memoryBytesSpilled + m.diskBytesSpilled)
+      lock.synchronized(stages.get(e.stageId).foreach(_.tasks += t))
     }
   }
 
   private val qeListener = new QueryExecutionListener {
-    override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = if (counted) {
+    override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
       val ph = qe.tracker.phases
       def ms(p: String): Long = ph.get(p).map(_.durationMs).getOrElse(0L)
+      val start = ph.get("analysis").orElse(ph.values.headOption).map(_.startTimeMs).getOrElse(0L)
       val nodes = qe.optimizedPlan.collect { case n => n }.length
-      lock.synchronized {
-        total.executions += 1
-        total.analysisMs += ms("analysis")
-        total.optimizeMs += ms("optimization")
-        total.planningMs += ms("planning")
-        total.planNodes += nodes
-      }
+      lock.synchronized(execs += Exec(start, ms("analysis"), ms("optimization"), ms("planning"), nodes))
     }
     override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
   }
@@ -164,46 +138,110 @@ final class Tracer(spark: SparkSession) {
   spark.sparkContext.addSparkListener(sparkListener)
   spark.listenerManager.register(qeListener)
 
-  /** Per-operation averages of the Spark counters of `groups` over `ops`
-    * traced operations that together took `wallS` seconds. */
-  def operatorLayers(groups: Seq[String], ops: Int, wallS: Double, nproc: Int): Map[String, Double] = {
+  private val settles = new AtomicInteger(0)
+
+  /** Waits until the listeners have seen every event posted so far: runs a
+    * marker job and waits for its end event, which the listener bus
+    * delivers after all earlier ones. */
+  def settle(): Unit = {
+    val g = s"graftbench-settle-${settles.incrementAndGet()}"
+    val sc = spark.sparkContext
+    sc.setJobGroup(g, g, interruptOnCancel = false)
+    try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+    val until = System.nanoTime() + 30000000000L
+    while (!lock.synchronized(ended(g)) && System.nanoTime() < until) Thread.sleep(10)
+  }
+
+  // ---- attribution -----------------------------------------------------------
+
+  private def opsIndex: (Set[String], Seq[Window]) = windows.synchronized((windows.map(_.op).toSet, windows.toSeq))
+
+  /** The traced operation an event belongs to, from its job group or, without
+    * one, from the time it started. */
+  private def owner(group: String, atMs: Long, index: (Set[String], Seq[Window])): Option[String] =
+    if (group.nonEmpty) Some(group).filter(index._1)
+    else index._2.find(w => w.startMs <= atMs && atMs <= w.endMs).map(_.op)
+
+  def jobsOf(op: String): Seq[Job] = {
+    val ix = opsIndex
+    lock.synchronized(jobs.values.filter(j => owner(j.group, j.startUs / 1000, ix).contains(op)).toSeq)
+  }
+
+  private def stagesOf(ops: Set[String]): Seq[Stage] = {
+    val ix = opsIndex
+    lock.synchronized(stages.values.filter(s => owner(s.group, s.startUs / 1000, ix).exists(ops)).toSeq)
+  }
+
+  /** Counters of the traced operations `ops`. */
+  def countersOf(ops: Set[String]): Counters = {
+    val ix = opsIndex
+    val c = new Counters
+    lock.synchronized {
+      jobs.values.foreach(j => if (owner(j.group, j.startUs / 1000, ix).exists(ops)) c.jobs += 1)
+      stages.values.foreach { s =>
+        if (owner(s.group, s.startUs / 1000, ix).exists(ops)) {
+          c.stages += 1
+          s.tasks.foreach { t =>
+            c.tasks += 1; c.taskMs += t.ms; c.cpuNs += t.cpuNs
+            c.shuffleBytes += t.shuffleBytes; c.spillBytes += t.spillBytes
+          }
+        }
+      }
+      execs.foreach { x =>
+        if (owner("", x.startMs, ix).exists(ops)) {
+          c.executions += 1; c.analysisMs += x.analysisMs; c.optimizeMs += x.optimizeMs
+          c.planningMs += x.planningMs; c.planNodes += x.nodes
+        }
+      }
+    }
+    c
+  }
+
+  /** The longest stage of one operation: max/median task time. */
+  def skewOf(op: String): Option[Double] = {
+    val st = stagesOf(Set(op)).filter(_.tasks.nonEmpty)
+    if (st.isEmpty) None else {
+      val longest = st.maxBy(s => s.endUs - s.startUs)
+      val ms = lock.synchronized(longest.tasks.map(_.ms.toDouble).toSeq)
+      Some(ms.max / math.max(Stats.median(ms), 1.0))
+    }
+  }
+
+  /** Per-operation averages of the Spark counters of the traced operations
+    * `ops`, which together took `wallS` seconds. Settles first. */
+  def operatorLayers(ops: Seq[String], wallS: Double, nproc: Int): Map[String, Double] = {
     settle()
-    val cs = groups.distinct.map(countersOf)
-    def per(f: Counters => Double): Double = if (ops == 0) 0.0 else cs.map(f).sum / ops
-    val skews = groups.distinct.flatMap(skewOf)
-    val taskS = cs.map(_.taskMs).sum / 1000.0
-    val t = lock.synchronized(total)
+    val c = countersOf(ops.toSet)
+    val n = ops.distinct.length
+    def per(x: Double): Double = if (n == 0) 0.0 else x / n
+    val skews = ops.distinct.flatMap(skewOf)
     Map(
-      "operators.jobs" -> per(_.jobs.toDouble),
-      "operators.stages" -> per(_.stages.toDouble),
-      "operators.tasks" -> per(_.tasks.toDouble),
-      "operators.task_s" -> per(_.taskMs / 1000.0),
-      "operators.cpu_s" -> per(_.cpuNs / 1e9),
-      "operators.shuffle_mb" -> per(_.shuffleBytes / 1048576.0),
-      "operators.spill_mb" -> per(_.spillBytes / 1048576.0),
+      "operators.jobs" -> per(c.jobs.toDouble),
+      "operators.stages" -> per(c.stages.toDouble),
+      "operators.tasks" -> per(c.tasks.toDouble),
+      "operators.task_s" -> per(c.taskMs / 1000.0),
+      "operators.cpu_s" -> per(c.cpuNs / 1e9),
+      "operators.shuffle_mb" -> per(c.shuffleBytes / 1048576.0),
+      "operators.spill_mb" -> per(c.spillBytes / 1048576.0),
       "operators.skew" -> (if (skews.isEmpty) 0.0 else Stats.median(skews)),
-      "operators.busy" -> (if (wallS <= 0) 0.0 else taskS / (wallS * nproc)),
-      "driver.analysis_ms" -> (if (ops == 0) 0.0 else t.analysisMs.toDouble / ops),
-      "driver.optimize_ms" -> (if (ops == 0) 0.0 else t.optimizeMs.toDouble / ops),
-      "driver.planning_ms" -> (if (ops == 0) 0.0 else t.planningMs.toDouble / ops),
-      "driver.plan_nodes" -> (if (t.executions == 0) 0.0 else t.planNodes.toDouble / t.executions))
+      "operators.busy" -> (if (wallS <= 0) 0.0 else c.taskMs / 1000.0 / (wallS * nproc)),
+      "driver.analysis_ms" -> per(c.analysisMs.toDouble),
+      "driver.optimize_ms" -> per(c.optimizeMs.toDouble),
+      "driver.planning_ms" -> per(c.planningMs.toDouble),
+      "driver.plan_nodes" -> (if (c.executions == 0) 0.0 else c.planNodes.toDouble / c.executions))
   }
 
   /** Wall time of an operation not covered by any of its Spark jobs, in µs. */
-  def outsideJobsUs(group: String, startUs: Long, endUs: Long): Long =
-    (endUs - startUs) - unionUs(jobsOf(group).map(j =>
+  def outsideJobsUs(op: String, startUs: Long, endUs: Long): Long =
+    (endUs - startUs) - unionUs(jobsOf(op).map(j =>
       (math.max(j.startUs, startUs), math.min(j.endUs, endUs))))
-
-  /** Listener events arrive asynchronously; give the bus time to drain
-    * before reading counters. */
-  def settle(): Unit = Thread.sleep(300)
 
   // ---- derived figures -----------------------------------------------------
 
   /** Length of the union of intervals, in µs. */
   def unionUs(iv: Seq[(Long, Long)]): Long = {
     var covered = 0L; var curS = Long.MinValue; var curE = Long.MinValue
-    iv.sortBy(_._1).foreach { case (s, e) =>
+    iv.filter { case (s, e) => e > s }.sortBy(_._1).foreach { case (s, e) =>
       if (s > curE) { if (curE > curS) covered += curE - curS; curS = s; curE = e }
       else if (e > curE) curE = e
     }
@@ -219,22 +257,26 @@ final class Tracer(spark: SparkSession) {
       (math.max(k.startUs, s.startUs), math.min(k.endUs, s.endUs)))))).toMap
   }
 
-  /** Benchmark spans plus job and stage spans, each job parented to the
-    * innermost span of its operation that was open when it started. */
+  /** Benchmark spans plus the job and stage spans of traced operations, each
+    * job parented to the innermost span of its operation that was open when
+    * it started. */
   def allSpans(): Seq[Span] = {
     val mine = spans.synchronized(spans.toVector)
     val byOp = mine.groupBy(_.op)
+    val ix = opsIndex
     var next = ids.get() + 1
     val out = ArrayBuffer[Span]() ++ mine
     lock.synchronized {
       jobs.values.toSeq.sortBy(_.id).foreach { j =>
-        val holder = byOp.getOrElse(j.group, Nil)
-          .filter(s => s.startUs <= j.startUs && j.startUs <= s.endUs)
-          .sortBy(s => s.endUs - s.startUs).headOption
-        val jid = next; next += 1
-        out += Span(jid, j.group, s"job ${j.id}", holder.map(_.id).getOrElse(0), j.startUs, j.endUs)
-        j.stages.flatMap(stages.get).foreach { st =>
-          out += Span(next, j.group, s"stage ${st.id}", jid, st.startUs, st.endUs); next += 1
+        owner(j.group, j.startUs / 1000, ix).foreach { op =>
+          val holder = byOp.getOrElse(op, Nil)
+            .filter(s => s.startUs <= j.startUs && j.startUs <= s.endUs)
+            .sortBy(s => s.endUs - s.startUs).headOption
+          val jid = next; next += 1
+          out += Span(jid, op, s"job ${j.id}", holder.map(_.id).getOrElse(0), j.startUs, j.endUs)
+          j.stages.flatMap(stages.get).foreach { st =>
+            out += Span(next, op, s"stage ${st.id}", jid, st.startUs, st.endUs); next += 1
+          }
         }
       }
     }
