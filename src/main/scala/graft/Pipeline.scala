@@ -150,13 +150,7 @@ object Pipeline {
     if (args.headOption.contains("corpus")) {
       val root = args.lift(1).getOrElse("/tmp/graft-corpus-pipeline")
       val sfDir = args.lift(2).getOrElse("/root/testdata/sf0.01")
-      val spark = SparkSession.builder()
-        .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-        .config("spark.sql.shuffle.partitions",
-          sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
+      val spark = LocalSpark("graft-corpus-pipeline")
       val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       runCorpus(spark, root, docs).foreach { r =>
         println(s"[pipeline] ${r.table}: ${if (r.reused) "RESUMED" else "computed"} " +
@@ -167,13 +161,7 @@ object Pipeline {
     }
     val root = args.headOption.getOrElse("/tmp/graft-pipeline")
     val n = args.lift(1).map(_.toLong).getOrElse(1000000L)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark("graft-pipeline")
     run(spark, root, n).foreach { r =>
       println(s"[pipeline] ${r.table}: ${if (r.reused) "RESUMED" else "computed"} " +
         s"rows=${r.rows} bytes=${r.bytes} files=${r.files} lineage=${r.lineage.mkString(",")}")

@@ -1,16 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Local smoke: runs the flagship `entry` query exactly as the driver does. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark("graft-smoke")
     val df = SparkEntry.entry(spark)
     val n = df.count()
     println(s"[smoke] entry rows=$n")

@@ -1,29 +1,42 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB oracle compare. Exits non-zero,
+  * naming each failure, when any query or the dynamic oracle set fails. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark("graft-verify")
+    val failures = try dump(spark, sfDir, outDir, SparkEntry.queries,
+      SparkEntry.oracleSql, SparkEntry.oracleSqlDynamic) finally spark.stop()
+    if (failures.nonEmpty) {
+      System.err.println(s"[verify] ${failures.size} failed: ${failures.map(_._1).mkString(", ")}")
+      sys.exit(1)
+    }
+  }
+
+  /** Writes each query's result to `outDir/<name>` and the static plus
+    * dynamic oracle SQL to `outDir/oracle_sql.json`. A failing query is
+    * logged and skipped, and failing dynamic oracles leave the static ones;
+    * returns each failure as (query name or "oracleSqlDynamic", error). */
+  def dump(spark: SparkSession, sfDir: String, outDir: String,
+           queries: Map[String, (SparkSession, String) => DataFrame],
+           oracleSql: Map[String, String],
+           oracleSqlDynamic: (SparkSession, String) => Map[String, String]): Seq[(String, Throwable)] = {
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.foreach { case (name, fn) =>
+    val failures = Seq.newBuilder[(String, Throwable)]
+    def failed(name: String, e: Throwable): Unit = {
+      System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      failures += name -> e
+    }
+    queries.foreach { case (name, fn) =>
       val t0 = System.nanoTime()
       try {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
         System.err.println(f"[verify] $name ok in ${(System.nanoTime() - t0) / 1e9}%.1fs")
-      } catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
+      } catch { case e: Throwable => failed(name, e) }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -39,14 +52,12 @@ object Verify {
     } + "\""
     // static oracles + the data-dependent ones (driver-computed literals,
     // e.g. the trained-IVF codebook) built against the SAME sfDir
-    val dynamic = try SparkEntry.oracleSqlDynamic(spark, sfDir) catch {
-      case e: Throwable =>
-        System.err.println(s"[verify] dynamic oracles failed: ${e.getMessage}")
-        Map.empty[String, String]
+    val dynamic = try oracleSqlDynamic(spark, sfDir) catch {
+      case e: Throwable => failed("oracleSqlDynamic", e); Map.empty[String, String]
     }
-    val json = (SparkEntry.oracleSql ++ dynamic)
+    val json = (oracleSql ++ dynamic)
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
+    failures.result()
   }
 }

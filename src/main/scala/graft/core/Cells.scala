@@ -167,23 +167,6 @@ object Cells {
     out.result()
   }
 
-  /**
-   * Normalise a cell to exactly `level`: a coarser cell expands to all its
-   * descendants at `level`; a finer cell collapses to its ancestor. Used to
-   * turn a mixed-level covering into single-level join keys (the probe side
-   * then emits exactly ONE key per row — no explode).
-   */
-  def normalizeToLevel(cell: Long, lvl: Int): Array[Long] = {
-    val l = level(cell)
-    if (l >= lvl) Array(parentAt(cell, lvl))
-    else {
-      var cur = Array(cell)
-      var i = l
-      while (i < lvl) { cur = cur.flatMap(children); i += 1 }
-      cur
-    }
-  }
-
   /** All cells within Chebyshev ring radius `r` (disk: rings 0..r). */
   def neighborDisk(cell: Long, r: Int): Array[Long] = {
     val out = Array.newBuilder[Long]

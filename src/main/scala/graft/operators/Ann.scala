@@ -46,7 +46,12 @@ object Ann {
     * carries enough scoring work to beat the exchange's fixed cost — require
     * >=256 KB/partition by the optimizer's size estimate, otherwise a single
     * scan task finishes faster than the shuffle sets up (measured: a 780 KB
-    * vector table repartitioned 1->32 cost ann_topk +0.4 s for nothing). */
+    * vector table repartitioned 1->32 cost ann_topk +0.4 s for nothing).
+    * The gate reads the optimizer's `sizeInBytes`: compressed on-disk bytes
+    * for a parquet leaf, `Long.MaxValue` when the size is unknown. So a
+    * well-compressed vector table just under the threshold keeps one
+    * scoring task even though scoring cost tracks decoded rows x dims, and
+    * an unknown size always passes this half of the gate. */
   private def parallelized(df: DataFrame): DataFrame = {
     val parts = df.sparkSession.sessionState.conf.numShufflePartitions
     val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes

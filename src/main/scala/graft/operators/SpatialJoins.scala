@@ -29,41 +29,18 @@ object SpatialJoins {
   def pointInPolygonJoin(points: DataFrame, polygons: DataFrame,
                          pointCell: String = "cell16",
                          geomCol: String = "geom",
-                         coveringCol: String = "covering",
-                         knownLevels: Option[Seq[Int]] = None,
-                         normalizeLevel: Option[Int] = None,
-                         polyIdCol: String = "poly_id"): DataFrame = {
+                         coveringCol: String = "covering"): DataFrame = {
     graft.functions.CellExprs.install(points.sparkSession)
-    normalizeLevel match {
-      case Some(nl) =>
-        // single-level plan: polygon covering cells are normalised to `nl`
-        // (coarser cells expand to descendants, finer collapse — candidate
-        // sets only grow, exactness comes from the JTS refine), so the BIG
-        // probe side computes exactly one join key per row: no Generate node,
-        // no row inflation. Right for broadcast-sized polygon sides.
-        val norm = udf((c: Long) => graft.core.Cells.normalizeToLevel(c, nl))
-        val polyCells = polygons
-          .withColumn("__jcell", explode(col(coveringCol)))
-          .withColumn("__jcell", explode(norm(col("__jcell"))))
-          .dropDuplicates(polyIdCol, "__jcell")
-        val keyed = points.withColumn("__jcell", cell_parent_at(col(pointCell), lit(nl)))
-        keyed.join(polyCells, "__jcell")
-          .where(wkb_covers_point(col(geomCol), col("lat"), col("lng")))
-          .drop("__jcell")
-      case None =>
-        val polyCells = polygons.withColumn("__jcell", explode(col(coveringCol)))
-        // Distinct covering levels: bounded by MaxLevel+1=30 values; computed on
-        // the (small) polygon side so the big point side needs exactly one pass.
-        // Pass knownLevels when the polygon index already records them (index
-        // metadata) to skip this tiny driver job entirely.
-        val levels: Array[Int] = knownLevels.map(_.toArray).getOrElse(polyCells
-          .select(cell_level(col("__jcell")).as("l")).distinct().collect().map(_.getInt(0))).sorted
-        val keyed = points.withColumn("__jcell",
-          explode(array(levels.map(l => cell_parent_at(col(pointCell), lit(l))): _*)))
-        keyed.join(polyCells, "__jcell")
-          .where(wkb_covers_point(col(geomCol), col("lat"), col("lng")))
-          .drop("__jcell")
-    }
+    val polyCells = polygons.withColumn("__jcell", explode(col(coveringCol)))
+    // Distinct covering levels: bounded by MaxLevel+1=30 values; computed on
+    // the (small) polygon side so the big point side needs exactly one pass.
+    val levels: Array[Int] = polyCells
+      .select(cell_level(col("__jcell")).as("l")).distinct().collect().map(_.getInt(0)).sorted
+    val keyed = points.withColumn("__jcell",
+      explode(array(levels.map(l => cell_parent_at(col(pointCell), lit(l))): _*)))
+    keyed.join(polyCells, "__jcell")
+      .where(wkb_covers_point(col(geomCol), col("lat"), col("lng")))
+      .drop("__jcell")
   }
 
   /**

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * Keyed(#building) AND IntersectsCap(51.5305, -0.1232, 1km). */
 class CamdenSpec extends SparkSuite {
 
-  lazy val world = OsmWorld.features(spark, "/root/reference/data/tests/camden.osm.pbf").cache()
+  lazy val world = OsmWorld.features(spark, RefData("camden.osm.pbf")).cache()
 
   test("camden: #building AND 1km-cap query matches brute force; index pre-prune is a superset") {
     import spark.implicits._

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * geometry bytes (reference: block-parallel PBF decode, osm/pbf.go:123-160). */
 class DistributedOsmSpec extends SparkSuite {
 
-  val pbf = "/root/reference/data/tests/granary-square.osm.pbf"
+  lazy val pbf = RefData("granary-square.osm.pbf")
 
   private def keyed(df: org.apache.spark.sql.DataFrame) =
     df.select(
@@ -30,7 +30,7 @@ class DistributedOsmSpec extends SparkSuite {
   }
 
   test("camden type counts match via the distributed path") {
-    val camden = "/root/reference/data/tests/camden.osm.pbf"
+    val camden = RefData("camden.osm.pbf")
     val a = OsmWorld.features(spark, camden)
       .groupBy(col("id.ftype")).count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap

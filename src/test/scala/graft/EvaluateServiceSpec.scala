@@ -18,7 +18,7 @@ class EvaluateServiceSpec extends SparkSuite {
 
   lazy val reg = new WorldRegistry(spark, World(
     graft.sources.OsmWorld.features(
-      spark, "/root/reference/data/tests/granary-square.osm.pbf").cache(),
+      spark, RefData("granary-square.osm.pbf")).cache(),
     emptyRefs, Seq.empty[Changes.ItemAdd].toDF()))
 
   test("evaluate: counts, collections and scalars come back typed") {

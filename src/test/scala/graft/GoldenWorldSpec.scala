@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
  */
 class GoldenWorldSpec extends SparkSuite {
 
-  val pbf = "/root/reference/data/tests/granary-square.osm.pbf"
+  lazy val pbf = RefData("granary-square.osm.pbf")
   lazy val world = OsmWorld.features(spark, pbf).cache()
 
   // GRANARY_SQUARE_POLYGON_WKT from python/diagonal_b6/b6_test.py:33

@@ -33,7 +33,7 @@ class GrpcServerSpec extends SparkSuite {
     import spark.implicits._
     new WorldRegistry(spark, World(
       graft.sources.OsmWorld.features(
-        spark, "/root/reference/data/tests/granary-square.osm.pbf").cache(),
+        spark, RefData("granary-square.osm.pbf")).cache(),
       emptyRefs, Seq.empty[Changes.ItemAdd].toDF()))
   }
 

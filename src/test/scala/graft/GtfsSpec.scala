@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 class GtfsSpec extends SparkSuite {
   import spark.implicits._
 
-  val dir = "/root/reference/data/tests/gtfs-manchester"
+  lazy val dir = RefData("gtfs-manchester")
 
   test("GTFS STOP golden: Parsonage (1800NB04091) at 53.48348,-2.24705 (gtfs_test.go:31-34)") {
     val s = Gtfs.stops(spark, dir).where(col("stop_id") === "1800NB04091")

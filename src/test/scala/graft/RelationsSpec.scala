@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 class RelationsSpec extends SparkSuite {
   import spark.implicits._
 
-  val pbf = "/root/reference/data/tests/granary-square.osm.pbf"
+  lazy val pbf = RefData("granary-square.osm.pbf")
   lazy val refs = OsmWorld.references(spark, pbf).cache()
 
   val JubileeGreenway = 380856L // b6_test.py:17

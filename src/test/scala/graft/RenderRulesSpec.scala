@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * (renderer/renderer.go:171-209, encoder.go:77-105, simplify.go). */
 class RenderRulesSpec extends SparkSuite {
 
-  val pbf = "/root/reference/data/tests/granary-square.osm.pbf"
+  lazy val pbf = RefData("granary-square.osm.pbf")
   lazy val world = OsmWorld.features(spark, pbf).cache()
 
   /** Wire-decode just the layer names and per-layer feature counts. */

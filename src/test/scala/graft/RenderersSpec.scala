@@ -21,7 +21,7 @@ class RenderersSpec extends SparkSuite {
   private def emptyItems = Seq.empty[Changes.ItemAdd].toDF()
 
   private def baseWorld = {
-    val pbf = "/root/reference/data/tests/granary-square.osm.pbf"
+    val pbf = RefData("granary-square.osm.pbf")
     World(graft.sources.OsmWorld.features(spark, pbf).cache(), emptyRefs, emptyItems)
   }
 

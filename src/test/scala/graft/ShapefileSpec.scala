@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 class ShapefileSpec extends SparkSuite {
   import spark.implicits._
 
-  val shp = "/root/reference/data/tests/lsoa-camden.shp"
+  lazy val shp = RefData("lsoa-camden.shp")
 
   test("ONS id strategy matches the reference golden (b6_test.py:71-72)") {
     assert(Shapefile.onsId("E01000953", 2011) == 76343044687353L)

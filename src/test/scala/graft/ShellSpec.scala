@@ -151,7 +151,7 @@ class ShellSpec extends SparkSuite {
 
   // ---- evaluation on the granary-square golden world -------------------------
 
-  lazy val world = OsmWorld.features(spark, "/root/reference/data/tests/granary-square.osm.pbf").cache()
+  lazy val world = OsmWorld.features(spark, RefData("granary-square.osm.pbf")).cache()
 
   test("eval: find [#amenity=bicycle_parking] | count == 11 (golden)") {
     assert(Shell.run(world, "find [#amenity=bicycle_parking] | count") == 11L)
@@ -210,7 +210,7 @@ class ShellSpec extends SparkSuite {
   test("eval: accessible-all over the world-derived street network equals Graph.reachable") {
     import spark.implicits._
     val network = OsmWorld.networkEdges(spark,
-      "/root/reference/data/tests/granary-square.osm.pbf").cache()
+      RefData("granary-square.osm.pbf")).cache()
     val netNodes = network.select("src").as[Long].collect().toSet
     // pick a tagged-point query whose features are network vertices
     val candidates = Seq("#highway=crossing", "#barrier=gate", "#highway=bus_stop",

@@ -49,7 +49,7 @@ class SightlineSpec extends SparkSuite {
   }
 
   test("distributed sightlines: camden buildings occlude the granary-square view") {
-    val world = graft.sources.OsmWorld.features(spark, "/root/reference/data/tests/granary-square.osm.pbf")
+    val world = graft.sources.OsmWorld.features(spark, RefData("granary-square.osm.pbf"))
     val buildings = world.where(
       org.apache.spark.sql.functions.col("tags").getItem("#building").isNotNull &&
         org.apache.spark.sql.functions.col("id.ftype") === "area")

@@ -32,11 +32,11 @@ class SourcesSpec extends SparkSuite {
   test("parseFeatures + importGeoJson over the reference's own geojson fixtures") {
     import org.apache.spark.sql.functions._
     val fc = java.nio.file.Files.readString(
-      java.nio.file.Paths.get("/root/reference/data/tests/granary-square.geojson"))
+      java.nio.file.Paths.get(RefData("granary-square.geojson")))
     val feats = GeoJson.parseFeatures(fc)
     assert(feats.length == 1 && feats.head._1.getGeometryType == "Polygon")
     val colours = java.nio.file.Files.readString(
-      java.nio.file.Paths.get("/root/reference/data/tests/colour-areas.geojson"))
+      java.nio.file.Paths.get(RefData("colour-areas.geojson")))
     val cf = GeoJson.parseFeatures(colours)
     assert(cf.nonEmpty && cf.forall(_._1.getGeometryType == "Polygon"))
     assert(cf.head._2.get("id").contains("0"), cf.head._2.toString)
@@ -97,7 +97,7 @@ class SourcesSpec extends SparkSuite {
   test("debug-all-query returns a token's posting list; count-tag-value is the 1-row collection") {
     import org.apache.spark.sql.functions._
     val world = graft.sources.OsmWorld.features(
-      spark, "/root/reference/data/tests/granary-square.osm.pbf")
+      spark, RefData("granary-square.osm.pbf"))
     val posting = graft.index.FeatureIndex.debugAllQuery(world, "#amenity=bicycle_parking")
     assert(posting.count() == 11) // BIKE_PARKING_IN_GRANARY_SQUARE golden
     val ctv = graft.index.FeatureIndex.countTagValue(

@@ -10,15 +10,5 @@ trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSuite {
-  lazy val shared: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  lazy val shared: SparkSession = LocalSpark("graft-test", cores = 8, logLevel = "ERROR")
 }
