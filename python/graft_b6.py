@@ -1,7 +1,8 @@
 """Minimal python client for the graft evaluate service -- the analogue of
 the reference's python/diagonal_b6 package (expression.py:7-60), speaking the
-engine's JSON/HTTP evaluation boundary instead of gRPC/protobuf (no
-third-party deps: stdlib urllib only).
+engine's two HTTP/1.1 doors: JSON at /evaluate, and the reference's
+b6.grpc.B6/Evaluate RPC over gRPC-Web framing (no third-party deps: stdlib
+urllib only).
 
 Usage:
     conn = graft_b6.connect_insecure("127.0.0.1:8001")
@@ -10,7 +11,6 @@ Usage:
     fns   = conn.functions()                           # -> stub manifest
 """
 import json
-import urllib.parse
 import urllib.request
 
 
@@ -36,29 +36,6 @@ class Connection:
             self.base + "/evaluate",
             data=json.dumps(body).encode("utf-8"),
             headers={"Content-Type": "application/json"})
-        try:
-            with urllib.request.urlopen(req) as r:
-                out = json.load(r)
-        except urllib.error.HTTPError as e:
-            raise RuntimeError(json.loads(e.read()).get("error", str(e)))
-        kind, result = out["type"], out["result"]
-        if kind == "long":
-            return int(result)
-        if kind == "double":
-            return float(result)
-        return result
-
-    def evaluate_proto(self, node_bytes, world=None):
-        """POST a raw NodeProto frame (see proto_node/proto_call below) --
-        the gRPC payload of the reference (expression.py builds the same
-        trees), re-framed over HTTP."""
-        query = "?version=" + self.version
-        if world is not None:
-            query += "&world=" + urllib.parse.quote(world)
-        req = urllib.request.Request(
-            self.base + "/evaluate-proto" + query,
-            data=node_bytes,
-            headers={"Content-Type": "application/x-protobuf"})
         try:
             with urllib.request.urlopen(req) as r:
                 out = json.load(r)

@@ -45,15 +45,27 @@ object ExprProto {
     def result: Array[Byte] = buf.toByteArray
   }
 
+  /** Reads `b[from, until)`; a length or fixed-width value that runs past
+    * `until` (a truncated message) throws instead of reading zeros or the
+    * enclosing message's bytes. */
   final class Reader(b: Array[Byte], from: Int, until: Int) {
     def this(b: Array[Byte]) = this(b, 0, b.length)
     private var pos = from
     def hasNext: Boolean = pos < until
+    /** Advance over `n` bytes, returning where they start. */
+    private def take(n: Int): Int = {
+      if (n < 0 || n > until - pos)
+        throw new IllegalArgumentException(
+          s"truncated message: $n bytes declared, ${until - pos} left")
+      val at = pos
+      pos += n
+      at
+    }
     def readVarint(): Long = {
       var shift = 0; var out = 0L
       var more = true
       while (more) {
-        val x = b(pos) & 0xff; pos += 1
+        val x = b(take(1)) & 0xff
         out |= (x & 0x7fL) << shift
         shift += 7
         more = (x & 0x80) != 0
@@ -62,29 +74,27 @@ object ExprProto {
     }
     def readKey(): (Int, Int) = { val k = readVarint(); ((k >>> 3).toInt, (k & 7).toInt) }
     def readDouble(): Double = {
+      val at = take(8)
       var bits = 0L; var i = 0
-      while (i < 8) { bits |= (b(pos + i) & 0xffL) << (8 * i); i += 1 }
-      pos += 8
+      while (i < 8) { bits |= (b(at + i) & 0xffL) << (8 * i); i += 1 }
       java.lang.Double.longBitsToDouble(bits)
     }
     def readBytes(): Array[Byte] = {
       val n = readVarint().toInt
-      val out = java.util.Arrays.copyOfRange(b, pos, pos + n)
-      pos += n
-      out
+      val at = take(n)
+      java.util.Arrays.copyOfRange(b, at, at + n)
     }
     def readString(): String = new String(readBytes(), "UTF-8")
     def sub(): Reader = { // length-delimited submessage view
       val n = readVarint().toInt
-      val r = new Reader(b, pos, pos + n)
-      pos += n
-      r
+      val at = take(n)
+      new Reader(b, at, at + n)
     }
     def skip(wire: Int): Unit = wire match {
       case 0 => readVarint()
-      case 1 => pos += 8
-      case 2 => pos += readVarint().toInt
-      case 5 => pos += 4
+      case 1 => take(8)
+      case 2 => take(readVarint().toInt)
+      case 5 => take(4)
       case other => throw new IllegalArgumentException(s"wire type $other")
     }
   }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.operators.Changes
 import graft.query.{Query, QueryPlanner}
+import graft.server.Http
 import graft.shell.Shell
 
 /**
@@ -24,6 +25,12 @@ object Renderers {
 
   /** DefaultWorldFeatureID (ingest/worlds.go:9-13). */
   val DefaultWorldId: WorldId = WorldId("collection", "diagonal.works/world", 0L)
+
+  /** The world a request names by feature-id token ("/collection/ns/id");
+    * absent or unparsable means the default world. */
+  def worldId(token: Option[String]): WorldId =
+    token.flatMap(Shell.parseFeatureIdToken)
+      .map { case (t, ns, v) => WorldId(t, ns, v) }.getOrElse(DefaultWorldId)
 
   case class World(features: DataFrame, refs: DataFrame, items: DataFrame)
 
@@ -99,11 +106,6 @@ object Renderers {
       if (root.isDefined) exportWorld(key)
       id
     }
-
-    def list: Seq[WorldId] =
-      if (worlds.isEmpty) Seq(DefaultWorldId) else worlds.keys.toSeq
-
-    def delete(id: WorldId): Unit = worlds.remove(id)
   }
 
   /** QueryRenderRules (renderer/query.go:22-34): the first matching '#' key
@@ -233,40 +235,19 @@ object Renderers {
   /**
    * `/tiles/{z}/{x}/{y}.mvt` HTTP handler (renderer/handler.go) on the JDK
    * built-in server: ?q= the shell query, ?r= the world id (optional),
-   * ?v= the per-feature value expression (optional). Returns the bound port.
+   * ?v= the per-feature value expression (optional). An empty tile answers
+   * 204. Returns the bound server (port via getAddress).
    */
-  def serveTiles(reg: WorldRegistry, port: Int = 0): com.sun.net.httpserver.HttpServer = {
-    val server = com.sun.net.httpserver.HttpServer.create(
-      new java.net.InetSocketAddress("127.0.0.1", port), 0)
-    server.createContext("/tiles/", { exchange =>
-      try {
+  def serveTiles(reg: WorldRegistry, port: Int = 0): com.sun.net.httpserver.HttpServer =
+    Http.serve(port, "/tiles/" -> { exchange =>
+      val (z, x, y, params) = Http.decode {
         val path = exchange.getRequestURI.getPath.stripPrefix("/tiles/").stripSuffix(".mvt")
         val Array(z, x, y) = path.split("/").map(_.toLong)
-        val params = Option(exchange.getRequestURI.getQuery).getOrElse("").split("&")
-          .filter(_.contains("=")).map { kv =>
-            val Array(k, v) = kv.split("=", 2)
-            k -> java.net.URLDecoder.decode(v, "UTF-8")
-          }.toMap
-        val world = params.get("r").flatMap(Shell.parseFeatureIdToken)
-          .map { case (t, ns, v) => WorldId(t, ns, v) }.getOrElse(DefaultWorldId)
-        val bytes = queryTile(reg, world, z.toInt, x, y,
-          params.getOrElse("q", "[#building]"), params.get("v"))
-        exchange.getResponseHeaders.add("Content-Type", "application/vnd.mapbox-vector-tile")
-        if (bytes.isEmpty) exchange.sendResponseHeaders(204, -1L)
-        else {
-          exchange.sendResponseHeaders(200, bytes.length.toLong)
-          exchange.getResponseBody.write(bytes)
-        }
-        exchange.close()
-      } catch {
-        case e: Exception =>
-          val msg = e.getMessage.getBytes("UTF-8")
-          exchange.sendResponseHeaders(400, msg.length.toLong)
-          exchange.getResponseBody.write(msg)
-          exchange.close()
+        (z, x, y, Http.params(exchange))
       }
+      val bytes = queryTile(reg, worldId(params.get("r")), z.toInt, x, y,
+        params.getOrElse("q", "[#building]"), params.get("v"))
+      Http.Reply(if (bytes.isEmpty) 204 else 200,
+        "application/vnd.mapbox-vector-tile", bytes)
     })
-    server.start()
-    server
-  }
 }

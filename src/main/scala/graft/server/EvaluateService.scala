@@ -1,24 +1,26 @@
 package graft.server
 
 import org.apache.spark.sql.DataFrame
-import graft.render.Renderers.{DefaultWorldId, WorldId, WorldRegistry}
+import graft.render.Renderers.{DefaultWorldId, WorldId, WorldRegistry, worldId}
 import graft.shell.Shell
 
 /**
  * The remote-evaluation boundary — entry point A of the reference
  * (grpc/service.go:26-90, python/diagonal_b6/expression.py:7-60): a client
- * submits a shell expression plus a world id; the server evaluates it against
- * that world and returns the result. Three front doors share one evaluation
- * path: JSON/HTTP (below), raw NodeProto frames (/evaluate-proto), and the
+ * submits an expression plus a world id; the server evaluates it against
+ * that world and returns the result. Every door runs one core: decode the
+ * request, evaluate it once through [[evaluateOutcome]], encode the outcome
+ * as JSON or as a NodeProto. The doors are JSON over HTTP/1.1 (below), the
  * reference's own B6 service RPCs (api.proto:265-269 Evaluate / DeleteWorld /
- * ListWorlds) spoken over gRPC-Web unary framing — the published grpc-web
- * protocol, which carries gRPC's protobuf messages and status trailers over
- * plain HTTP/1.1, so no HTTP/2 stack is needed on either side.
+ * ListWorlds) over gRPC-Web unary framing on the same HTTP/1.1 server, and
+ * the same RPCs over true gRPC on HTTP/2 ([[GrpcServer]]). Replies are
+ * written by [[Http]] (400 for bad input, 500 for an engine failure) or, for
+ * gRPC, by [[unaryCall]].
  *
  * POST /evaluate  {"expression": "...", "world": "/collection/ns/id",
  *                  "version": "1"}
  * -> {"type": "collection"|"long"|"double"|"string"|"query"|"tag",
- *     "result": ... }   (collections return up to `maxRows` rows as JSON
+ *     "result": ... }   (collections return up to `MaxRows` rows as JSON
  *     arrays of the projected columns)
  */
 object EvaluateService {
@@ -26,35 +28,22 @@ object EvaluateService {
   /** Major API version — requests must match (grpc/service.go:37-41). */
   val ApiVersion = "1"
 
+  /** Rows a collection result carries, over every door. */
+  private val MaxRows = 1000
+
   case class EvaluateResult(kind: String, json: String)
 
   def evaluate(reg: WorldRegistry, expression: String,
-               world: Option[String], version: String,
-               maxRows: Int = 1000): EvaluateResult =
-    evaluateWith(reg, world, version,
-      w => Shell.run(w, expression), maxRows)
-
-  /** The protobuf frame path: a NodeProto expression tree
-    * (graft.proto.ExprProto — the reference gRPC payload,
-    * grpc/service.go:26-90) instead of shell text. */
-  def evaluateProto(reg: WorldRegistry, nodeProto: Array[Byte],
-                    world: Option[String], version: String,
-                    maxRows: Int = 1000): EvaluateResult =
-    evaluateWith(reg, world, version,
-      w => Shell.runParsed(Shell.Env(w, None), graft.proto.ExprProto.decode(nodeProto)),
-      maxRows)
+               world: Option[String], version: String): EvaluateResult =
+    toJson(evaluateOutcome(reg, worldId(world), version, w => Shell.run(w, expression)))
 
   /** What an evaluation produced, before response encoding — shared by the
-    * JSON and the gRPC-Web/proto front doors so change application happens
-    * exactly once in exactly one place. */
+    * JSON and the gRPC doors so change application happens exactly once in
+    * exactly one place. */
   private sealed trait Outcome
   private case class ChangeApplied(ids: Seq[(String, String, Long)]) extends Outcome
   private case class WorldCreated(t: String, ns: String, v: Long) extends Outcome
   private case class Value(v: Any) extends Outcome
-
-  private def worldId(world: Option[String]): WorldId =
-    world.flatMap(Shell.parseFeatureIdToken)
-      .map { case (t, ns, v) => WorldId(t, ns, v) }.getOrElse(DefaultWorldId)
 
   private def evaluateOutcome(reg: WorldRegistry, id: WorldId,
                               version: String, runIn: DataFrame => Any): Outcome = {
@@ -78,10 +67,8 @@ object EvaluateService {
     }
   }
 
-  private def evaluateWith(reg: WorldRegistry, world: Option[String],
-                           version: String, runIn: DataFrame => Any,
-                           maxRows: Int): EvaluateResult =
-    evaluateOutcome(reg, worldId(world), version, runIn) match {
+  private def toJson(outcome: Outcome): EvaluateResult =
+    outcome match {
       case ChangeApplied(ids) =>
         EvaluateResult("change-applied",
           ids.map { case (t, ns, v) => s""""/$t/$ns/$v"""" }.mkString("[", ",", "]"))
@@ -89,16 +76,16 @@ object EvaluateService {
         EvaluateResult("world-created", s""""/$t/$ns/$v"""")
       case Value(v) => v match {
         case ds: org.apache.spark.sql.Dataset[_] =>
-          val rows = ds.toDF().limit(maxRows).toJSON.collect()
+          val rows = ds.toDF().limit(MaxRows).toJSON.collect()
           EvaluateResult("collection", rows.mkString("[", ",", "]"))
         case l: Long => EvaluateResult("long", l.toString)
         case d: Double => EvaluateResult("double", d.toString)
-        case s: String => EvaluateResult("string", "\"" + escape(s) + "\"")
+        case s: String => EvaluateResult("string", "\"" + Http.escape(s) + "\"")
         case Shell.TagE(k, tv) =>
-          EvaluateResult("tag", s"""{"key":"${escape(k)}","value":"${escape(tv)}"}""")
+          EvaluateResult("tag", s"""{"key":"${Http.escape(k)}","value":"${Http.escape(tv)}"}""")
         case q: graft.query.Query =>
-          EvaluateResult("query", "\"" + escape(Shell.unparseQuery(q)) + "\"")
-        case other => EvaluateResult("value", "\"" + escape(other.toString) + "\"")
+          EvaluateResult("query", "\"" + Http.escape(Shell.unparseQuery(q)) + "\"")
+        case other => EvaluateResult("value", "\"" + Http.escape(other.toString) + "\"")
       }
     }
 
@@ -108,7 +95,7 @@ object EvaluateService {
     * collections, applied changes). Collections follow b6's key/value shape:
     * a two-column frame maps columns to keys/values; anything wider keys by
     * row index with the row JSON as the value. */
-  private def resultNode(outcome: Outcome, maxRows: Int): Array[Byte] = {
+  private def resultNode(outcome: Outcome): Array[Byte] = {
     def lit(x: Any): Shell.Expr = x match {
       case l: Long => Shell.IntE(l)
       case i: Int => Shell.IntE(i.toLong)
@@ -122,7 +109,7 @@ object EvaluateService {
         graft.proto.ExprProto.encode(Shell.FeatureIdE(t, ns, v))
       case Value(v) => v match {
         case ds: org.apache.spark.sql.Dataset[_] =>
-          val df = ds.toDF().limit(maxRows)
+          val df = ds.toDF().limit(MaxRows)
           if (df.columns.length == 2) {
             val rows = df.collect()
             graft.proto.ExprProto.collectionNode(
@@ -150,93 +137,49 @@ object EvaluateService {
     }
   }
 
-  private def escape(s: String): String =
-    s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-
-  /** Serve POST /evaluate. Returns the bound server (port via getAddress). */
+  /** Serve the two HTTP/1.1 doors: POST /evaluate (JSON) and the B6 RPCs
+    * over gRPC-Web, plus GET /functions. Returns the bound server (port via
+    * getAddress). */
   def serve(reg: WorldRegistry, port: Int = 0): com.sun.net.httpserver.HttpServer = {
-    val server = com.sun.net.httpserver.HttpServer.create(
-      new java.net.InetSocketAddress("127.0.0.1", port), 0)
-    server.createContext("/evaluate", { exchange =>
-      try {
-        val body = new String(exchange.getRequestBody.readAllBytes(), "UTF-8")
-        val expression = jsonField(body, "expression").getOrElse(
-          throw Shell.ShellException("missing field: expression"))
-        val result = evaluate(reg, expression, jsonField(body, "world"),
-          jsonField(body, "version").getOrElse(ApiVersion))
-        val resp = s"""{"type":"${result.kind}","result":${result.json}}"""
-          .getBytes("UTF-8")
-        exchange.getResponseHeaders.add("Content-Type", "application/json")
-        exchange.sendResponseHeaders(200, resp.length.toLong)
-        exchange.getResponseBody.write(resp)
-        exchange.close()
-      } catch {
-        case e: Exception =>
-          val msg = s"""{"error":"${escape(Option(e.getMessage).getOrElse(e.toString))}"}"""
-            .getBytes("UTF-8")
-          exchange.sendResponseHeaders(400, msg.length.toLong)
-          exchange.getResponseBody.write(msg)
-          exchange.close()
-      }
-    })
-    // POST /evaluate-proto: raw NodeProto bytes in the body (the gRPC
-    // payload, re-framed over HTTP); world + version ride the query string
-    server.createContext("/evaluate-proto", { exchange =>
-      try {
-        val nodeBytes = exchange.getRequestBody.readAllBytes()
-        val q = Option(exchange.getRequestURI.getRawQuery).getOrElse("")
-        val params = q.split("&").filter(_.contains("=")).map { kv =>
-          val Array(k, v) = kv.split("=", 2)
-          k -> java.net.URLDecoder.decode(v, "UTF-8")
-        }.toMap
-        val result = evaluateProto(reg, nodeBytes, params.get("world"),
-          params.getOrElse("version", ApiVersion))
-        val resp = s"""{"type":"${result.kind}","result":${result.json}}"""
-          .getBytes("UTF-8")
-        exchange.getResponseHeaders.add("Content-Type", "application/json")
-        exchange.sendResponseHeaders(200, resp.length.toLong)
-        exchange.getResponseBody.write(resp)
-        exchange.close()
-      } catch {
-        case e: Exception =>
-          val msg = s"""{"error":"${escape(Option(e.getMessage).getOrElse(e.toString))}"}"""
-            .getBytes("UTF-8")
-          exchange.sendResponseHeaders(400, msg.length.toLong)
-          exchange.getResponseBody.write(msg)
-          exchange.close()
-      }
-    })
-    // The reference's gRPC service surface (api.proto:265-269), spoken over
-    // gRPC-Web unary framing — the PUBLISHED grpc-web protocol (1 flag byte,
-    // bit 7 = trailer, then 4-byte big-endian length, then the message;
-    // responses end with a trailer frame carrying grpc-status) — so a client
-    // that frames protobuf the gRPC way talks to the engine without any
-    // HTTP/2 stack on either side. The same dispatch table is also served
-    // over TRUE gRPC (HTTP/2 h2c) by [[GrpcServer]].
-    grpcMethods(reg).foreach { case (path, handle) =>
-      grpcWebContext(server, path)(handle)
-    }
-    // GET /functions: the machine-readable registry manifest — the
-    // `b6-api --functions` analogue (reference Makefile:79-80) that the
-    // python client generates its stubs from
-    server.createContext("/functions", { exchange =>
-      val fns = Shell.functionManifest
-        .map { case (n, a) => s"""{"name":"${escape(n)}","arity":$a}""" }
-        .mkString("[", ",", "]")
-      val resp = s"""{"version":"$ApiVersion","functions":$fns}""".getBytes("UTF-8")
-      exchange.getResponseHeaders.add("Content-Type", "application/json")
-      exchange.sendResponseHeaders(200, resp.length.toLong)
-      exchange.getResponseBody.write(resp)
-      exchange.close()
-    })
-    server.start()
-    server
+    val methods = grpcMethods(reg)
+    Http.serve(port,
+      "/evaluate" -> { exchange =>
+        val (expression, world, version) = Http.decode {
+          val body = new String(exchange.getRequestBody.readAllBytes(), "UTF-8")
+          (jsonField(body, "expression").getOrElse(
+            throw new IllegalArgumentException("missing field: expression")),
+            jsonField(body, "world"), jsonField(body, "version").getOrElse(ApiVersion))
+        }
+        val result = evaluate(reg, expression, world, version)
+        Http.json(200, s"""{"type":"${result.kind}","result":${result.json}}""")
+      },
+      // The reference's gRPC service surface (api.proto:265-269), spoken over
+      // gRPC-Web unary framing — the PUBLISHED grpc-web protocol (1 flag byte,
+      // bit 7 = trailer, then 4-byte big-endian length, then the message;
+      // responses end with a trailer frame carrying grpc-status) — so a client
+      // that frames protobuf the gRPC way talks to the engine without any
+      // HTTP/2 stack on either side. gRPC errors ride the trailer; HTTP stays
+      // 200. [[GrpcServer]] serves the same calls over HTTP/2.
+      "/b6.grpc.B6/" -> { exchange =>
+        def trailer(status: Int, message: String) = grpcFrame(0x80,
+          (s"grpc-status: $status\r\n" +
+            (if (message.isEmpty) "" else s"grpc-message: $message\r\n")).getBytes("UTF-8"))
+        val body = unaryCall(methods, exchange.getRequestURI.getPath,
+          exchange.getRequestBody.readAllBytes()) match {
+          case Right(msg) => grpcFrame(0, msg) ++ trailer(0, "")
+          case Left((status, message)) => trailer(status, message)
+        }
+        Http.Reply(200, "application/grpc-web+proto", body)
+      },
+      // GET /functions: the machine-readable registry manifest — the
+      // `b6-api --functions` analogue (reference Makefile:79-80) that the
+      // python client generates its stubs from
+      "/functions" -> { _ =>
+        val fns = Shell.functionManifest
+          .map { case (n, a) => s"""{"name":"${Http.escape(n)}","arity":$a}""" }
+          .mkString("[", ",", "]")
+        Http.json(200, s"""{"version":"$ApiVersion","functions":$fns}""")
+      })
   }
 
   /** The three unary B6 service methods (api.proto:265-269 Evaluate /
@@ -252,7 +195,7 @@ object EvaluateService {
       val outcome = evaluateOutcome(reg, id,
         if (version.isEmpty) ApiVersion else version,
         w => Shell.runParsed(Shell.Env(w, None), node))
-      graft.proto.ExprProto.encodeEvaluateResponse(resultNode(outcome, 1000))
+      graft.proto.ExprProto.encodeEvaluateResponse(resultNode(outcome))
     },
     "/b6.grpc.B6/ListWorlds" -> { _ =>
       graft.proto.ExprProto.encodeListWorldsResponse(
@@ -264,9 +207,29 @@ object EvaluateService {
       Array.emptyByteArray // DeleteWorldResponseProto {}
     })
 
-  // ---- gRPC-Web unary framing ------------------------------------------------
+  // ---- unary gRPC calls, either framing ----------------------------------------
 
-  /** One grpc-web frame: flag byte (0x80 = trailer) + 4-byte BE length + payload. */
+  /** One unary call, shared by the gRPC-Web and the h2c framings: the request
+    * body's frames in; the response message out, or a gRPC status —
+    * UNIMPLEMENTED (12) for an unknown method, UNKNOWN (2) for anything thrown
+    * — with its grpc-message (printable ASCII without '%', the spec's
+    * unescaped subset). */
+  def unaryCall(methods: Map[String, Array[Byte] => Array[Byte]], path: String,
+                body: Array[Byte]): Either[(Int, String), Array[Byte]] = {
+    def status(code: Int, message: String) =
+      Left((code, message.filter(c => c >= ' ' && c <= '~' && c != '%').take(512)))
+    methods.get(path) match {
+      case None => status(12, s"unknown method $path")
+      case Some(handle) =>
+        try {
+          val msg = grpcFrames(body).collectFirst { case (f, p) if (f & 0x80) == 0 => p }
+            .getOrElse(throw new IllegalArgumentException("missing gRPC data frame"))
+          Right(handle(msg))
+        } catch { case e: Exception => status(2, Http.message(e)) }
+    }
+  }
+
+  /** One gRPC frame: flag byte (0x80 = grpc-web trailer) + 4-byte BE length + payload. */
   def grpcFrame(flag: Int, payload: Array[Byte]): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream(payload.length + 5)
     out.write(flag)
@@ -277,44 +240,24 @@ object EvaluateService {
     out.toByteArray
   }
 
-  /** Split a grpc-web body into (flag, payload) frames. */
+  /** Split a gRPC body into (flag, payload) frames; a frame whose header or
+    * declared length runs past the body is rejected, not padded. */
   def grpcFrames(body: Array[Byte]): Seq[(Int, Array[Byte])] = {
     val out = Seq.newBuilder[(Int, Array[Byte])]
     var pos = 0
-    while (pos + 5 <= body.length) {
+    while (pos < body.length) {
+      val left = body.length - pos - 5
+      if (left < 0) throw new IllegalArgumentException("truncated gRPC frame header")
       val flag = body(pos) & 0xff
       val n = ((body(pos + 1) & 0xff) << 24) | ((body(pos + 2) & 0xff) << 16) |
         ((body(pos + 3) & 0xff) << 8) | (body(pos + 4) & 0xff)
+      if (n < 0 || n > left)
+        throw new IllegalArgumentException(s"truncated gRPC frame: $n bytes declared, $left present")
       out += ((flag, java.util.Arrays.copyOfRange(body, pos + 5, pos + 5 + n)))
       pos += 5 + n
     }
     out.result()
   }
-
-  /** Register a unary gRPC-Web method: decode the request data frame, run
-    * `handle`, answer message + grpc-status:0 trailer — or a trailers-only
-    * grpc-status:2 response on error (HTTP stays 200, the gRPC way). */
-  private def grpcWebContext(server: com.sun.net.httpserver.HttpServer,
-                             path: String)(handle: Array[Byte] => Array[Byte]): Unit =
-    server.createContext(path, { exchange =>
-      val body = exchange.getRequestBody.readAllBytes()
-      val resp = try {
-        val msg = grpcFrames(body).collectFirst { case (f, p) if (f & 0x80) == 0 => p }
-          .getOrElse(throw Shell.ShellException("missing grpc-web data frame"))
-        grpcFrame(0, handle(msg)) ++
-          grpcFrame(0x80, "grpc-status: 0\r\n".getBytes("UTF-8"))
-      } catch {
-        case e: Exception =>
-          val m = Option(e.getMessage).getOrElse(e.toString)
-            .replaceAll("[\r\n%]", " ")
-          grpcFrame(0x80,
-            s"grpc-status: 2\r\ngrpc-message: $m\r\n".getBytes("UTF-8"))
-      }
-      exchange.getResponseHeaders.add("Content-Type", "application/grpc-web+proto")
-      exchange.sendResponseHeaders(200, resp.length.toLong)
-      exchange.getResponseBody.write(resp)
-      exchange.close()
-    })
 
   /** Minimal JSON string-field extractor (flat request objects only). */
   private[server] def jsonField(json: String, name: String): Option[String] = {

@@ -64,8 +64,8 @@ object GrpcServer {
   }
 
   /** One unary call = one HTTP/2 stream: buffer DATA until END_STREAM, run
-    * the method, answer HEADERS + DATA + trailers (or a trailers-only error
-    * response, the gRPC way — HTTP status stays 200). */
+    * [[EvaluateService.unaryCall]], answer HEADERS + DATA + trailers (or a
+    * trailers-only error response, the gRPC way — HTTP status stays 200). */
   private final class UnaryCallHandler(methods: Map[String, Array[Byte] => Array[Byte]])
       extends ChannelInboundHandlerAdapter {
     private var path: String = ""
@@ -86,50 +86,24 @@ object GrpcServer {
       case other => ReferenceCountUtil.release(other)
     }
 
-    /** grpc-message is ASCII with %-escapes per the spec; anything outside
-      * printable ASCII is dropped rather than escaped (messages are
-      * human-oriented diagnostics, not data). */
-    private def sanitize(m: String): String =
-      m.filter(c => c >= ' ' && c <= '~' && c != '%').take(512)
-
-    private def trailersOnly(status: Int, message: String) = {
-      val t = new DefaultHttp2Headers()
-      t.status("200")
-      t.set("content-type", "application/grpc")
-      t.setInt("grpc-status", status)
-      if (message.nonEmpty) t.set("grpc-message", sanitize(message))
-      new DefaultHttp2HeadersFrame(t, true)
+    private def headers(endStream: Boolean, fields: (String, String)*) = {
+      val h = new DefaultHttp2Headers()
+      fields.foreach { case (k, v) => h.set(k, v) }
+      new DefaultHttp2HeadersFrame(h, endStream)
     }
 
-    private def respond(ctx: ChannelHandlerContext): Unit = {
-      import EvaluateService.{grpcFrame, grpcFrames}
-      methods.get(path) match {
-        case None =>
-          // UNIMPLEMENTED, as a trailers-only response
-          ctx.writeAndFlush(trailersOnly(12, s"unknown method $path"))
-        case Some(handle) =>
-          try {
-            val reqMsg = grpcFrames(body.toByteArray)
-              .collectFirst { case (f, p) if (f & 0x80) == 0 => p }
-              .getOrElse(throw graft.shell.Shell.ShellException("missing gRPC data frame"))
-            val respMsg = handle(reqMsg)
-            val h = new DefaultHttp2Headers()
-            h.status("200")
-            h.set("content-type", "application/grpc")
-            val trailers = new DefaultHttp2Headers()
-            trailers.setInt("grpc-status", 0)
-            ctx.write(new DefaultHttp2HeadersFrame(h, false))
-            ctx.write(new DefaultHttp2DataFrame(
-              Unpooled.wrappedBuffer(grpcFrame(0, respMsg)), false))
-            ctx.writeAndFlush(new DefaultHttp2HeadersFrame(trailers, true))
-          } catch {
-            case e: Exception =>
-              // UNKNOWN(2) with the diagnostic, mirroring the gRPC-Web door
-              ctx.writeAndFlush(trailersOnly(2,
-                Option(e.getMessage).getOrElse(e.toString)))
-          }
+    private def respond(ctx: ChannelHandlerContext): Unit =
+      EvaluateService.unaryCall(methods, path, body.toByteArray) match {
+        case Right(msg) =>
+          ctx.write(headers(false, ":status" -> "200", "content-type" -> "application/grpc"))
+          ctx.write(new DefaultHttp2DataFrame(
+            Unpooled.wrappedBuffer(EvaluateService.grpcFrame(0, msg)), false))
+          ctx.writeAndFlush(headers(true, "grpc-status" -> "0"))
+        case Left((status, message)) =>
+          ctx.writeAndFlush(headers(true, ":status" -> "200",
+            "content-type" -> "application/grpc", "grpc-status" -> status.toString,
+            "grpc-message" -> message))
       }
-    }
 
     override def exceptionCaught(ctx: ChannelHandlerContext, cause: Throwable): Unit =
       ctx.close()

@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.Changes
-import graft.render.Renderers.{WorldId, World, WorldRegistry}
+import graft.render.Renderers.{WorldId, WorldRegistry}
 import graft.server.EvaluateService
 import org.apache.spark.sql.functions._
 
@@ -11,15 +11,12 @@ import org.apache.spark.sql.functions._
 class EvaluateServiceSpec extends SparkSuite {
   import spark.implicits._
 
-  private def emptyRefs = spark.createDataFrame(
-    spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-    org.apache.spark.sql.types.StructType.fromDDL(
-      "from_type string, from_id long, to_type string, to_id long, role string, pos int"))
+  lazy val reg = ServingWorld.registry(spark, graft.sources.OsmWorld.features(
+    spark, RefData("granary-square.osm.pbf")).cache())
 
-  lazy val reg = new WorldRegistry(spark, World(
-    graft.sources.OsmWorld.features(
-      spark, RefData("granary-square.osm.pbf")).cache(),
-    emptyRefs, Seq.empty[Changes.ItemAdd].toDF()))
+  /** The fixture-free world: SparkEntry.features over sf0.001. */
+  lazy val sfFeatures = ServingWorld.sf(spark, sf001).cache()
+  lazy val sfReg = ServingWorld.registry(spark, sfFeatures)
 
   test("evaluate: counts, collections and scalars come back typed") {
     val count = EvaluateService.evaluate(reg,
@@ -105,14 +102,29 @@ class EvaluateServiceSpec extends SparkSuite {
   }
 
   private def postGrpcWeb(port: Int, path: String, body: Array[Byte]): Array[Byte] = {
-    val conn = new java.net.URL(s"http://127.0.0.1:$port$path")
-      .openConnection().asInstanceOf[java.net.HttpURLConnection]
-    conn.setRequestMethod("POST")
-    conn.setDoOutput(true)
-    conn.setRequestProperty("Content-Type", "application/grpc-web+proto")
-    conn.getOutputStream.write(body)
-    assert(conn.getResponseCode == 200) // gRPC errors ride trailers, not HTTP
-    conn.getInputStream.readAllBytes()
+    val (status, reply) = ServingWorld.http(port, path, Some(body), "application/grpc-web+proto")
+    assert(status == 200) // gRPC errors ride trailers, not HTTP
+    reply
+  }
+
+  /** A gRPC-Web call: (trailer text, the data frame's message if any). */
+  private def grpcWeb(port: Int, path: String, msg: Array[Byte]): (String, Option[Array[Byte]]) =
+    grpcWebRaw(port, path, EvaluateService.grpcFrame(0, msg))
+
+  private def grpcWebRaw(port: Int, path: String, body: Array[Byte]): (String, Option[Array[Byte]]) = {
+    val frames = EvaluateService.grpcFrames(postGrpcWeb(port, path, body))
+    (frames.collect { case (f, p) if (f & 0x80) != 0 => new String(p, "UTF-8") }.mkString,
+      frames.collectFirst { case (f, p) if (f & 0x80) == 0 => p })
+  }
+
+  private def withServer[A](r: WorldRegistry)(f: Int => A): A = {
+    val server = EvaluateService.serve(r)
+    try f(server.getAddress.getPort) finally server.stop(0)
+  }
+
+  private def evaluateJson(port: Int, body: String): (Int, String) = {
+    val (status, reply) = ServingWorld.http(port, "/evaluate", Some(body.getBytes("UTF-8")))
+    (status, new String(reply, "UTF-8"))
   }
 
   test("b6.grpc.B6/Evaluate speaks gRPC-Web framed EvaluateRequest/ResponseProto") {
@@ -223,5 +235,97 @@ class EvaluateServiceSpec extends SparkSuite {
       bad.getOutputStream.write("""{"expression": "no-such-fn 1 2 3"}""".getBytes("UTF-8"))
       assert(bad.getResponseCode == 400)
     } finally server.stop(0)
+  }
+
+  // ---- fixture-free round trips over the sf world, one per door ----------------
+
+  private def cafes = sfFeatures.where(col("tags").getItem("#amenity") === "cafe").count()
+
+  test("sf world: POST /evaluate and GET /functions round-trip JSON") {
+    withServer(sfReg) { port =>
+      val (status, resp) = evaluateJson(port,
+        """{"expression": "find [#amenity=cafe] | count", "version": "1"}""")
+      assert(status == 200, resp)
+      assert(resp == s"""{"type":"long","result":$cafes}""", resp)
+      val (fStatus, fns) = ServingWorld.http(port, "/functions")
+      assert(fStatus == 200)
+      assert(new String(fns, "UTF-8").contains("\"name\":\"find\",\"arity\":1"))
+    }
+  }
+
+  test("sf world: bad input answers 400 with an error body") {
+    withServer(sfReg) { port =>
+      for (body <- Seq(
+        """{"expression": "find [#amenity=cafe", "version": "1"}""", // bad expression
+        """{"expression": "no-such-fn 1 2 3"}""", // unknown function
+        """{"expression": "42", "version": "2.0.0"}""", // version gate
+        """{"version": "1"}""")) { // missing expression field
+        val (status, resp) = evaluateJson(port, body)
+        assert(status == 400 && resp.startsWith("{\"error\":"), s"$body -> $status $resp")
+      }
+    }
+  }
+
+  test("sf world: an engine failure answers 500, not 400") {
+    // the base world reads a parquet directory deleted after the registry is
+    // built: the request is well-formed, the engine cannot answer it
+    val dir = java.nio.file.Files.createTempDirectory("graft-gone").resolve("world").toString
+    ServingWorld.sf(spark, sf001).drop("geom").write.parquet(dir)
+    val gone = ServingWorld.registry(spark, spark.read.parquet(dir))
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    withServer(gone) { port =>
+      val (status, resp) = evaluateJson(port,
+        """{"expression": "find [#amenity=cafe] | count", "version": "1"}""")
+      assert(status == 500 && resp.startsWith("{\"error\":"), s"$status $resp")
+    }
+  }
+
+  test("sf world: gRPC-Web Evaluate, ListWorlds and DeleteWorld; unknown method is status 12") {
+    import graft.proto.ExprProto
+    import graft.shell.Shell._
+    withServer(sfReg) { port =>
+      val req = ExprProto.encodeEvaluateRequest(CallE(SymbolE("count"), List(
+        CallE(SymbolE("find"), List(QueryE(graft.query.Tagged("#amenity", "cafe"))))),
+        pipelined = true), "1", None)
+      val (trailer, msg) = grpcWeb(port, "/b6.grpc.B6/Evaluate", req)
+      assert(trailer.contains("grpc-status: 0"), trailer)
+      assert(ExprProto.decode(ExprProto.decodeEvaluateResponse(msg.get)) == IntE(cafes))
+
+      val scenario = ("collection", "graft/sf-grpcweb", 4L)
+      sfReg.findOrCreate(WorldId(scenario._1, scenario._2, scenario._3))
+      def listIds() = ExprProto.decodeListWorldsResponse(
+        grpcWeb(port, "/b6.grpc.B6/ListWorlds", Array.emptyByteArray)._2.get)
+      assert(listIds().contains(scenario))
+      val (delTrailer, _) = grpcWeb(port, "/b6.grpc.B6/DeleteWorld",
+        ExprProto.encodeDeleteWorldRequest(scenario))
+      assert(delTrailer.contains("grpc-status: 0"), delTrailer)
+      assert(!listIds().contains(scenario))
+
+      val (unk, unkMsg) = grpcWeb(port, "/b6.grpc.B6/NoSuchMethod", Array.emptyByteArray)
+      assert(unk.contains("grpc-status: 12") && unkMsg.isEmpty, unk)
+    }
+  }
+
+  test("gRPC-Web: a truncated EvaluateRequest is rejected, not zero-padded") {
+    import graft.proto.ExprProto
+    import graft.shell.Shell._
+    withServer(sfReg) { port =>
+      val expr = CallE(SymbolE("count"), List(
+        CallE(SymbolE("find"), List(QueryE(graft.query.Keyed("#amenity"))))), pipelined = true)
+      val req = ExprProto.encodeEvaluateRequest(expr, "1", Some(("collection", "graft/cuts", 5L)))
+      // root (field 3) is encoded last: the request without it is a prefix
+      val noRoot = ExprProto.encodeEvaluateRequest(expr, "1", None)
+      assert(req.startsWith(noRoot))
+      // an even number of missing bytes: zero-padded, they would decode as
+      // (key 0, varint 0) pairs and the request would run in the default world
+      assert((req.length - noRoot.length) % 2 == 0)
+      // the frame declares the whole request but carries it only up to root
+      val cutFrame = EvaluateService.grpcFrame(0, req).take(5 + noRoot.length)
+      val (t1, m1) = grpcWebRaw(port, "/b6.grpc.B6/Evaluate", cutFrame)
+      assert(!t1.contains("grpc-status: 0") && t1.contains("grpc-status:") && m1.isEmpty, t1)
+      // a whole frame around a message cut inside root's declared length
+      val (t2, m2) = grpcWeb(port, "/b6.grpc.B6/Evaluate", req.dropRight(3))
+      assert(!t2.contains("grpc-status: 0") && t2.contains("grpc-status:") && m2.isEmpty, t2)
+    }
   }
 }

@@ -84,6 +84,23 @@ class ExprProtoSpec extends AnyFunSuite {
     assert(ExprProto.decodeListWorldsResponse(ExprProto.encodeListWorldsResponse(ids)) == ids)
   }
 
+  test("a length that runs past its message throws instead of reading zeros") {
+    // EvaluateRequestProto{version: "1.0.0"} cut two bytes short: the string
+    // must not come back as "1.0" plus two zero bytes
+    val w = new ExprProto.Writer
+    w.string(2, "1.0.0")
+    intercept[IllegalArgumentException](ExprProto.decodeEvaluateRequest(w.result.dropRight(2)))
+    // a submessage (root) whose declared length runs past the request
+    val req = ExprProto.encodeEvaluateRequest(Shell.IntE(1), "1",
+      Some(("collection", "graft/cut", 5L)))
+    intercept[IllegalArgumentException](ExprProto.decodeEvaluateRequest(req.dropRight(3)))
+    // a literal whose double has 7 of its 8 bytes: the 8th must not come from
+    // the field after the literal
+    val shortDouble = Array[Byte](0x12, 0x08, 0x29, 0, 0, 0, 0, 0, 0, 0xf0.toByte) ++
+      ExprProto.encode(Shell.SymbolE("go"))
+    intercept[IllegalArgumentException](ExprProto.decode(shortDouble))
+  }
+
   test("result-only literal arms: bool, nil, collection, applied change") {
     val (k, v) = (Seq[Shell.Expr](Shell.StringE("x"), Shell.StringE("y")),
       Seq[Shell.Expr](Shell.IntE(1), Shell.IntE(2)))

@@ -1,7 +1,5 @@
 package graft
 
-import graft.operators.Changes
-import graft.render.Renderers.{World, WorldRegistry}
 import graft.server.{EvaluateService, GrpcServer}
 
 import io.netty.bootstrap.Bootstrap
@@ -24,18 +22,8 @@ import scala.jdk.CollectionConverters._
 class GrpcServerSpec extends SparkSuite {
   import graft.shell.Shell._
 
-  private def emptyRefs = spark.createDataFrame(
-    spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-    org.apache.spark.sql.types.StructType.fromDDL(
-      "from_type string, from_id long, to_type string, to_id long, role string, pos int"))
-
-  private lazy val reg = {
-    import spark.implicits._
-    new WorldRegistry(spark, World(
-      graft.sources.OsmWorld.features(
-        spark, RefData("granary-square.osm.pbf")).cache(),
-      emptyRefs, Seq.empty[Changes.ItemAdd].toDF()))
-  }
+  private lazy val reg = ServingWorld.registry(spark, graft.sources.OsmWorld.features(
+    spark, RefData("granary-square.osm.pbf")).cache())
 
   /** One unary gRPC call over an existing h2c connection: returns
     * (response+trailer headers lowercased, concatenated DATA bytes). */
@@ -145,6 +133,31 @@ class GrpcServerSpec extends SparkSuite {
 
       val (unk, _) = unaryCall(conn, port, "/b6.grpc.B6/NoSuchMethod",
         Array.emptyByteArray)
+      assert(unk.get("grpc-status").contains("12"), unk)
+    } finally server.close()
+  }
+
+  test("sf world: h2c Evaluate round trip, truncated request and unknown method rejected") {
+    import graft.proto.ExprProto
+    val features = ServingWorld.sf(spark, sf001)
+    val cafes = features.where(org.apache.spark.sql.functions.col("tags")
+      .getItem("#amenity") === "cafe").count()
+    val server = GrpcServer.serve(ServingWorld.registry(spark, features))
+    try withClient(server.port) { (conn, port) =>
+      val req = ExprProto.encodeEvaluateRequest(CallE(SymbolE("count"), List(
+        CallE(SymbolE("find"), List(QueryE(graft.query.Tagged("#amenity", "cafe"))))),
+        pipelined = true), "1", None)
+      val (hdrs, body) = unaryCall(conn, port, "/b6.grpc.B6/Evaluate", req)
+      assert(hdrs.get("grpc-status").contains("0"), hdrs)
+      val result = ExprProto.decode(ExprProto.decodeEvaluateResponse(
+        EvaluateService.grpcFrames(body).collectFirst { case (f, p) if (f & 0x80) == 0 => p }.get))
+      assert(result == IntE(cafes), result)
+
+      val (cut, cutBody) = unaryCall(conn, port, "/b6.grpc.B6/Evaluate", req.dropRight(2))
+      assert(cut.get("grpc-status").contains("2"), cut)
+      assert(cutBody.isEmpty, "trailers-only error must carry no DATA")
+
+      val (unk, _) = unaryCall(conn, port, "/b6.grpc.B6/NoSuchMethod", Array.emptyByteArray)
       assert(unk.get("grpc-status").contains("12"), unk)
     } finally server.close()
   }

@@ -70,9 +70,9 @@ class RenderersSpec extends SparkSuite {
       .where(col("tags").getItem("#amenity") === "test-cafe").count()
     assert(amenityCount(scenario) == 1L)
     assert(amenityCount(DefaultWorldId) == 0L, "base world must stay untouched")
-    assert(reg.list.toSet.contains(scenario))
-    reg.delete(scenario)
-    assert(!reg.list.toSet.contains(scenario))
+    assert(reg.listWorlds.toSet.contains(scenario))
+    reg.deleteWorld(scenario)
+    assert(!reg.listWorlds.toSet.contains(scenario))
   }
 
   test("durable registry: a scenario world survives a registry restart (export-world per world)") {
@@ -230,6 +230,44 @@ class RenderersSpec extends SparkSuite {
       val bytes = conn.getInputStream.readAllBytes()
       assert(conn.getResponseCode == 200)
       assert(java.util.Arrays.equals(bytes, nonEmptyTile.getAs[Array[Byte]]("mvt")))
+    } finally server.stop(0)
+  }
+
+  // ---- the tile door over the fixture-free sf world ------------------------------
+
+  test("sf world: /tiles answers 200 with the queryTile bytes, 204 for an empty tile, 400 for a bad path") {
+    val reg = ServingWorld.registry(spark, ServingWorld.sf(spark, sf001).cache())
+    val t = Renderers.queryTiles(reg, DefaultWorldId, 14, "[#amenity=cafe]")
+      .orderBy(length(col("mvt")).desc).head
+    val (x, y) = (t.getAs[Long]("x"), t.getAs[Long]("y"))
+    val server = Renderers.serveTiles(reg)
+    try {
+      val port = server.getAddress.getPort
+      val (status, bytes) = ServingWorld.http(port, s"/tiles/14/$x/$y.mvt?q=%5B%23amenity%3Dcafe%5D")
+      assert(status == 200)
+      assert(java.util.Arrays.equals(bytes,
+        Renderers.queryTile(reg, DefaultWorldId, 14, x, y, "[#amenity=cafe]")))
+      val (emptyStatus, empty) = ServingWorld.http(port, "/tiles/14/0/0.mvt?q=%5B%23amenity%3Dcafe%5D")
+      assert(emptyStatus == 204 && empty.isEmpty)
+      for (bad <- Seq("/tiles/14/x/y.mvt", "/tiles/14/1.mvt")) {
+        val (badStatus, body) = ServingWorld.http(port, bad)
+        assert(badStatus == 400 && new String(body, "UTF-8").startsWith("{\"error\":"), s"$bad -> $badStatus")
+      }
+    } finally server.stop(0)
+  }
+
+  test("sf world: a '&' inside the tile query is the shell's AND, not a parameter separator") {
+    val reg = ServingWorld.registry(spark, ServingWorld.sf(spark, sf001).cache())
+    val t = Renderers.queryTiles(reg, DefaultWorldId, 14, "[#amenity=cafe]")
+      .orderBy(length(col("mvt")).desc).head
+    val (x, y) = (t.getAs[Long]("x"), t.getAs[Long]("y"))
+    val server = Renderers.serveTiles(reg)
+    try {
+      val port = server.getAddress.getPort
+      val (status, bytes) = ServingWorld.http(port,
+        s"/tiles/14/$x/$y.mvt?q=%5B%23amenity%3Dcafe%20%26%20%23amenity%5D")
+      assert(status == 200, new String(bytes, "UTF-8"))
+      assert(java.util.Arrays.equals(bytes, t.getAs[Array[Byte]]("mvt")))
     } finally server.stop(0)
   }
 }
