@@ -25,8 +25,9 @@ import io.netty.util.ReferenceCountUtil
  * Protobuf payloads come from the hand-rolled proto3 codec
  * (graft.proto.ExprProto); HTTP/2 framing + HPACK come from Netty's
  * http2 codec (already on Spark's classpath) — no gRPC library involved.
- * Method dispatch is EvaluateService.grpcMethods: exactly the table the
- * gRPC-Web front door uses, so the two transports cannot drift.
+ * Each call runs EvaluateService.unaryCall over EvaluateService.grpcMethods:
+ * exactly the path and table the gRPC-Web door uses, so the two framings
+ * cannot drift.
  */
 object GrpcServer {
 

@@ -9,7 +9,6 @@ import org.apache.spark.sql.functions._
   * (grpc/service.go:26-90): expression + world id in, world-scoped typed
   * result out, version gate. */
 class EvaluateServiceSpec extends SparkSuite {
-  import spark.implicits._
 
   lazy val reg = ServingWorld.registry(spark, graft.sources.OsmWorld.features(
     spark, RefData("granary-square.osm.pbf")).cache())
@@ -239,7 +238,7 @@ class EvaluateServiceSpec extends SparkSuite {
 
   // ---- fixture-free round trips over the sf world, one per door ----------------
 
-  private def cafes = sfFeatures.where(col("tags").getItem("#amenity") === "cafe").count()
+  private lazy val cafes = sfFeatures.where(col("tags").getItem("#amenity") === "cafe").count()
 
   test("sf world: POST /evaluate and GET /functions round-trip JSON") {
     withServer(sfReg) { port =>

@@ -235,39 +235,41 @@ class RenderersSpec extends SparkSuite {
 
   // ---- the tile door over the fixture-free sf world ------------------------------
 
-  test("sf world: /tiles answers 200 with the queryTile bytes, 204 for an empty tile, 400 for a bad path") {
-    val reg = ServingWorld.registry(spark, ServingWorld.sf(spark, sf001).cache())
-    val t = Renderers.queryTiles(reg, DefaultWorldId, 14, "[#amenity=cafe]")
+  private lazy val sfReg = ServingWorld.registry(spark, ServingWorld.sf(spark, sf001).cache())
+
+  /** The fullest z14 `[#amenity=cafe]` tile of the sf world: (x, y, mvt). */
+  private lazy val cafeTile = {
+    val t = Renderers.queryTiles(sfReg, DefaultWorldId, 14, "[#amenity=cafe]")
       .orderBy(length(col("mvt")).desc).head
-    val (x, y) = (t.getAs[Long]("x"), t.getAs[Long]("y"))
-    val server = Renderers.serveTiles(reg)
-    try {
-      val port = server.getAddress.getPort
+    (t.getAs[Long]("x"), t.getAs[Long]("y"), t.getAs[Array[Byte]]("mvt"))
+  }
+
+  private def withTileServer[A](f: Int => A): A = {
+    val server = Renderers.serveTiles(sfReg)
+    try f(server.getAddress.getPort) finally server.stop(0)
+  }
+
+  test("sf world: /tiles answers 200 with the tile's bytes, 204 for an empty tile, 400 for a bad path") {
+    val (x, y, mvt) = cafeTile
+    withTileServer { port =>
       val (status, bytes) = ServingWorld.http(port, s"/tiles/14/$x/$y.mvt?q=%5B%23amenity%3Dcafe%5D")
-      assert(status == 200)
-      assert(java.util.Arrays.equals(bytes,
-        Renderers.queryTile(reg, DefaultWorldId, 14, x, y, "[#amenity=cafe]")))
+      assert(status == 200 && java.util.Arrays.equals(bytes, mvt))
       val (emptyStatus, empty) = ServingWorld.http(port, "/tiles/14/0/0.mvt?q=%5B%23amenity%3Dcafe%5D")
       assert(emptyStatus == 204 && empty.isEmpty)
       for (bad <- Seq("/tiles/14/x/y.mvt", "/tiles/14/1.mvt")) {
         val (badStatus, body) = ServingWorld.http(port, bad)
         assert(badStatus == 400 && new String(body, "UTF-8").startsWith("{\"error\":"), s"$bad -> $badStatus")
       }
-    } finally server.stop(0)
+    }
   }
 
   test("sf world: a '&' inside the tile query is the shell's AND, not a parameter separator") {
-    val reg = ServingWorld.registry(spark, ServingWorld.sf(spark, sf001).cache())
-    val t = Renderers.queryTiles(reg, DefaultWorldId, 14, "[#amenity=cafe]")
-      .orderBy(length(col("mvt")).desc).head
-    val (x, y) = (t.getAs[Long]("x"), t.getAs[Long]("y"))
-    val server = Renderers.serveTiles(reg)
-    try {
-      val port = server.getAddress.getPort
+    val (x, y, mvt) = cafeTile
+    withTileServer { port =>
       val (status, bytes) = ServingWorld.http(port,
         s"/tiles/14/$x/$y.mvt?q=%5B%23amenity%3Dcafe%20%26%20%23amenity%5D")
       assert(status == 200, new String(bytes, "UTF-8"))
-      assert(java.util.Arrays.equals(bytes, t.getAs[Array[Byte]]("mvt")))
-    } finally server.stop(0)
+      assert(java.util.Arrays.equals(bytes, mvt))
+    }
   }
 }
