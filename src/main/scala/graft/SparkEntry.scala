@@ -344,7 +344,7 @@ object SparkEntry {
       val e = t(s, d, "embeddings")
       val q = e.where(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-      Ann.cosineLsh(e, q, 5, bits = 5, tables = 16, dimHint = Some(64))
+      Ann.cosineLsh(e, q, 5, bits = 5, tables = 16)
         .select(col("qid"), col("rank").cast("long").as("rank"), col("neighbor_id"))
         .orderBy("qid", "rank")
     }),
@@ -400,7 +400,7 @@ object SparkEntry {
       // (1-(1-0.0255/pi)^12)^4 ~ 7e-5 — and the injected near-parallel dupes
       // collide in every table
       graft.operators.Ann.cosineNearDupPairs(e.unionByName(dupes), 0.99,
-          bits = 12, tables = 4, dimHint = Some(64))
+          bits = 12, tables = 4)
         .select("id_a", "id_b").orderBy("id_a", "id_b")
     }),
 
@@ -412,10 +412,7 @@ object SparkEntry {
       import s.implicits._
       val (_, edges) = graft.operators.Graph.syntheticGrid(s, gridN)
       val origins = Seq(0L, 71L, 143L).toDF("origin")
-      // edge count is known driver-side (local grid) — the hint skips the
-      // broadcast-vs-iterative count() job per call
-      graft.operators.Graph.reachable(edges, origins, 1200.0,
-          edgeCountHint = Some(gridEdgeCount))
+      graft.operators.Graph.reachable(edges, origins, 1200.0)
         .select(col("origin"), col("node"), round(col("dist_m"), 3).as("dist_m"))
         .orderBy("origin", "node")
     }),
@@ -438,8 +435,7 @@ object SparkEntry {
       import s.implicits._
       val (nodes, edges) = graft.operators.Graph.syntheticGrid(s, gridN)
       val od = graft.operators.Graph.reachable(
-        edges, Seq(0L, 143L).toDF("origin"), 700.0,
-        edgeCountHint = Some(gridEdgeCount)).select("origin", "node")
+        edges, Seq(0L, 143L).toDF("origin"), 700.0).select("origin", "node")
       val survivors = nodes.where(col("node_id") >= 100).select("node_id")
       graft.operators.Graph.filterAccessible(od, survivors)
         .orderBy("origin", "node")
@@ -449,8 +445,7 @@ object SparkEntry {
       import s.implicits._
       val (nodes, edges) = graft.operators.Graph.syntheticGrid(s, gridN)
       val od = graft.operators.Graph.reachable(
-        edges, Seq(0L, 71L, 143L).toDF("origin"), 700.0,
-        edgeCountHint = Some(gridEdgeCount)).select("origin", "node")
+        edges, Seq(0L, 71L, 143L).toDF("origin"), 700.0).select("origin", "node")
       val survivors = nodes.where(col("node_id") >= 100).select("node_id")
       Aggs.odHistogram(graft.operators.Graph.filterAccessible(od, survivors))
         .orderBy("n_valid")
@@ -789,10 +784,6 @@ object SparkEntry {
 
   /** Shared street-grid size for the gr_* queries and their oracles. */
   private val gridN = 12
-
-  /** Undirected edge count of the synthetic grid, known driver-side. */
-  private lazy val gridEdgeCount: Long =
-    graft.operators.Graph.syntheticGridRows(gridN)._2.length.toLong * 2
 
   /** Closed-ring edges of the convex fixture polygons — the sl_rays occluder
     * segments, shared verbatim with the oracle's VALUES literals. */

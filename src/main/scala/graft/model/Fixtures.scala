@@ -611,7 +611,7 @@ object Fixtures {
     // fixture artifact — caching makes every consumer (decode, thumbs,
     // pipeline stages) measure the operator against a materialized input,
     // the same shape as reading the real table warm.
-    ds.toDF().transform(org.apache.spark.sql.graft.PersistOnce(_))
+    ds.toDF().persist()
       .withColumn("lat", expr(
         "CASE WHEN pmod(phash, 10) < 3 THEN 51.5353 + CAST(pmod(phash, 97) AS DOUBLE) * 0.0000011 " +
           "ELSE 51.46 + CAST(pmod(phash, 20000) AS DOUBLE) * 0.00000817 END"))

@@ -68,10 +68,10 @@ object Aggs {
     // final pass below) read back the distinct set, one full input scan
     // total. The distinct set is <= the input by construction, so this is
     // also the cheaper cache at any scale.
-    val aggd = counts.transform(org.apache.spark.sql.graft.PersistOnce(_))
+    val aggd = counts.persist()
     val parts = aggd.repartitionByRange(np, order: _*)
       .withColumn("__pid", spark_partition_id())
-      .transform(org.apache.spark.sql.graft.PersistOnce(_))
+      .persist()
     val perPart = parts.groupBy("__pid")
       .agg(count(lit(1)).as("nd"), sum(col("c")).as("nc"))
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).sortBy(_._1)

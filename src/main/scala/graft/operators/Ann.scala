@@ -97,10 +97,10 @@ object Ann {
       .select(col(qidCol), col("rank"), col(idCol).as("neighbor_id"), col("cosine"))
   }
 
-  /** Deterministic Rademacher (+1/-1) hyperplanes, PRECOMPUTED on the driver
-    * and broadcast — one multiply-add per (table × bit × dim) component in
-    * tight JVM loops, instead of a hash call per component per row (the
-    * round-1 plan cost ~10^5 xxhash64 calls per 768-dim row). */
+  /** Deterministic Rademacher (+1/-1) hyperplanes, PRECOMPUTED once per
+    * operator call or task — one multiply-add per (table × bit × dim)
+    * component in tight JVM loops, instead of a hash call per component per
+    * row (the round-1 plan cost ~10^5 xxhash64 calls per 768-dim row). */
   private[graft] def planes(tables: Int, bits: Int, dim: Int): Array[Array[Float]] =
     Array.tabulate(tables * bits) { p =>
       Array.tabulate(dim) { d =>
@@ -117,19 +117,23 @@ object Ann {
   def cosineNearDupPairs(data: DataFrame, threshold: Double, bits: Int = 8,
                          tables: Int = 8,
                          idCol: String = "vec_id", vecCol: String = "embedding",
-                         maxBucketSize: Int = 1024,
-                         dimHint: Option[Int] = None): DataFrame = {
-    val spark = data.sparkSession
-    // embedding dim: from the caller's schema knowledge when available (skips
-    // a head() job), else probed from the first row
-    val dim = dimHint.getOrElse(data.select(size(col(vecCol))).head.getInt(0))
-    val bp = spark.sparkContext.broadcast(planes(tables, bits, dim))
+                         maxBucketSize: Int = 1024): DataFrame = {
+    // the planes are a pure function of the vector length, so each task
+    // builds them from the first vector it reads (and again only if a later
+    // vector's length differs) — no driver-side dim probe, no broadcast. One
+    // immutable (dim, planes) pair, so a reader never sees a mismatched half.
+    var cached: (Int, Array[Array[Float]]) = (-1, null)
     val buckets = udf { (vec: Seq[Float]) =>
       // unbox ONCE: Seq[Float].apply boxes per access, and each element is
       // read `tables*bits` times below (measured 0.42 s -> ~0.05 s on the
       // 2000x64 fixture when this conversion was added)
       val v = vec.toArray
-      val pl = bp.value
+      val c = cached
+      val pl = if (c._1 == v.length) c._2 else {
+        val fresh = planes(tables, bits, v.length)
+        cached = (v.length, fresh)
+        fresh
+      }
       val out = new Array[Long](tables)
       var t = 0
       while (t < tables) {
@@ -147,7 +151,7 @@ object Ann {
       out
     }
     val base = data.select(col(idCol).as("__id"), col(vecCol).as("__v"))
-      .transform(org.apache.spark.sql.graft.PersistOnce(_))
+      .persist()
     val d = base
       .withColumn("__bs", buckets(col("__v")))
       .select(col("__id"), posexplode(col("__bs")).as(Seq("__t", "__bucket")))
@@ -410,13 +414,8 @@ object Ann {
   def cosineLsh(data: DataFrame, queries: DataFrame, k: Int, bits: Int = 12,
                 tables: Int = 4,
                 idCol: String = "vec_id", vecCol: String = "embedding",
-                qidCol: String = "qid", qvecCol: String = "qvec",
-                dimHint: Option[Int] = None): DataFrame = {
+                qidCol: String = "qid", qvecCol: String = "qvec"): DataFrame = {
     val spark = data.sparkSession
-    // dim from the caller's schema knowledge when available — skips a
-    // head() job (a full extra scan at corpus scale), same contract as
-    // cosineNearDupPairs
-    val dim = dimHint.getOrElse(data.select(size(col(vecCol))).head.getInt(0))
     // The query side is broadcast-sized by contract (the previous plan
     // already broadcast it twice); collecting it lets the WHOLE candidate
     // generation + exact scoring run as ONE scan-side pass over the data:
@@ -426,8 +425,12 @@ object Ann {
     // self-join, no pair dedup Exchange, no re-attach joins (the previous
     // plan paid three broadcast builds and a dedup shuffle per call). The
     // big side still never shuffles; the only Exchange left is the per-query
-    // top-k window.
-    val pl = planes(tables, bits, dim)
+    // top-k window. The planes take their dim from those collected query
+    // vectors, which share the data's embedding length.
+    val qRows = queries.select(col(qidCol).cast("long"), col(qvecCol)).collect()
+    val qIds = qRows.map(_.getLong(0))
+    val qVecs = qRows.map(_.getSeq[Float](1).toArray)
+    val pl = planes(tables, bits, qVecs.headOption.fold(0)(_.length))
     def bucketsOf(v: Array[Float]): Array[Long] = {
       val out = new Array[Long](tables)
       var t = 0
@@ -445,9 +448,6 @@ object Ann {
       }
       out
     }
-    val qRows = queries.select(col(qidCol).cast("long"), col(qvecCol)).collect()
-    val qIds = qRows.map(_.getLong(0))
-    val qVecs = qRows.map(_.getSeq[Float](1).toArray)
     // per-table bucket -> query ordinals (driver arithmetic identical to the
     // executor loop, so the bucket keys match bit-for-bit)
     val qIndex: Array[Map[Long, Array[Int]]] = Array.tabulate(tables) { t =>

@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Compressed-sparse-row adjacency of the street network, broadcast to every
@@ -30,11 +30,12 @@ final case class Csr(nodeIds: Array[Long], offsets: Array[Int],
  * in origins, exact distances. Like the reference (graph.go:528), edges are
  * relaxed only while `dist + cost < budget` (strict).
  *
- * For networks too large to broadcast (`edges.count() > maxBroadcastEdges`),
- * `reachableIterative` runs the same search as a delta-only frontier loop on
- * DataFrames: per round only the improved rows shuffle (the accumulated
- * distance table stays hash-partitioned on (origin,node) across rounds via
- * localCheckpoint, so merges stream it per-partition instead of re-shuffling).
+ * For networks too large to broadcast (more than `MaxBroadcastEdges` rows,
+ * found by the same guarded collect that seeds the CSR), `reachableIterative`
+ * runs the same search as a delta-only frontier loop on DataFrames: per round
+ * only the improved rows shuffle (the accumulated distance table stays
+ * hash-partitioned on (origin,node) across rounds via localCheckpoint, so
+ * merges stream it per-partition instead of re-shuffling).
  */
 object Graph {
 
@@ -44,7 +45,7 @@ object Graph {
       col("dst").as("src"), col("src").as("dst"), col("cost_m")))
 
   /** Edge-count threshold above which the network is no longer broadcast. */
-  val DefaultMaxBroadcastEdges: Long = 20000000L
+  val MaxBroadcastEdges: Int = 20000000
 
   // ---- CSR build + broadcast ------------------------------------------------
 
@@ -82,14 +83,16 @@ object Graph {
     * re-collecting the edge table per query. */
   final case class Network(bc: Broadcast[Csr])
 
-  def network(edges: DataFrame): Network = Network(broadcastCsr(edges))
+  def network(edges: DataFrame): Network = network(edges, edgeRows(edges).collect())
 
-  private def broadcastCsr(edges: DataFrame): Broadcast[Csr] = {
+  private def network(edges: DataFrame, rows: Array[(Long, Long, Double)]): Network =
+    Network(edges.sparkSession.sparkContext.broadcast(buildCsr(rows)))
+
+  private def edgeRows(edges: DataFrame): Dataset[(Long, Long, Double)] = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val rows = edges.select(col("src").cast("long"), col("dst").cast("long"),
-      col("cost_m").cast("double")).as[(Long, Long, Double)].collect()
-    spark.sparkContext.broadcast(buildCsr(rows))
+    edges.select(col("src").cast("long"), col("dst").cast("long"),
+      col("cost_m").cast("double")).as[(Long, Long, Double)]
   }
 
   /**
@@ -161,15 +164,14 @@ object Graph {
    * over the broadcast network.
    */
   def reachable(edges: DataFrame, origins: DataFrame, budgetMeters: Double,
-                originCol: String = "origin",
-                maxBroadcastEdges: Long = DefaultMaxBroadcastEdges,
-                edgeCountHint: Option[Long] = None): DataFrame = {
-    // the broadcast-vs-iterative decision needs |edges|; callers that already
-    // know it (an index catalog, a prepared Network, a loop reusing one edge
-    // table) pass the hint and skip the count action entirely
-    if (edgeCountHint.getOrElse(edges.count()) > maxBroadcastEdges)
-      return reachableIterative(edges, origins, budgetMeters, originCol)
-    reachable(network(edges), origins, budgetMeters, originCol)
+                originCol: String = "origin"): DataFrame = {
+    // ONE job decides broadcast-vs-iterative AND seeds the CSR: collect up to
+    // MaxBroadcastEdges + 1 edge rows — when they fit, they are the network
+    // (the knnJoin pattern); otherwise the iterative loop re-reads the table
+    val rows = edgeRows(edges).limit(MaxBroadcastEdges + 1).collect()
+    if (rows.length > MaxBroadcastEdges)
+      reachableIterative(edges, origins, budgetMeters, originCol)
+    else reachable(network(edges, rows), origins, budgetMeters, originCol)
   }
 
   /** Repeated-search variant over a prepared Network (no per-call collect). */

@@ -184,7 +184,7 @@ object ImageOps {
     val ranged = assigned
       .repartitionByRange(parts, col("bucket_id"), col("__hs"), col(idCol))
       .withColumn("__pid", spark_partition_id())
-      .transform(org.apache.spark.sql.graft.PersistOnce(_))
+      .persist()
     val totals = ranged.groupBy("__pid", "bucket_id").count()
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2)))
     // exclusive per-bucket offsets in partition order (range partitions are

@@ -81,31 +81,30 @@ object SpatialJoins {
   def knnJoin(points: DataFrame, sites: DataFrame, k: Int, level: Int = 10,
               pointCell: String = "cell16",
               siteLat: String = "site_lat", siteLng: String = "site_lng",
-              maxDistance: Option[Double] = None,
-              distributedThreshold: Int = 50000): DataFrame = {
-    // Auto-select the execution mode by site count: below the threshold the
+              maxDistance: Option[Double] = None): DataFrame = {
+    // Auto-select the execution mode by site count: up to DriverMaxSites the
     // driver-resident active set (broadcast LocalRelation per ring, settled
     // rows on the heap) is fastest; above it, million-site callers
     // (connect-to-network-all over a metro, graph/connectivity.go:39-199)
     // must keep sites distributed — the driver holds only per-ring counts.
     // ONE job decides the mode AND seeds driver mode: collect up to
-    // threshold+1 site rows — when the table is small (the common driver-mode
-    // case) these rows ARE the active set, so the old separate
-    // `limit(n+1).count()` probe job (a full second scan of the site-side
-    // derivation) is folded away; the distributed path re-derives from the
-    // DataFrame as before.
-    val headRows = sites.limit(distributedThreshold + 1).collect()
-    if (headRows.length <= distributedThreshold)
-      knnJoinDriver(points, sites, k, level, pointCell, siteLat, siteLng, maxDistance,
-        preCollected = Some(headRows))
+    // DriverMaxSites + 1 site rows — when the table is small (the common
+    // driver-mode case) these rows ARE the active set; the distributed path
+    // re-derives from the DataFrame.
+    val headRows = sites.limit(DriverMaxSites + 1).collect()
+    if (headRows.length <= DriverMaxSites)
+      knnJoinDriver(points, sites, headRows, k, level, pointCell, siteLat, siteLng, maxDistance)
     else knnJoinDistributed(points, sites, k, level, pointCell, siteLat, siteLng, maxDistance)
   }
 
-  private def knnJoinDriver(points: DataFrame, sites: DataFrame, k: Int, level: Int,
+  /** Site count up to which [[knnJoin]] keeps the active set on the driver. */
+  private val DriverMaxSites = 50000
+
+  private def knnJoinDriver(points: DataFrame, sites: DataFrame,
+              siteRows: Array[org.apache.spark.sql.Row], k: Int, level: Int,
               pointCell: String,
               siteLat: String, siteLng: String,
-              maxDistance: Option[Double],
-              preCollected: Option[Array[org.apache.spark.sql.Row]] = None): DataFrame = {
+              maxDistance: Option[Double]): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val spark = points.sparkSession
     graft.functions.CellExprs.install(spark)
@@ -127,7 +126,7 @@ object SpatialJoins {
     // lists, no per-ring rewrite of the accumulated set, no separate
     // guarantee job.
     val siteSchema = sites.schema
-    var active: Array[org.apache.spark.sql.Row] = preCollected.getOrElse(sites.collect())
+    var active: Array[org.apache.spark.sql.Row] = siteRows
     // result schema of the loop below (points + site cols + __dist + rank,
     // join keys dropped), derivable without running a job — covers the
     // zero-sites case where the loop never executes

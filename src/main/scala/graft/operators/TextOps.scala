@@ -442,7 +442,7 @@ object TextOps {
     // wide arrays through the band shuffle would dominate the exchange. The
     // join moves only (id, band_hash); shingles re-attach by id afterwards.
     val withSh = df.select(col(idCol).as("__id"), shingles(col(textCol), k).as("__sh"))
-      .transform(org.apache.spark.sql.graft.PersistOnce(_))
+      .persist()
     val bandHashes = udf { (sh: Seq[String]) =>
       val sig = minhashSig(sh, numHashes)
       Array.tabulate(bands) { b =>
@@ -523,7 +523,7 @@ object TextOps {
     // artifact they share
     val s = sig.select(col(idCol).as("__id") +: col(sigCol).as("__sig") +:
         carry.map(col): _*)
-      .transform(org.apache.spark.sql.graft.PersistOnce(_))
+      .persist()
     // literal 4-element array (whole-stage codegen) — transform(sequence(...))
     // is an interpreted higher-order function on the hot scan (the CLAUDE.md
     // HOF trap; measured 0.36 s -> 0.19 s for the banding pass at sf0.1)
@@ -553,6 +553,9 @@ object TextOps {
                    maxHamming: Int = 3): DataFrame =
     hammingPairs64(simhash(df, idCol, textCol), idCol, "simhash", maxHamming)
 
+  /** Pair-graph edge count up to which [[dedupClusters]] runs on the driver. */
+  private val DriverMaxEdges = 2000000
+
   /**
    * Duplicate-CLUSTER assignment from a near-dup pair list: connected
    * components of the pair graph as (id, cluster = min reachable id) — the
@@ -566,21 +569,21 @@ object TextOps {
    */
   def dedupClusters(pairs: DataFrame, vertices: DataFrame,
                     idCol: String = "doc_id",
-                    idA: String = "id_a", idB: String = "id_b",
-                    driverEdgeThreshold: Int = 2000000): DataFrame = {
+                    idA: String = "id_a", idB: String = "id_b"): DataFrame = {
     // Dual-mode, like SpatialJoins.knnJoin: the pair list is ids-only and a
-    // dedup graph touches a small fraction of the corpus, so below the
-    // threshold (~2M edges = tens of MB of longs) a driver-side union-find
-    // with min-id representatives replaces O(log diameter) rounds of
-    // distributed joins — one collect, one broadcast join back. Above it,
-    // the pointer-doubling label-propagation loop runs fully distributed.
+    // dedup graph touches a small fraction of the corpus, so up to
+    // DriverMaxEdges (~2M edges = tens of MB of longs) a driver-side
+    // union-find with min-id representatives replaces O(log diameter) rounds
+    // of distributed joins. ONE guarded collect of DriverMaxEdges + 1 edges
+    // decides the mode AND is the union-find input; then one broadcast join
+    // back. Above it, the pointer-doubling label-propagation loop runs fully
+    // distributed.
+    val spark = pairs.sparkSession
+    import spark.implicits._
     val sym0 = pairs.select(col(idA).as("u"), col(idB).as("v"))
       .distinct().localCheckpoint(eager = false)
-    val nEdges = sym0.limit(driverEdgeThreshold + 1).count()
-    if (nEdges <= driverEdgeThreshold) {
-      val spark = pairs.sparkSession
-      import spark.implicits._
-      val edges = sym0.as[(Long, Long)].collect()
+    val edges = sym0.as[(Long, Long)].limit(DriverMaxEdges + 1).collect()
+    if (edges.length <= DriverMaxEdges) {
       val parent = scala.collection.mutable.Map.empty[Long, Long]
       def find(x: Long): Long = {
         var r = x
@@ -687,7 +690,7 @@ object TextOps {
     // inverted index moves only (shingle-hash, id); shingle sets re-attach by
     // id for the exact verify (same shuffle discipline as dedupMinhashLsh)
     val withSh = df.select(col(idCol).as("__id"), shingles(col(textCol), k).as("__sh"))
-      .transform(org.apache.spark.sql.graft.PersistOnce(_))
+      .persist()
     // shingle-set size rides along from the (already-distinct) array — no
     // per-document count window needed; it feeds both the prefix bound and
     // the size filter below
@@ -707,7 +710,7 @@ object TextOps {
       // whole posting pipeline (explode + df-count shuffle join + window)
       // recomputes per branch (plan-probed in the r6 baseline). Postings are
       // (id, hash, size) — ids-only, MEMORY_AND_DISK.
-      .transform(org.apache.spark.sql.graft.PersistOnce(_))
+      .persist()
     // size filter (AllPairs length bound): J(A,B) >= t requires
     // t * max(|A|,|B|) <= min(|A|,|B|); the +1 slack keeps borderline pairs
     // whose real t*max == min from being lost to double rounding — the exact
@@ -784,7 +787,7 @@ object TextOps {
     val ranged = df.select(col(idCol), col(tokenCol).cast("long").as("__n"))
       .repartitionByRange(parts, col(idCol))
       .withColumn("__pid", spark_partition_id())
-      .transform(org.apache.spark.sql.graft.PersistOnce(_))
+      .persist()
     // partition totals -> exclusive offsets (partition ids are ordered by the
     // range partitioner, so offsets accumulate in id order)
     val totals = ranged.groupBy("__pid").agg(sum(col("__n")).as("__t"))
@@ -860,7 +863,7 @@ object TextOps {
     }
     val bg = bench.select(explode(sh(col(textCol))).as("__g")).distinct()
     val cg = corpus.select(col(idCol), sh(col(textCol)).as("__gs"))
-      .transform(org.apache.spark.sql.graft.PersistOnce(_))
+      .persist()
     val hits = cg.select(col(idCol), explode(col("__gs")).as("__g"))
       .join(broadcast(bg), "__g")
       .groupBy(col(idCol)).agg(count(lit(1)).as("__c"))

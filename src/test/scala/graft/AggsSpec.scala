@@ -116,4 +116,18 @@ class AggsSpec extends SparkSuite {
     val got = Aggs.top(df, "v", 2, "k").select("k").collect().map(_.getLong(0)).toSeq
     assert(got == Seq(1L, 2L))
   }
+
+  test("percentiles twice over one input pins its internal caches on the first call only") {
+    val df = Seq(10.5, 11.5, 11.5, 12.5, 14.5).toDF("v")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.size
+    val first = Aggs.percentiles(df, "v").collect().toSet
+    val afterFirst = sc.getPersistentRDDs.size
+    // the session cache matches the second call's plans to the first call's
+    // entries, so persisting them again pins nothing new
+    val second = Aggs.percentiles(df, "v").collect().toSet
+    assert(afterFirst > before)
+    assert(sc.getPersistentRDDs.size == afterFirst)
+    assert(second == first)
+  }
 }

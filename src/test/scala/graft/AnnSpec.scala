@@ -171,4 +171,12 @@ class AnnSpec extends SparkSuite {
     val recall = exact.count(got.contains).toDouble / exact.size
     assert(recall >= 0.5, s"recall=$recall")
   }
+
+  test("cosineNearDupPairs and cosineLsh over an empty embeddings table return no rows") {
+    // no row to read a vector length from: neither operator may probe one
+    val empty = data.where(col("vec_id") < 0)
+    val emptyQueries = empty.select(col("vec_id").as("qid"), col("embedding").as("qvec"))
+    assert(Ann.cosineNearDupPairs(empty, 0.99, bits = 12, tables = 4).count() == 0)
+    assert(Ann.cosineLsh(empty, emptyQueries, 5, bits = 5, tables = 16).count() == 0)
+  }
 }

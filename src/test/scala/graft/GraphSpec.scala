@@ -169,4 +169,16 @@ class GraphSpec extends SparkSuite {
       .as[(Long, Long)].collect().toSet
     assert(got == Set((1L, 10L), (1L, 11L), (3L, 10L), (2L, -1L)))
   }
+
+  test("reachable decides broadcast-vs-iterative and seeds the CSR in one job") {
+    val grid = edges
+    val origins = Seq(0L, 77L, 143L).toDF("origin")
+    // one guarded collect both sizes the network and is the CSR input: no
+    // separate count() probe, and no caller-supplied edge count
+    val (od, jobs) = JobCount(spark)(Graph.reachable(grid, origins, 900.0))
+    assert(jobs == 1, s"reachable started $jobs jobs while it built")
+    val got = od.as[(Long, Long, Double)].collect().filter(_._1 == 77L)
+      .map(r => r._2 -> r._3).toMap
+    assert(got == dijkstra(77L, 900.0)._1)
+  }
 }

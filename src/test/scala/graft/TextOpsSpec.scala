@@ -135,6 +135,18 @@ class TextOpsSpec extends SparkSuite {
     assert(rounds <= 16, s"pointer doubling took $rounds rounds for diameter 1000")
   }
 
+  test("dedupClusters driver mode sizes and reads the pair graph in one guarded collect") {
+    val pairs = Seq((1L, 2L), (1L, 3L), (10L, 11L), (11L, 12L), (12L, 13L))
+      .toDF("id_a", "id_b")
+    val vertices = (Seq(1L, 2L, 3L, 10L, 11L, 12L, 13L) ++ Seq(99L)).toDF("doc_id")
+    val (labels, jobs) = JobCount(spark)(TextOps.dedupClusters(pairs, vertices))
+    // the distinct's shuffle-map job and the guarded collect; a separate
+    // limit(n + 1).count() size probe ahead of the collect would add two more
+    assert(jobs == 2, s"dedupClusters started $jobs jobs while it built")
+    assert(labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+      Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L, 12L -> 10L, 13L -> 10L, 99L -> 99L))
+  }
+
   test("dedupClusters over ngram pairs equals driver union-find") {
     import spark.implicits._
     val pairs = TextOps.ngramJaccardJoin(docs, "doc_id", "text", k = 3, threshold = 0.5)
