@@ -120,6 +120,33 @@ object Cells {
     (((cell >>> 5) + 1) << width) - 1
   }
 
+  /** First and last descendant of `cell` at `lvl` (lvl >= level(cell)): in a
+    * Morton order the descendants at one level are one contiguous id range,
+    * so `parentAt(d, level(cell)) == cell` iff lo <= d <= hi for every `d`
+    * at `lvl`. */
+  def descendantRange(cell: Long, lvl: Int): (Long, Long) = {
+    val l = level(cell)
+    require(l <= lvl && lvl <= MaxLevel, s"level $lvl is not at or below cell level $l")
+    val shift = 2 * (lvl - l)
+    val m = cell >>> 5
+    (((m << shift) << 5) | lvl.toLong, ((((m + 1) << shift) - 1) << 5) | lvl.toLong)
+  }
+
+  /** True if `cell` lies in one of the inclusive ranges of `bounds`, which
+    * holds sorted, disjoint (lo, hi) pairs flattened as lo0, hi0, lo1, hi1 ...
+    * Binary search over the lows. */
+  def inRanges(bounds: Array[Long], cell: Long): Boolean = {
+    var lo = 0
+    var hi = bounds.length / 2 - 1
+    while (lo <= hi) {
+      val mid = (lo + hi) >>> 1
+      if (bounds(2 * mid) > cell) hi = mid - 1
+      else if (cell <= bounds(2 * mid + 1)) return true
+      else lo = mid + 1
+    }
+    false
+  }
+
   /** True if `anc` is `cell` or an ancestor of it. */
   def contains(anc: Long, cell: Long): Boolean = {
     val la = level(anc); val lc = level(cell)

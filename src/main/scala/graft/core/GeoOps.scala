@@ -228,6 +228,10 @@ object GeoOps {
     out
   }
 
+  /** True if `tile` is in the tile cover of the WKB geometry at `zoom`. */
+  def tileCovers(wkb: Array[Byte], zoom: Int, tile: Long): Boolean =
+    java.util.Arrays.binarySearch(tileCoverWkb(wkb, zoom), tile) >= 0
+
   /** Single-level grid of cells intersecting a geometry — the s2-grid
     * semantics (api/functions/s2.go:30-44: min=max=level covering, sorted).
     * Realised as the covering with an unbounded cell budget, which refines

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.functions.{call_function, lit, typedLit}
 import org.apache.spark.sql.types._
 
 /**
@@ -185,6 +185,71 @@ object CellExprs {
         newChildren: IndexedSeq[Expression]): Expression = copy(newChildren)
   }
 
+  /** `cap_within(lat, lng, centreLat, centreLng, radiusMeters)`: the point is
+    * strictly inside the cap — `haversine_m(lat, lng, centreLat, centreLng) <
+    * radiusMeters`, same call, same argument order. The cap is a field of the
+    * expression, not a literal child: Catalyst inlines double literals into
+    * the generated Java, so the haversine form compiled new code for every
+    * centre and radius. Here the cap reaches generated code through
+    * `ctx.addReferenceObj`, so every cap shares one compiled class. */
+  case class CapWithin(left: Expression, right: Expression,
+                       centreLat: Double, centreLng: Double, radiusMeters: Double)
+      extends BinaryExpression with Predicate {
+    override def prettyName: String = "cap_within"
+    override protected def nullSafeEval(lat: Any, lng: Any): Any =
+      graft.core.GeoOps.haversineMeters(lat.asInstanceOf[Double], lng.asInstanceOf[Double],
+        centreLat, centreLng) < radiusMeters
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val cap = ctx.addReferenceObj("cap", Array(centreLat, centreLng, radiusMeters), "double[]")
+      defineCodeGen(ctx, ev, (a, b) =>
+        s"graft.core.GeoOps.haversineMeters($a, $b, $cap[0], $cap[1]) < $cap[2]")
+    }
+    override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
+      copy(left = l, right = r)
+  }
+
+  /** `cell_in_ranges(cell, ranges)`: `cell` lies in one of the inclusive id
+    * ranges, a binary search ([[graft.core.Cells.inRanges]]). `bounds` holds
+    * sorted, disjoint (lo, hi) pairs flattened; like [[CapWithin]] it is a
+    * field passed to generated code by reference, so the code is the same
+    * whatever the ranges. */
+  case class CellInRanges(child: Expression, bounds: Vector[Long])
+      extends UnaryExpression with Predicate {
+    require(bounds.length % 2 == 0, "cell_in_ranges needs (lo, hi) pairs")
+    @transient private lazy val boundsArray = bounds.toArray
+    override def prettyName: String = "cell_in_ranges"
+    override protected def nullSafeEval(c: Any): Any =
+      graft.core.Cells.inRanges(boundsArray, c.asInstanceOf[Long])
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val ranges = ctx.addReferenceObj("cellRanges", bounds.toArray, "long[]")
+      defineCodeGen(ctx, ev, c => s"graft.core.Cells.inRanges($ranges, $c)")
+    }
+    override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+  }
+
+  /** `tile_covers(geom, zoom, tile)`: the geometry's tile cover at `zoom`
+    * holds `tile` — `array_contains(tile_cover(geom, zoom), tile)`, with the
+    * zoom and tile id as fields passed to generated code by reference like
+    * [[CapWithin]], so every tile shares one compiled class. */
+  case class TileCovers(child: Expression, zoom: Int, tile: Long)
+      extends UnaryExpression with Predicate {
+    override def prettyName: String = "tile_covers"
+    override protected def nullSafeEval(wkb: Any): Any =
+      graft.core.GeoOps.tileCovers(wkb.asInstanceOf[Array[Byte]], zoom, tile)
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val t = ctx.addReferenceObj("tile", Array(zoom.toLong, tile), "long[]")
+      defineCodeGen(ctx, ev, g => s"graft.core.GeoOps.tileCovers($g, (int) $t[0], $t[1])")
+    }
+    override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+  }
+
+  /** Sorted, disjoint flattened bounds of the union of inclusive ranges. */
+  def mergeRanges(ranges: Seq[(Long, Long)]): Vector[Long] =
+    ranges.sortBy(_._1).foldLeft(List.empty[(Long, Long)]) {
+      case ((lo, hi) :: rest, (l, h)) if l <= hi => (lo, math.max(hi, h)) :: rest
+      case (acc, r) => r :: acc
+    }.reverse.flatMap { case (l, h) => Seq(l, h) }.toVector
+
   case class TileXExpr(left: Expression, right: Expression)
       extends BinaryExpression {
     override def dataType: DataType = LongType
@@ -225,6 +290,14 @@ object CellExprs {
   private def asI(e: Expression): Expression = Cast(e, IntegerType)
   private def asL(e: Expression): Expression = Cast(e, LongType)
 
+  /** A parameter that must be a constant: evaluated once, at analysis. */
+  private def const(fn: String, e: Expression): Any = {
+    if (!e.foldable) throw new IllegalArgumentException(s"$fn: parameter $e is not a constant")
+    e.eval()
+  }
+  private def constD(fn: String, e: Expression): Double =
+    const(fn, asD(e)).asInstanceOf[Double]
+
   private val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "cell_of" -> (es => CellOf(asD(es(0)), asD(es(1)), asI(es(2)))),
     "cell_parent_at" -> (es => CellParentAt(asL(es(0)), asI(es(1)))),
@@ -237,6 +310,15 @@ object CellExprs {
     "wkb_covers_point" -> (es => WkbCoversPoint(es(0), asD(es(1)), asD(es(2)))),
     "wkb_intersects" -> (es => WkbIntersects(es(0), es(1))),
     "haversine_m" -> (es => HaversineM(es.map(asD))),
+    "cap_within" -> (es => CapWithin(asD(es(0)), asD(es(1)),
+      constD("cap_within", es(2)), constD("cap_within", es(3)), constD("cap_within", es(4)))),
+    "tile_covers" -> (es => TileCovers(es(0),
+      const("tile_covers", asI(es(1))).asInstanceOf[Int], const("tile_covers", asL(es(2))).asInstanceOf[Long])),
+    "cell_in_ranges" -> { es =>
+      val flat = const("cell_in_ranges", Cast(es(1), ArrayType(LongType)))
+        .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toLongArray()
+      CellInRanges(asL(es(0)), mergeRanges(flat.grouped(2).map(p => (p(0), p(1))).toSeq))
+    },
     "tile_x" -> (es => TileXExpr(asD(es(0)), asI(es(1)))),
     "tile_y" -> (es => TileYExpr(asD(es(0)), asI(es(1)))),
     "tile_cover" -> (es => TileCoverWkbExpr(es(0), asI(es(1)))),
@@ -267,12 +349,25 @@ object CellExprs {
   def wkb_intersects(a: Column, b: Column): Column = call_function("wkb_intersects", a, b)
   def haversine_m(lat1: Column, lng1: Column, lat2: Column, lng2: Column): Column =
     call_function("haversine_m", lat1, lng1, lat2, lng2)
+  /** Strictly inside the cap: `haversine_m(lat, lng, centreLat, centreLng) <
+    * radiusMeters`, with one compiled class for every cap. */
+  def cap_within(lat: Column, lng: Column, centreLat: Double, centreLng: Double,
+                 radiusMeters: Double): Column =
+    call_function("cap_within", lat, lng, lit(centreLat), lit(centreLng), lit(radiusMeters))
+  /** `cell` lies in one of the inclusive (lo, hi) id ranges, with one compiled
+    * class for every range set. */
+  def cell_in_ranges(cell: Column, ranges: Seq[(Long, Long)]): Column =
+    call_function("cell_in_ranges", cell, typedLit(mergeRanges(ranges)))
   /** s2-center analogue: cell centroid (functions/s2.go:13-74). */
   def cell_center_lat(cell: Column): Column = call_function("cell_center_lat", cell)
   def cell_center_lng(cell: Column): Column = call_function("cell_center_lng", cell)
   def tile_x(lng: Column, zoom: Column): Column = call_function("tile_x", lng, zoom)
   def tile_y(lat: Column, zoom: Column): Column = call_function("tile_y", lat, zoom)
   def tile_cover(wkb: Column, zoom: Column): Column = call_function("tile_cover", wkb, zoom)
+  /** The geometry's tile cover at `zoom` holds `tile`, with one compiled
+    * class for every tile. */
+  def tile_covers(wkb: Column, zoom: Int, tile: Long): Column =
+    call_function("tile_covers", wkb, lit(zoom), lit(tile))
   /** s2-grid analogue: single-level sorted cell grid of a geometry. */
   def cell_grid(wkb: Column, level: Column): Column = call_function("cell_grid", wkb, level)
   /** s2-polygon analogue: cell boundary polygon (WKB). */

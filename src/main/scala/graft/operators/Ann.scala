@@ -54,9 +54,10 @@ object Ann {
     * an unknown size always passes this half of the gate. */
   private def parallelized(df: DataFrame): DataFrame = {
     val parts = df.sparkSession.sessionState.conf.numShufflePartitions
-    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (bytes >= parts.toLong * 256L * 1024L &&
-      df.rdd.getNumPartitions * 2 < parts) df.repartition(parts) else df
+    // the partition test first: at scale it fails and the stats go unread
+    if (df.rdd.getNumPartitions * 2 < parts &&
+      df.queryExecution.optimizedPlan.stats.sizeInBytes >= parts.toLong * 256L * 1024L)
+      df.repartition(parts) else df
   }
 
   /** Exact cosine as ONE tight-loop UDF (the aggregate(zip_with(..)) HOF

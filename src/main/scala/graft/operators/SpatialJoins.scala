@@ -12,9 +12,11 @@ import graft.functions.CellExprs._
  * (src/diagonal.works/b6/search/spatial.go:65-113): polygon features are keyed
  * by their covering cells; a point's candidate polygons are those whose
  * covering contains one of the point's ancestors. We realise it as a pure
- * equi-join: explode the (small) polygon covering, compute the distinct
- * covering levels (a <=30-element set, one tiny job), emit per point one join
- * key per such level, then refine exactly with JTS. Catalyst/AQE then picks
+ * equi-join: explode the (small) polygon covering, take its distinct
+ * covering levels (a <=30-element set) from one guarded collect of the
+ * exploded cells, emit per point one join key per such level, then refine
+ * exactly with JTS. A build side that fits on the driver is broadcast from
+ * the collected rows; a larger one is left to Catalyst/AQE, which picks
  * broadcast vs sort-merge and splits skewed cells.
  */
 object SpatialJoins {
@@ -30,18 +32,40 @@ object SpatialJoins {
                          pointCell: String = "cell16",
                          geomCol: String = "geom",
                          coveringCol: String = "covering"): DataFrame = {
-    graft.functions.CellExprs.install(points.sparkSession)
+    val spark = points.sparkSession
+    graft.functions.CellExprs.install(spark)
     val polyCells = polygons.withColumn("__jcell", explode(col(coveringCol)))
-    // Distinct covering levels: bounded by MaxLevel+1=30 values; computed on
-    // the (small) polygon side so the big point side needs exactly one pass.
-    val levels: Array[Int] = polyCells
-      .select(cell_level(col("__jcell")).as("l")).distinct().collect().map(_.getInt(0)).sorted
+    // One guarded collect decides the build side: when the exploded polygon
+    // cells fit on the driver, their rows give the covering levels and are
+    // broadcast as the build side as they are; otherwise the levels come
+    // from a distinct over the (still small, <= MaxLevel+1 values) level
+    // column and Catalyst/AQE picks the join. A caller's join hint on the
+    // polygon side (e.g. `hint("merge")`) also takes the second path, so the
+    // hint still decides the join. Either way the big point side needs
+    // exactly one pass.
+    val hinted = polygons.queryExecution.analyzed.exists(
+      _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.ResolvedHint])
+    val head = if (hinted) None
+      else Some(polyCells.limit(MaxDriverCells + 1).collect()).filter(_.length <= MaxDriverCells)
+    val (levels, build) = head match {
+      case Some(rows) =>
+        val cell = polyCells.schema.fieldIndex("__jcell")
+        (rows.map(r => Cells.level(r.getLong(cell))).distinct.sorted,
+          broadcast(spark.createDataFrame(java.util.Arrays.asList(rows: _*), polyCells.schema)))
+      case None =>
+        (polyCells.select(cell_level(col("__jcell")).as("l")).distinct().collect()
+          .map(_.getInt(0)).sorted, polyCells)
+    }
     val keyed = points.withColumn("__jcell",
       explode(array(levels.map(l => cell_parent_at(col(pointCell), lit(l))): _*)))
-    keyed.join(polyCells, "__jcell")
+    keyed.join(build, "__jcell")
       .where(wkb_covers_point(col(geomCol), col("lat"), col("lng")))
       .drop("__jcell")
   }
+
+  /** Exploded polygon cells up to which [[pointInPolygonJoin]] collects its
+    * build side on the driver and broadcasts it. */
+  private val MaxDriverCells = 20000
 
   /**
    * Geometry-intersection join (polyline/polygon features vs polygon query

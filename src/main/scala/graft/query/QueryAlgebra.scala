@@ -53,8 +53,7 @@ case class TokenPrefix(key: String, prefix: String) extends Query {
   def toColumn: Column = col("tags").getItem(key).startsWith(prefix)
 }
 case class IntersectsCap(lat: Double, lng: Double, radiusMeters: Double) extends Query {
-  def toColumn: Column =
-    CellExprs.haversine_m(col("lat"), col("lng"), lit(lat), lit(lng)) < lit(radiusMeters)
+  def toColumn: Column = CellExprs.cap_within(col("lat"), col("lng"), lat, lng, radiusMeters)
 }
 /** Point-in-polygon against a literal WKB geometry (IntersectsPoint inverted:
   * features whose location falls inside the geometry). */
@@ -96,16 +95,14 @@ object QueryPlanner {
    * cells of the geometry before the exact test (the s2:/a2: token rewrite of
    * search/spatial.go:65-83, realised as an ancestor-cell semi-filter).
    */
-  /** Ancestor-cell pre-prune as scalar comparisons: the ancestor of `cell16`
-    * at level l can only match cover cells OF level l, so the old
-    * arrays_overlap over a per-row built ancestor ARRAY (one GenericArrayData
-    * allocation per row on the serving path) rewrites to an allocation-free
-    * OR of per-level `isin` tests — same rows, pure codegen scalars. */
+  /** Ancestor-cell pre-prune: `cell16` has an ancestor in the cover iff it
+    * lies in one cover cell's level-16 descendant range (one contiguous id
+    * range per cell in the Morton order), so the test is one binary search
+    * over the merged ranges. The ranges reach generated code by reference,
+    * so every cover shares one compiled class. */
   private def coverPrune(cover: Array[Long]): Column =
-    cover.groupBy(c => graft.core.Cells.level(c)).toSeq.sortBy(_._1).map {
-      case (l, cs) =>
-        CellExprs.cell_parent_at(col("cell16"), lit(l)).isin(cs.toSeq: _*)
-    }.reduce(_ || _)
+    CellExprs.cell_in_ranges(col("cell16"),
+      cover.toSeq.map(c => graft.core.Cells.descendantRange(c, 16)))
 
   def find(features: DataFrame, q: Query): DataFrame = q match {
     case IntersectsGeom(wkb) =>

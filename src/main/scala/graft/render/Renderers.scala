@@ -15,9 +15,10 @@ import graft.shell.Shell
  * renderer/handler.go), Spark-first: a "world" is a (features, refs, items)
  * DataFrame triple; a scenario world is the base with ChangeSets applied
  * non-destructively (MutableOverlayWorld semantics); rendering a whole zoom
- * level is ONE plan (explode tile cover -> per-tile cap -> encode in
- * mapGroups), and a single `/tiles/{z}/{x}/{y}.mvt` request filters that
- * plan to one tile.
+ * level is ONE plan (explode tile cover -> per-tile cap -> encode per tile),
+ * while a single `/tiles/{z}/{x}/{y}.mvt` request renders only its own tile:
+ * one Spark job that keeps the features whose tile cover holds the tile,
+ * capped by feature id, encoded on the driver.
  */
 object Renderers {
 
@@ -150,26 +151,46 @@ object Renderers {
    * a Column, its result lands in the `v` attribute.
    */
   def queryTiles(reg: WorldRegistry, world: WorldId, zoom: Int,
-                 queryExpr: String, valueExpr: Option[String] = None): DataFrame = {
+                 queryExpr: String, valueExpr: Option[String] = None): DataFrame =
+    renderCapped(queryFeatures(reg, world, queryExpr, valueExpr), zoom, "query")
+
+  /** The features a tile query matches, with their tile feature id `__fid`
+    * and attribute map `__rtags`. */
+  private def queryFeatures(reg: WorldRegistry, world: WorldId,
+                            queryExpr: String, valueExpr: Option[String]): DataFrame = {
     val w = reg.findOrCreate(world).features
     val q = Shell.run(w, queryExpr) match {
       case q: Query => q
       case other => throw Shell.ShellException(s"expected a Query, found $other")
     }
-    val matched = QueryPlanner.find(w, q)
     val vCol = valueExpr.map(e => Shell.featureFn(w, e))
-    renderCapped(matched
+    QueryPlanner.find(w, q)
       .withColumn("__fid", tileFid(ftypeOrdinal, col("id.ns"), col("id.value")))
-      .withColumn("__rtags", queryTags(vCol)), zoom, "query")
+      .withColumn("__rtags", queryTags(vCol))
   }
 
   /** One tile of the query layer — the `/tiles/{z}/{x}/{y}.mvt` request path
-    * (renderer/handler.go): same plan, pre-filtered to the requested tile. */
+    * (renderer/handler.go), rendered alone like b6's tile server, which
+    * searches the query AND `MightIntersect(tile.RectBound())`
+    * (renderer/renderer.go:226-233). Keeps the matched features whose tile
+    * cover at `z` holds this tile, takes the first `MaxFeaturesPerTile` by
+    * feature id in one Spark job, and encodes them on the driver: the same
+    * features in the same order as this tile's row of [[queryTiles]], so the
+    * same bytes. Empty (no features, or no such tile) is no bytes. */
   def queryTile(reg: WorldRegistry, world: WorldId, z: Int, x: Long, y: Long,
                 queryExpr: String, valueExpr: Option[String] = None): Array[Byte] = {
-    val rows = queryTiles(reg, world, z, queryExpr, valueExpr)
-      .where(col("x") === x && col("y") === y).select("mvt").collect()
-    if (rows.isEmpty) Array.emptyByteArray else rows.head.getAs[Array[Byte]](0)
+    val features = queryFeatures(reg, world, queryExpr, valueExpr)
+    if (z < 0 || z > graft.core.Cells.MaxLevel || x < 0 || y < 0 || x >= (1L << z) || y >= (1L << z))
+      return Array.emptyByteArray
+    graft.functions.CellExprs.install(features.sparkSession)
+    val tile = graft.core.GeoOps.tileId(z, x, y)
+    val rows = features
+      .where(graft.functions.CellExprs.tile_covers(col("geom"), z, tile))
+      .select(col("__fid"), col("geom"), col("__rtags"))
+      .orderBy(col("__fid")).limit(MaxFeaturesPerTile).collect()
+    if (rows.isEmpty) Array.emptyByteArray
+    else Mvt.encodeTile(z, x, y, rows.toSeq.map(r => Mvt.TileFeature(r.getLong(0), "query",
+      r.getAs[Array[Byte]](1), Option(r.getMap[String, String](2)).map(_.toMap).getOrElse(Map.empty))))
   }
 
   /**

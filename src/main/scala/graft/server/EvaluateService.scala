@@ -1,6 +1,7 @@
 package graft.server
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, struct, to_json}
 import graft.render.Renderers.{DefaultWorldId, WorldId, WorldRegistry, worldId}
 import graft.shell.Shell
 
@@ -32,6 +33,14 @@ object EvaluateService {
   private val MaxRows = 1000
 
   case class EvaluateResult(kind: String, json: String)
+
+  /** Up to `MaxRows` rows of a collection as JSON objects, in one Spark job:
+    * the JSON is a column and the limit stays at the plan root, where it
+    * plans as `CollectLimit`. (`limit(n).toJSON` put a `GlobalLimit` under
+    * toJSON's `mapPartitions`: an exchange, a second job, and a codegen
+    * compile for every distinct limit.) */
+  private def jsonRows(df: DataFrame): Array[String] =
+    df.select(to_json(struct(col("*")))).limit(MaxRows).collect().map(_.getString(0))
 
   def evaluate(reg: WorldRegistry, expression: String,
                world: Option[String], version: String): EvaluateResult =
@@ -76,8 +85,7 @@ object EvaluateService {
         EvaluateResult("world-created", s""""/$t/$ns/$v"""")
       case Value(v) => v match {
         case ds: org.apache.spark.sql.Dataset[_] =>
-          val rows = ds.toDF().limit(MaxRows).toJSON.collect()
-          EvaluateResult("collection", rows.mkString("[", ",", "]"))
+          EvaluateResult("collection", jsonRows(ds.toDF()).mkString("[", ",", "]"))
         case l: Long => EvaluateResult("long", l.toString)
         case d: Double => EvaluateResult("double", d.toString)
         case s: String => EvaluateResult("string", "\"" + Http.escape(s) + "\"")
@@ -109,13 +117,13 @@ object EvaluateService {
         graft.proto.ExprProto.encode(Shell.FeatureIdE(t, ns, v))
       case Value(v) => v match {
         case ds: org.apache.spark.sql.Dataset[_] =>
-          val df = ds.toDF().limit(MaxRows)
+          val df = ds.toDF()
           if (df.columns.length == 2) {
-            val rows = df.collect()
+            val rows = df.limit(MaxRows).collect()
             graft.proto.ExprProto.collectionNode(
               rows.toSeq.map(r => lit(r.get(0))), rows.toSeq.map(r => lit(r.get(1))))
           } else {
-            val rows = df.toJSON.collect()
+            val rows = jsonRows(df)
             graft.proto.ExprProto.collectionNode(
               rows.indices.map(i => Shell.IntE(i.toLong)),
               rows.toSeq.map(Shell.StringE))

@@ -515,6 +515,14 @@ object Shell {
     case other => throw ShellException(s"not a collection: $other")
   }
 
+  /** Row count in one Spark job: each partition counts its rows and the
+    * driver sums them. `Dataset.count()` plans a global aggregate whose
+    * exchange AQE runs as a second job. A `collect`, so SQL listeners see
+    * the query. */
+  private def countRows(df: DataFrame): Long =
+    df.select().mapPartitions(it => Iterator(it.size.toLong))(
+      org.apache.spark.sql.Encoders.scalaLong).collect().sum
+
   private def apply(env: Env, fn: Expr, args: List[Any]): Any = {
     val world = env.world
     fn match {
@@ -543,7 +551,7 @@ object Shell {
       case ("filter", List(c, f)) => asDf(c).where(featureColumn(f))
       case ("filter", List(c)) => asDf(c) // curried: filter alone is identity-ish
       case ("map", List(c, f)) => asDf(c).withColumn("value", featureColumn(f))
-      case ("count", List(c)) => asDf(c).count()
+      case ("count", List(c)) => countRows(asDf(c))
       case ("take", List(c, n)) => asDf(c).limit(num(n).toInt)
       case ("highlight", List(c)) => c // UI marker: identity over the collection
       case ("tag", List(k: String, v: String)) => TagE(k, v)

@@ -1,7 +1,8 @@
 package graft
 
 import graft.operators.Changes
-import graft.render.Renderers.{WorldId, WorldRegistry}
+import graft.render.Renderers
+import graft.render.Renderers.{DefaultWorldId, WorldId, WorldRegistry}
 import graft.server.EvaluateService
 import org.apache.spark.sql.functions._
 
@@ -326,5 +327,81 @@ class EvaluateServiceSpec extends SparkSuite {
       val (t2, m2) = grpcWeb(port, "/b6.grpc.B6/Evaluate", req.dropRight(3))
       assert(!t2.contains("grpc-status: 0") && t2.contains("grpc-status:") && m2.isEmpty, t2)
     }
+  }
+
+  // ---- serving budget: Spark jobs and code compiles per request ---------------
+
+  /** The sf world plus the fixture polygons as areas, cached in 5 partitions
+    * like the benchmark's serving world. */
+  private lazy val budgetWorld = ServingWorld.withAreas(ServingWorld.sf(spark, sf001),
+    graft.model.Fixtures.polygons(spark), Map("#landuse" -> "test")).repartition(5).cache()
+  private lazy val budgetReg = ServingWorld.registry(spark, budgetWorld)
+
+  /** Two cafes of the sf world, as cap centres. */
+  private lazy val centres = sfFeatures.where(col("tags").getItem("#amenity") === "cafe")
+    .orderBy("point_id").select("lat", "lng").take(2).map(r => (r.getDouble(0), r.getDouble(1)))
+
+  private def cap(c: (Double, Double), r: Double) = f"(intersecting-cap ${c._1}%.6f, ${c._2}%.6f $r%.1f)"
+
+  /** Code compiles a block starts (the codegen compile-time histogram counts
+    * one sample per compile). */
+  private def compiles[A](body: => A): (A, Long) = {
+    val metric = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    val before = metric.getCount
+    val out = body
+    (out, metric.getCount - before)
+  }
+
+  test("serving budget: find, cap and take requests and a /tiles render run one Spark job each") {
+    budgetWorld.count()
+    def jobs(expression: String) =
+      JobCount(spark)(EvaluateService.evaluate(budgetReg, expression, None, "1"))
+    val (count, countJobs) = jobs("find [#amenity=cafe] | count")
+    assert(count.kind == "long" && countJobs == 1, count)
+    val (capCount, capJobs) = jobs(s"find (and [#amenity=cafe] ${cap(centres(0), 800)}) | count")
+    assert(capCount.kind == "long" && capJobs == 1, capCount)
+    val (take, takeJobs) = jobs("find [#amenity=cafe] | take 5")
+    assert(take.kind == "collection" && takeJobs == 1, take)
+    val (x, y) = (graft.core.GeoOps.tileX(centres(0)._2, 14), graft.core.GeoOps.tileY(centres(0)._1, 14))
+    val (tile, tileJobs) = JobCount(spark)(
+      Renderers.queryTile(budgetReg, DefaultWorldId, 14, x, y, "[#amenity=cafe]"))
+    assert(tile.nonEmpty && tileJobs == 1)
+  }
+
+  test("serving budget: containing-areas | count runs at most 4 Spark jobs") {
+    budgetWorld.count()
+    val (r, jobs) = JobCount(spark)(EvaluateService.evaluate(budgetReg,
+      "find [#amenity=cafe] | containing-areas | count", None, "1"))
+    assert(r.kind == "long" && r.json.toLong > 0, r)
+    assert(jobs <= 4, s"$jobs jobs")
+  }
+
+  test("serving budget: a new cap centre and radius, a new take n, or a new tile compiles no code") {
+    budgetWorld.count()
+    def eval(expression: String) = EvaluateService.evaluate(budgetReg, expression, None, "1")
+    eval(s"find (and [#amenity=cafe] ${cap(centres(0), 800)}) | count")
+    val (_, capCompiles) = compiles(eval(s"find (and [#amenity=cafe] ${cap(centres(1), 650)}) | count"))
+    assert(capCompiles == 0)
+    eval("find [#amenity=cafe] | take 5")
+    val (take, takeCompiles) = compiles(eval("find [#amenity=cafe] | take 7"))
+    assert("\\{\"point_id\":".r.findAllIn(take.json).length == 7 && takeCompiles == 0, take.json)
+    def tile(c: (Double, Double)) = Renderers.queryTile(budgetReg, DefaultWorldId, 14,
+      graft.core.GeoOps.tileX(c._2, 14), graft.core.GeoOps.tileY(c._1, 14), "[#amenity=cafe]")
+    tile(centres(0))
+    val (bytes, tileCompiles) = compiles(tile(centres(1)))
+    assert(bytes.nonEmpty && tileCompiles == 0)
+  }
+
+  test("collections: the to_json rows equal Dataset.toJSON for struct, map, binary, array and double columns") {
+    // areas carry a binary polygon geom and a covering array; points a null
+    // covering and a map with a null @name value
+    val world = budgetReg.findOrCreate(DefaultWorldId).features
+    val expected = world.where(col("id.ftype") === "area").toJSON.collect()
+    assert(expected.length < 1000 && expected.exists(_.contains("\"covering\":[")))
+    val types = world.schema.map(_.dataType.typeName).toSet
+    assert(Set("struct", "map", "binary", "array", "double").subsetOf(types), types)
+    val got = EvaluateService.evaluate(budgetReg, "all-areas", None, "1")
+    assert(got.kind == "collection")
+    assert(got.json == expected.mkString("[", ",", "]"), got.json.take(300))
   }
 }

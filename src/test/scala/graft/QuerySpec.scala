@@ -3,6 +3,7 @@ package graft
 import graft.core.GeoOps
 import graft.model.Fixtures
 import graft.query._
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 class QuerySpec extends SparkSuite {
@@ -47,6 +48,40 @@ class QuerySpec extends SparkSuite {
         la >= Cells.latLo(c) && la < Cells.latHi(c) &&
           lo >= Cells.lngLo(c) && lo < Cells.lngHi(c)) => pid }.toSet
     assert(got == expected && got.nonEmpty)
+  }
+
+  test("cap_within and cell_in_ranges select the same rows as haversine_m and per-level isin (random caps and covers)") {
+    import spark.implicits._
+    import graft.core.Cells
+    import graft.functions.CellExprs
+    val pts = feats.select("point_id", "lat", "lng", "cell16").cache()
+    def ids(p: Column): Set[Long] = pts.where(p).select("point_id").as[Long].collect().toSet
+    val rnd = new scala.util.Random(4242L)
+    val near = pts.select("lat", "lng").as[(Double, Double)].collect()
+    var nonEmpty = 0
+    for (_ <- 1 to 25) {
+      // centres jittered around points, some far enough out to miss them all
+      val (pLat, pLng) = near(rnd.nextInt(near.length))
+      val (lat, lng) = (pLat + (rnd.nextDouble() - 0.5) * 0.04, pLng + (rnd.nextDouble() - 0.5) * 0.04)
+      val r = 100.0 + rnd.nextDouble() * 4000.0
+      val capNew = ids(CellExprs.cap_within(col("lat"), col("lng"), lat, lng, r))
+      val capOld = ids(CellExprs.haversine_m(col("lat"), col("lng"), lit(lat), lit(lng)) < lit(r))
+      assert(capNew == capOld, s"cap ($lat, $lng, $r)")
+      if (capNew.nonEmpty) nonEmpty += 1
+      // the cap's own covering, plus random cells of mixed levels around the
+      // centre (a cell and its ancestor may both be present)
+      val cover = GeoOps.covering(graft.functions.GeoFunctions.capPolygon(lat, lng, r), 16, 8) ++
+        Seq.fill(3)(Cells.cellOf(lat + (rnd.nextDouble() - 0.5) * 0.05,
+          lng + (rnd.nextDouble() - 0.5) * 0.05, 6 + rnd.nextInt(11)))
+      val isinOld = cover.groupBy(c => Cells.level(c)).toSeq.map { case (l, cs) =>
+        CellExprs.cell_parent_at(col("cell16"), lit(l)).isin(cs.toSeq: _*)
+      }.reduce(_ || _)
+      val rangesNew = CellExprs.cell_in_ranges(col("cell16"),
+        cover.toSeq.map(c => Cells.descendantRange(c, 16)))
+      assert(ids(rangesNew) == ids(isinOld), s"cover ${cover.mkString(",")}")
+    }
+    assert(nonEmpty >= 10, s"only $nonEmpty non-empty caps")
+    pts.unpersist()
   }
 
   test("entry returns rows and all queries are non-empty at sf0.001") {

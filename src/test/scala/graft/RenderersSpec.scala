@@ -272,4 +272,33 @@ class RenderersSpec extends SparkSuite {
       assert(java.util.Arrays.equals(bytes, mvt))
     }
   }
+
+  test("sf world: queryTile bytes equal queryTiles' row of that tile, for every non-empty tile at z12 and z14") {
+    import graft.core.GeoOps
+    // one added cafe area straddling a z12 tile edge (so a z14 edge too)
+    val (lat, lng) = (51.53, -0.125)
+    val x12 = GeoOps.tileX(lng, 12)
+    val edge = x12.toDouble / (1L << 12) * 360.0 - 180.0
+    val square = GeoOps.toWkb(GeoOps.fromWkt(
+      s"POLYGON ((${edge - 0.003} ${lat - 0.002}, ${edge + 0.003} ${lat - 0.002}, " +
+        s"${edge + 0.003} ${lat + 0.002}, ${edge - 0.003} ${lat + 0.002}, ${edge - 0.003} ${lat - 0.002}))"))
+    val polys = Seq((900L, square)).toDF("poly_id", "geom")
+      .withColumn("covering", graft.functions.CellExprs.cell_covering(col("geom"), lit(16), lit(5)))
+    val world = ServingWorld.withAreas(ServingWorld.sf(spark, sf001), polys,
+      Map("#amenity" -> "cafe", "name" -> "edge")).cache()
+    val reg = ServingWorld.registry(spark, world)
+    try {
+      for (z <- Seq(12, 14)) {
+        val tiles = Renderers.queryTiles(reg, DefaultWorldId, z, "[#amenity=cafe]").collect()
+          .map(t => ((t.getAs[Long]("x"), t.getAs[Long]("y")), t.getAs[Array[Byte]]("mvt"))).toMap
+        val (ex, ey) = (GeoOps.tileX(edge, z), GeoOps.tileY(lat, z))
+        assert(tiles.contains((ex - 1, ey)) && tiles.contains((ex, ey)), s"z$z edge tiles")
+        tiles.foreach { case ((x, y), mvt) =>
+          val one = Renderers.queryTile(reg, DefaultWorldId, z, x, y, "[#amenity=cafe]")
+          assert(java.util.Arrays.equals(one, mvt), s"z$z tile $x/$y")
+        }
+        assert(Renderers.queryTile(reg, DefaultWorldId, z, 0, 0, "[#amenity=cafe]").isEmpty)
+      }
+    } finally world.unpersist()
+  }
 }

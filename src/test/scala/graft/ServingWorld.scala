@@ -17,6 +17,21 @@ object ServingWorld {
     SparkEntry.features(spark, dir).withColumn("geom", pointWkb(col("lat"), col("lng")))
   }
 
+  /** `features` plus `polygons` (poly_id, geom, covering) as area features
+    * tagged `tags`, shaped like the benchmark's serving world: centroid
+    * lat/lng and cell16, polygon geom and covering. */
+  def withAreas(features: DataFrame, polygons: DataFrame, tags: Map[String, String]): DataFrame = {
+    val centroid = udf((wkb: Array[Byte]) => {
+      val c = graft.core.GeoOps.fromWkb(wkb).getCentroid; (c.getY, c.getX)
+    })
+    val areas = polygons.withColumn("c", centroid(col("geom"))).select(
+      struct(lit("area").as("ftype"), lit("graft/test").as("ns"), col("poly_id").as("value")).as("id"),
+      typedLit(tags).as("tags"), col("c._1").as("lat"), col("c._2").as("lng"),
+      graft.functions.CellExprs.cell_of(col("c._1"), col("c._2"), lit(16)).as("cell16"),
+      col("geom"), col("covering"))
+    features.unionByName(areas, allowMissingColumns = true)
+  }
+
   /** A registry whose base world is `features` with no refs and no items. */
   def registry(spark: SparkSession, features: DataFrame): WorldRegistry = {
     import spark.implicits._

@@ -37,6 +37,21 @@ class SpatialJoinsSpec extends SparkSuite {
       s"missing=${(expected -- got).take(5)} extra=${(got -- expected).take(5)}")
   }
 
+  test("pointInPolygonJoin's guarded collect is 1 job on a 1-partition build side, 2 on 5 partitions") {
+    // limit(N + 1).collect() plans as CollectLimit, which scans 1 partition,
+    // then up to 4x as many (Spark's executeTake scale-up): one job per round
+    val points = Fixtures.points(spark, sf001)
+    val polys = Fixtures.polygons(spark, includeConcave = true)
+    // polygon rows over n partitions, scanned without a shuffle
+    def over(n: Int) = spark.createDataFrame(
+      spark.sparkContext.parallelize(polys.collect().toSeq, n), polys.schema)
+    val (_, narrow) = JobCount(spark)(SpatialJoins.pointInPolygonJoin(points, over(1)))
+    assert(narrow == 1)
+    val (wide, jobs) = JobCount(spark)(SpatialJoins.pointInPolygonJoin(points, over(5)))
+    assert(jobs == 2)
+    assert(wide.count() == SpatialJoins.pointInPolygonJoin(points, polys).count())
+  }
+
   test("knnJoin is exact vs brute-force haversine top-k") {
     val got = SpatialJoins.knnJoin(Fixtures.points(spark, sf001), Fixtures.sites(spark), 3)
       .select("site_id", "rank", "point_id").collect()
