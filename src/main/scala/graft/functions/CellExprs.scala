@@ -209,13 +209,13 @@ object CellExprs {
   }
 
   /** `cell_in_ranges(cell, ranges)`: `cell` lies in one of the inclusive id
-    * ranges, a binary search ([[graft.core.Cells.inRanges]]). `bounds` holds
-    * sorted, disjoint (lo, hi) pairs flattened; like [[CapWithin]] it is a
-    * field passed to generated code by reference, so the code is the same
-    * whatever the ranges. */
+    * ranges, a binary search ([[graft.core.Cells.inRanges]]). `ranges` is a
+    * constant array of flattened (lo, hi) pairs; `bounds` holds their union
+    * as sorted, disjoint pairs and, like [[CapWithin]]'s cap, is a field
+    * passed to generated code by reference, so the code is the same whatever
+    * the ranges. */
   case class CellInRanges(child: Expression, bounds: Vector[Long])
       extends UnaryExpression with Predicate {
-    require(bounds.length % 2 == 0, "cell_in_ranges needs (lo, hi) pairs")
     @transient private lazy val boundsArray = bounds.toArray
     override def prettyName: String = "cell_in_ranges"
     override protected def nullSafeEval(c: Any): Any =
@@ -244,7 +244,7 @@ object CellExprs {
   }
 
   /** Sorted, disjoint flattened bounds of the union of inclusive ranges. */
-  def mergeRanges(ranges: Seq[(Long, Long)]): Vector[Long] =
+  private def mergeRanges(ranges: Seq[(Long, Long)]): Vector[Long] =
     ranges.sortBy(_._1).foldLeft(List.empty[(Long, Long)]) {
       case ((lo, hi) :: rest, (l, h)) if l <= hi => (lo, math.max(hi, h)) :: rest
       case (acc, r) => r :: acc
@@ -317,6 +317,8 @@ object CellExprs {
     "cell_in_ranges" -> { es =>
       val flat = const("cell_in_ranges", Cast(es(1), ArrayType(LongType)))
         .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toLongArray()
+      if (flat.length % 2 != 0)
+        throw new IllegalArgumentException("cell_in_ranges: ranges must be (lo, hi) pairs")
       CellInRanges(asL(es(0)), mergeRanges(flat.grouped(2).map(p => (p(0), p(1))).toSeq))
     },
     "tile_x" -> (es => TileXExpr(asD(es(0)), asI(es(1)))),
@@ -357,7 +359,7 @@ object CellExprs {
   /** `cell` lies in one of the inclusive (lo, hi) id ranges, with one compiled
     * class for every range set. */
   def cell_in_ranges(cell: Column, ranges: Seq[(Long, Long)]): Column =
-    call_function("cell_in_ranges", cell, typedLit(mergeRanges(ranges)))
+    call_function("cell_in_ranges", cell, typedLit(ranges.flatMap { case (lo, hi) => Seq(lo, hi) }))
   /** s2-center analogue: cell centroid (functions/s2.go:13-74). */
   def cell_center_lat(cell: Column): Column = call_function("cell_center_lat", cell)
   def cell_center_lng(cell: Column): Column = call_function("cell_center_lng", cell)
