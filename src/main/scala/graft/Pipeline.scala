@@ -110,42 +110,6 @@ object Pipeline {
     reports.result()
   }
 
-  /**
-   * Image batch-prep under the same resumability contract — the curation
-   * gate and the SDXL aspect-bucket batch plan as committed stages:
-   *
-   *   stage `img_gate`    — LAION-style curation keepers over the
-   *                         input_hint-shaped table (drop_reason IS NULL)
-   *   stage `img_batches` — per-bucket batch plan (deterministic epoch
-   *                         shuffle, drop_last) over the keepers
-   *
-   * A resumed run reuses both snapshots; the batch plan's lineage names the
-   * gate table, so every training batch is traceable to the curation
-   * decision that admitted its rows.
-   */
-  def runBatchPrep(spark: SparkSession, root: String, nRows: Long,
-                   batchSize: Int = 32): Seq[StageReport] = {
-    import graft.operators.ImageOps
-    val reports = Seq.newBuilder[StageReport]
-    def staged(table: String, lineage: Seq[String])(body: => DataFrame): DataFrame =
-      stagedRunner(spark, root, reports)(table, lineage)(body)
-    val gated = staged("img_gate", Seq("fixtures:images")) {
-      ImageOps.curationFilter(
-          Fixtures.images(spark, nRows)
-            .select(col("image_id"), col("w"), col("h"), col("caption")),
-          minDim = 96, maxAspect = 3, minCaptionTokens = 1)
-        .where(col("drop_reason").isNull)
-        // the fixture id is "img-%012d" — recover the numeric id the
-        // batch plan's deterministic shuffle is keyed on
-        .select(substring(col("image_id"), 5, 12).cast("long").as("img_no"),
-          col("w"), col("h"))
-    }
-    staged("img_batches", Seq("img_gate")) {
-      ImageOps.bucketBatches(gated, batchSize, idCol = "img_no")
-    }
-    reports.result()
-  }
-
   def main(args: Array[String]): Unit = {
     if (args.headOption.contains("corpus")) {
       val root = args.lift(1).getOrElse("/tmp/graft-corpus-pipeline")

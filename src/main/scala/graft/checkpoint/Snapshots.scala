@@ -1,7 +1,6 @@
 package graft.checkpoint
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 /**
@@ -11,8 +10,8 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
  *
  * No Iceberg runtime jar ships in this environment, so this is an honest
  * Iceberg-LIKE layer over Parquet: each commit writes data to an immutable
- * `data/<snapshotId>/` directory, collects row counts via `observe()` and
- * per-partition file metrics, writes a manifest JSON, and atomically renames
+ * `data/<snapshotId>/` directory, counts its rows, files and bytes, writes a
+ * manifest JSON, and atomically renames
  * `_snapshots/<n>.json.tmp` -> `.json` (the commit point, mirroring the
  * reference's canary-overlay transactional apply,
  * src/diagonal.works/b6/ingest/change.go:158-184).
@@ -50,20 +49,6 @@ object Snapshots {
   def latestFor(root: String, table: String): Option[Snapshot] =
     committedIds(root).reverseIterator.map(id => read(root, id))
       .find(_.table == table)
-
-  /** Time travel: the table's newest snapshot with id <= `asOfId` (Iceberg's
-    * snapshot-id read). Data directories are immutable, so any historical
-    * snapshot stays readable until explicitly expired. */
-  def asOf(spark: SparkSession, root: String, table: String,
-           asOfId: Long): Option[DataFrame] =
-    committedIds(root).reverseIterator.map(id => read(root, id))
-      .find(s => s.table == table && s.id <= asOfId)
-      .map(s => spark.read.parquet(s.dataPath))
-
-  /** All committed snapshots of a table, oldest first — the history listing
-    * behind time travel and expiry decisions. */
-  def history(root: String, table: String): Seq[Snapshot] =
-    committedIds(root).map(id => read(root, id)).filter(_.table == table)
 
   def read(root: String, id: Long): Snapshot = {
     val json = Files.readString(snapsDir(root).resolve(s"$id.json"))
@@ -105,125 +90,17 @@ object Snapshots {
       finally stream.close()
     }
     val bytes = files.map(Files.size).sum
-    // ONE pass collects per-file row counts AND min/max column stats for the
-    // atomic columns (the Iceberg-manifest pruning metadata): grouped by
-    // input_file_name, so the total row count falls out of the same job
-    val pf = spark.read.parquet(dataPath)
-    val statable = pf.schema.fields.filter(f => f.dataType match {
-      case _: org.apache.spark.sql.types.NumericType => true
-      case org.apache.spark.sql.types.StringType => true
-      case org.apache.spark.sql.types.DateType => true
-      case _ => false
-    }).map(_.name)
-    val aggs = count(lit(1)).as("__rows") +: statable.flatMap(n =>
-      Seq(min(col(n)).cast("string").as(s"__min_$n"), max(col(n)).cast("string").as(s"__max_$n")))
-    val perFile = pf.groupBy(input_file_name().as("__file")).agg(aggs.head, aggs.tail: _*)
-      .collect().map { r =>
-        val f = r.getAs[String]("__file")
-        val stats = statable.flatMap { n =>
-          (Option(r.getAs[String](s"__min_$n")), Option(r.getAs[String](s"__max_$n"))) match {
-            case (Some(mn), Some(mx)) => Some(n -> (mn, mx))
-            case _ => None
-          }
-        }.toMap
-        (f, r.getAs[Long]("__rows"), stats)
-      }
-    val rows = perFile.map(_._2).sum
-    def esc(s: String) = s.replace("\\", "\\\\").replace("\"", "\\\"")
-    val fileLines = perFile.map { case (uri, nRows, stats) =>
-      // store the path RELATIVE to dataPath so partitioned layouts
-      // (key=.../part-*.parquet) stay addressable for pruned reads
-      val abs = Paths.get(new java.net.URI(uri).getPath)
-      val rel = dataDir.toAbsolutePath.relativize(abs.toAbsolutePath).toString
-      val statJson = stats.toSeq.sortBy(_._1).map { case (n, (mn, mx)) =>
-        s""""${esc(n)}":{"min":"${esc(mn)}","max":"${esc(mx)}"}"""
-      }.mkString(",")
-      s"""{"file":"${esc(rel)}","rows":$nRows,"bytes":${Files.size(abs)},"stats":{$statJson}}"""
-    }
+    val rows = spark.read.parquet(dataPath).count()
     val snap = Snapshot(id, table, dataPath, rows, bytes, files.size, lineage)
     Files.createDirectories(snapsDir(root))
     val manifest =
       s"""{"id":$id,"table":"$table","dataPath":"$dataPath","rows":$rows,
          |"bytes":$bytes,"files":${files.size},
-         |"lineage":[${lineage.map(l => "\"" + l + "\"").mkString(",")}],
-         |"partitions":[${fileLines.mkString(",")}]}""".stripMargin
+         |"lineage":[${lineage.map(l => "\"" + l + "\"").mkString(",")}]}""".stripMargin
     val tmp = snapsDir(root).resolve(s"$id.json.tmp")
     Files.writeString(tmp, manifest)
     Files.move(tmp, snapsDir(root).resolve(s"$id.json"), StandardCopyOption.ATOMIC_MOVE)
     snap
-  }
-
-  /** Per-file pruning metadata of a committed snapshot:
-    * (relative file path, rows, column -> (min, max) as strings). */
-  def fileStats(root: String, id: Long): Seq[(String, Long, Map[String, (String, String)])] = {
-    val json = Files.readString(snapsDir(root).resolve(s"$id.json"))
-    val entry = """\{"file":"((?:[^"\\]|\\.)*)","rows":(\d+),"bytes":\d+,"stats":\{(.*?)\}\}""".r
-    val stat = """"((?:[^"\\]|\\.)*)":\{"min":"((?:[^"\\]|\\.)*)","max":"((?:[^"\\]|\\.)*)"\}""".r
-    def unesc(s: String) = s.replace("\\\"", "\"").replace("\\\\", "\\")
-    entry.findAllMatchIn(json).map { m =>
-      val stats = stat.findAllMatchIn(m.group(3))
-        .map(s => unesc(s.group(1)) -> (unesc(s.group(2)), unesc(s.group(3)))).toMap
-      (unesc(m.group(1)), m.group(2).toLong, stats)
-    }.toSeq
-  }
-
-  /**
-   * Stats-pruned scan: read only the files of `table`'s latest snapshot whose
-   * [min, max] range for `column` can overlap [lo, hi] (numeric compare) —
-   * manifest-level file skipping, the Iceberg pruning shape. Files without
-   * stats for the column are conservatively kept. The caller still applies
-   * the exact predicate; this bounds which files are opened at all.
-   */
-  def scanPruned(spark: SparkSession, root: String, table: String,
-                 column: String, lo: Double, hi: Double): DataFrame = {
-    val snap = latestFor(root, table).getOrElse(
-      throw new IllegalStateException(s"no snapshot for table $table"))
-    val stats = fileStats(root, snap.id)
-    val keep = stats.filter { case (_, _, st) =>
-      st.get(column).forall { case (mn, mx) =>
-        val (a, b) = (mn.toDouble, mx.toDouble)
-        a <= hi && b >= lo
-      }
-    }.map { case (rel, _, _) => Paths.get(snap.dataPath).resolve(rel).toString }
-    if (keep.isEmpty) spark.read.parquet(snap.dataPath).limit(0)
-    else spark.read.parquet(keep: _*)
-  }
-
-  /**
-   * Expire old history: keep the newest `keepLast` snapshots PER TABLE,
-   * delete older manifests and their data directories, and vacuum orphan
-   * `data/<id>` directories that no kept manifest references (crashed
-   * commits). Kept snapshots — including time travel over them — stay
-   * readable. Returns the expired snapshot ids.
-   */
-  def expire(root: String, keepLast: Int): Seq[Long] = {
-    require(keepLast >= 1, "keepLast must be >= 1")
-    val all = committedIds(root).map(id => read(root, id))
-    val keepIds = all.groupBy(_.table).values.flatMap(_.takeRight(keepLast)).map(_.id).toSet
-    val dropped = all.filterNot(s => keepIds.contains(s.id))
-    dropped.foreach { s =>
-      deleteRecursively(Paths.get(s.dataPath))
-      Files.deleteIfExists(snapsDir(root).resolve(s"${s.id}.json"))
-    }
-    // orphans: data dirs no kept manifest points at (e.g. a crash between
-    // data write and manifest rename)
-    val referenced = all.filter(s => keepIds.contains(s.id))
-      .map(s => Paths.get(s.dataPath).toAbsolutePath.normalize.toString).toSet
-    val dataRoot = Paths.get(root, "data")
-    if (Files.exists(dataRoot)) {
-      val stream = Files.list(dataRoot)
-      val children = try stream.iterator().asScala.toSeq finally stream.close()
-      children.filterNot(c => referenced.contains(c.toAbsolutePath.normalize.toString))
-        .foreach(deleteRecursively)
-    }
-    dropped.map(_.id)
-  }
-
-  private def deleteRecursively(p: Path): Unit = {
-    if (!Files.exists(p)) return
-    val stream = Files.walk(p)
-    val all = try stream.iterator().asScala.toSeq finally stream.close()
-    all.sortBy(-_.getNameCount).foreach(Files.deleteIfExists(_))
   }
 
   /** Run `stage` unless its output snapshot already exists (resume path):

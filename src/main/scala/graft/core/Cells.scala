@@ -89,35 +89,12 @@ object Cells {
     out
   }
 
-  /** Ancestors of `cell` restricted to the given levels (levels > level(cell) skipped). */
-  def ancestorsAt(cell: Long, levels: Array[Int]): Array[Long] = {
-    val l = level(cell)
-    val out = Array.newBuilder[Long]
-    var i = 0
-    while (i < levels.length) {
-      if (levels(i) <= l) out += parentAt(cell, levels(i))
-      i += 1
-    }
-    out.result()
-  }
-
   /** The four children of a cell. */
   def children(cell: Long): Array[Long] = {
     val l = level(cell)
     val base = (cell >>> 5) << 2
     Array(((base | 0L) << 5) | (l + 1L), ((base | 1L) << 5) | (l + 1L),
           ((base | 2L) << 5) | (l + 1L), ((base | 3L) << 5) | (l + 1L))
-  }
-
-  /** Smallest MaxLevel-granularity morton covered by this cell (sort/range key). */
-  def rangeMin(cell: Long): Long = {
-    val l = level(cell)
-    (cell >>> 5) << (2 * (MaxLevel - l))
-  }
-  def rangeMax(cell: Long): Long = {
-    val l = level(cell)
-    val width = 2 * (MaxLevel - l)
-    (((cell >>> 5) + 1) << width) - 1
   }
 
   /** First and last descendant of `cell` at `lvl` (lvl >= level(cell)): in a

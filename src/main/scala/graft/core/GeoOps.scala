@@ -2,7 +2,7 @@ package graft.core
 
 import org.locationtech.jts.geom._
 import org.locationtech.jts.geom.prep.{PreparedGeometry, PreparedGeometryFactory}
-import org.locationtech.jts.io.{WKBReader, WKBWriter, WKTReader, WKTWriter}
+import org.locationtech.jts.io.{WKBReader, WKBWriter, WKTReader}
 
 /**
  * Geometry scalar functions matching the reference's observable semantics:
@@ -75,12 +75,10 @@ object GeoOps {
   private val wkbWriterTL = ThreadLocal.withInitial[WKBWriter](() => new WKBWriter())
   private val wkbReaderTL = ThreadLocal.withInitial[WKBReader](() => new WKBReader(factory))
   private val wktReaderTL = ThreadLocal.withInitial[WKTReader](() => new WKTReader(factory))
-  private val wktWriterTL = ThreadLocal.withInitial[WKTWriter](() => new WKTWriter())
 
   def toWkb(g: Geometry): Array[Byte] = wkbWriterTL.get.write(g)
   def fromWkb(b: Array[Byte]): Geometry = wkbReaderTL.get.read(b)
   def fromWkt(s: String): Geometry = wktReaderTL.get.read(s)
-  def toWkt(g: Geometry): String = wktWriterTL.get.write(g)
 
   def point(lat: Double, lng: Double): Point =
     factory.createPoint(new Coordinate(lng, lat)) // JTS is (x=lng, y=lat)

@@ -370,8 +370,4 @@ object CellExprs {
     * class for every tile. */
   def tile_covers(wkb: Column, zoom: Int, tile: Long): Column =
     call_function("tile_covers", wkb, lit(zoom), lit(tile))
-  /** s2-grid analogue: single-level sorted cell grid of a geometry. */
-  def cell_grid(wkb: Column, level: Column): Column = call_function("cell_grid", wkb, level)
-  /** s2-polygon analogue: cell boundary polygon (WKB). */
-  def cell_polygon(cell: Column): Column = call_function("cell_polygon", cell)
 }

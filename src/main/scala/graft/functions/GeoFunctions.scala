@@ -165,11 +165,6 @@ object GeoFunctions {
   val centroid_lat = udf((wkb: Array[Byte]) => centroid(GeoOps.fromWkb(wkb))._1)
   val centroid_lng = udf((wkb: Array[Byte]) => centroid(GeoOps.fromWkb(wkb))._2)
   val length_m = udf((wkb: Array[Byte]) => GeoOps.wkbLengthMeters(wkb))
-  val interpolate_at = udf((wkb: Array[Byte], f: Double) => {
-    val (la, lo) = interpolate(GeoOps.fromWkb(wkb), f); Array(la, lo)
-  })
-  val sample_every = udf((wkb: Array[Byte], m: Double) =>
-    samplePoints(GeoOps.fromWkb(wkb), m).map { case (la, lo) => Array(la, lo) })
 
   def install(spark: SparkSession): Unit = {
     spark.udf.register("area_m2", area_m2)

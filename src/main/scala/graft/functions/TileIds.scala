@@ -55,12 +55,4 @@ object TileIds {
     * id under the given namespace. */
   def idToRelationId(ftype: String, ns: String, value: Long): Long =
     fnv1a(s"$ftype/$ns/$value")
-
-  /** TileFeatureIDForPolygon — api/tiles.go:22-32. */
-  def tileFeatureIdForPolygon(ftype: Long, namespace: String, value: Long, polygon: Long): Long = {
-    var h = fnv1(le64(ftype))
-    h = fnv1(namespace.getBytes("UTF-8"), h)
-    h = fnv1(le64(value), h)
-    fnv1(le64(polygon), h)
-  }
 }

@@ -1,6 +1,6 @@
 package graft.index
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.CellExprs
 
@@ -29,20 +29,6 @@ object FeatureIndex {
       .sortWithinPartitions(col("cell16"))
       .write.partitionBy("cell_bucket").mode("overwrite").parquet(path)
   }
-
-  def read(spark: SparkSession, path: String): DataFrame = spark.read.parquet(path)
-
-  /**
-   * Bucketed-TABLE variant (Spark `bucketBy` + `sortBy` into the catalog):
-   * two tables bucketed the same way join on `cell16` CO-LOCATED — no
-   * Exchange on either side of the SortMergeJoin (spec-asserted on the
-   * physical plan). This is the 100 TB layout for REPEATED spatial
-   * self-joins (features vs features, points vs the same polygon index every
-   * night): the shuffle is paid once at write time, never per query.
-   */
-  def buildBucketedTable(features: DataFrame, table: String, nBuckets: Int = 64): Unit =
-    features.write.bucketBy(nBuckets, "cell16").sortBy("cell16")
-      .mode("overwrite").format("parquet").saveAsTable(table)
 
   /**
    * Index tokens per feature — the reference's token scheme made visible
@@ -84,23 +70,4 @@ object FeatureIndex {
     features.where(col("id.ftype") === ftype && col("id.ns") === ns &&
         col("id.value") === value && col("tags").getItem(key).isNotNull)
       .select(lit(key).as("key"), col("tags").getItem(key).as("value"), lit(1L).as("n"))
-
-  /** Scan restricted to the buckets intersecting a covering — the partition
-    * pruning path (ancestors-or-self of each covering cell at bucket level). */
-  def scanCovering(spark: SparkSession, path: String, covering: Array[Long],
-                   bucketLevel: Int = 4): DataFrame = {
-    val buckets = covering.map { c =>
-      if (graft.core.Cells.level(c) >= bucketLevel) graft.core.Cells.parentAt(c, bucketLevel)
-      else c // coarser than buckets: expand below
-    }.flatMap { c =>
-      val l = graft.core.Cells.level(c)
-      if (l == bucketLevel) Seq(c)
-      else { // enumerate descendant buckets of a coarse cell
-        var cur = Seq(c)
-        (l until bucketLevel).foreach { _ => cur = cur.flatMap(graft.core.Cells.children) }
-        cur
-      }
-    }.distinct
-    read(spark, path).where(col("cell_bucket").isin(buckets: _*))
-  }
 }

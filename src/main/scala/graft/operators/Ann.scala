@@ -21,20 +21,11 @@ object Ann {
   /** Attach a candidate-set size metric: approximate paths (LSH / IVF) have
     * recall < 1 by construction, and the candidate count per run is the
     * no-silent-caps evidence of HOW approximate — readable after any action
-    * on the exact DataFrame via [[candidateMetrics]]. */
+    * from the exact DataFrame's `queryExecution.observedMetrics`. */
   private def observed(cand: DataFrame): DataFrame =
     cand.observe(s"${CandidateMetricPrefix}_${annMetricSeq.getAndIncrement()}",
       org.apache.spark.sql.functions.count(
         org.apache.spark.sql.functions.lit(1)).as("candidates"))
-
-  /** Total candidates observed by the LAST action on `df` (0 when none ran).
-    * Call on the exact DataFrame the action ran on. */
-  def candidateMetrics(df: DataFrame): Long =
-    df.queryExecution.observedMetrics.collect {
-      case (name, row) if name.startsWith(CandidateMetricPrefix) =>
-        row.getAs[Long]("candidates")
-    }.sum
-
 
   /** Ensure the scoring side has at least the session's parallelism: a small
     * single-file vector table scans as ONE task, serializing every cosine in

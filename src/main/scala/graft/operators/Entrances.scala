@@ -45,8 +45,7 @@ object Entrances {
 
     // #highway ways touching any candidate, with the vertex position; sorted
     // (way id, pos) so the first-outside-point-wins rule is deterministic
-    // (the reference's Traverse order is graph-iteration order — unspecified;
-    // the batch variant sorts identically, so the two paths agree exactly)
+    // (the reference's Traverse order is graph-iteration order — unspecified)
     val touching = refs.where(col("from_type") === "path" && col("to_id").isin(candidates: _*))
       .select("from_id", "to_id", "pos").as[(Long, Long, Int)].collect()
       .sortBy(t => (t._1, t._3))
@@ -74,69 +73,6 @@ object Entrances {
       }
     }
     None
-  }
-
-  /**
-   * Distributed all-areas variant: the same walk for EVERY area at once.
-   * Per-area inputs (boundary vertex chain + entrance tags + touching
-   * #highway ways) assemble as joins against the references table; the
-   * sequential candidate walk then runs inside one `mapGroups` task per
-   * area — the per-area work is bounded (a building's boundary and its
-   * touching ways), so areas fan out across the cluster while the inner
-   * logic stays byte-identical to `entranceApproach`.
-   */
-  def entranceApproachAll(world: DataFrame, refs: DataFrame,
-                          areas: DataFrame, areaIdCol: String = "area_id"): DataFrame = {
-    val spark = world.sparkSession
-    import spark.implicits._
-    val ids = areas.select(col(areaIdCol).cast("long").as("area_id")).distinct()
-    val areaGeoms = world.where(col("id.ftype") === "area")
-      .join(broadcast(ids), col("id.value") === col("area_id"))
-      .select(col("area_id"), col("geom"))
-    val boundary = refs.where(col("from_type") === "path")
-      .join(broadcast(ids), col("from_id") === col("area_id"))
-      .select(col("area_id"), col("pos"), col("to_id"))
-    val points = world.where(col("id.ftype") === "point")
-      .select(col("id.value").as("to_id"),
-        col("tags").getItem("entrance").isNotNull.as("has_entrance"))
-    val bTagged = boundary.join(points, Seq("to_id"), "left")
-      .select(col("area_id"), col("pos"), col("to_id"),
-        coalesce(col("has_entrance"), lit(false)).as("has_entrance"))
-    val hwWays = world.where(col("id.ftype") === "path" &&
-        col("tags").getItem("#highway").isNotNull)
-      .select(col("id.value").as("way_id"), col("geom").as("wgeom"))
-    val touching = refs.where(col("from_type") === "path")
-      .select(col("from_id").as("way_id"), col("to_id"), col("pos").as("wpos"))
-      .join(bTagged.select("area_id", "to_id").distinct(), Seq("to_id"))
-      .join(hwWays, Seq("way_id"))
-    val bAgg = bTagged.groupBy("area_id").agg(
-      sort_array(collect_list(struct(col("pos"), col("to_id"), col("has_entrance")))).as("boundary"))
-    val tAgg = touching.groupBy("area_id").agg(
-      collect_list(struct(col("to_id"), col("way_id"), col("wpos"), col("wgeom"))).as("touch"))
-    val assembled = areaGeoms.join(bAgg, "area_id").join(tAgg, Seq("area_id"), "left")
-      .as[(Long, Array[Byte], Seq[(Int, Long, Boolean)], Seq[(Long, Long, Int, Array[Byte])])]
-    assembled.flatMap { case (areaId, areaWkb, bnd, touch) =>
-      val area = GeoOps.prepare(GeoOps.fromWkb(areaWkb))
-      val ordered = bnd.sortBy(_._1).map(b => (b._2, b._3)).distinct
-      val entranceIds = ordered.collect { case (id, true) => id }
-      val candidates = if (entranceIds.nonEmpty) entranceIds else ordered.map(_._1)
-      val ways = Option(touch).getOrElse(Seq.empty)
-        .map(t => t._2 -> t._4).toMap
-        .map { case (wid, w) => wid -> GeoOps.fromWkb(w).getCoordinates }
-      val byPoint = Option(touch).getOrElse(Seq.empty)
-        .map(t => (t._1, t._2, t._3)).sortBy(t => (t._2, t._3)).groupBy(_._1)
-      val result = candidates.iterator.flatMap { cand =>
-        byPoint.getOrElse(cand, Seq.empty).iterator.flatMap { case (_, wayId, pos) =>
-          ways.get(wayId).iterator.flatMap { coords =>
-            Seq(coords.drop(pos), coords.take(pos + 1).reverse).iterator
-              .filter(_.length >= 2)
-              .flatMap(chain => approachAlong(chain))
-              .filter(a => !area.covers(GeoOps.point(a._1, a._2)))
-          }
-        }
-      }.nextOption()
-      result.map { case (lat, lng) => (areaId, lat, lng) }
-    }.toDF("area_id", "lat", "lng")
   }
 
   /** Point 4 m along a vertex chain (midpoint when shorter). */

@@ -4,16 +4,6 @@ import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Compressed-sparse-row adjacency of the street network, broadcast to every
-  * executor for per-origin Dijkstra. Node ids are sorted so lookup is a binary
-  * search; neighbors of node i live in `dstIdx/costs[offsets(i) until offsets(i+1))`.
-  */
-final case class Csr(nodeIds: Array[Long], offsets: Array[Int],
-                     dstIdx: Array[Int], costs: Array[Double]) extends Serializable {
-  def n: Int = nodeIds.length
-  def indexOf(node: Long): Int = java.util.Arrays.binarySearch(nodeIds, node)
-}
-
 /**
  * Street-network reachability operators — the reference's graph plane
  * (src/diagonal.works/b6/graph/graph.go: ShortestPathSearch, Weights;
@@ -38,6 +28,16 @@ final case class Csr(nodeIds: Array[Long], offsets: Array[Int],
  * merges stream it per-partition instead of re-shuffling).
  */
 object Graph {
+
+  /** Compressed-sparse-row adjacency of the street network, broadcast to every
+    * executor for per-origin Dijkstra. Node ids are sorted so lookup is a binary
+    * search; neighbors of node i live in `dstIdx/costs[offsets(i) until offsets(i+1))`.
+    */
+  final case class Csr(nodeIds: Array[Long], offsets: Array[Int],
+                       dstIdx: Array[Int], costs: Array[Double]) extends Serializable {
+    def n: Int = nodeIds.length
+    def indexOf(node: Long): Int = java.util.Arrays.binarySearch(nodeIds, node)
+  }
 
   /** Symmetrise an edge list (b6 paths are walkable both ways unless tagged). */
   def undirected(edges: DataFrame): DataFrame =
@@ -244,21 +244,10 @@ object Graph {
     out.result().reverse
   }
 
-  /** b6 `reachable`: nodes within budget of a single origin, joined back to a
-    * feature table filtered by a predicate (api/functions/graph.go:35-85). */
-  def reachableFeatures(edges: DataFrame, origin: Long, budgetMeters: Double,
-                        features: DataFrame, nodeCol: String = "node_id"): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val o = Seq(origin).toDF("origin")
-    reachable(edges, o, budgetMeters)
-      .join(features, col("node") === col(nodeCol))
-  }
-
   /**
-   * b6 `closest` / `closest-distance` (api/functions/graph.go:402-446): the
-   * nearest target by network distance within budget, one row per origin that
-   * reaches any target. Early-exits per origin once the heap minimum exceeds
+   * b6 `closest` (api/functions/graph.go:402-446): the nearest target by
+   * network distance within budget, one row per origin that reaches any
+   * target. Early-exits per origin once the heap minimum exceeds
    * the best target found (the reference's ExpandSearchTo stop rule,
    * graph/graph.go:478-507 — its findClosest TODO notes the full expansion it
    * avoids; we take the early exit). Tiebreak: smaller node id on equal distance.
@@ -298,11 +287,6 @@ object Graph {
       }
     }.toDF("origin", "node", "dist_m")
   }
-
-  /** closest-distance (graph.go:425-429): just the distance per origin. */
-  def closestDistance(edges: DataFrame, origins: DataFrame, targets: DataFrame,
-                      budgetMeters: Double): DataFrame =
-    closest(edges, origins, targets, budgetMeters).select("origin", "dist_m")
 
   /**
    * b6 `paths-to-reach` (api/functions/graph.go:451-499): per edge, how many

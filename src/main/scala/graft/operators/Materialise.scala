@@ -5,16 +5,15 @@ import org.apache.spark.sql.functions._
 import graft.checkpoint.Snapshots
 
 /**
- * materialise / materialise-map / list-feature / evaluate-feature — storing a
- * computed collection as a named feature plus its defining expression
+ * materialise / materialise-map / list-feature — storing a computed
+ * collection under the name of the plan that defines it
  * (src/diagonal.works/b6/api/functions/materialise.go:37-176,
- * api/functions/features.go:522-537).
+ * api/functions/features.go:522-528).
  *
  * Spark mapping (SURVEY §1.6): a CollectionFeature is a committed snapshot
- * table; the "expression feature" is a feature row whose reserved
- * `expression` tag names a plan in the registry (Scala plans stand in for the
- * VM language). materialise-map's per-feature fan-out becomes a
- * `partitionBy(key)` write — each key's rows land in their own directory, so
+ * table, and named Scala plans in the registry stand in for the VM
+ * language's stored expressions. materialise-map's per-feature fan-out
+ * becomes a `partitionBy(key)` write — each key's rows land in their own directory, so
  * `listFeature(key)` reads one partition with partition pruning, not a scan.
  */
 object Materialise {
@@ -26,16 +25,13 @@ object Materialise {
   def register(name: String, plan: Plan): Unit = registry.put(name, plan)
 
   /**
-   * materialise (materialise.go:37-80): evaluate the named plan, commit the
-   * result as a snapshot table, and return the expression feature row that
-   * records the lineage (union it into a world to make the result findable).
+   * materialise (materialise.go:37-80): evaluate the named plan once and
+   * commit the result as a snapshot table; a later call reads it back.
    */
-  def materialise(spark: SparkSession, root: String, name: String): (DataFrame, Changes.ChangeSet) = {
+  def materialise(spark: SparkSession, root: String, name: String): DataFrame = {
     val plan = registry.get(name)
     require(plan != null, s"no registered plan named $name")
-    val out = Snapshots.stage(spark, root, name, Seq(s"expression:$name"))(plan(spark))
-    (out, Changes.addExpression("graft/materialised", math.abs(name.hashCode).toLong,
-      Map("@materialised" -> name), name))
+    Snapshots.stage(spark, root, name, Seq(s"expression:$name"))(plan(spark))
   }
 
   /**
@@ -69,16 +65,4 @@ object Materialise {
                   keyCol: String, key: String): DataFrame =
     spark.read.parquet(Snapshots.latestFor(root, name).get.dataPath)
       .where(col(keyCol) === key)
-
-  /** evaluate-feature (features.go:530-537): run the plan named by a
-    * feature's reserved `expression` tag. */
-  def evaluateFeature(spark: SparkSession, world: DataFrame, ns: String, id: Long): DataFrame = {
-    val name = world
-      .where(col("id.ns") === ns && col("id.value") === id)
-      .select(col("tags").getItem("expression"))
-      .head.getString(0)
-    val plan = registry.get(name)
-    require(plan != null, s"feature $ns/$id names unregistered expression $name")
-    plan(spark)
-  }
 }

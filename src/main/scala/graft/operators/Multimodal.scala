@@ -4,109 +4,18 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import graft.model.Fixtures
 
 /**
- * Audio / video columns — the remaining multimodal members next to
- * `ImageOps`: payloads are opaque `binary` columns with typed metadata, and
- * every transform is a decode-once `mapPartitions` pass whose OUTPUT is
- * compact rows (bytes never shuffle unless they are the product, like
- * sampled frames).
+ * Video columns — the multimodal member next to `ImageOps`: payloads are
+ * opaque `binary` columns with typed metadata, and every transform is a
+ * decode-once `mapPartitions` pass whose OUTPUT is compact rows (bytes never
+ * shuffle unless they are the product, like sampled frames).
  *
- * The container has no audio/video codec libraries, so the byte-level
- * decoders are DETERMINISTIC STUBS (a seeded PCM generator / frame
- * synthesizer with a tiny header format, clearly marked below); the
- * Spark-side surface — schema, partitioning, batch shape, frame fan-out —
- * is real and spec-tested, and a real codec drops into `decodePcm` /
+ * The container has no video codec libraries, so the byte-level decoder is a
+ * DETERMINISTIC STUB (a frame synthesizer with a tiny header format, clearly
+ * marked below); the Spark-side surface — schema, partitioning, frame
+ * fan-out — is real and spec-tested, and a real codec drops into
  * `decodeFrame` without touching any plan.
  */
 object Multimodal {
-
-  // ---- audio -----------------------------------------------------------------
-
-  case class AudioRow(audio_id: String, bytes: Array[Byte], sample_rate: Int,
-                      n_samples: Int, caption: String)
-  case class AudioFeatures(audio_id: String, sample_rate: Int, n_samples: Int,
-                           duration_s: Double, rms: Double, peak: Double,
-                           caption: String, decoded_ok: Boolean)
-
-  /** STUB codec: "graft-pcm" = 8-byte header (magic, rate, n) + 16-bit LE
-    * samples. A real decoder (e.g. WAV) replaces exactly this function. */
-  def encodePcm(samples: Array[Short], rate: Int): Array[Byte] = {
-    val out = new Array[Byte](8 + samples.length * 2)
-    out(0) = 'g'; out(1) = 'p'
-    out(2) = ((rate >> 8) & 0xff).toByte; out(3) = (rate & 0xff).toByte
-    out(4) = ((samples.length >> 24) & 0xff).toByte; out(5) = ((samples.length >> 16) & 0xff).toByte
-    out(6) = ((samples.length >> 8) & 0xff).toByte; out(7) = (samples.length & 0xff).toByte
-    var i = 0
-    while (i < samples.length) {
-      out(8 + 2 * i) = (samples(i) & 0xff).toByte
-      out(9 + 2 * i) = ((samples(i) >> 8) & 0xff).toByte
-      i += 1
-    }
-    out
-  }
-
-  def decodePcm(bytes: Array[Byte]): (Int, Array[Short]) = {
-    require(bytes.length >= 8 && bytes(0) == 'g' && bytes(1) == 'p', "bad graft-pcm header")
-    val rate = ((bytes(2) & 0xff) << 8) | (bytes(3) & 0xff)
-    val n = ((bytes(4) & 0xff) << 24) | ((bytes(5) & 0xff) << 16) |
-      ((bytes(6) & 0xff) << 8) | (bytes(7) & 0xff)
-    val samples = new Array[Short](n)
-    var i = 0
-    while (i < n) {
-      samples(i) = (((bytes(9 + 2 * i) & 0xff) << 8) | (bytes(8 + 2 * i) & 0xff)).toShort
-      i += 1
-    }
-    (rate, samples)
-  }
-
-  /** Deterministic synthetic audio row (seeded sine + splitmix noise). */
-  def audioRow(i: Long, rate: Int = 16000, seconds: Double = 0.25): AudioRow = {
-    val n = (rate * seconds).toInt
-    val freq = 100.0 + (Fixtures.splitmix64(i) % 900 + 900) % 900
-    val samples = Array.tabulate(n) { t =>
-      val s = math.sin(2 * math.Pi * freq * t / rate) * 12000.0
-      val noise = ((Fixtures.splitmix64(i ^ t.toLong) % 512) - 256).toDouble
-      (s + noise).toShort
-    }
-    AudioRow(f"aud-$i%08d", encodePcm(samples, rate), rate, n, Fixtures.caption(i))
-  }
-
-  def audios(spark: org.apache.spark.sql.SparkSession, n: Long,
-             partitions: Int = 16): DataFrame = {
-    import spark.implicits._
-    spark.range(0, n, 1, partitions).map(audioRow(_)).toDF()
-  }
-
-  /** Decode-once audio feature extraction: duration, RMS, peak. Bytes never
-    * leave the task; captions pass through byte-identical. */
-  def decodeAudioFeatures(audio: DataFrame): Dataset[AudioFeatures] = {
-    val spark = audio.sparkSession
-    import spark.implicits._
-    audio.select("audio_id", "bytes", "sample_rate", "n_samples", "caption")
-      .as[(String, Array[Byte], Int, Int, String)]
-      .mapPartitions { rows =>
-        rows.map { case (id, bytes, rate, n, cap) =>
-          try {
-            val (dRate, samples) = decodePcm(bytes)
-            var se = 0.0; var peak = 0.0
-            var i = 0
-            while (i < samples.length) {
-              val v = samples(i).toDouble
-              se += v * v
-              if (math.abs(v) > peak) peak = math.abs(v)
-              i += 1
-            }
-            val rms = math.sqrt(se / math.max(1, samples.length))
-            AudioFeatures(id, dRate, samples.length,
-              samples.length.toDouble / dRate, rms, peak, cap,
-              decoded_ok = dRate == rate && samples.length == n)
-          } catch {
-            case _: Throwable => AudioFeatures(id, rate, n, 0.0, 0.0, 0.0, cap, decoded_ok = false)
-          }
-        }
-      }
-  }
-
-  // ---- video -----------------------------------------------------------------
 
   case class VideoRow(video_id: String, bytes: Array[Byte], w: Int, h: Int,
                       fps: Int, n_frames: Int, caption: String)

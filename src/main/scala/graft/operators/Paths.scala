@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.core.GeoOps
@@ -56,16 +56,6 @@ object Paths {
     GeoOps.toWkb(GeoOps.factory.createLineString(fa ++ tail))
   }
 
-  val join_paths = udf((a: Array[Byte], b: Array[Byte]) => joinPaths(a, b))
-
-  /** apply-to-point/path/area: gate a transform by geometry type. */
-  def applyByType(df: DataFrame, typeCol: String,
-                  onPoint: Column => Column, onPath: Column => Column,
-                  onArea: Column => Column, target: Column): Column =
-    when(col(typeCol) === "point", onPoint(target))
-      .when(col(typeCol) === "path", onPath(target))
-      .otherwise(onArea(target))
-
   /**
    * snap-area-edges (geometry.go:123-204): move polygon vertices onto nearby
    * matched paths when within `thresholdMeters`. Candidates come through a
@@ -87,7 +77,6 @@ object Paths {
     val cand = a.join(p, "__c").dropDuplicates("poly_id", "path_geom")
       .select(col("poly_id"), col("geom"), col("path_geom"))
       .as[(Long, Array[Byte], Array[Byte])]
-    val mPerDeg = graft.functions.GeoFunctions.EarthMetersPerDegLat
     cand.groupByKey(_._1).mapGroups { (pid, it) =>
       val rows = it.toSeq
       val area = GeoOps.fromWkb(rows.head._2)

@@ -4,56 +4,15 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /**
- * Relations / collections as queryable structure — the reverse-reference
- * lookups of the reference's World interface
- * (src/diagonal.works/b6/world.go:1313-1319: FindRelationsByFeature,
- * FindCollectionsByFeature, FindAreasByPoint, FindReferences) and the
- * reference joins point-paths / point-features
- * (api/functions/features.go:362-406).
- *
- * All operate on a `references` table (from_type, from_id, to_type, to_id,
- * role, pos) — built by ingest (OsmWorld.references) or synthetically. The
- * reference maintains these as in-memory reverse indexes; at scale they are
- * equi-joins, and the table should be bucketed by to_id (reverse lookups) for
- * shuffle-free probes.
+ * Relations as queryable structure over a `references` table (from_type,
+ * from_id, to_type, to_id, role, pos), built by ingest (OsmWorld.references)
+ * or synthetically.
  */
 object Relations {
-
-  /** FindReferences (world.go:1319): everything referencing `toId`,
-    * optionally restricted to referencing feature types. */
-  def findReferences(refs: DataFrame, toId: Long, fromTypes: Seq[String] = Nil): DataFrame = {
-    val base = refs.where(col("to_id") === toId)
-    if (fromTypes.isEmpty) base else base.where(col("from_type").isin(fromTypes: _*))
-  }
-
-  /** FindRelationsByFeature (world.go:1316). */
-  def relationsByFeature(refs: DataFrame, toId: Long): DataFrame =
-    findReferences(refs, toId, Seq("relation"))
-
-  /** point-paths (features.go:381-406): paths whose vertices reference a point. */
-  def pointPaths(refs: DataFrame, nodeId: Long): DataFrame =
-    findReferences(refs, nodeId, Seq("path"))
-
-  /** point-features (features.go:362-379): the point features a path
-    * references, in vertex order. */
-  def pointFeatures(refs: DataFrame, fromId: Long, fromType: String = "path"): DataFrame =
-    refs.where(col("from_type") === fromType && col("from_id") === fromId &&
-        col("to_type") === "point")
-      .orderBy("pos")
 
   /** Ordered member list of one relation (RelationFeature members,
     * b6/world.go:1077-1087). */
   def members(refs: DataFrame, relId: Long): DataFrame =
     refs.where(col("from_type") === "relation" && col("from_id") === relId)
       .orderBy("pos")
-
-  /** Join-shaped reverse lookup for MANY features at once: for each row of
-    * `ids` (a one-column DataFrame of feature ids), the referencing rows.
-    * The scan-side filter keys on to_id — at scale this is the bucketed join. */
-  def referencesFor(refs: DataFrame, ids: DataFrame,
-                    fromTypes: Seq[String] = Nil): DataFrame = {
-    val idCol = ids.columns.head
-    val base = refs.join(ids, refs("to_id") === ids(idCol)).drop(idCol)
-    if (fromTypes.isEmpty) base else base.where(col("from_type").isin(fromTypes: _*))
-  }
 }

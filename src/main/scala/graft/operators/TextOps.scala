@@ -182,13 +182,6 @@ object TextOps {
     }
   }
 
-  /** MinHash signatures: sig[i] = min over shingles of mix_i(h(shingle)). */
-  def minhashSignature(df: DataFrame, textCol: String, k: Int = 3,
-                       numHashes: Int = 32): DataFrame = {
-    val sig = udf((sh: Seq[String]) => minhashSig(sh, numHashes))
-    df.withColumn("minhash", sig(shingles(col(textCol), k)))
-  }
-
   /** Prefix of the observe()-metric names emitted by [[bucketCandidates]]. */
   val BucketStarMetricPrefix = "bucket_stars"
   private val bucketMetricSeq = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -211,8 +204,9 @@ object TextOps {
    * `bucket_stars_<n>` metrics — `degraded_buckets` (how many buckets were
    * starred) and `forgone_pairs` (how many within-bucket candidate pairs the
    * stars did not enumerate, (n-1)(n-2)/2 per bucket) — readable after any
-   * action via [[bucketDegradationMetrics]], so a dedup report can state
-   * exactly how much pairwise coverage was traded for boundedness.
+   * action from the exact DataFrame's `queryExecution.observedMetrics`, so a
+   * dedup report can state exactly how much pairwise coverage was traded for
+   * boundedness.
    */
   private[graft] def bucketCandidates(banded: DataFrame, keyCols: Seq[String],
                                       maxBucketSize: Int): DataFrame =
@@ -412,19 +406,6 @@ object TextOps {
       .dropDuplicates("id_a", "id_b")
   }
 
-  /** Sum of the star-degradation metrics observed by the LAST action on `df`
-    * (degraded buckets, forgone pairwise candidates). (0, 0) when no bucket
-    * degraded — the pair output was exhaustive within buckets. Call it on the
-    * exact DataFrame the action ran on: observed metrics attach to that
-    * QueryExecution, not to further-derived Datasets. */
-  def bucketDegradationMetrics(df: DataFrame): (Long, Long) = {
-    val rows = df.queryExecution.observedMetrics.collect {
-      case (name, row) if name.startsWith(BucketStarMetricPrefix) =>
-        (row.getAs[Long]("degraded_buckets"), row.getAs[Long]("forgone_pairs"))
-    }
-    rows.foldLeft((0L, 0L)) { case ((a, b), (c, d)) => (a + c, b + d) }
-  }
-
   /**
    * MinHash-LSH near-duplicate pairs: band the signature (bands x rowsPerBand =
    * numHashes), bucket-join on (band, bandHash), verify candidates with exact
@@ -547,11 +528,6 @@ object TextOps {
       .select(col("id_a") +: col("id_b") +: col("hamming") +:
         carry.flatMap(c => Seq(col(s"${c}_a"), col(s"${c}_b"))): _*)
   }
-
-  /** SimHash near-dup pairs: [[hammingPairs64]] over the simhash signature. */
-  def dedupSimhash(df: DataFrame, idCol: String, textCol: String,
-                   maxHamming: Int = 3): DataFrame =
-    hammingPairs64(simhash(df, idCol, textCol), idCol, "simhash", maxHamming)
 
   /** Pair-graph edge count up to which [[dedupClusters]] runs on the driver. */
   private val DriverMaxEdges = 2000000

@@ -10,8 +10,8 @@ import org.apache.spark.sql.functions._
  * The reference hosts a base world plus mutable overlays whose queries merge
  * base and delta iterators with last-writer-wins dedup by feature id
  * (src/diagonal.works/b6/ingest/mutable.go:663-730, b6/merged.go:31-81), and a
- * transactional change batch (ingest/change.go:12-184) with add-tag /
- * remove-tag / add-point ops (api/functions/change.go).
+ * transactional change batch (ingest/change.go:12-184) with add-tag and
+ * other ops (api/functions/change.go).
  *
  * Spark-first: a world is a feature DataFrame; an overlay is a second one with
  * higher precedence; merge = unionByName + row_number over (id) ordered by
@@ -43,12 +43,4 @@ object Worlds {
   def addTag(features: DataFrame, key: String, value: Column): DataFrame =
     features.withColumn("tags",
       map_concat(map_filter(col("tags"), (k, _) => k =!= key), map(lit(key), value)))
-
-  /** remove-tag (change.go:45-67). */
-  def removeTag(features: DataFrame, key: String): DataFrame =
-    features.withColumn("tags", map_filter(col("tags"), (k, _) => k =!= key))
-
-  /** add-point (change.go:72-92): append new point features. */
-  def addPoints(features: DataFrame, points: DataFrame): DataFrame =
-    features.unionByName(points, allowMissingColumns = true)
 }

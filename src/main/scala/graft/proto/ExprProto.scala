@@ -317,7 +317,7 @@ object ExprProto {
     out
   }
 
-  private def decodeLiteral(r: Reader): Shell.Expr = {
+  private[graft] def decodeLiteral(r: Reader): Shell.Expr = {
     var out: Shell.Expr = Shell.StringE("")
     while (r.hasNext) {
       val (f, wt) = r.readKey()
@@ -339,7 +339,7 @@ object ExprProto {
 
   // ---- FeatureIDProto (api.proto:24-28) -------------------------------------
 
-  private def writeFeatureId(ftype: String, ns: String, v: Long): Array[Byte] = {
+  private[graft] def writeFeatureId(ftype: String, ns: String, v: Long): Array[Byte] = {
     val fw = new Writer
     ftypeToEnum.get(ftype).filter(_ != 0).foreach(x => fw.uint(1, x))
     if (ns.nonEmpty) fw.string(2, ns)
@@ -347,7 +347,7 @@ object ExprProto {
     fw.result
   }
 
-  private def readFeatureId(r: Reader): (String, String, Long) = {
+  private[graft] def readFeatureId(r: Reader): (String, String, Long) = {
     var ft = 0; var ns = ""; var v = 0L
     while (r.hasNext) {
       val (f, wt) = r.readKey()
@@ -364,15 +364,6 @@ object ExprProto {
   // ---- B6 service RPC messages (api.proto:243-263, service at :265-269) -----
 
   /** EvaluateRequestProto: request=1 (NodeProto), version=2, root=3. */
-  def encodeEvaluateRequest(node: Shell.Expr, version: String,
-                            root: Option[(String, String, Long)]): Array[Byte] = {
-    val w = new Writer
-    w.bytes(1, encode(node))
-    if (version.nonEmpty) w.string(2, version)
-    root.foreach { case (t, ns, v) => w.bytes(3, writeFeatureId(t, ns, v)) }
-    w.result
-  }
-
   def decodeEvaluateRequest(bytes: Array[Byte])
       : (Shell.Expr, String, Option[(String, String, Long)]) = {
     val r = new Reader(bytes)
@@ -398,21 +389,7 @@ object ExprProto {
     val w = new Writer; w.bytes(1, resultNode); w.result
   }
 
-  def decodeEvaluateResponse(bytes: Array[Byte]): Array[Byte] = {
-    val r = new Reader(bytes)
-    var node = Array.emptyByteArray
-    while (r.hasNext) {
-      val (f, wt) = r.readKey()
-      if (f == 1) node = r.readBytes() else r.skip(wt)
-    }
-    node
-  }
-
   /** DeleteWorldRequestProto: id=1 (api.proto:253-255). */
-  def encodeDeleteWorldRequest(id: (String, String, Long)): Array[Byte] = {
-    val w = new Writer; w.bytes(1, writeFeatureId(id._1, id._2, id._3)); w.result
-  }
-
   def decodeDeleteWorldRequest(bytes: Array[Byte]): (String, String, Long) = {
     val r = new Reader(bytes)
     var id = ("invalid", "", 0L)
@@ -428,16 +405,6 @@ object ExprProto {
     val w = new Writer
     ids.foreach { case (t, ns, v) => w.bytes(1, writeFeatureId(t, ns, v)) }
     w.result
-  }
-
-  def decodeListWorldsResponse(bytes: Array[Byte]): Seq[(String, String, Long)] = {
-    val r = new Reader(bytes)
-    val out = Seq.newBuilder[(String, String, Long)]
-    while (r.hasNext) {
-      val (f, wt) = r.readKey()
-      if (f == 1) out += readFeatureId(r.sub()) else r.skip(wt)
-    }
-    out.result()
   }
 
   // ---- result literal arms beyond the shell grammar -------------------------
@@ -475,34 +442,5 @@ object ExprProto {
     val lw = new Writer
     lw.bytes(14, aw.result)
     nodeOfLiteral(lw.result)
-  }
-
-  /** Spec-side inverse of [[collectionNode]]: decode a collectionValue
-    * literal NodeProto back to (keys, values). */
-  def decodeCollectionNode(node: Array[Byte]): (Seq[Shell.Expr], Seq[Shell.Expr]) = {
-    val r = new Reader(node)
-    val keys = Seq.newBuilder[Shell.Expr]
-    val values = Seq.newBuilder[Shell.Expr]
-    while (r.hasNext) {
-      val (f, wt) = r.readKey()
-      if (f == 2) {
-        val lr = r.sub()
-        while (lr.hasNext) {
-          val (lf, lwt) = lr.readKey()
-          if (lf == 6) {
-            val cr = lr.sub()
-            while (cr.hasNext) {
-              val (cf, cwt) = cr.readKey()
-              cf match {
-                case 2 => keys += decodeLiteral(cr.sub())
-                case 4 => values += decodeLiteral(cr.sub())
-                case _ => cr.skip(cwt)
-              }
-            }
-          } else lr.skip(lwt)
-        }
-      } else r.skip(wt)
-    }
-    (keys.result(), values.result())
   }
 }

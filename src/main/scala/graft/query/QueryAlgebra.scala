@@ -3,7 +3,6 @@ package graft.query
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.CellExprs
-import graft.operators.SpatialJoins
 
 /**
  * The reference's query algebra (src/diagonal.works/b6/search.go + spatial.go)
@@ -43,9 +42,6 @@ case class And(qs: Seq[Query]) extends Query {
 case class Or(qs: Seq[Query]) extends Query {
   def toColumn: Column = qs.map(_.toColumn).reduce(_ || _)
 }
-case object IsValid extends Query {
-  def toColumn: Column = col("id.value") >= 0 && col("id.ns") =!= ""
-}
 case class KeyRange(lo: Long, hi: Long) extends Query {
   def toColumn: Column = col("id.value") >= lo && col("id.value") < hi
 }
@@ -59,33 +55,6 @@ case class IntersectsCap(lat: Double, lng: Double, radiusMeters: Double) extends
   * features whose location falls inside the geometry). */
 case class IntersectsGeom(wkb: Array[Byte]) extends Query {
   def toColumn: Column = CellExprs.wkb_covers_point(lit(wkb), col("lat"), col("lng"))
-}
-/** IntersectsCells (b6/spatial.go:59-201): features inside any of the given
-  * cells. Exact for point features: containment in a cell == the point's
-  * ancestor at the cell's level IS that cell (no geometry test needed). */
-case class IntersectsCells(cells: Seq[Long]) extends Query {
-  def toColumn: Column = cells.map { c =>
-    CellExprs.cell_parent_at(col("cell16"), lit(graft.core.Cells.level(c))) === c
-  }.reduce(_ || _)
-}
-/** Features whose GEOMETRY intersects a literal polyline — the exact-JTS form
-  * of IntersectsPolyline (b6/spatial.go:509-607; the reference approximates
-  * area intersection by vertex containment, TODO'd at :562 — we refine
-  * exactly, a strict superset of its approximation). Needs a `geom` column. */
-case class IntersectsPolyline(wkb: Array[Byte]) extends Query {
-  def toColumn: Column = CellExprs.wkb_intersects(col("geom"), lit(wkb))
-}
-/** Features whose geometry intersects a literal (multi)polygon —
-  * IntersectsMultiPolygon (b6/spatial.go:609-711). Needs a `geom` column. */
-case class IntersectsPolygon(wkb: Array[Byte]) extends Query {
-  def toColumn: Column = CellExprs.wkb_intersects(col("geom"), lit(wkb))
-}
-/** IntersectsFeature (b6/spatial.go:373-418): look up the geometry of the
-  * given feature id in the world and delegate to the right Intersects* node
-  * by geometry type. Resolution happens in QueryPlanner.find. */
-case class IntersectsFeature(ftype: String, ns: String, value: Long) extends Query {
-  def toColumn: Column =
-    throw new IllegalStateException("IntersectsFeature must be planned via QueryPlanner.find (needs the world)")
 }
 
 object QueryPlanner {
@@ -118,23 +87,6 @@ object QueryPlanner {
       features
         .where(coverPrune(cover))
         .where(cap.toColumn)
-    case q @ IntersectsPolyline(wkb) => geomIntersectsPlan(features, wkb, q.toColumn)
-    case q @ IntersectsPolygon(wkb) => geomIntersectsPlan(features, wkb, q.toColumn)
-    case IntersectsFeature(ftype, ns, value) =>
-      // look up the target's geometry once (broadcast-by-literal), then
-      // delegate by geometry type like b6/spatial.go:373-418
-      val row = features
-        .where(col("id.ftype") === ftype && col("id.ns") === ns && col("id.value") === value)
-        .select("geom").head
-      val wkb = row.getAs[Array[Byte]](0)
-      val g = graft.core.GeoOps.fromWkb(wkb)
-      val delegate = g.getGeometryType match {
-        case "LineString" | "MultiLineString" => IntersectsPolyline(wkb)
-        case "Point" => IntersectsCap(g.getCoordinate.y, g.getCoordinate.x, 0.5)
-        case _ =>
-          if (features.columns.contains("geom")) IntersectsPolygon(wkb) else IntersectsGeom(wkb)
-      }
-      find(features, delegate)
     case And(qs) if qs.exists(isSpatial) =>
       val (spatial, rest) = qs.partition(isSpatial)
       val base = if (rest.isEmpty) features else features.where(And(rest).toColumn)
@@ -143,30 +95,7 @@ object QueryPlanner {
   }
 
   private def isSpatial(q: Query): Boolean = q match {
-    case _: IntersectsGeom | _: IntersectsCap | _: IntersectsPolyline |
-         _: IntersectsPolygon | _: IntersectsFeature => true
+    case _: IntersectsGeom | _: IntersectsCap => true
     case _ => false
-  }
-
-  /** Covering pre-prune + exact JTS refine for geometry-intersection queries:
-    * the s2:/a2: duality (search/spatial.go:65-113) — a feature is a candidate
-    * when its covering overlaps the query covering's ancestor closure, or its
-    * covering's ancestor closure overlaps the query covering. */
-  private def geomIntersectsPlan(features: DataFrame, wkb: Array[Byte], refine: Column): DataFrame = {
-    val coverQ = graft.core.GeoOps.coveringWkb(wkb, 16, 8)
-    val ancQ = (coverQ ++ coverQ.flatMap(graft.core.Cells.ancestors)).distinct.sorted
-    val pruned =
-      if (features.columns.contains("covering")) {
-        val featAnc = flatten(transform(col("covering"),
-          c => array_union(array(c), CellExprs.cell_ancestors(c))))
-        features.where(
-          arrays_overlap(col("covering"), typedLit(ancQ.toSeq)) ||
-            arrays_overlap(featAnc, typedLit(coverQ.toSeq)))
-      } else {
-        val levels = coverQ.map(c => graft.core.Cells.level(c)).distinct.sorted
-        val anc = array(levels.map(l => CellExprs.cell_parent_at(col("cell16"), lit(l))): _*)
-        features.where(arrays_overlap(anc, typedLit(coverQ.toSeq)))
-      }
-    pruned.where(refine)
   }
 }

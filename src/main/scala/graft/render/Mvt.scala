@@ -92,14 +92,6 @@ object Mvt {
     (1.0 - math.log(math.tan(latR) + 1.0 / math.cos(latR)) / math.Pi) / 2.0
   }
 
-  /** Tile-local integer coords of a lng/lat within tile (z, tx, ty). */
-  def tileCoord(lng: Double, lat: Double, z: Int, tx: Long, ty: Long): (Long, Long) = {
-    val n = (1L << z).toDouble
-    val px = math.round((worldX(lng) * n - tx) * Extent)
-    val py = math.round((worldY(lat) * n - ty) * Extent)
-    (px, py)
-  }
-
   /** Geometry commands for a JTS geometry in tile-local coords. Polygon rings
     * beyond SimplifyThreshold points are Douglas-Peucker-simplified in tile
     * units before encoding (≙ encoder.go:77-105). */

@@ -9,9 +9,8 @@ import graft.server.Http
 import graft.shell.Shell
 
 /**
- * Named-worlds registry + the per-tile query/collection renderers — the
- * serving surface of the reference (ingest/worlds.go:9-62,
- * renderer/query.go:14-120, renderer/collection.go:10-66,
+ * Named-worlds registry + the per-tile query renderer — the serving surface
+ * of the reference (ingest/worlds.go:9-62, renderer/query.go:14-120,
  * renderer/handler.go), Spark-first: a "world" is a (features, refs, items)
  * DataFrame triple; a scenario world is the base with ChangeSets applied
  * non-destructively (MutableOverlayWorld semantics); rendering a whole zoom
@@ -42,22 +41,14 @@ object Renderers {
    * DataFrames are immutable plans, so "mutable overlay" = replacing the
    * stored triple with the change-applied plans — the base is never touched
    * and every world stays independently queryable.
-   *
-   * DURABILITY: with a `root` directory the registry is backed by the
-   * Snapshots layer — every applyChange exports the named world's triple as
-   * committed snapshot tables (≙ export-world per world,
-   * api/functions/export.go:16-29, over the compact-file format), and
-   * findOrCreate in a NEW session reloads the latest committed snapshot of
-   * an id it has never seen — scenario worlds survive a JVM restart.
    */
-  class WorldRegistry(spark: SparkSession, base: World,
-                      root: Option[String] = None) {
+  class WorldRegistry(spark: SparkSession, base: World) {
     private val worlds =
       scala.collection.concurrent.TrieMap[WorldId, World]()
 
     def findOrCreate(id: WorldId): World = {
       val key = if (valid(id)) id else DefaultWorldId
-      worlds.getOrElseUpdate(key, loadPersisted(key).getOrElse(base))
+      worlds.getOrElseUpdate(key, base)
     }
 
     /** ListWorlds RPC: the ids materialised in this registry
@@ -70,33 +61,8 @@ object Renderers {
 
     private def valid(id: WorldId): Boolean = id.ns.nonEmpty && id.value >= 0
 
-    private def table(id: WorldId, part: String): String =
-      s"${id.ftype}_${id.ns.replace('/', '.')}_${id.value}_$part"
-
-    private def loadPersisted(id: WorldId): Option[World] = root.flatMap { r =>
-      graft.checkpoint.Snapshots.latestFor(r, table(id, "features")).map { f =>
-        def read(part: String) =
-          graft.checkpoint.Snapshots.latestFor(r, table(id, part))
-            .map(s => spark.read.parquet(s.dataPath))
-        World(spark.read.parquet(f.dataPath),
-          read("refs").getOrElse(base.refs),
-          read("items").getOrElse(base.items))
-      }
-    }
-
-    /** export-world for one named world: commit its triple as snapshot
-      * tables under `root` (no-op without a root). */
-    def exportWorld(id: WorldId): Unit = root.foreach { r =>
-      val w = findOrCreate(id)
-      val lineage = Seq(s"world:${id.ftype}/${id.ns}/${id.value}")
-      graft.checkpoint.Snapshots.commit(w.features, r, table(id, "features"), lineage)
-      graft.checkpoint.Snapshots.commit(w.refs, r, table(id, "refs"), lineage)
-      graft.checkpoint.Snapshots.commit(w.items, r, table(id, "items"), lineage)
-    }
-
     /** add-world-with-change: apply the ChangeSet to the world named `id`
-      * (creating it from base if absent), store — and, when durable, commit —
-      * the result. */
+      * (creating it from base if absent) and store the result. */
     def applyChange(id: WorldId, change: Changes.ChangeSet): WorldId = {
       val w = findOrCreate(id)
       val (features, refs, newItems) = Changes.apply(spark, w.features, w.refs, change)
@@ -104,7 +70,6 @@ object Renderers {
         else w.items.unionByName(newItems, allowMissingColumns = true)
       val key = if (valid(id)) id else DefaultWorldId
       worlds(key) = World(features, refs, items)
-      if (root.isDefined) exportWorld(key)
       id
     }
   }
@@ -191,34 +156,6 @@ object Renderers {
     if (rows.isEmpty) Array.emptyByteArray
     else Mvt.encodeTile(z, x, y, rows.toSeq.map(r => Mvt.TileFeature(r.getLong(0), "query",
       r.getAs[Array[Byte]](1), Option(r.getMap[String, String](2)).map(_.toMap).getOrElse(Map.empty))))
-  }
-
-  /**
-   * CollectionRenderer (renderer/collection.go:22-66): the features
-   * referenced by a stored collection's keys and values (feature-id tokens),
-   * rendered with the basemap rule tags + label. Membership resolution is a
-   * JOIN against the collection items table, not a driver loop.
-   */
-  def collectionTiles(reg: WorldRegistry, world: WorldId,
-                      collection: WorldId, zoom: Int): DataFrame = {
-    val w = reg.findOrCreate(world)
-    val spark = w.features.sparkSession
-    import spark.implicits._
-    val parseFid = udf((s: String) => Shell.parseFeatureIdToken(s))
-    val items = w.items
-      .where(col("ns") === collection.ns && col("value") === collection.value)
-    // ids referenced by keys OR values (collection.go:37-50)
-    val ids = items.select(explode(array(col("key"), col("item"))).as("tok"))
-      .select(parseFid(col("tok")).as("fid")).where(col("fid").isNotNull)
-      .select(col("fid._1").as("m_ftype"), col("fid._2").as("m_ns"), col("fid._3").as("m_value"))
-      .distinct()
-    val members = w.features.join(broadcast(ids),
-      col("id.ftype") === col("m_ftype") && col("id.ns") === col("m_ns") &&
-        col("id.value") === col("m_value"))
-      .drop("m_ftype", "m_ns", "m_value")
-    renderCapped(members
-      .withColumn("__fid", tileFid(ftypeOrdinal, col("id.ns"), col("id.value")))
-      .withColumn("__rtags", queryTags(None)), zoom, "collection")
   }
 
   /** Shared tail: explode tile cover, cap per tile by feature id, MVT-encode.

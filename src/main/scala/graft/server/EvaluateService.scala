@@ -29,8 +29,9 @@ object EvaluateService {
   /** Major API version — requests must match (grpc/service.go:37-41). */
   val ApiVersion = "1"
 
-  /** Rows a collection result carries, over every door. */
-  private val MaxRows = 1000
+  /** Rows a collection result carries, over every door; also the most
+    * features `to-geojson-collection` renders. */
+  final val MaxRows = 1000
 
   case class EvaluateResult(kind: String, json: String)
 

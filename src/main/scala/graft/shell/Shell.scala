@@ -606,22 +606,17 @@ object Shell {
       case ("to-geojson", List(g: org.locationtech.jts.geom.Geometry)) =>
         graft.sources.GeoJson.featureToJson(g, Map.empty)
       case ("to-geojson", List(c)) =>
-        val df = asDf(c)
-        val toJson = udf { (wkb: Array[Byte], tags: Map[String, String]) =>
-          graft.sources.GeoJson.featureToJson(graft.core.GeoOps.fromWkb(wkb),
-            Option(tags).getOrElse(Map.empty))
-        }
-        df.withColumn("geojson", toJson(col("geom"), col("tags")))
+        asDf(c).withColumn("geojson", featureJson(col("geom"), col("tags")))
       case ("to-geojson-collection", List(c)) =>
-        val df = asDf(c)
-        val toJson = udf { (wkb: Array[Byte], tags: Map[String, String]) =>
-          graft.sources.GeoJson.featureToJson(graft.core.GeoOps.fromWkb(wkb),
-            Option(tags).getOrElse(Map.empty))
-        }
-        // tiny by contract (a rendered FeatureCollection string comes back)
-        graft.sources.GeoJson.featureCollection(
-          df.withColumn("__j", toJson(col("geom"), col("tags")))
-            .select("__j").collect().map(_.getString(0)).toSeq)
+        // the whole collection comes back as one string, so it is bounded
+        // like a served reply: one guarded collect, an error above the bound
+        val bound = graft.server.EvaluateService.MaxRows
+        val rows = asDf(c).select(featureJson(col("geom"), col("tags")))
+          .limit(bound + 1).collect()
+        if (rows.length > bound)
+          throw ShellException(
+            s"to-geojson-collection renders at most $bound features; narrow the collection")
+        graft.sources.GeoJson.featureCollection(rows.map(_.getString(0)).toSeq)
       case ("collection", pairs) => pairs.map {
         case (k, v) => (k, v)
         case p => p
@@ -768,8 +763,7 @@ object Shell {
           .map { case (g, props) => (graft.core.GeoOps.toWkb(g), props) }
           .toDF("geom", "tags")
       case ("materialise", List(nm: String)) =>
-        graft.operators.Materialise.materialise(world.sparkSession,
-          sys.props.getOrElse("graft.materialise.root", "spark-warehouse/materialised"), nm)._1
+        graft.operators.Materialise.materialise(world.sparkSession, materialiseRoot, nm)
       case ("sightline", List(LatLngE(la, lo), r)) =>
         val spark = world.sparkSession
         import spark.implicits._
@@ -1003,6 +997,12 @@ object Shell {
   private def requireRefs(env: Env): DataFrame =
     env.refs.getOrElse(throw ShellException(
       "this function needs the references table: use Shell.run(Env(world, refs = Some(refs)), expression)"))
+
+  /** A feature as a GeoJSON Feature; a tag whose value is null is absent. */
+  private val featureJson = udf { (wkb: Array[Byte], tags: Map[String, String]) =>
+    graft.sources.GeoJson.featureToJson(graft.core.GeoOps.fromWkb(wkb),
+      Option(tags).getOrElse(Map.empty).filter(_._2 != null))
+  }
 
   private def materialiseRoot: String =
     sys.props.getOrElse("graft.materialise.root", "spark-warehouse/materialised")

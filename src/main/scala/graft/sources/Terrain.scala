@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
  * The spots feed `operators.Elevation` (IDW field, ≙ b6/elevation.go:18-64)
  * and `climbForEdges` reproduces the terrain CLI's incline annotation: per
  * edge, the positive elevation gain between the fields at its endpoints —
- * the `climb` column Weights.elevationSeconds prices at Naismith 6 s/m.
+ * the `climb` column b6's Naismith rule prices at 6 s/m (graph.go:161).
  */
 object Terrain {
 

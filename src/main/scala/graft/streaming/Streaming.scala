@@ -1,15 +1,13 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /**
- * Structured Streaming ingest path. The reference itself is batch-only
- * (SURVEY.md §2 Streaming: none), but the engine exposes the streaming
- * equivalents of its ingest + aggregation plane: watermarked event-time
- * windows over an append stream, with `foreachBatch`-style merge available for
- * feature mutation at scale.
+ * Event-time aggregation over the events table. The reference itself is
+ * batch-only (SURVEY.md §2 Streaming: none); `windowedEventCounts` also runs
+ * on a streaming DataFrame (watermarked event-time windows over an append
+ * stream) with the same rows as the batch plan.
  */
 object Streaming {
 
@@ -34,9 +32,8 @@ object Streaming {
     * it closes — the former lag-window + running-sum-window + hash-aggregate
     * chain re-ran two (non-codegen) Window nodes over every event and, when a
     * caller sorts the result, the orderBy's range-boundary sampling
-    * re-executed that whole subtree a second time. The streaming equivalent
-    * uses flatMapGroupsWithState below — both produce identical
-    * (user_id, session_idx, n_events, t_start, t_end) rows on the same input. */
+    * re-executed that whole subtree a second time. Emits
+    * (user_id, session_idx, n_events, t_start, t_end) rows. */
   def sessionize(events: DataFrame, gapMinutes: Int = 30): DataFrame = {
     val spark = events.sparkSession
     val np = math.max(spark.sessionState.conf.numShufflePartitions, 1)
@@ -98,169 +95,5 @@ object Streaming {
       // second time (plan-probed); with it the sampler reads the materialized
       // blocks. Freed by the ContextCleaner when unreferenced.
       .localCheckpoint(eager = false)
-  }
-
-  case class SessionEvent(user_id: Long, tsMicros: Long)
-  case class SessionOut(user_id: Long, session_idx: Long, n_events: Long,
-                        t_start_micros: Long, t_end_micros: Long)
-  private case class SessionState(idx: Long, n: Long, start: Long, last: Long)
-
-  /** Stateful-streaming sessionization via flatMapGroupsWithState — the
-    * KeyValueGroupedDataset custom-state path of Structured Streaming. In a
-    * test it runs over a batch-sorted group iterator and must equal
-    * `sessionize`. */
-  def sessionizeStateful(events: org.apache.spark.sql.Dataset[SessionEvent],
-                         gapMinutes: Int = 30): org.apache.spark.sql.Dataset[SessionOut] = {
-    import events.sparkSession.implicits._
-    val gap = gapMinutes.toLong * 60000000L
-    events.groupByKey(_.user_id).flatMapGroups { (uid, it) =>
-      val sorted = it.toSeq.sortBy(_.tsMicros)
-      val out = Seq.newBuilder[SessionOut]
-      var st: SessionState = null
-      sorted.foreach { e =>
-        if (st == null) st = SessionState(0, 1, e.tsMicros, e.tsMicros)
-        else if (e.tsMicros - st.last > gap) {
-          out += SessionOut(uid, st.idx, st.n, st.start, st.last)
-          st = SessionState(st.idx + 1, 1, e.tsMicros, e.tsMicros)
-        } else st = st.copy(n = st.n + 1, last = e.tsMicros)
-      }
-      if (st != null) out += SessionOut(uid, st.idx, st.n, st.start, st.last)
-      out.result().iterator
-    }
-  }
-
-  // ---- streaming world mutation ----------------------------------------------
-
-  /** One sequenced tag edit arriving on the changelog stream (the
-    * `changes-to-file` tagEdits layout plus a `seq` for last-writer-wins
-    * ordering across micro-batches). */
-  case class SeqTagEdit(ftype: String, ns: String, value: Long, key: String,
-                        newValue: Option[String], seq: Long)
-  case class FeatureTagState(ftype: String, ns: String, value: Long,
-                             tags: Map[String, String])
-
-  /**
-   * Streaming analogue of the server's transactional change apply
-   * (grpc/service.go:60-67 under a RW lock; here `mapGroupsWithState` keeps
-   * the CURRENT tag map per feature): a continuous stream of tag edits folds
-   * into per-feature state, update-mode output emits each feature's new tag
-   * map as edits arrive. Works identically over a batch Dataset (the spec
-   * asserts batch == streaming on the same edits).
-   */
-  def streamTagState(edits: org.apache.spark.sql.Dataset[SeqTagEdit]):
-      org.apache.spark.sql.Dataset[FeatureTagState] = {
-    import edits.sparkSession.implicits._
-    edits.groupByKey(e => (e.ftype, e.ns, e.value))
-      .mapGroupsWithState[Map[String, String], FeatureTagState](
-        org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout) {
-        case ((ftype, ns, value), it, state) =>
-          val cur = state.getOption.getOrElse(Map.empty[String, String])
-          val next = it.toSeq.sortBy(_.seq).foldLeft(cur) { (m, e) =>
-            e.newValue match {
-              case Some(v) => m + (e.key -> v)
-              case None => m - e.key
-            }
-          }
-          state.update(next)
-          FeatureTagState(ftype, ns, value, next)
-      }
-  }
-
-  /**
-   * Streaming exact dedup — the streaming member of the dedup family
-   * (TextOps.dedupExact is the batch hash-groupBy): keep the first-arriving
-   * row per content hash. On a stream this is
-   * `dropDuplicatesWithinWatermark` — per-hash state is pruned once event
-   * time passes the watermark, so state size is bounded by the dedup
-   * HORIZON, not the stream's history (the dedup guarantee holds for
-   * duplicates arriving within the horizon — the honest contract at
-   * unbounded scale). The same call runs on a batch frame (one row kept
-   * per hash).
-   */
-  def dedupStream(docs: DataFrame, textCol: String, tsCol: String,
-                  watermark: String = "1 hour"): DataFrame = {
-    val hashed = docs.withColumn("__h", md5(col(textCol).cast("binary")))
-    val out =
-      if (docs.isStreaming)
-        hashed.withColumn("__ts", col(tsCol).cast("timestamp"))
-          .withWatermark("__ts", watermark)
-          .dropDuplicatesWithinWatermark("__h").drop("__ts")
-      else hashed.dropDuplicates("__h")
-    out.drop("__h")
-  }
-
-  /**
-   * Streaming raster plane: per-tile event counts over an event STREAM —
-   * the tile assignment (Mercator arithmetic, graft.operators.SpatialJoins)
-   * is stateless per-row work, so only the final count carries state; the
-   * identical plan runs on a batch frame with identical results. The
-   * streaming member of the spatial family next to the batch flagship.
-   */
-  def streamingTileCounts(events: DataFrame, zoom: Int = 12): DataFrame = {
-    val pts = graft.model.Fixtures.pointCols(events)
-    graft.operators.SpatialJoins.tileAssignment(pts, zoom)
-      .groupBy(col("tile_xx").as("tx"), col("tile_yy").as("ty"))
-      .agg(count(lit(1)).as("n"))
-  }
-
-  /**
-   * Streaming flagship parity: the PIP stage over an ARRIVING-files event
-   * stream, merged per micro-batch into the snapshot table — the north
-   * rule's streaming-ingest analogue of Pipeline's `pip` stage. Each batch
-   * runs the same covering join as the batch flagship (stream-static join —
-   * stateless, the polygon side is the broadcast index side), then
-   * foreachBatch MERGEs (upsert on (point_id, poly_id)) into `pip_stream`
-   * through Snapshots.commit, so every micro-batch is an atomic, lineage-
-   * carrying snapshot ("microbatch:<n>") and a crash resumes from the last
-   * committed batch. Returns the number of micro-batches committed.
-   */
-  def streamingPipMerge(spark: SparkSession, streamDir: String, root: String,
-                        maxFilesPerTrigger: Int = 1): Long = {
-    val schema = spark.read.parquet(streamDir).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger).parquet(streamDir)
-    val pts = graft.model.Fixtures.pointCols(stream)
-    val polygons = graft.model.Fixtures.polygons(spark)
-    // the covering-level probe runs on the STATIC polygon side at plan time,
-    // so the default (None) path is streaming-safe
-    val pip = graft.operators.SpatialJoins.pointInPolygonJoin(pts, polygons)
-      .select(col("point_id"), col("poly_id"), col("lat"), col("lng"))
-    val batches = new java.util.concurrent.atomic.AtomicLong(0)
-    val q = pip.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val cur = graft.checkpoint.Snapshots.latestFor(root, "pip_stream")
-          .map(s => spark.read.parquet(s.dataPath))
-        val merged = cur match {
-          case Some(c) => batch.unionByName(c).dropDuplicates("point_id", "poly_id")
-          case None => batch.dropDuplicates("point_id", "poly_id")
-        }
-        graft.checkpoint.Snapshots.commit(merged, root, "pip_stream",
-          lineage = Seq("events-stream", s"microbatch:$batchId"))
-        batches.incrementAndGet()
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    batches.get()
-  }
-
-  /** Run a streaming query over parquet-backed events into an in-memory table
-    * and return the materialised result (local smoke / tests). */
-  def runStreamToMemory(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    // FileStreamSource ingests directories; stage the single parquet file
-    // into a temp dir (stands in for an arriving-files ingest directory)
-    val streamDir = java.nio.file.Files.createTempDirectory("graft-stream")
-    java.nio.file.Files.copy(java.nio.file.Paths.get(s"$dir/events.parquet"),
-      streamDir.resolve("events.parquet"))
-    val stream = spark.readStream.schema(schema).parquet(streamDir.toString)
-    val q = windowedEventCounts(stream)
-      .writeStream.outputMode("complete")
-      .format("memory").queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name)
   }
 }

@@ -37,7 +37,11 @@ class AnnSpec extends SparkSuite {
     val lsh = Ann.cosineLsh(data, queries, 5, bits = 5, tables = 16)
       .select("qid", "rank", "neighbor_id")
     lsh.collect()
-    val cands = Ann.candidateMetrics(lsh)
+    // the candidate metrics observed by the action on `lsh` itself
+    val cands = lsh.queryExecution.observedMetrics.collect {
+      case (name, row) if name.startsWith(Ann.CandidateMetricPrefix) =>
+        row.getAs[Long]("candidates")
+    }.sum
     assert(cands > 0, "LSH candidate metric must fire")
     // candidates are a strict subset of the 5 x (n-1) cross pairs — that gap
     // IS the approximation being reported

@@ -48,15 +48,6 @@ class CellsSpec extends AnyFunSuite {
     }
   }
 
-  test("rangeMin/rangeMax nest correctly") {
-    samples().filter(_._3 >= 1).foreach { case (lat, lng, l) =>
-      val c = Cells.cellOf(lat, lng, l)
-      val p = Cells.parent(c)
-      assert(Cells.rangeMin(p) <= Cells.rangeMin(c))
-      assert(Cells.rangeMax(p) >= Cells.rangeMax(c))
-    }
-  }
-
   test("children partition the parent") {
     val c = Cells.cellOf(51.53, -0.12, 10)
     val kids = Cells.children(c)

@@ -135,27 +135,27 @@ class EvaluateServiceSpec extends SparkSuite {
     try {
       val port = server.getAddress.getPort
       // scalar: (add-ints 40 2) -> intValue literal node
-      val req = ExprProto.encodeEvaluateRequest(
+      val req = ExprProtoClient.encodeEvaluateRequest(
         CallE(SymbolE("add-ints"), List(IntE(40), IntE(2))), "1", None)
       val frames = grpcFrames(postGrpcWeb(port, "/b6.grpc.B6/Evaluate", grpcFrame(0, req)))
       val trailer = new String(frames.collect { case (f, p) if (f & 0x80) != 0 => p }.head, "UTF-8")
       assert(trailer.contains("grpc-status: 0"), trailer)
-      val result = ExprProto.decode(ExprProto.decodeEvaluateResponse(
+      val result = ExprProto.decode(ExprProtoClient.decodeEvaluateResponse(
         frames.collectFirst { case (f, p) if (f & 0x80) == 0 => p }.get))
       assert(result == IntE(42), result)
 
       // a pipelined find | count through the full shell dispatch
-      val count = ExprProto.encodeEvaluateRequest(
+      val count = ExprProtoClient.encodeEvaluateRequest(
         CallE(SymbolE("count"), List(
           CallE(SymbolE("find"), List(QueryE(graft.query.Keyed("#amenity"))))),
           pipelined = true), "1", None)
       val countFrames = grpcFrames(postGrpcWeb(port, "/b6.grpc.B6/Evaluate", grpcFrame(0, count)))
-      val countResult = ExprProto.decode(ExprProto.decodeEvaluateResponse(
+      val countResult = ExprProto.decode(ExprProtoClient.decodeEvaluateResponse(
         countFrames.collectFirst { case (f, p) if (f & 0x80) == 0 => p }.get))
       assert(countResult.isInstanceOf[IntE] && countResult.asInstanceOf[IntE].v > 0, countResult)
 
       // version gate + unknown function -> trailers-only grpc-status 2
-      val bad = ExprProto.encodeEvaluateRequest(IntE(1), "9.0", None)
+      val bad = ExprProtoClient.encodeEvaluateRequest(IntE(1), "9.0", None)
       val badTrailer = new String(grpcFrames(
         postGrpcWeb(port, "/b6.grpc.B6/Evaluate", grpcFrame(0, bad)))
         .collect { case (f, p) if (f & 0x80) != 0 => p }.head, "UTF-8")
@@ -164,7 +164,6 @@ class EvaluateServiceSpec extends SparkSuite {
   }
 
   test("b6.grpc.B6/Evaluate returns two-column frames as collectionValue keys/values") {
-    import graft.proto.ExprProto
     import graft.server.EvaluateService.{grpcFrame, grpcFrames}
     import graft.shell.Shell._
     val server = EvaluateService.serve(reg)
@@ -172,7 +171,7 @@ class EvaluateServiceSpec extends SparkSuite {
       val port = server.getAddress.getPort
       // the ShellSpec count-values golden, through the RPC: a (value, count)
       // two-column frame comes back as CollectionProto keys/values
-      val req = ExprProto.encodeEvaluateRequest(
+      val req = ExprProtoClient.encodeEvaluateRequest(
         CallE(SymbolE("count-values"), List(
           CallE(SymbolE("map"), List(
             CallE(SymbolE("find"), List(QueryE(graft.query.Keyed("#amenity")))),
@@ -182,9 +181,9 @@ class EvaluateServiceSpec extends SparkSuite {
       val frames = grpcFrames(postGrpcWeb(port, "/b6.grpc.B6/Evaluate", grpcFrame(0, req)))
       val trailer = new String(frames.collect { case (f, p) if (f & 0x80) != 0 => p }.head, "UTF-8")
       assert(trailer.contains("grpc-status: 0"), trailer)
-      val node = ExprProto.decodeEvaluateResponse(
+      val node = ExprProtoClient.decodeEvaluateResponse(
         frames.collectFirst { case (f, p) if (f & 0x80) == 0 => p }.get)
-      val (keys, values) = ExprProto.decodeCollectionNode(node)
+      val (keys, values) = ExprProtoClient.decodeCollectionNode(node)
       assert(keys.nonEmpty && keys.length == values.length)
       val byValue = keys.zip(values).collect {
         case (StringE(k), IntE(n)) => k -> n
@@ -194,7 +193,6 @@ class EvaluateServiceSpec extends SparkSuite {
   }
 
   test("b6.grpc.B6/ListWorlds + DeleteWorld manage the registry (service.go:91-105)") {
-    import graft.proto.ExprProto
     import graft.server.EvaluateService.{grpcFrame, grpcFrames}
     val server = EvaluateService.serve(reg)
     try {
@@ -204,12 +202,12 @@ class EvaluateServiceSpec extends SparkSuite {
       def listIds(): Seq[(String, String, Long)] = {
         val frames = grpcFrames(postGrpcWeb(port, "/b6.grpc.B6/ListWorlds",
           grpcFrame(0, Array.emptyByteArray)))
-        ExprProto.decodeListWorldsResponse(
+        ExprProtoClient.decodeListWorldsResponse(
           frames.collectFirst { case (f, p) if (f & 0x80) == 0 => p }.get)
       }
       assert(listIds().contains(("collection", "graft/grpcweb", 21L)))
       postGrpcWeb(port, "/b6.grpc.B6/DeleteWorld", grpcFrame(0,
-        ExprProto.encodeDeleteWorldRequest(("collection", "graft/grpcweb", 21L))))
+        ExprProtoClient.encodeDeleteWorldRequest(("collection", "graft/grpcweb", 21L))))
       assert(!listIds().contains(("collection", "graft/grpcweb", 21L)))
     } finally server.stop(0)
   }
@@ -284,20 +282,20 @@ class EvaluateServiceSpec extends SparkSuite {
     import graft.proto.ExprProto
     import graft.shell.Shell._
     withServer(sfReg) { port =>
-      val req = ExprProto.encodeEvaluateRequest(CallE(SymbolE("count"), List(
+      val req = ExprProtoClient.encodeEvaluateRequest(CallE(SymbolE("count"), List(
         CallE(SymbolE("find"), List(QueryE(graft.query.Tagged("#amenity", "cafe"))))),
         pipelined = true), "1", None)
       val (trailer, msg) = grpcWeb(port, "/b6.grpc.B6/Evaluate", req)
       assert(trailer.contains("grpc-status: 0"), trailer)
-      assert(ExprProto.decode(ExprProto.decodeEvaluateResponse(msg.get)) == IntE(cafes))
+      assert(ExprProto.decode(ExprProtoClient.decodeEvaluateResponse(msg.get)) == IntE(cafes))
 
       val scenario = ("collection", "graft/sf-grpcweb", 4L)
       sfReg.findOrCreate(WorldId(scenario._1, scenario._2, scenario._3))
-      def listIds() = ExprProto.decodeListWorldsResponse(
+      def listIds() = ExprProtoClient.decodeListWorldsResponse(
         grpcWeb(port, "/b6.grpc.B6/ListWorlds", Array.emptyByteArray)._2.get)
       assert(listIds().contains(scenario))
       val (delTrailer, _) = grpcWeb(port, "/b6.grpc.B6/DeleteWorld",
-        ExprProto.encodeDeleteWorldRequest(scenario))
+        ExprProtoClient.encodeDeleteWorldRequest(scenario))
       assert(delTrailer.contains("grpc-status: 0"), delTrailer)
       assert(!listIds().contains(scenario))
 
@@ -307,14 +305,13 @@ class EvaluateServiceSpec extends SparkSuite {
   }
 
   test("gRPC-Web: a truncated EvaluateRequest is rejected, not zero-padded") {
-    import graft.proto.ExprProto
     import graft.shell.Shell._
     withServer(sfReg) { port =>
       val expr = CallE(SymbolE("count"), List(
         CallE(SymbolE("find"), List(QueryE(graft.query.Keyed("#amenity"))))), pipelined = true)
-      val req = ExprProto.encodeEvaluateRequest(expr, "1", Some(("collection", "graft/cuts", 5L)))
+      val req = ExprProtoClient.encodeEvaluateRequest(expr, "1", Some(("collection", "graft/cuts", 5L)))
       // root (field 3) is encoded last: the request without it is a prefix
-      val noRoot = ExprProto.encodeEvaluateRequest(expr, "1", None)
+      val noRoot = ExprProtoClient.encodeEvaluateRequest(expr, "1", None)
       assert(req.startsWith(noRoot))
       // an even number of missing bytes: zero-padded, they would decode as
       // (key 0, varint 0) pairs and the request would run in the default world
@@ -403,5 +400,27 @@ class EvaluateServiceSpec extends SparkSuite {
     val got = EvaluateService.evaluate(budgetReg, "all-areas", None, "1")
     assert(got.kind == "collection")
     assert(got.json == expected.mkString("[", ",", "]"), got.json.take(300))
+  }
+
+  test("to-geojson-collection: above the reply bound a 400 naming the bound, at the bound the whole FeatureCollection") {
+    val bound = EvaluateService.MaxRows
+    // the sf world holds exactly `bound` features, most with a null @name;
+    // with the areas it holds more
+    assert(sfFeatures.count() == bound && budgetWorld.count() > bound)
+    withServer(budgetReg) { port =>
+      val (status, resp) = evaluateJson(port,
+        """{"expression": "find (all) | to-geojson-collection", "version": "1"}""")
+      assert(status == 400 && resp.startsWith("{\"error\":") &&
+        resp.contains("to-geojson-collection") && resp.contains(s"$bound"), resp)
+      val (next, count) = evaluateJson(port,
+        """{"expression": "find (all) | count", "version": "1"}""")
+      assert(next == 200, count)
+    }
+    val expected = graft.sources.GeoJson.featureCollection(
+      sfFeatures.select("geom", "tags").collect().map { r =>
+        graft.sources.GeoJson.featureToJson(graft.core.GeoOps.fromWkb(r.getAs[Array[Byte]](0)),
+          r.getMap[String, String](1).toMap.filter(_._2 != null))
+      }.toSeq)
+    assert(graft.shell.Shell.run(sfFeatures, "find (all) | to-geojson-collection") == expected)
   }
 }

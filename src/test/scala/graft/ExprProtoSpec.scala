@@ -66,22 +66,22 @@ class ExprProtoSpec extends AnyFunSuite {
       List(Shell.CallE(Shell.SymbolE("find"),
         List(Shell.QueryE(graft.query.Keyed("#building"))))), pipelined = true)
     // request: node + version + root world id (api.proto:243-247)
-    val req = ExprProto.encodeEvaluateRequest(node, "1",
+    val req = ExprProtoClient.encodeEvaluateRequest(node, "1",
       Some(("collection", "graft/scenario", 7L)))
     val (n2, v2, r2) = ExprProto.decodeEvaluateRequest(req)
     assert(n2 == node && v2 == "1" && r2.contains(("collection", "graft/scenario", 7L)))
     // absent root stays absent
     val (_, _, noRoot) = ExprProto.decodeEvaluateRequest(
-      ExprProto.encodeEvaluateRequest(node, "1", None))
+      ExprProtoClient.encodeEvaluateRequest(node, "1", None))
     assert(noRoot.isEmpty)
     // response wraps the result NodeProto (api.proto:249-251)
     val resp = ExprProto.encodeEvaluateResponse(ExprProto.encode(Shell.IntE(13)))
-    assert(ExprProto.decode(ExprProto.decodeEvaluateResponse(resp)) == Shell.IntE(13))
+    assert(ExprProto.decode(ExprProtoClient.decodeEvaluateResponse(resp)) == Shell.IntE(13))
     // DeleteWorldRequestProto / ListWorldsResponseProto (api.proto:253-263)
     assert(ExprProto.decodeDeleteWorldRequest(
-      ExprProto.encodeDeleteWorldRequest(("area", "osm", 42L))) == (("area", "osm", 42L)))
+      ExprProtoClient.encodeDeleteWorldRequest(("area", "osm", 42L))) == (("area", "osm", 42L)))
     val ids = Seq(("collection", "a", 1L), ("area", "b/c", 2L))
-    assert(ExprProto.decodeListWorldsResponse(ExprProto.encodeListWorldsResponse(ids)) == ids)
+    assert(ExprProtoClient.decodeListWorldsResponse(ExprProto.encodeListWorldsResponse(ids)) == ids)
   }
 
   test("a length that runs past its message throws instead of reading zeros") {
@@ -91,7 +91,7 @@ class ExprProtoSpec extends AnyFunSuite {
     w.string(2, "1.0.0")
     intercept[IllegalArgumentException](ExprProto.decodeEvaluateRequest(w.result.dropRight(2)))
     // a submessage (root) whose declared length runs past the request
-    val req = ExprProto.encodeEvaluateRequest(Shell.IntE(1), "1",
+    val req = ExprProtoClient.encodeEvaluateRequest(Shell.IntE(1), "1",
       Some(("collection", "graft/cut", 5L)))
     intercept[IllegalArgumentException](ExprProto.decodeEvaluateRequest(req.dropRight(3)))
     // a literal whose double has 7 of its 8 bytes: the 8th must not come from
@@ -104,7 +104,7 @@ class ExprProtoSpec extends AnyFunSuite {
   test("result-only literal arms: bool, nil, collection, applied change") {
     val (k, v) = (Seq[Shell.Expr](Shell.StringE("x"), Shell.StringE("y")),
       Seq[Shell.Expr](Shell.IntE(1), Shell.IntE(2)))
-    val (k2, v2) = ExprProto.decodeCollectionNode(ExprProto.collectionNode(k, v))
+    val (k2, v2) = ExprProtoClient.decodeCollectionNode(ExprProto.collectionNode(k, v))
     assert(k2 == k && v2 == v)
     // boolNode emits the set oneof arm: literal field 2 varint
     assert(ExprProto.boolNode(true).toSeq == Seq[Byte](0x12, 0x02, 0x10, 0x01))

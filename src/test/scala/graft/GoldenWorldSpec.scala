@@ -134,33 +134,6 @@ class GoldenWorldSpec extends SparkSuite {
     assert(got == expected && got.nonEmpty)
   }
 
-  test("IntersectsPolyline query node: covering prune + exact refine equals brute force") {
-    import spark.implicits._
-    // a line cutting across Granary Square
-    val line = GeoOps.fromWkt("LINESTRING (-0.1262 51.5349, -0.1246 51.5356)")
-    val wkb = GeoOps.toWkb(line)
-    val areas = world.where(col("id.ftype") === "area")
-    val got = QueryPlanner.find(areas, IntersectsPolyline(wkb))
-      .select("id.value").as[Long].collect().toSet
-    val expected = areas.select(col("id.value"), col("geom")).as[(Long, Array[Byte])]
-      .collect().collect { case (v, g) if GeoOps.fromWkb(g).intersects(line) => v }.toSet
-    assert(got == expected && got.nonEmpty, s"got=$got expected=$expected")
-  }
-
-  test("IntersectsFeature delegates by the target's geometry type (spatial.go:373-418)") {
-    import spark.implicits._
-    // the Lighterman (area 427900370): features intersecting it by id lookup
-    val got = QueryPlanner.find(world.where(col("id.ftype") === "area"),
-      IntersectsFeature("area", "openstreetmap.org/way", 427900370L))
-      .select("id.value").as[Long].collect().toSet
-    val target = GeoOps.fromWkb(world.where(col("id.ftype") === "area" &&
-        col("id.value") === 427900370L).select("geom").as[Array[Byte]].head())
-    val expected = world.where(col("id.ftype") === "area")
-      .select(col("id.value"), col("geom")).as[(Long, Array[Byte])]
-      .collect().collect { case (v, g) if GeoOps.fromWkb(g).intersects(target) => v }.toSet
-    assert(got == expected && got.contains(427900370L))
-  }
-
   test("id-to-relation-id uses FNV-1a over the rendered id (change.go:14-17)") {
     // FNV-1a 64 public test vectors: fnv1a("") = offset basis, fnv1a("a")
     assert(graft.functions.TileIds.fnv1a("") == graft.functions.TileIds.OffsetBasis)

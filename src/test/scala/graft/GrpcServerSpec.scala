@@ -88,26 +88,26 @@ class GrpcServerSpec extends SparkSuite {
     import graft.proto.ExprProto
     val server = GrpcServer.serve(reg)
     try withClient(server.port) { (conn, port) =>
-      val req = ExprProto.encodeEvaluateRequest(
+      val req = ExprProtoClient.encodeEvaluateRequest(
         CallE(SymbolE("add-ints"), List(IntE(40), IntE(2))), "1", None)
       val (hdrs, body) = unaryCall(conn, port, "/b6.grpc.B6/Evaluate", req)
       assert(hdrs.get(":status").contains("200"), hdrs)
       assert(hdrs.get("content-type").contains("application/grpc"), hdrs)
       assert(hdrs.get("grpc-status").contains("0"), hdrs)
       val frames = EvaluateService.grpcFrames(body)
-      val result = ExprProto.decode(ExprProto.decodeEvaluateResponse(
+      val result = ExprProto.decode(ExprProtoClient.decodeEvaluateResponse(
         frames.collectFirst { case (f, p) if (f & 0x80) == 0 => p }.get))
       assert(result == IntE(42), result)
 
       // second stream on the SAME connection — h2 multiplexing, full shell
       // dispatch against the granary world
-      val count = ExprProto.encodeEvaluateRequest(
+      val count = ExprProtoClient.encodeEvaluateRequest(
         CallE(SymbolE("count"), List(
           CallE(SymbolE("find"), List(QueryE(graft.query.Keyed("#amenity"))))),
           pipelined = true), "1", None)
       val (hdrs2, body2) = unaryCall(conn, port, "/b6.grpc.B6/Evaluate", count)
       assert(hdrs2.get("grpc-status").contains("0"), hdrs2)
-      val countResult = ExprProto.decode(ExprProto.decodeEvaluateResponse(
+      val countResult = ExprProto.decode(ExprProtoClient.decodeEvaluateResponse(
         EvaluateService.grpcFrames(body2)
           .collectFirst { case (f, p) if (f & 0x80) == 0 => p }.get))
       assert(countResult.isInstanceOf[IntE] && countResult.asInstanceOf[IntE].v > 0, countResult)
@@ -115,17 +115,16 @@ class GrpcServerSpec extends SparkSuite {
   }
 
   test("ListWorlds + errors: trailers-only grpc-status 2 (bad version) and 12 (unknown method)") {
-    import graft.proto.ExprProto
     val server = GrpcServer.serve(reg)
     try withClient(server.port) { (conn, port) =>
       val (hdrs, body) = unaryCall(conn, port, "/b6.grpc.B6/ListWorlds",
         Array.emptyByteArray)
       assert(hdrs.get("grpc-status").contains("0"), hdrs)
       // the default world always exists; decode must round-trip
-      ExprProto.decodeListWorldsResponse(EvaluateService.grpcFrames(body)
+      ExprProtoClient.decodeListWorldsResponse(EvaluateService.grpcFrames(body)
         .collectFirst { case (f, p) if (f & 0x80) == 0 => p }.get)
 
-      val bad = ExprProto.encodeEvaluateRequest(IntE(1), "9.0", None)
+      val bad = ExprProtoClient.encodeEvaluateRequest(IntE(1), "9.0", None)
       val (badHdrs, badBody) = unaryCall(conn, port, "/b6.grpc.B6/Evaluate", bad)
       assert(badHdrs.get("grpc-status").contains("2"), badHdrs)
       assert(badHdrs.get("grpc-message").exists(_.contains("not compatible")), badHdrs)
@@ -144,12 +143,12 @@ class GrpcServerSpec extends SparkSuite {
       .getItem("#amenity") === "cafe").count()
     val server = GrpcServer.serve(ServingWorld.registry(spark, features))
     try withClient(server.port) { (conn, port) =>
-      val req = ExprProto.encodeEvaluateRequest(CallE(SymbolE("count"), List(
+      val req = ExprProtoClient.encodeEvaluateRequest(CallE(SymbolE("count"), List(
         CallE(SymbolE("find"), List(QueryE(graft.query.Tagged("#amenity", "cafe"))))),
         pipelined = true), "1", None)
       val (hdrs, body) = unaryCall(conn, port, "/b6.grpc.B6/Evaluate", req)
       assert(hdrs.get("grpc-status").contains("0"), hdrs)
-      val result = ExprProto.decode(ExprProto.decodeEvaluateResponse(
+      val result = ExprProto.decode(ExprProtoClient.decodeEvaluateResponse(
         EvaluateService.grpcFrames(body).collectFirst { case (f, p) if (f & 0x80) == 0 => p }.get))
       assert(result == IntE(cafes), result)
 

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Aggs, Paths}
+import graft.operators.Aggs
 import org.apache.spark.sql.functions._
 
 /** The map-plane scalar idioms (SURVEY §2.B projections): pair/first/second,
@@ -47,11 +47,15 @@ class MapPlaneSpec extends SparkSuite {
   }
 
   test("apply-to-point/path/area gates a transform by geometry type (geojson.go:159-213)") {
-    val df = Seq(("point", 1.0), ("path", 1.0), ("area", 1.0)).toDF("gtype", "v")
-    val out = df.withColumn("r", Paths.applyByType(df, "gtype",
-      p => p * 10, p => p * 100, p => p * 1000, col("v")))
-      .select("gtype", "r").collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    assert(out == Map("point" -> 10.0, "path" -> 100.0, "area" -> 1000.0))
+    val types = Seq("point", "path", "area")
+    val world = types.zipWithIndex.map { case (t, i) => (t, i.toLong, Map("name" -> s"n-$t")) }
+      .toDF("ftype", "value", "tags")
+      .select(struct(col("ftype"), lit("graft/test").as("ns"), col("value")).as("id"), col("tags"))
+    for (t <- types) {
+      val out = graft.shell.Shell.runDf(world, s"""find (all) | apply-to-$t {f -> get-string f "name"}""")
+        .select("id.ftype", "value").collect().map(r => r.getString(0) -> Option(r.getString(1))).toMap
+      assert(out == types.map(u => u -> Option.when(u == t)(s"n-$u")).toMap, s"apply-to-$t: $out")
+    }
   }
 
   test("matches: a Query as a boolean column over features (features.go:202-207)") {

@@ -2,32 +2,11 @@ package graft
 
 import graft.model.Fixtures
 import graft.operators.Multimodal
-import org.apache.spark.sql.functions._
 
-/** Audio/video multimodal plumbing: typed metadata, decode-once passes,
-  * frame fan-out, caption byte-equality, round-trip codecs (the byte-level
-  * codecs are documented deterministic stubs; the Spark surface is real). */
+/** Video multimodal plumbing: typed metadata, decode-once frame fan-out,
+  * metadata-only pruning (the byte-level codec is a documented deterministic
+  * stub; the Spark surface is real). */
 class MultimodalSpec extends SparkSuite {
-  import spark.implicits._
-
-  test("pcm codec round-trips samples exactly") {
-    val samples = Array.tabulate(1000)(i => ((i * 37) % 20000 - 10000).toShort)
-    val (rate, back) = Multimodal.decodePcm(Multimodal.encodePcm(samples, 16000))
-    assert(rate == 16000 && back.sameElements(samples))
-  }
-
-  test("audio features: decode-once pass yields duration/rms/peak with captions byte-identical") {
-    val df = Multimodal.audios(spark, 64)
-    val feats = Multimodal.decodeAudioFeatures(df).collect()
-    assert(feats.length == 64)
-    assert(feats.forall(_.decoded_ok), "every synthetic audio must decode")
-    assert(feats.forall(f => math.abs(f.duration_s - 0.25) < 1e-9))
-    assert(feats.forall(f => f.rms > 1000 && f.rms < 12000), "sine+noise RMS in range")
-    assert(feats.forall(f => f.peak <= 32767.0))
-    val caps = df.select("audio_id", "caption").collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(feats.forall(f => f.caption == caps(f.audio_id)), "caption equality per row")
-  }
 
   test("frame sampling fans out every Nth frame with exact pixels and timestamps") {
     val df = Multimodal.videos(spark, 24)

@@ -71,10 +71,18 @@ class PathsSpec extends SparkSuite {
         unix_micros(col("t_start").cast("timestamp")).as("s"),
         unix_micros(col("t_end").cast("timestamp")).as("e"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toSet
-    val stateful = Streaming.sessionizeStateful(
-      ev.select(col("user_id"), unix_micros(col("ts").cast("timestamp")).as("tsMicros"))
-        .as[Streaming.SessionEvent], 30)
-      .collect().map(s => (s.user_id, s.session_idx, s.n_events, s.t_start_micros, s.t_end_micros)).toSet
+    // the stateful fold over the collected events: per user, in time order, a new
+    // session after a gap of more than 30 minutes
+    val gap = 30L * 60000000L
+    val stateful = ev.select(col("user_id"), unix_micros(col("ts").cast("timestamp")))
+      .as[(Long, Long)].collect().groupBy(_._1).toSeq.flatMap { case (user, evs) =>
+        val ts = evs.map(_._2).sorted
+        val starts = 0 +: (1 until ts.length).filter(i => ts(i) - ts(i - 1) > gap)
+        starts.indices.map { k =>
+          val end = if (k + 1 < starts.length) starts(k + 1) else ts.length
+          (user, k.toLong, (end - starts(k)).toLong, ts(starts(k)), ts(end - 1))
+        }
+      }.toSet
     assert(stateful == batch && batch.nonEmpty)
   }
 }

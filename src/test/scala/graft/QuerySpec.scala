@@ -34,22 +34,6 @@ class QuerySpec extends SparkSuite {
     assert(got == expected)
   }
 
-  test("IntersectsCells: cell membership equals bounds brute force (spatial.go:59-201)") {
-    import spark.implicits._
-    import graft.core.Cells
-    val cells = Seq(
-      Cells.cellOf(51.5353, -0.1258, 12),
-      Cells.cellOf(51.47, -0.19, 10))
-    val got = QueryPlanner.find(feats, IntersectsCells(cells))
-      .select("point_id").as[Long].collect().toSet
-    val expected = Fixtures.points(spark, sf001).select("point_id", "lat", "lng")
-      .as[(Long, Double, Double)].collect()
-      .collect { case (pid, la, lo) if cells.exists(c =>
-        la >= Cells.latLo(c) && la < Cells.latHi(c) &&
-          lo >= Cells.lngLo(c) && lo < Cells.lngHi(c)) => pid }.toSet
-    assert(got == expected && got.nonEmpty)
-  }
-
   test("cap_within and cell_in_ranges select the same rows as haversine_m and per-level isin (random caps and covers)") {
     import spark.implicits._
     import graft.core.Cells

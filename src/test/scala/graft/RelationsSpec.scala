@@ -13,8 +13,6 @@ class RelationsSpec extends SparkSuite {
   lazy val refs = OsmWorld.references(spark, pbf).cache()
 
   val JubileeGreenway = 380856L // b6_test.py:17
-  val StableStreetBridge = 140633010L // b6_test.py:18
-  val BridgeSouthEnd = 1540349979L
 
   test("RELATION MEMBERS golden: Jubilee Greenway has 10 < path members < 800 (b6_test.py:78)") {
     val paths = Relations.members(refs, JubileeGreenway)
@@ -28,28 +26,6 @@ class RelationsSpec extends SparkSuite {
         col("tags").getItem("#route").isNotNull)
       .select(col("tags").getItem("name")).as[String].collect().toSet
     assert(names.contains("Jubilee Greenway"), names.take(10).toString)
-  }
-
-  test("point-paths: the Stable Street bridge is among paths referencing its south-end node") {
-    val paths = Relations.pointPaths(refs, BridgeSouthEnd)
-      .select("from_id").as[Long].collect().toSet
-    assert(paths.contains(StableStreetBridge), paths.toString)
-  }
-
-  test("point-features: bridge vertices come back in order with the south end at an endpoint") {
-    val verts = Relations.pointFeatures(refs, StableStreetBridge)
-      .select("to_id").as[Long].collect()
-    assert(verts.length >= 2)
-    assert(verts.head == BridgeSouthEnd || verts.last == BridgeSouthEnd, verts.mkString(","))
-  }
-
-  test("relationsByFeature finds the relations a path belongs to") {
-    // any Jubilee Greenway member path must reverse-lookup to the relation
-    val member = Relations.members(refs, JubileeGreenway)
-      .where(col("to_type") === "path").select("to_id").as[Long].head()
-    val rels = Relations.relationsByFeature(refs, member)
-      .select("from_id").as[Long].collect().toSet
-    assert(rels.contains(JubileeGreenway))
   }
 
   test("entrance-approach: an approach point lands outside its building, near it (sightline.go:801-855)") {
@@ -70,33 +46,5 @@ class RelationsSpec extends SparkSuite {
       }
     }
     assert(found > 0, "at least one granary building has a walkable approach")
-  }
-
-  test("entranceApproachAll (distributed) equals the per-area path on every granary building") {
-    val world = OsmWorld.features(spark, pbf).cache()
-    val buildingIds = world.where(col("id.ftype") === "area" &&
-        col("id.ns") === "openstreetmap.org/way" &&
-        col("tags").getItem("#building").isNotNull)
-      .select(col("id.value")).as[Long].collect()
-    val single = buildingIds.flatMap { id =>
-      graft.operators.Entrances.entranceApproach(world, refs, id).map(a => id -> a)
-    }.toMap
-    val batch = graft.operators.Entrances.entranceApproachAll(
-        world, refs, buildingIds.toSeq.toDF("area_id"))
-      .collect().map(r => r.getLong(0) -> (r.getDouble(1), r.getDouble(2))).toMap
-    assert(batch.keySet == single.keySet,
-      s"coverage differs: only-batch=${batch.keySet -- single.keySet} only-single=${single.keySet -- batch.keySet}")
-    batch.foreach { case (id, a) =>
-      assert(a == single(id), s"approach for $id differs: batch=$a single=${single(id)}")
-    }
-  }
-
-  test("referencesFor batch lookup equals per-id lookups") {
-    val ids = Seq(BridgeSouthEnd, 999999999999L).toDF("fid")
-    val batch = Relations.referencesFor(refs, ids, Seq("path"))
-      .select("from_id", "to_id").as[(Long, Long)].collect().toSet
-    val single = Relations.pointPaths(refs, BridgeSouthEnd)
-      .select("from_id", "to_id").as[(Long, Long)].collect().toSet
-    assert(batch == single)
   }
 }

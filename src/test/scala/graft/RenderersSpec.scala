@@ -75,36 +75,6 @@ class RenderersSpec extends SparkSuite {
     assert(!reg.listWorlds.toSet.contains(scenario))
   }
 
-  test("durable registry: a scenario world survives a registry restart (export-world per world)") {
-    val root = java.nio.file.Files.createTempDirectory("graft-worlds").toString
-    val scenario = WorldId("collection", "graft/persist", 3L)
-    val anyBuilding = {
-      val reg = new WorldRegistry(spark, baseWorld, root = Some(root))
-      val b = reg.findOrCreate(DefaultWorldId).features
-        .where(col("tags").getItem("#building").isNotNull)
-        .select("id.ftype", "id.ns", "id.value").head
-      reg.applyChange(scenario, Changes.tagChange(
-        b.getString(0), b.getString(1), b.getLong(2), "#amenity", Some("persisted-cafe")))
-      b
-    }
-    // a NEW registry (fresh session stand-in: nothing in memory) over the
-    // same root must reload the committed scenario world by id
-    val reg2 = new WorldRegistry(spark, baseWorld, root = Some(root))
-    val reloaded = reg2.findOrCreate(scenario).features
-    assert(reloaded.where(col("tags").getItem("#amenity") === "persisted-cafe").count() == 1L)
-    // and the base world stays untouched in the new registry too
-    assert(reg2.findOrCreate(DefaultWorldId).features
-      .where(col("tags").getItem("#amenity") === "persisted-cafe").count() == 0L)
-    // a second change layers on top of the reloaded world and re-commits
-    reg2.applyChange(scenario, Changes.tagChange(
-      anyBuilding.getString(0), anyBuilding.getString(1), anyBuilding.getLong(2),
-      "@note", Some("layered")))
-    val reg3 = new WorldRegistry(spark, baseWorld, root = Some(root))
-    val again = reg3.findOrCreate(scenario).features
-    assert(again.where(col("tags").getItem("#amenity") === "persisted-cafe" &&
-      col("tags").getItem("@note") === "layered").count() == 1L)
-  }
-
   test("queryTiles renders the query layer with rule tags; single-tile fetch matches") {
     val reg = new WorldRegistry(spark, baseWorld)
     val tiles = Renderers.queryTiles(reg, DefaultWorldId, 16, "[#building]")
@@ -198,21 +168,6 @@ class RenderersSpec extends SparkSuite {
       "[#amenity=bicycle_parking]", valueExpr = Some("{f -> get f \"capacity\"}"))
       .collect()
     assert(tiles.nonEmpty) // wire-level tag assertions are covered by RenderSpec
-  }
-
-  test("collectionTiles renders a stored collection's referenced features (renderer/collection.go)") {
-    val reg = new WorldRegistry(spark, baseWorld)
-    // pick two real building area ids and store them in a collection
-    val ids = reg.findOrCreate(DefaultWorldId).features
-      .where(col("id.ftype") === "area" && col("tags").getItem("#building").isNotNull)
-      .select("id.value").limit(2).collect().map(_.getLong(0))
-    val scenario = WorldId("collection", "graft/col", 9L)
-    reg.applyChange(scenario, Changes.addCollection("graft/col", 9L, Map("b6" -> "collection"),
-      ids.toSeq.map(v => (s"/a/$v", s"/area/openstreetmap.org/way/$v"))))
-    val tiles = Renderers.collectionTiles(reg, scenario, WorldId("collection", "graft/col", 9L), 16)
-      .collect()
-    assert(tiles.nonEmpty)
-    assert(tiles.map(r => countFeatures(r.getAs[Array[Byte]]("mvt"))).sum >= 2)
   }
 
   test("HTTP tile handler serves /tiles/z/x/y.mvt (renderer/handler.go)") {

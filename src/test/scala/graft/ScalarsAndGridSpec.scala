@@ -1,29 +1,20 @@
 package graft
 
 import graft.core.{Cells, GeoOps}
-import graft.functions.{CellExprs, Scalars}
+import graft.functions.CellExprs
 import org.apache.spark.sql.functions._
 
 class ScalarsAndGridSpec extends SparkSuite {
   import spark.implicits._
 
   test("b6 scalar semantics: int/int = int (truncating), float promotes (math.go:16)") {
-    val df = Seq((7L, 2L, 7.0)).toDF("a", "b", "f")
-    val r = df.select(
-      Scalars.divide(df, col("a"), col("b")).as("ii"),
-      Scalars.divide(df, col("f"), col("b")).as("fi"),
-      Scalars.add(df, col("a"), col("b")).as("aii"),
-      Scalars.divideInt(col("a"), col("b")).as("di"),
-      Scalars.clamp(col("a"), 0, 5).as("cl"),
-      Scalars.gt(col("a"), col("f")).as("g"),
-      Scalars.toStr(col("a")).as("s")).head()
-    assert(r.getLong(0) == 3L, "7 div 2 = 3, not 3.5")
-    assert(r.getDouble(1) == 3.5)
-    assert(r.getLong(2) == 9L)
-    assert(r.getLong(3) == 3L)
-    assert(r.getLong(4) == 5L)
-    assert(!r.getBoolean(5))
-    assert(r.getString(6) == "7")
+    val world = spark.emptyDataFrame
+    assert(graft.shell.Shell.run(world, "divide 7 2") == 3L, "7 div 2 = 3, not 3.5")
+    assert(graft.shell.Shell.run(world, "divide 7.0 2") == 3.5)
+    assert(graft.shell.Shell.run(world, "add 7 2") == 9L)
+    assert(graft.shell.Shell.run(world, "divide-int 7 2") == 3L)
+    assert(graft.shell.Shell.run(world, "clamp 7 0 5") == 5L)
+    assert(graft.shell.Shell.run(world, "to-str 7") == "7")
   }
 
   test("cell_grid: single-level sorted grid intersecting the geometry (s2.go:30-44)") {
@@ -31,7 +22,7 @@ class ScalarsAndGridSpec extends SparkSuite {
     val poly = GeoOps.toWkb(GeoOps.fromWkt(
       "POLYGON ((-0.13 51.53, -0.11 51.53, -0.11 51.55, -0.13 51.55, -0.13 51.53))"))
     val cells = Seq(Tuple1(poly)).toDF("geom")
-      .select(CellExprs.cell_grid(col("geom"), lit(12))).as[Seq[Long]].head()
+      .select(call_function("cell_grid", col("geom"), lit(12))).as[Seq[Long]].head()
     assert(cells.nonEmpty)
     assert(cells == cells.sorted)
     cells.foreach(c => assert(Cells.level(c) == 12))
@@ -46,7 +37,7 @@ class ScalarsAndGridSpec extends SparkSuite {
     CellExprs.install(spark)
     val cell = Cells.cellOf(51.5353, -0.1258, 14)
     val wkb = Seq(Tuple1(cell)).toDF("c")
-      .select(CellExprs.cell_polygon(col("c"))).as[Array[Byte]].head()
+      .select(call_function("cell_polygon", col("c"))).as[Array[Byte]].head()
     val g = GeoOps.fromWkb(wkb)
     val env = g.getEnvelopeInternal
     assert(math.abs(env.getMinX - Cells.lngLo(cell)) < 1e-12)
@@ -86,5 +77,16 @@ class ScalarsAndGridSpec extends SparkSuite {
     val expected = (for (i <- 0 until 40; r <- Seq(300L, 301L)) yield (i.toLong, r)).toSet +
       ((300L, 301L)) + ((100L, 101L))
     assert(pairs == expected, s"got ${pairs.size} pairs, expected ${expected.size}")
+  }
+
+  test("cell_center round-trips into the owning cell") {
+    CellExprs.install(spark)
+    val df = Seq((51.5353, -0.1258)).toDF("lat", "lng")
+      .withColumn("c", CellExprs.cell_of(col("lat"), col("lng"), lit(14)))
+      .withColumn("clat", CellExprs.cell_center_lat(col("c")))
+      .withColumn("clng", CellExprs.cell_center_lng(col("c")))
+      .withColumn("c2", CellExprs.cell_of(col("clat"), col("clng"), lit(14)))
+    val r = df.head()
+    assert(r.getAs[Long]("c") == r.getAs[Long]("c2"))
   }
 }

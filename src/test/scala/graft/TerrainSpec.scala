@@ -1,12 +1,9 @@
 package graft
 
 import graft.sources.Terrain
-import graft.operators.Weights
-import org.apache.spark.sql.functions._
 
 /** Terrain ingest: ESRI ASCII grid parsing, spot transform, and the incline
-  * annotation pricing through Naismith weights (cmd/b6-ingest-terrain,
-  * graph/graph.go:161-212). */
+  * annotation (cmd/b6-ingest-terrain, graph/graph.go:161-212). */
 class TerrainSpec extends SparkSuite {
   import spark.implicits._
 
@@ -47,22 +44,17 @@ class TerrainSpec extends SparkSuite {
     }
   }
 
-  test("climbForEdges adds positive gain only; Naismith prices it at 6 s/m") {
+  test("climbForEdges adds positive gain only") {
     val s = Terrain.spots(spark, writeAsc())
     // two nodes near the west (low ~5-10m) and east (high ~25-30m) cells
     val west = graft.sources.GbCodePoint.wgs84FromGrid(529025, 181050)
     val east = graft.sources.GbCodePoint.wgs84FromGrid(529125, 181050)
     val nodes = Seq((1L, west._1, west._2), (2L, east._1, east._2)).toDF("node_id", "lat", "lng")
     val edges = Seq((1L, 2L, 100.0), (2L, 1L, 100.0)).toDF("src", "dst", "cost_m")
-    val withClimb = Terrain.climbForEdges(edges, nodes, s, radiusMeters = 60.0)
-      .withColumn("tags", map().cast("map<string,string>"))
-      .withColumn("sec", Weights.elevationSeconds(col("cost_m"), col("tags"), col("climb")))
-    val rows = withClimb.select("src", "climb", "sec").collect()
-      .map(r => r.getLong(0) -> (r.getDouble(1), r.getDouble(2))).toMap
-    assert(rows(1L)._1 > 0.0, "uphill east gains elevation")
-    assert(rows(2L)._1 == 0.0, "downhill west is free")
-    // Naismith: uphill seconds = walk + 6 * climb, strictly more than downhill
-    assert(rows(1L)._2 > rows(2L)._2)
-    assert(math.abs(rows(1L)._2 - (rows(2L)._2 + 6.0 * rows(1L)._1)) < 1e-9)
+    val rows = Terrain.climbForEdges(edges, nodes, s, radiusMeters = 60.0)
+      .select("src", "climb").collect()
+      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    assert(rows(1L) > 0.0, "uphill east gains elevation")
+    assert(rows(2L) == 0.0, "downhill west is free")
   }
 }

@@ -67,7 +67,10 @@ class TextOpsSpec extends SparkSuite {
     // QueryExecution the action ran on, not to derived Datasets
     val got = projected.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got == (1L until n).map(i => (0L, i)).toSet, s"star output not bounded: ${got.size}")
-    val (buckets, forgone) = TextOps.bucketDegradationMetrics(projected)
+    val (buckets, forgone) = projected.queryExecution.observedMetrics.collect {
+      case (name, row) if name.startsWith(TextOps.BucketStarMetricPrefix) =>
+        (row.getAs[Long]("degraded_buckets"), row.getAs[Long]("forgone_pairs"))
+    }.foldLeft((0L, 0L)) { case ((a, b), (c, d)) => (a + c, b + d) }
     // 8 bands, each one degenerate 5000-doc bucket forgoing (n-1)(n-2)/2
     // pairwise candidates beyond its star's n-1
     assert(buckets == 8, s"degraded_buckets=$buckets")
