@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.checkpoint.Snapshots
-import graft.model.Fixtures
+import graft.model.{Fixtures, Tables}
 import graft.operators.SpatialJoins
 
 /**
@@ -115,7 +115,7 @@ object Pipeline {
       val root = args.lift(1).getOrElse("/tmp/graft-corpus-pipeline")
       val sfDir = args.lift(2).getOrElse("/root/testdata/sf0.01")
       val spark = LocalSpark("graft-corpus-pipeline")
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+      val docs = Tables.read(spark, s"$sfDir/documents.parquet")
       runCorpus(spark, root, docs).foreach { r =>
         println(s"[pipeline] ${r.table}: ${if (r.reused) "RESUMED" else "computed"} " +
           s"rows=${r.rows} bytes=${r.bytes} files=${r.files} lineage=${r.lineage.mkString(",")}")

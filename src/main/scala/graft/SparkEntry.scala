@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.GeoOps
 import graft.functions.CellExprs
-import graft.model.Fixtures
+import graft.model.{Fixtures, Tables}
 import graft.operators.{Aggs, Ann, ImageOps, SpatialJoins, TextOps}
 import graft.query._
 
@@ -21,7 +21,7 @@ object SparkEntry {
   // ---- shared input views ----------------------------------------------------
 
   private def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    Tables.read(spark, s"$dir/$name.parquet")
 
   /** b6-style features table derived deterministically from events:
     * id struct, open tags map, point geometry (lat/lng/cell16). */
@@ -541,12 +541,8 @@ object SparkEntry {
       // per-ray occlusion parameters in degree space over the literal
       // fixture edges — the sightline sweep's segment-intersection core,
       // rational arithmetic only (Sightline.rayOcclusions scaladoc)
-      import s.implicits._
-      val origins = Fixtures.points(s, d).where(col("point_id") % 5000 === 0)
-        .select(col("point_id").as("origin_id"), col("lng").as("px"), col("lat").as("py"))
-      val dirs = graft.operators.Sightline.rationalDirections.toDF("ray_idx", "ex", "ey")
-      val edges = sightlineEdges.toDF("ax", "ay", "bx", "by")
-      graft.operators.Sightline.rayOcclusions(origins, dirs, edges)
+      graft.operators.Sightline.rayOcclusions(sightlineOrigins(s, d),
+          graft.operators.Sightline.rationalDirections, sightlineEdges)
         .select(col("origin_id"), col("ray_idx").cast("long").as("ray_idx"), col("occlusion"))
         .orderBy("origin_id", "ray_idx")
     }),
@@ -564,24 +560,8 @@ object SparkEntry {
       // shoelace sum folded in ray order (the oracle mirrors the fold with
       // list_reduce(list(trm ORDER BY ray_idx))). Together with sl_rays this
       // oracles the whole sightline computation except the trig angle grid.
-      import s.implicits._
-      val origins = Fixtures.points(s, d).where(col("point_id") % 5000 === 0)
-        .select(col("point_id").as("origin_id"), col("lng").as("px"), col("lat").as("py"))
-      val dirs = graft.operators.Sightline.rationalDirections.toDF("ray_idx", "ex", "ey")
-      val edges = sightlineEdges.toDF("ax", "ay", "bx", "by")
-      val v = graft.operators.Sightline.rayOcclusions(origins, dirs, edges)
-        .join(broadcast(origins), "origin_id").join(broadcast(dirs), "ray_idx")
-        .select(col("origin_id"), col("ray_idx"),
-          (col("px") + col("occlusion") * col("ex")).as("vx"),
-          (col("py") + col("occlusion") * col("ey")).as("vy"))
-      val nxt = v.select(col("origin_id").as("o2"), col("ray_idx").as("r2"),
-        col("vx").as("wx"), col("vy").as("wy"))
-      v.join(nxt, col("o2") === col("origin_id") && col("r2") === (col("ray_idx") + 1) % 16)
-        .select(col("origin_id"), col("ray_idx"),
-          (col("vx") * col("wy") - col("wx") * col("vy")).as("trm"))
-        .groupBy("origin_id")
-        .agg((aggregate(array_sort(collect_list(struct(col("ray_idx"), col("trm")))),
-          lit(0.0), (acc, x) => acc + x.getField("trm")) * 0.5).as("area_deg2"))
+      graft.operators.Sightline.fanArea(sightlineOrigins(s, d),
+          graft.operators.Sightline.rationalDirections, sightlineEdges)
         .orderBy("origin_id")
     }),
 
@@ -784,6 +764,11 @@ object SparkEntry {
 
   /** Shared street-grid size for the gr_* queries and their oracles. */
   private val gridN = 12
+
+  /** Every 5000th point as a sightline origin (origin_id, px = lng, py = lat). */
+  private def sightlineOrigins(s: SparkSession, d: String): DataFrame =
+    Fixtures.points(s, d).where(col("point_id") % 5000 === 0)
+      .select(col("point_id").as("origin_id"), col("lng").as("px"), col("lat").as("py"))
 
   /** Closed-ring edges of the convex fixture polygons — the sl_rays occluder
     * segments, shared verbatim with the oracle's VALUES literals. */

@@ -38,7 +38,7 @@ object Fixtures {
 
   /** Spark-side derived points: (point_id, lat, lng, event_type, cell16). */
   def points(spark: SparkSession, dir: String): DataFrame =
-    pointCols(spark.read.parquet(s"$dir/events.parquet"))
+    pointCols(Tables.read(spark, s"$dir/events.parquet"))
 
   /** The same derivation over ANY events-shaped frame — batch or STREAMING
     * (the lat/lng/cell16 columns are per-row arithmetic, so the plan is

@@ -1,7 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.api.java.UDF1
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /**
  * Dataflow aggregations with the reference's exact semantics
@@ -38,15 +41,87 @@ object Aggs {
   def take(df: DataFrame, n: Int, orderCol: String): DataFrame =
     df.orderBy(col(orderCol)).limit(n)
 
+  /** Distinct values up to which the ranking operators rank on the driver.
+    * Below 100,000, so a 100k-distinct input still takes the range plan. */
+  private[graft] final val SmallDistinct = 10000
+
+  /** value -> occurrence count as (v, c): the input of every ranking. */
+  private def valueCounts(df: DataFrame, value: Column): DataFrame =
+    df.groupBy(value.as("v")).agg(count(lit(1)).as("c"))
+
+  /**
+   * The (v, c) counts of `value` over `df`, v ascending (nulls first, as
+   * Spark sorts), when `value` takes at most [[SmallDistinct]] distinct
+   * values of a [[keyedOnDriver]] type; else None. One guarded pass that is
+   * one Spark job with no exchange: each partition counts its values into a
+   * hash map keyed like Spark's grouping and stops reading once it holds
+   * more than N keys, and the driver merges the maps as tasks finish. A
+   * `limit(N + 1).collect()` over a groupBy would run two jobs under AQE
+   * (the aggregation's exchange, then the collect). The small path then
+   * needs no persist, no range sampling, no offsets job and no broadcast
+   * of a driver-local relation.
+   */
+  private def smallCounts(df: DataFrame, value: Column): Option[Array[(Any, Long)]] = {
+    val values = df.select(value)
+    val dt = values.schema.head.dataType
+    if (!keyedOnDriver(dt)) return None
+    type Counts = java.util.HashMap[Any, java.lang.Long]
+    def add(m: Counts, k: Any, c: Long): Unit = m.merge(k, c, (a, b) => a + b)
+    values.rdd.mapPartitions { rows =>
+      val m = new Counts()
+      while (rows.hasNext && m.size <= SmallDistinct) add(m, groupKey(rows.next().get(0)), 1L)
+      Iterator.single(Option.when(m.size <= SmallDistinct)(m))
+    }.fold(Some(new Counts())) {
+      case (Some(x), Some(y)) =>
+        y.forEach((k, c) => add(x, k, c))
+        Option.when(x.size <= SmallDistinct)(x)
+      case _ => None
+    }.map { m =>
+      val out = new Array[(Any, Long)](m.size)
+      var i = 0
+      m.forEach { (k, c) => out(i) = (k, c.longValue); i += 1 }
+      out.sortBy(_._1)(ascending(dt))
+    }
+  }
+
+  /** Value types whose collected values compare equal exactly when Spark's
+    * grouping puts them in one group (once [[groupKey]] folds the float
+    * zeros), and sort as Spark sorts them under [[ascending]]. */
+  private def keyedOnDriver(dt: DataType): Boolean = dt match {
+    case _: NumericType | BooleanType | DateType | TimestampType | TimestampNTZType => true
+    case s: StringType => s == StringType
+    case _ => false
+  }
+
+  /** The grouping key of a collected value: -0.0 folds into 0.0 (boxed
+    * doubles already compare every NaN equal). */
+  private def groupKey(v: Any): Any = v match {
+    case d: Double if d == 0.0 => 0.0
+    case f: Float if f == 0.0f => 0.0f
+    case other => other
+  }
+
+  /** Spark's ascending order over collected [[keyedOnDriver]] values: nulls
+    * first, strings by their UTF-8 bytes, the rest by their own compareTo
+    * (which puts NaN above every double, as Spark does). */
+  private def ascending(dt: DataType): Ordering[Any] = {
+    val values: Ordering[Any] = dt match {
+      case _: StringType => Ordering.by((s: Any) => UTF8String.fromString(s.asInstanceOf[String]))
+      case _ => (a, b) => a.asInstanceOf[Comparable[Any]].compareTo(b)
+    }
+    (a, b) => if (a == null) (if (b == null) 0 else -1) else if (b == null) 1 else values.compare(a, b)
+  }
+
   /**
    * Global rank/cumulative-count over the distinct (v, c) pairs WITHOUT a
-   * single-task sort: the distinct set is range-partitioned on the sort key,
-   * ranked within each partition, and the per-partition (distinct-count,
-   * row-count) totals — at most `numParts` tiny rows — are collected to the
-   * driver, turned into cumulative offsets and broadcast back. At 10M+
-   * distinct values the old `Window.orderBy` plan funneled every distinct
-   * value through ONE task; this plan's widest single task holds one range
-   * partition.
+   * single-task sort, for the wide path of the ranking operators (more than
+   * [[SmallDistinct]] distinct values): the distinct set is range-partitioned
+   * on the sort key, ranked within each partition, and the per-partition
+   * (distinct-count, row-count) totals — one tiny row per shuffle partition —
+   * are collected to the driver, turned into cumulative offsets and
+   * broadcast back. At 10M+ distinct values the old `Window.orderBy` plan
+   * funneled every distinct value through ONE task; this plan's widest
+   * single task holds one range partition.
    *
    * `counts` must have columns (v, c); `order` is the total sort order over
    * `v`-rows (e.g. `col("v")` ascending, or `(c desc, v)` for categorical
@@ -54,13 +129,11 @@ object Aggs {
    * rank, cum_before = total c over strictly-earlier rows, d = distinct
    * count, total = sum of c.
    */
-  private[graft] def rankedCounts(counts: DataFrame, order: Seq[Column],
-                                  numParts: Int = 0): DataFrame = {
+  private def rankedCounts(counts: DataFrame, order: Seq[Column]): DataFrame = {
     val spark = counts.sparkSession
-    // scale-adaptive partition count (guide §2.2): default to the session's
-    // shuffle parallelism instead of a constant
-    val np = if (numParts > 0) numParts
-      else math.max(spark.sessionState.conf.numShufflePartitions, 1)
+    // scale-adaptive partition count (guide §2.2): the session's shuffle
+    // parallelism instead of a constant
+    val np = math.max(spark.sessionState.conf.numShufflePartitions, 1)
     // persist the aggregated distinct set BEFORE the range partition:
     // repartitionByRange runs a hidden SAMPLING job over its input, which
     // otherwise re-executes the full input aggregation a second time — with
@@ -89,12 +162,10 @@ object Aggs {
     val vIdx = parts.schema.fieldIndex("v")
     val cIdx = parts.schema.fieldIndex("c")
     val pIdx = parts.schema.fieldIndex("__pid")
-    val outSchema = org.apache.spark.sql.types.StructType(Seq(
+    val outSchema = StructType(Seq(
       parts.schema(vIdx), parts.schema(cIdx),
-      org.apache.spark.sql.types.StructField("r",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("cum_before",
-        org.apache.spark.sql.types.LongType, nullable = false)))
+      StructField("r", LongType, nullable = false),
+      StructField("cum_before", LongType, nullable = false)))
     val dTot = dOff; val cTot = cOff
     parts.sortWithinPartitions(order: _*)
       .mapPartitions { it =>
@@ -105,7 +176,7 @@ object Aggs {
             r = doff; cum = coff; init = true
           }
           val c = row.getLong(cIdx)
-          val out = org.apache.spark.sql.Row(row.get(vIdx), c, r, cum)
+          val out = Row(row.get(vIdx), c, r, cum)
           r += 1; cum += c
           out
         }
@@ -115,20 +186,50 @@ object Aggs {
 
   /**
    * percentiles (math.go:85-115): sort ascending; each value maps to
-   * firstIndexOfThatValue / n — ties share the first index.
+   * firstIndexOfThatValue / n — ties share the first index. Null values rank
+   * first (percentile 0) and keep their rows.
    *
-   * Scale shape: ranks run over the AGGREGATED DISTINCT values via
-   * `rankedCounts` (range-partitioned, per-partition offsets) — no
-   * unpartitioned window anywhere. The per-row result comes back via a
-   * NULL-SAFE equi-join on the value (`<=>`), so rows with a null value keep
-   * their (first-ranked, percentile 0) row instead of dropping out.
+   * Up to [[SmallDistinct]] distinct values the ranks are computed on the
+   * driver from [[smallCounts]] and reach each row through a hash lookup
+   * keyed like the aggregation's grouping (-0.0 is 0.0, every NaN one key);
+   * wider inputs take [[percentilesWide]].
    */
-  def percentiles(df: DataFrame, valueCol: String): DataFrame = {
-    val ranked = rankedCounts(
-      df.groupBy(col(valueCol).as("v")).agg(count(lit(1)).as("c")), Seq(col("v")))
+  def percentiles(df: DataFrame, valueCol: String): DataFrame =
+    smallCounts(df, col(valueCol)) match {
+      case Some(counts) =>
+        val total = counts.map(_._2).sum.toDouble
+        val pct = new java.util.HashMap[Any, java.lang.Double](counts.length * 2)
+        var cum = 0L
+        counts.foreach { case (v, c) => pct.put(v, cum.toDouble / total); cum += c }
+        val lookup = udf(new UDF1[Any, java.lang.Double] {
+          def call(v: Any): java.lang.Double = pct.get(groupKey(v))
+        }, DoubleType)
+        df.withColumn("percentile", lookup(col(valueCol)))
+      case None => percentilesWide(df, valueCol)
+    }
+
+  /** [[percentiles]] over `rankedCounts` (range-partitioned, per-partition
+    * offsets; no unpartitioned window anywhere). The per-row result comes
+    * back via a NULL-SAFE equi-join on the value (`<=>`), so rows with a
+    * null value keep their (first-ranked, percentile 0) row. */
+  private[graft] def percentilesWide(df: DataFrame, valueCol: String): DataFrame = {
+    val ranked = rankedCounts(valueCounts(df, col(valueCol)), Seq(col("v")))
       .select(col("v").as("__v"),
         (col("cum_before").cast("double") / col("total").cast("double")).as("percentile"))
     df.join(ranked, col(valueCol) <=> col("__v")).drop("__v")
+  }
+
+  /** 0-based bucket of the distinct value ranked `r` of `d`: one per value
+    * when d <= 6, else the greedy closed form e1 = d/6,
+    * e_{i+1} = e_i + (d - e_i)/(6-i) (integer division). */
+  private def uniformBucket(r: Long, d: Long): Long = {
+    if (d <= 6) r
+    else {
+      val e1 = d / 6; val e2 = e1 + (d - e1) / 5; val e3 = e2 + (d - e2) / 4
+      val e4 = e3 + (d - e3) / 3; val e5 = e4 + (d - e4) / 2
+      if (r < e1) 0 else if (r < e2) 1 else if (r < e3) 2
+      else if (r < e4) 3 else if (r < e5) 4 else 5
+    }
   }
 
   /**
@@ -136,28 +237,38 @@ object Aggs {
    * distinct values sorted ascending; if <= 6 distinct, one bucket per value;
    * else greedily: bucket_size = remaining / (6 - bucketsSoFar) DISTINCT values
    * per bucket, half-open [lo, hi), last bucket open-ended. Returns
-   * (bucket, lo, hi, n) with element counts per bucket.
+   * (bucket, lo, hi, n) with element counts per bucket; lo and hi ignore
+   * nulls, which rank first and count in bucket 0.
    *
-   * Fully distributed: the distinct set is aggregated, ranked, bucketed by the
-   * greedy formula (a closed form over D = distinct count), then element
-   * counts roll up — no driver-side value list.
+   * Up to [[SmallDistinct]] distinct values the <= 6 buckets are folded on
+   * the driver from [[smallCounts]]; wider inputs take
+   * [[histogramUniformWide]].
    */
   def histogramUniform(df: DataFrame, valueCol: String, maxBuckets: Int = 6): DataFrame = {
     require(maxBuckets == 6, "reference semantics fix MaxHistogramBuckets=6")
-    val vals = df.groupBy(col(valueCol).as("v")).agg(count(lit(1)).as("c"))
-    val ranked = rankedCounts(vals, Seq(col("v"))).select("v", "c", "r", "d")
-    // greedy closed form: e1 = d/6; e_{i+1} = e_i + (d - e_i)/(6-i)  (int div)
-    val bucketed = ranked
-      .withColumn("e1", expr("d div 6"))
-      .withColumn("e2", expr("e1 + (d - e1) div 5"))
-      .withColumn("e3", expr("e2 + (d - e2) div 4"))
-      .withColumn("e4", expr("e3 + (d - e3) div 3"))
-      .withColumn("e5", expr("e4 + (d - e4) div 2"))
-      .withColumn("bucket", expr(
-        """CASE WHEN d <= 6 THEN r
-          |     WHEN r < e1 THEN 0 WHEN r < e2 THEN 1 WHEN r < e3 THEN 2
-          |     WHEN r < e4 THEN 3 WHEN r < e5 THEN 4 ELSE 5 END""".stripMargin))
-    bucketed.groupBy(col("bucket"))
+    smallCounts(df, col(valueCol)) match {
+      case Some(counts) =>
+        val d = counts.length.toLong
+        val out = counts.zipWithIndex.groupBy { case (_, r) => uniformBucket(r, d) }
+          .toSeq.sortBy(_._1).map { case (bucket, members) =>
+            val vs = members.map(_._1._1).filter(_ != null)
+            Row(bucket, vs.headOption.orNull, vs.lastOption.orNull, members.map(_._1._2).sum)
+          }
+        val vType = df.select(col(valueCol)).schema.head.dataType
+        df.sparkSession.createDataFrame(java.util.Arrays.asList(out: _*), StructType(Seq(
+          StructField("bucket", LongType, nullable = false), StructField("lo", vType),
+          StructField("hi", vType), StructField("n", LongType))))
+      case None => histogramUniformWide(df, valueCol)
+    }
+  }
+
+  /** [[histogramUniform]] fully distributed over the (v, c) counts: the
+    * distinct set is ranked by `rankedCounts`, bucketed by [[uniformBucket]],
+    * then element counts roll up — no driver-side value list. */
+  private[graft] def histogramUniformWide(df: DataFrame, valueCol: String): DataFrame = {
+    val bucket = udf((r: Long, d: Long) => uniformBucket(r, d))
+    rankedCounts(valueCounts(df, col(valueCol)), Seq(col("v")))
+      .groupBy(bucket(col("r"), col("d")).as("bucket"))
       .agg(min(col("v")).as("lo"), max(col("v")).as("hi"), sum(col("c")).as("n"))
   }
 
@@ -184,11 +295,32 @@ object Aggs {
    * count descending; top 5 keep their own bucket, the rest collapse into
    * "other" (only when there are > 6 distinct values; with <= 6 every value
    * keeps its bucket). Ties broken by value for determinism (the reference
-   * uses an unstable sort there).
+   * uses an unstable sort there). A top-5 value named "other" shares the
+   * "other" bucket. Up to [[SmallDistinct]] distinct values the buckets are
+   * summed on the driver from [[smallCounts]]; wider inputs take
+   * [[histogramCategoricalWide]].
    */
   def histogramCategorical(df: DataFrame, valueCol: String): DataFrame = {
-    val counts = df.groupBy(col(valueCol).cast("string").as("v")).agg(count(lit(1)).as("c"))
-    val ranked = rankedCounts(counts, Seq(col("c").desc, col("v"))).select("v", "c", "r", "d")
+    smallCounts(df, col(valueCol).cast("string")) match {
+      case Some(counts) =>
+        val d = counts.length
+        val n = new java.util.LinkedHashMap[Any, java.lang.Long]()
+        counts.sortBy { case (v, c) => (-c, v) }(Ordering.Tuple2(Ordering.Long, ascending(StringType)))
+          .zipWithIndex.foreach { case ((v, c), r) =>
+            n.merge(if (d <= 6 || r < 5) v else "other", c, (a, b) => a + b)
+          }
+        val out = new java.util.ArrayList[Row]()
+        n.forEach((bucket, c) => out.add(Row(bucket, c)))
+        df.sparkSession.createDataFrame(out, StructType(Seq(
+          StructField("bucket", StringType), StructField("n", LongType))))
+      case None => histogramCategoricalWide(df, valueCol)
+    }
+  }
+
+  /** [[histogramCategorical]] over `rankedCounts` of the (v, c) counts. */
+  private[graft] def histogramCategoricalWide(df: DataFrame, valueCol: String): DataFrame = {
+    val ranked = rankedCounts(valueCounts(df, col(valueCol).cast("string")),
+      Seq(col("c").desc, col("v"))).select("v", "c", "r", "d")
     val labeled = ranked.withColumn("bucket",
       when(col("d") <= 6 || col("r") < 5, col("v")).otherwise(lit("other")))
     labeled.groupBy(col("bucket")).agg(sum(col("c")).as("n"))

@@ -352,18 +352,37 @@ object Graph {
    * whose destination survives the filter; for keys where NO destination
    * survives, emit a single (key, invalid-id sentinel) row so callers can
    * count unserved origins. The reference's invalid FeatureID maps to -1.
+   *
+   * One exchange keyed by `keyCol`: each OD row is marked surviving or not,
+   * one aggregation per key lists the surviving destinations, and a key
+   * whose list is empty gets the sentinel. The output stays hash-partitioned
+   * by `keyCol`, so a following per-key aggregation ([[Aggs.odHistogram]])
+   * adds no exchange. Survivors are read by one guarded
+   * `limit(N + 1).collect()`: up to [[MaxDriverSurvivors]] ids they mark the
+   * rows as an in-set test; more are joined (a left outer join against their
+   * distinct ids, one more exchange). Duplicate survivor ids never
+   * duplicate an OD row.
    */
   def filterAccessible(od: DataFrame, survivors: DataFrame,
                        keyCol: String = "origin", valueCol: String = "node",
                        invalidId: Long = -1L): DataFrame = {
-    val sv = survivors.select(col(survivors.columns.head).as("__sv")).distinct()
-    val kept = od.join(sv, od(valueCol) === col("__sv"), "left_semi")
-      .select(col(keyCol), col(valueCol))
-    val empty = od.select(col(keyCol)).distinct()
-      .join(kept.select(col(keyCol)).distinct(), Seq(keyCol), "left_anti")
-      .select(col(keyCol), lit(invalidId).as(valueCol))
-    kept.unionByName(empty)
+    val sv = survivors.select(col(survivors.columns.head).as("__sv"))
+    val ids = sv.limit(MaxDriverSurvivors + 1).collect().map(_.get(0))
+    val marked =
+      if (ids.length <= MaxDriverSurvivors)
+        od.select(col(keyCol), col(valueCol), col(valueCol).isin(ids.distinct.toIndexedSeq: _*).as("__ok"))
+      else
+        od.join(sv.distinct(), od(valueCol) === col("__sv"), "left_outer")
+          .select(col(keyCol), col(valueCol), col("__sv").isNotNull.as("__ok"))
+    val kept = marked.groupBy(col(keyCol))
+      .agg(collect_list(when(col("__ok"), col(valueCol))).as("__kept"))
+    kept.select(col(keyCol), explode(
+      when(size(col("__kept")) > 0, col("__kept")).otherwise(array(lit(invalidId)))).as(valueCol))
   }
+
+  /** Survivor ids up to which [[filterAccessible]] tests membership against
+    * a driver-side set instead of joining. */
+  private val MaxDriverSurvivors = 10000
 
   // ---- iterative fallback (network larger than executor memory) --------------
 

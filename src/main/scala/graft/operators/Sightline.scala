@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.locationtech.jts.geom.{Coordinate, Geometry}
 import graft.core.GeoOps
@@ -70,24 +70,61 @@ object Sightline {
    *
    * origins: (origin_id, px=lng, py=lat); dirs: (ray_idx, ex, ey) — the ray
    * ENDPOINT offsets in degrees; edges: (ax, ay, bx, by) occluder segments
-   * in lng/lat. dirs/edges are broadcast-sized by contract.
+   * in lng/lat. dirs and edges are driver-side: they reach each origin row
+   * as array literals, so the cast needs no join, no broadcast and no
+   * exchange. Returns (origin_id, ray_idx, occlusion), one row per origin
+   * and ray.
    */
-  def rayOcclusions(origins: DataFrame, dirs: DataFrame, edges: DataFrame): DataFrame = {
-    val crossed = origins.crossJoin(broadcast(dirs)).crossJoin(broadcast(edges))
-    val denom0 = col("ex") * (col("by") - col("ay")) - col("ey") * (col("bx") - col("ax"))
-    // parallel ray/edge -> NULL denominator (not 0: ANSI mode raises on /0
-    // and And does not short-circuit); NULL propagates through t/u and the
-    // comparisons, dropping the pair — nullif() mirrors this in the oracle
-    val denom = when(denom0 =!= 0.0, denom0)
-    val t = ((col("ax") - col("px")) * (col("by") - col("ay")) -
-      (col("ay") - col("py")) * (col("bx") - col("ax"))) / denom
-    val u = ((col("ax") - col("px")) * col("ey") -
-      (col("ay") - col("py")) * col("ex")) / denom
-    crossed
-      .withColumn("__t", when(t > 0.0 && t <= 1.0 && u >= 0.0 && u <= 1.0, t))
-      .groupBy(col("origin_id"), col("ray_idx"))
-      .agg(coalesce(min(col("__t")), lit(1.0)).as("occlusion"))
+  def rayOcclusions(origins: DataFrame, dirs: Seq[(Int, Double, Double)],
+                    edges: Seq[(Double, Double, Double, Double)]): DataFrame = {
+    // exploding the bare int indices keeps ray_idx non-null
+    val i = col("__i")
+    origins.select(col("origin_id"), col("px"), col("py"),
+        posexplode(typedLit(dirs.map(_._1))).as(Seq("__i", "ray_idx")))
+      .select(col("origin_id"), col("ray_idx"), occlusion(col("px"), col("py"),
+        typedLit(dirs.map(_._2)).getItem(i), typedLit(dirs.map(_._3)).getItem(i), edges).as("occlusion"))
   }
+
+  /**
+   * The visibility polygon over the rational ray fan as a shoelace area in
+   * degree²: vertex_i = origin + occlusion_i * dir_i ([[rayOcclusions]]'
+   * occlusions), and per origin the terms vx_i*vy_{i+1} − vx_{i+1}*vy_i
+   * (i+1 wrapping to the first ray) summed from 0.0 in ray_idx order, times
+   * 0.5. Each origin's vertex list is built once, in ray order, on its own
+   * row: no self-join and no exchange. Returns (origin_id, area_deg2).
+   */
+  def fanArea(origins: DataFrame, dirs: Seq[(Int, Double, Double)],
+              edges: Seq[(Double, Double, Double, Double)]): DataFrame = {
+    val (px, py) = (col("px"), col("py"))
+    val vertices = transform(typedLit(dirs.sortBy(_._1)), d => {
+      val occ = occlusion(px, py, d("_2"), d("_3"), edges)
+      struct((px + occ * d("_2")).as("vx"), (py + occ * d("_3")).as("vy"))
+    })
+    val v = col("__v")
+    val terms = transform(v, (a, i) => {
+      val b = v.getItem((i + 1) % dirs.length)
+      a("vx") * b("vy") - b("vx") * a("vy")
+    })
+    origins.select(col("origin_id"), vertices.as("__v"))
+      .select(col("origin_id"),
+        (aggregate(terms, lit(0.0), (acc, x) => acc + x) * 0.5).as("area_deg2"))
+  }
+
+  /** The occlusion of the ray from (px, py) to (px + ex, py + ey): the least
+    * t over the edges it crosses, 1.0 when it crosses none. */
+  private def occlusion(px: Column, py: Column, ex: Column, ey: Column,
+                        edges: Seq[(Double, Double, Double, Double)]): Column =
+    coalesce(array_min(transform(typedLit(edges), e => {
+      val (ax, ay, bx, by) = (e("_1"), e("_2"), e("_3"), e("_4"))
+      val denom0 = ex * (by - ay) - ey * (bx - ax)
+      // parallel ray/edge -> NULL denominator (not 0: ANSI mode raises on /0
+      // and And does not short-circuit); NULL propagates through t/u and the
+      // comparisons, dropping the edge — nullif() mirrors this in the oracle
+      val denom = when(denom0 =!= 0.0, denom0)
+      val t = ((ax - px) * (by - ay) - (ay - py) * (bx - ax)) / denom
+      val u = ((ax - px) * ey - (ay - py) * ex) / denom
+      when(t > 0.0 && t <= 1.0 && u >= 0.0 && u <= 1.0, t)
+    })), lit(1.0))
 
   /** 16 rational ray directions as degree-space endpoint offsets: integer
     * (dx,dy) scaled to a fixed (0.006 lng, 0.004 lat) span — driver-computed

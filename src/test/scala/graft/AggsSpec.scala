@@ -78,6 +78,10 @@ class AggsSpec extends SparkSuite {
     val plan = hist.queryExecution.executedPlan.toString
     assert(!plan.contains("SinglePartition"),
       s"global-window funnel found in plan:\n${plan.take(2000)}")
+    // 100k distinct values is wider than the driver-side small path: the
+    // distinct set is range-partitioned on the value
+    assert("rangepartitioning\\(v#".r.findFirstIn(plan).isDefined,
+      s"no range exchange on the value in plan:\n${plan.take(2000)}")
     assert(rows.length == 6)
     assert(rows.map(_.getAs[Number]("n").longValue()).sum == 100000L)
     // greedy closed form: e1 = 100000/6 = 16666 -> first bucket [0, 16666)
@@ -118,7 +122,8 @@ class AggsSpec extends SparkSuite {
   }
 
   test("percentiles twice over one input pins its internal caches on the first call only") {
-    val df = Seq(10.5, 11.5, 11.5, 12.5, 14.5).toDF("v")
+    // wider than the small path, so both calls take the range plan
+    val df = spark.range(Aggs.SmallDistinct + 1).selectExpr("CAST(id AS DOUBLE) + 0.5 AS v")
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.size
     val first = Aggs.percentiles(df, "v").collect().toSet
@@ -129,5 +134,132 @@ class AggsSpec extends SparkSuite {
     assert(afterFirst > before)
     assert(sc.getPersistentRDDs.size == afterFirst)
     assert(second == first)
+  }
+
+  test("percentiles over few distinct values pins nothing") {
+    val df = Seq(10.5, 11.5, 11.5, 12.5, 14.5).toDF("v")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.size
+    val got = Aggs.percentiles(df, "v").collect().map(r => r.getDouble(0) -> r.getDouble(1)).toSet
+    assert(sc.getPersistentRDDs.size == before)
+    assert(got == Set(10.5 -> 0.0, 11.5 -> 0.2, 12.5 -> 0.6, 14.5 -> 0.8))
+  }
+
+  // ---- the small-distinct path against the wide path and a brute force ------
+
+  /** Seeded inputs drawn from a pool with nulls, NaN, -0.0 and 0.0 (one
+    * group in Spark), and ties; plus one distinct value and an empty input. */
+  private val numericInputs: Seq[(String, Seq[Option[Double]])] = {
+    val pool = Seq(None, Some(Double.NaN), Some(-0.0), Some(0.0), Some(-3.5), Some(1.25),
+      Some(2.0), Some(7.0), Some(7.5), Some(1e9), Some(-1e-9))
+    val seeded = Seq(3L, 17L, 2026L).map { seed =>
+      val rnd = new scala.util.Random(seed)
+      val pick = rnd.shuffle(pool).take(3 + rnd.nextInt(pool.length - 2))
+      s"seed $seed" -> Seq.fill(20 + rnd.nextInt(60))(pick(rnd.nextInt(pick.length)))
+    }
+    seeded ++ Seq("one distinct value" -> Seq.fill(9)(Some(4.0)), "empty" -> Nil)
+  }
+
+  private def numericDf(xs: Seq[Option[Double]]) =
+    xs.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toDF("id", "v").repartition(3)
+
+  /** Spark's order over the values: nulls first, NaN above every number,
+    * -0.0 equal to 0.0. */
+  private def cmp(a: Option[Double], b: Option[Double]): Int = (a, b) match {
+    case (None, None) => 0
+    case (None, _) => -1
+    case (_, None) => 1
+    case (Some(x), Some(y)) =>
+      if (x.isNaN || y.isNaN) java.lang.Boolean.compare(x.isNaN, y.isNaN)
+      else java.lang.Double.compare(x + 0.0, y + 0.0)
+  }
+
+  /** Distinct values in order, each with its row count, -0.0 shown as 0.0. */
+  private def bruteCounts(xs: Seq[Option[Double]]): Seq[(Option[Double], Long)] =
+    xs.foldLeft(Vector.empty[(Option[Double], Long)]) { (acc, v) =>
+      acc.indexWhere(p => cmp(p._1, v) == 0) match {
+        case -1 => acc :+ (v.map(_ + 0.0) -> 1L)
+        case i => acc.updated(i, acc(i)._1 -> (acc(i)._2 + 1))
+      }
+    }.sortWith((a, b) => cmp(a._1, b._1) < 0)
+
+  /** `body`'s result, asserting it persisted nothing: the small path ran
+    * (the wide path persists its ranked distinct set). */
+  private def pinsNothing[A](body: => A): A = {
+    val before = spark.sparkContext.getPersistentRDDs.size
+    val out = body
+    assert(spark.sparkContext.getPersistentRDDs.size == before, "the wide path ran")
+    out
+  }
+
+  /** A double by its bits, so NaN equals NaN and -0.0 differs from 0.0. */
+  private def bits(v: Any): Option[Long] = Option(v).map(x => java.lang.Double.doubleToLongBits(x.asInstanceOf[Double]))
+
+  test("percentiles: the small path equals the wide path and a brute force on seeded inputs") {
+    numericInputs.foreach { case (name, xs) =>
+      val df = numericDf(xs)
+      def rows(out: org.apache.spark.sql.DataFrame) = out.select("id", "percentile").collect()
+        .map(r => r.getLong(0) -> r.getDouble(1)).sortBy(_._1).toSeq
+      val small = pinsNothing(rows(Aggs.percentiles(df, "v")))
+      val brute = xs.zipWithIndex.map { case (v, i) =>
+        i.toLong -> xs.count(w => cmp(w, v) < 0).toDouble / xs.length
+      }
+      assert(small == brute, name)
+      assert(small == rows(Aggs.percentilesWide(df, "v")), name)
+      assert(Aggs.percentiles(df, "v").schema == Aggs.percentilesWide(df, "v").schema, name)
+    }
+  }
+
+  test("histogramUniform: the small path equals the wide path and a brute force on seeded inputs") {
+    numericInputs.foreach { case (name, xs) =>
+      val df = numericDf(xs)
+      def rows(out: org.apache.spark.sql.DataFrame) = out.orderBy("bucket").collect()
+        .map(r => (r.getLong(0), bits(r.get(1)), bits(r.get(2)), r.getLong(3))).toSeq
+      // the reference's greedy loop: each bucket takes remaining/(6 - built)
+      // distinct values, the last takes the rest
+      val counts = bruteCounts(xs)
+      val d = counts.length
+      val sizes = if (d <= 6) Seq.fill(d)(1) else (0 until 6).foldLeft(Vector.empty[Int]) { (b, i) =>
+        val remaining = d - b.sum
+        b :+ (if (i == 5) remaining else remaining / (6 - i))
+      }
+      val brute = sizes.indices.map { i =>
+        val members = counts.slice(sizes.take(i).sum, sizes.take(i + 1).sum)
+        val vs = members.flatMap(_._1)
+        (i.toLong, vs.headOption.map(java.lang.Double.doubleToLongBits),
+          vs.lastOption.map(java.lang.Double.doubleToLongBits), members.map(_._2).sum)
+      }
+      val (small, schema) = pinsNothing { val h = Aggs.histogramUniform(df, "v"); (rows(h), h.schema) }
+      val wide = Aggs.histogramUniformWide(df, "v")
+      assert(small == brute, name)
+      assert(small == rows(wide), name)
+      assert(schema == wide.schema, name)
+    }
+  }
+
+  test("histogramCategorical: the small path equals the wide path and a brute force on seeded inputs") {
+    val pool = Seq(None, Some("other"), Some("a"), Some("b"), Some("B"), Some("é"), Some("zz"),
+      Some("m"), Some("q"), Some(""))
+    val seeded = Seq(5L, 23L, 99L).map { seed =>
+      val rnd = new scala.util.Random(seed)
+      val pick = rnd.shuffle(pool).take(3 + rnd.nextInt(pool.length - 2))
+      s"seed $seed" -> Seq.fill(20 + rnd.nextInt(60))(pick(rnd.nextInt(pick.length)))
+    }
+    (seeded ++ Seq("one distinct value" -> Seq.fill(4)(Some("x")), "empty" -> Nil)).foreach { case (name, xs) =>
+      val df = xs.toDF("v").repartition(3)
+      def rows(out: org.apache.spark.sql.DataFrame) =
+        out.collect().map(r => Option(r.getString(0)) -> r.getLong(1)).toMap
+      // count desc, then value ascending with null first
+      val ranked = xs.groupBy(identity).map { case (v, vs) => v -> vs.length.toLong }.toSeq
+        .sortBy { case (v, c) => (-c, v.isDefined, v.getOrElse("")) }
+      val brute = ranked.zipWithIndex
+        .map { case ((v, c), r) => (if (ranked.length <= 6 || r < 5) v else Some("other")) -> c }
+        .groupBy(_._1).map { case (b, cs) => b -> cs.map(_._2).sum }
+      val (small, schema) = pinsNothing { val h = Aggs.histogramCategorical(df, "v"); (rows(h), h.schema) }
+      val wide = Aggs.histogramCategoricalWide(df, "v")
+      assert(small == brute, name)
+      assert(small == rows(wide), name)
+      assert(schema == wide.schema, name)
+    }
   }
 }

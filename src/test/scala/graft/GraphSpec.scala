@@ -170,6 +170,44 @@ class GraphSpec extends SparkSuite {
     assert(got == Set((1L, 10L), (1L, 11L), (3L, 10L), (2L, -1L)))
   }
 
+  /** filter-accessible by hand: surviving OD rows as they are (duplicates
+    * kept), plus one (key, -1) row per key with no surviving destination. */
+  private def bruteFilterAccessible(od: Seq[(Long, Long)], survivors: Set[Long]): Seq[(Long, Long)] =
+    (od.filter(r => survivors(r._2)) ++ od.map(_._1).distinct
+      .filterNot(k => od.exists(r => r._1 == k && survivors(r._2))).map(_ -> -1L)).sorted
+
+  test("filterAccessible equals a brute force: duplicate survivors, keys with no survivor, empty OD") {
+    val rnd = new scala.util.Random(12)
+    val od = Seq.fill(60)((rnd.nextInt(8).toLong, rnd.nextInt(25).toLong)) ++
+      Seq((8L, 1L), (8L, 1L), (9L, 2L)) // duplicate OD rows; key 9 has no survivor
+    val picked = (1L +: Seq.fill(15)(rnd.nextInt(25).toLong)).filter(_ != 2L)
+    val survivors = picked ++ picked.take(5) // duplicate survivor ids
+    def got(o: Seq[(Long, Long)], sv: org.apache.spark.sql.DataFrame) =
+      Graph.filterAccessible(o.toDF("origin", "node"), sv).as[(Long, Long)].collect().toSeq.sorted
+    val expected = bruteFilterAccessible(od, picked.toSet)
+    assert(expected.count(_ == (8L, 1L)) == 2 && expected.contains((9L, -1L)))
+    assert(got(od, survivors.toDF("ok")) == expected)
+    // more survivor ids than the driver-side set holds: the join path
+    val wide = spark.range(-30000L, 0L).toDF("ok").unionByName(survivors.toDF("ok"))
+    assert(got(od, wide) == expected)
+    assert(got(Nil, survivors.toDF("ok")).isEmpty)
+    assert(got(Nil, wide).isEmpty)
+    assert(got(od, Seq.empty[Long].toDF("ok")) == od.map(_._1).distinct.map(_ -> -1L).sorted)
+  }
+
+  test("filterAccessible then odHistogram: one exchange keyed by origin") {
+    val od = Seq((1L, 10L), (1L, 11L), (2L, 12L), (3L, 10L)).toDF("origin", "node")
+    val hist = graft.operators.Aggs.odHistogram(Graph.filterAccessible(od, Seq(10L, 11L).toDF("ok")))
+    assert(hist.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap == Map(0L -> 1L, 1L -> 1L, 2L -> 1L))
+    // the final adaptive plan, without the initial plan printed beside it
+    val plan = hist.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan.toString
+      case p => p.toString
+    }
+    assert("Exchange hashpartitioning\\(origin#".r.findAllIn(plan).length == 1, plan)
+    assert(!plan.contains("BroadcastExchange"), plan)
+  }
+
   test("reachable decides broadcast-vs-iterative and seeds the CSR in one job") {
     val grid = edges
     val origins = Seq(0L, 77L, 143L).toDF("origin")
