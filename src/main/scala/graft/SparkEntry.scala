@@ -44,7 +44,7 @@ object SparkEntry {
     "(CASE event_type WHEN 'click' THEN 'cafe' WHEN 'view' THEN 'bench' " +
       "WHEN 'purchase' THEN 'restaurant' WHEN 'signup' THEN 'school' ELSE 'fountain' END)"
 
-  private val ptsCte = s"WITH pts AS (${Fixtures.pointsOracleSql()})"
+  private val ptsCte = s"WITH pts AS (${Fixtures.pointsOracleSql})"
 
   /** Flagship query on sf0.001: the point-in-polygon spatial join. */
   def entry(spark: SparkSession): DataFrame = {
@@ -198,7 +198,7 @@ object SparkEntry {
     "td_fingerprint" -> ((s, d) => TextOps.fingerprint(t(s, d, "documents"), "text")
       .select("doc_id", "fingerprint").orderBy("doc_id")),
     "td_minhash_pairs" -> ((s, d) => TextOps.dedupMinhashLsh(
-      t(s, d, "documents"), "doc_id", "text", k = 3, threshold = 0.4)
+      t(s, d, "documents"), "doc_id", "text", threshold = 0.4)
       .orderBy("id_a", "id_b")),
     "td_simhash" -> ((s, d) => TextOps.simhash(t(s, d, "documents"), "doc_id", "text")
       .orderBy("doc_id")),
@@ -306,7 +306,7 @@ object SparkEntry {
       val clones = base.where(col("image_id") % 101 === 0)
         .select((col("image_id") + 10000000L).as("image_id"),
           col("phash").bitwiseXOR(lit(3L)).as("phash"))
-      ImageOps.phashNearDupPairs(base.unionByName(clones), maxHamming = 3)
+      ImageOps.phashNearDupPairs(base.unionByName(clones))
         .select(col("id_a"), col("id_b"), col("hamming").cast("long").as("hamming"))
         .orderBy("id_a", "id_b")
     }),
@@ -325,7 +325,7 @@ object SparkEntry {
           sm(col("event_id")).bitwiseXOR(lit(3L)).as("phash"),
           when(col("event_id") % 202 === 0, lit("cap-x"))
             .otherwise(concat(lit("cap-"), (col("event_id") % 7).cast("string"))).as("caption"))
-      ImageOps.captionConflicts(base.unionByName(clones), maxHamming = 3)
+      ImageOps.captionConflicts(base.unionByName(clones))
         .select(col("id_a"), col("id_b"),
           col("hamming").cast("long").as("hamming"), col("caption_match"))
         .orderBy("id_a", "id_b")
@@ -344,7 +344,7 @@ object SparkEntry {
       val e = t(s, d, "embeddings")
       val q = e.where(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-      Ann.cosineLsh(e, q, 5, bits = 5, tables = 16)
+      Ann.cosineLsh(e, q, 5)
         .select(col("qid"), col("rank").cast("long").as("rank"), col("neighbor_id"))
         .orderBy("qid", "rank")
     }),
@@ -649,7 +649,7 @@ object SparkEntry {
       t(s, d, "events")).orderBy("wstart", "event_type")),
 
     // -- sessionization (stateful-streaming plane; batch-equivalent plan) --
-    "st_sessions" -> ((s, d) => graft.streaming.Streaming.sessionize(t(s, d, "events"), 30)
+    "st_sessions" -> ((s, d) => graft.streaming.Streaming.sessionize(t(s, d, "events"))
       .orderBy("user_id", "session_idx")),
 
     // -- vertex plane: points / sample-points --
@@ -750,7 +750,7 @@ object SparkEntry {
     // (oracleSqlDynamic), pixels in ImageSpec
     "mm_thumbs" -> ((s, d) => {
       val n = if (d.contains("0.001")) 200L else if (d.contains("0.01")) 1000L else 5000L
-      ImageOps.thumbnails(Fixtures.images(s, n), 64).toDF()
+      ImageOps.thumbnails(Fixtures.images(s, n)).toDF()
         .select(col("image_id"), col("tw"), col("th"),
           length(col("thumb")).cast("int").as("thumb_len"))
         .orderBy("image_id")
@@ -1154,7 +1154,7 @@ object SparkEntry {
         .map { case (id, la, lo) => s"($id, CAST($la AS DOUBLE), CAST($lo AS DOUBLE))" }
         .mkString(", ")
       val d = Fixtures.haversineSql("p.lat", "p.lng", "n.nlat", "n.nlng")
-      s"""WITH pts AS (${Fixtures.pointsOracleSql()}), $gridEdgesCte,
+      s"""WITH pts AS (${Fixtures.pointsOracleSql}), $gridEdgesCte,
          |nodes AS (SELECT CAST(c0 AS BIGINT) AS node_id, c1 AS nlat, c2 AS nlng
          |  FROM (VALUES $nodeVals) t(c0, c1, c2)),
          |near AS (
@@ -1242,7 +1242,7 @@ object SparkEntry {
 
     // -- geometry-intersection join: separating-axis test over the convex
     //    fixture polygons (pure +,-,* comparisons, like sj_pip) --
-    "sj_intersection" -> Fixtures.boxIntersectOracleSql(),
+    "sj_intersection" -> Fixtures.boxIntersectOracleSql,
 
     // -- shoelace area/centroid replayed with literal left-associated sums
     //    (identical IEEE fold order) + the driver-computed metric factor --
@@ -1476,7 +1476,7 @@ object SparkEntry {
         |FROM f ORDER BY video_id, frame_idx""".stripMargin,
 
     // -- banded minhash replayed exactly (Fixtures.minhashLshOracleSql) --
-    "td_minhash_pairs" -> Fixtures.minhashLshOracleSql(k = 3, threshold = 0.4),
+    "td_minhash_pairs" -> Fixtures.minhashLshOracleSql,
 
     // -- basemap tile assignment: Mercator floor + rule gate + layer CASE --
     "rd_assign" ->
@@ -1617,7 +1617,7 @@ object SparkEntry {
   /** Shared PQ codebooks for ann_pq and its oracle: 8 subspaces x 16
     * centroids, deterministic Lloyd's over the first 256 vectors. */
   private def trainedPqCodebooks(s: SparkSession, d: String): Array[Array[Array[Double]]] =
-    Ann.trainPqCodebooks(t(s, d, "embeddings"), m = 8, k = 16, iters = 3, sampleN = 256)
+    Ann.trainPqCodebooks(t(s, d, "embeddings"))
 
   /**
    * Oracles whose SQL embeds DRIVER-COMPUTED literals derived from the data

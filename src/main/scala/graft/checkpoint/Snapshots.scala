@@ -70,7 +70,7 @@ object Snapshots {
    * directory ignorable.
    */
   def commit(df: DataFrame, root: String, table: String,
-             lineage: Seq[String] = Nil): Snapshot = {
+             lineage: Seq[String]): Snapshot = {
     val id = latest(root).map(_.id + 1).getOrElse(0L)
     val dataPath = Paths.get(root, "data", id.toString).toString
     df.write.mode("overwrite").parquet(dataPath)
@@ -81,7 +81,7 @@ object Snapshots {
     * partitioned writes like materialise-map, where the layout is chosen by
     * the writer). Same atomic-rename commit point as `commit`. */
   def commitExisting(spark: SparkSession, root: String, table: String,
-                     dataPath: String, lineage: Seq[String] = Nil): Snapshot = {
+                     dataPath: String, lineage: Seq[String]): Snapshot = {
     val id = latest(root).map(_.id + 1).getOrElse(0L)
     val dataDir = Paths.get(dataPath)
     val files = {

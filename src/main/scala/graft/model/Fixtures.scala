@@ -33,7 +33,7 @@ object Fixtures {
       "ELSE -0.21 + CAST(event_id % 1777 AS DOUBLE) * 0.0000523 + CAST(user_id % 211 AS DOUBLE) * 0.000307 END)"
 
   /** DuckDB-side view of the derived points. */
-  def pointsOracleSql(dir: String = ""): String =
+  val pointsOracleSql: String =
     s"SELECT event_id AS point_id, $latSql AS lat, $lngSql AS lng, event_type FROM events"
 
   /** Spark-side derived points: (point_id, lat, lng, event_type, cell16). */
@@ -85,8 +85,7 @@ object Fixtures {
   }
 
   /** Engine-side polygon feature table: (poly_id, tag, geom wkb, covering). */
-  def polygons(spark: SparkSession, maxLevel: Int = 16, maxCells: Int = 5,
-               includeConcave: Boolean = false): DataFrame = {
+  def polygons(spark: SparkSession, includeConcave: Boolean = false): DataFrame = {
     CellExprs.install(spark)
     val rows = convexPolygons.map { case (id, tag, ring) => (id, tag, ringToWkt(ring)) } ++
       (if (includeConcave) concaveWkts.map { case (id, w) => (id, "concave", w) } else Nil)
@@ -96,14 +95,14 @@ object Fixtures {
     }
     import spark.implicits._
     data.toDF("poly_id", "tag", "geom")
-      .withColumn("covering", CellExprs.cell_covering(col("geom"), lit(maxLevel), lit(maxCells)))
+      .withColumn("covering", CellExprs.cell_covering(col("geom"), lit(16), lit(5)))
   }
 
   /** Oracle-side: point-in-polygon via half-plane inequalities over the SAME
     * literal vertices (boundary-inclusive, like JTS `covers`). `p` is the
     * points relation alias providing lat/lng columns. */
   def pipOracleSql: String = {
-    val pts = pointsOracleSql()
+    val pts = pointsOracleSql
     val perPoly = convexPolygons.map { case (id, _, ring) =>
       val edges = ring.indices.map { i =>
         val (x1, y1) = ring(i)
@@ -117,7 +116,7 @@ object Fixtures {
 
   /**
    * Oracle-side geometry-intersection join (sj_intersection): axis-aligned
-   * boxes (p.lng±dLng, p.lat±dLat) around every `stride`-th point vs the
+   * boxes (p.lng±0.002, p.lat±0.002) around every 100th point vs the
    * convex fixture polygons, decided by the SEPARATING-AXIS test — two convex
    * shapes intersect iff no box axis separates them AND no polygon edge has
    * all four box corners strictly outside its half-plane. Pure +,-,*
@@ -138,11 +137,10 @@ object Fixtures {
   def dblE(v: Double): String =
     String.format(java.util.Locale.ROOT, "%1.17e", Double.box(v))
 
-  def boxIntersectOracleSql(dLat: Double = 0.002, dLng: Double = 0.002,
-                            stride: Int = 100): String = {
-    val pts = pointsOracleSql()
+  def boxIntersectOracleSql: String = {
+    val pts = pointsOracleSql
     val corners = Seq(("-", "-"), ("+", "-"), ("+", "+"), ("-", "+"))
-    val (dLa, dLo) = (dbl(dLat), dbl(dLng))
+    val (dLa, dLo) = (dbl(0.002), dbl(0.002))
     val perPoly = convexPolygons.map { case (id, _, ring) =>
       val xs = ring.map(_._1); val ys = ring.map(_._2)
       val (minX, maxX) = (dbl(xs.min), dbl(xs.max))
@@ -160,7 +158,7 @@ object Fixtures {
         }.mkString("(", " OR ", ")")
       }
       s"SELECT p.point_id, CAST($id AS BIGINT) AS poly_id FROM pts p " +
-        s"WHERE p.point_id % $stride = 0 AND $notSep AND ${edgeConds.mkString(" AND ")}"
+        s"WHERE p.point_id % 100 = 0 AND $notSep AND ${edgeConds.mkString(" AND ")}"
     }
     s"WITH pts AS ($pts) ${perPoly.mkString(" UNION ALL ")} ORDER BY point_id, poly_id"
   }
@@ -318,11 +316,9 @@ object Fixtures {
    * the oracle computes the same buckets the engine does. Valid while no
    * gate bucket exceeds the star cap (fixture buckets are tiny).
    */
-  def minhashLshOracleSql(k: Int = 3, numHashes: Int = 32, bands: Int = 8,
-                          threshold: Double = 0.4): String = {
+  def minhashLshOracleSql: String = {
     import U64Sql._
-    val rowsPerBand = numHashes / bands
-    require(rowsPerBand == 4, "the unrolled band-hash fold is generated for rowsPerBand=4")
+    val (k, numHashes, rowsPerBand, threshold) = (3, 32, 4, 0.4)
     val (seedCtes, seedOut) = sm64Ctes("seed0", Seq("i"))
     val (xCtes, xOut) = sm64Ctes("xin", Seq("doc_id", "i"))
     val hops = (0 until rowsPerBand).flatMap { r =>
@@ -363,34 +359,6 @@ object Fixtures {
        |FROM cand c JOIN sh sa ON sa.doc_id = c.id_a JOIN sh sb ON sb.doc_id = c.id_b
        |WHERE CAST(len(list_intersect(sa.s, sb.s)) AS DOUBLE) / CAST(len(list_distinct(list_concat(sa.s, sb.s))) AS DOUBLE) >= $threshold
        |ORDER BY id_a, id_b""".stripMargin
-  }
-
-  /** Seeded polygon fleet for benchmarks: n pentagons of varied size (0.3-4 km)
-    * over the point bbox, overlapping the hot cluster — a realistic feature
-    * side (hundreds of areas) for the flagship spatial join. */
-  def benchPolygons(spark: SparkSession, n: Int, maxLevel: Int = 16,
-                    maxCells: Int = 5): DataFrame = {
-    CellExprs.install(spark)
-    import spark.implicits._
-    val rows = (0 until n).map { i =>
-      val h = splitmix64(1000L + i)
-      def frac(shift: Int, mod: Int): Double =
-        ((h >>> shift) & 0xffffL).toDouble % mod / mod.toDouble
-      val cLat = 51.462 + frac(0, 9973) * 0.158
-      val cLng = -0.208 + frac(16, 9941) * 0.152
-      val rKm = 0.15 + frac(32, 9907) * 1.1
-      val rLat = rKm / 111.19
-      val rLng = rLat / math.cos(math.toRadians(cLat))
-      val ring = (0 until 5).map { k =>
-        val a = 2 * math.Pi * k / 5 + frac(48, 9871)
-        new org.locationtech.jts.geom.Coordinate(
-          cLng + rLng * math.cos(a), cLat + rLat * math.sin(a))
-      } :+ new org.locationtech.jts.geom.Coordinate(
-        cLng + rLng * math.cos(frac(48, 9871)), cLat + rLat * math.sin(frac(48, 9871)))
-      (1000L + i, "bench", GeoOps.toWkb(GeoOps.factory.createPolygon(ring.toArray)))
-    }
-    rows.toDF("poly_id", "tag", "geom")
-      .withColumn("covering", CellExprs.cell_covering(col("geom"), lit(maxLevel), lit(maxCells)))
   }
 
   // ---- kNN sites -------------------------------------------------------------
@@ -580,7 +548,7 @@ object Fixtures {
    * `bytes` (at 10^12 scale the engine's columnar scan prunes `bytes` for
    * join/tile stages anyway — this generator stands in for that pruned scan).
    */
-  def imagesMeta(spark: SparkSession, n: Long, partitions: Int = 32): DataFrame = {
+  def imagesMeta(spark: SparkSession, n: Long, partitions: Int): DataFrame = {
     CellExprs.install(spark)
     spark.range(0, n, 1, partitions)
       .select(
@@ -602,10 +570,10 @@ object Fixtures {
       .drop("i", "w_idx")
   }
 
-  def images(spark: SparkSession, n: Long, partitions: Int = 32): DataFrame = {
+  def images(spark: SparkSession, n: Long): DataFrame = {
     CellExprs.install(spark)
     import spark.implicits._
-    val ds = spark.range(0, n, 1, partitions).map(i => imageRow(i))
+    val ds = spark.range(0, n, 1, 32).map(i => imageRow(i))
     // Persist the synthetic table: in production the input_hint images table
     // is a STORED table (parquet/Iceberg), so pixel-generation cost is a
     // fixture artifact — caching makes every consumer (decode, thumbs,

@@ -244,8 +244,7 @@ object Aggs {
    * the driver from [[smallCounts]]; wider inputs take
    * [[histogramUniformWide]].
    */
-  def histogramUniform(df: DataFrame, valueCol: String, maxBuckets: Int = 6): DataFrame = {
-    require(maxBuckets == 6, "reference semantics fix MaxHistogramBuckets=6")
+  def histogramUniform(df: DataFrame, valueCol: String): DataFrame =
     smallCounts(df, col(valueCol)) match {
       case Some(counts) =>
         val d = counts.length.toLong
@@ -260,7 +259,6 @@ object Aggs {
           StructField("hi", vType), StructField("n", LongType))))
       case None => histogramUniformWide(df, valueCol)
     }
-  }
 
   /** [[histogramUniform]] fully distributed over the (v, c) counts: the
     * distinct set is ranked by `rankedCounts`, bucketed by [[uniformBucket]],
@@ -328,11 +326,11 @@ object Aggs {
 
   /** Origin-destination histogram (api/histogram.go:139-178): per origin the
     * number of VALID destinations (the filter-accessible invalid sentinel
-    * counts as zero), then origins bucketed by that count. */
-  def odHistogram(od: DataFrame, keyCol: String = "origin", valueCol: String = "node",
-                  invalidId: Long = -1L): DataFrame =
-    od.groupBy(col(keyCol))
-      .agg(sum(when(col(valueCol) =!= invalidId, 1L).otherwise(0L)).as("n_valid"))
+    * counts as zero), then origins bucketed by that count. Rows are
+    * (origin, node). */
+  def odHistogram(od: DataFrame): DataFrame =
+    od.groupBy(col("origin"))
+      .agg(sum(when(col("node") =!= -1L, 1L).otherwise(0L)).as("n_valid"))
       .groupBy("n_valid").agg(count(lit(1)).as("n_origins"))
 
   /**
@@ -345,7 +343,7 @@ object Aggs {
    * bucket bounds ever reach the driver.
    */
   def histogramChange(df: DataFrame, valueCol: String, keyCol: String,
-                      ns: String, id: Long, swatch: Boolean = false): (Changes.ChangeSet, DataFrame) = {
+                      ns: String, id: Long, swatch: Boolean): (Changes.ChangeSet, DataFrame) = {
     val buckets = histogramUniform(df, valueCol).orderBy("bucket").collect()
     val lows = buckets.map(r => r.getAs[Number]("lo").doubleValue())
     val labels = lows.indices.map { i =>

@@ -77,16 +77,14 @@ object Ann {
    * data: (id, vec), queries: (qid, qvec). Broadcast the (small) query side;
    * the scan over `data` is a single no-shuffle map, then a per-query top-k.
    */
-  def cosineTopK(data: DataFrame, queries: DataFrame, k: Int,
-                 idCol: String = "vec_id", vecCol: String = "embedding",
-                 qidCol: String = "qid", qvecCol: String = "qvec"): DataFrame = {
+  def cosineTopK(data: DataFrame, queries: DataFrame, k: Int): DataFrame = {
     val scored = parallelized(data).join(broadcast(queries))
-      .where(col(idCol) =!= col(qidCol))
+      .where(col("vec_id") =!= col("qid"))
       .withColumn("cosine",
-        cosineOf(col(vecCol), col(qvecCol)))
-    val w = Window.partitionBy(col(qidCol)).orderBy(col("cosine").desc, col(idCol))
+        cosineOf(col("embedding"), col("qvec")))
+    val w = Window.partitionBy(col("qid")).orderBy(col("cosine").desc, col("vec_id"))
     scored.withColumn("rank", row_number().over(w)).where(col("rank") <= k)
-      .select(col(qidCol), col("rank"), col(idCol).as("neighbor_id"), col("cosine"))
+      .select(col("qid"), col("rank"), col("vec_id").as("neighbor_id"), col("cosine"))
   }
 
   /** Deterministic Rademacher (+1/-1) hyperplanes, PRECOMPUTED once per
@@ -107,9 +105,7 @@ object Ann {
    * equi-join, never a cross join; pairs emit once (id_a < id_b).
    */
   def cosineNearDupPairs(data: DataFrame, threshold: Double, bits: Int = 8,
-                         tables: Int = 8,
-                         idCol: String = "vec_id", vecCol: String = "embedding",
-                         maxBucketSize: Int = 1024): DataFrame = {
+                         tables: Int = 8, maxBucketSize: Int = 1024): DataFrame = {
     // the planes are a pure function of the vector length, so each task
     // builds them from the first vector it reads (and again only if a later
     // vector's length differs) — no driver-side dim probe, no broadcast. One
@@ -142,7 +138,7 @@ object Ann {
       }
       out
     }
-    val base = data.select(col(idCol).as("__id"), col(vecCol).as("__v"))
+    val base = data.select(col("vec_id").as("__id"), col("embedding").as("__v"))
       .persist()
     val d = base
       .withColumn("__bs", buckets(col("__v")))
@@ -167,10 +163,9 @@ object Ann {
    * and search are fully distributed.
    */
   def trainIvfCentroids(data: DataFrame, nLists: Int, iters: Int = 5,
-                        sampleN: Int = 4096,
-                        idCol: String = "vec_id", vecCol: String = "embedding"): Array[Array[Double]] = {
-    val sample = data.orderBy(col(idCol)).limit(sampleN)
-      .select(col(vecCol)).collect()
+                        sampleN: Int = 4096): Array[Array[Double]] = {
+    val sample = data.orderBy(col("vec_id")).limit(sampleN)
+      .select(col("embedding")).collect()
       .map(_.getSeq[Float](0).toArray.map(_.toDouble))
     require(sample.nonEmpty, "empty training sample")
     val dim = sample.head.length
@@ -216,9 +211,7 @@ object Ann {
    * whole search replays bit-exactly in SQL with the centroids as literals.
    */
   def cosineIvf(data: DataFrame, queries: DataFrame, k: Int,
-                centroids: Array[Array[Double]], nProbe: Int = 8,
-                idCol: String = "vec_id", vecCol: String = "embedding",
-                qidCol: String = "qid", qvecCol: String = "qvec"): DataFrame = {
+                centroids: Array[Array[Double]], nProbe: Int): DataFrame = {
     val spark = data.sparkSession
     val bc = spark.sparkContext.broadcast(centroids)
     val assign = udf { (vec: Seq[Float]) =>
@@ -255,19 +248,19 @@ object Ann {
       }
       scored.sortBy { case (c, l) => (-c, l) }.take(nProbe).map(_._2)
     }
-    val d = parallelized(data).withColumn("__list", assign(col(vecCol)))
-    val q = queries.withColumn("__list", explode(probe(col(qvecCol))))
+    val d = parallelized(data).withColumn("__list", assign(col("embedding")))
+    val q = queries.withColumn("__list", explode(probe(col("qvec"))))
     // no pair-dedup needed: each data vector is assigned to exactly ONE
     // list, so a (data, query) pair can meet on at most one probed list —
     // the join output is already distinct and a dedup would only add a
     // full-width shuffle
     val cand = observed(d.join(broadcast(q), Seq("__list"))
-      .where(col(idCol) =!= col(qidCol)))
+      .where(col("vec_id") =!= col("qid")))
       .withColumn("cosine",
-        cosineOf(col(vecCol), col(qvecCol)))
-    val w = Window.partitionBy(col(qidCol)).orderBy(col("cosine").desc, col(idCol))
+        cosineOf(col("embedding"), col("qvec")))
+    val w = Window.partitionBy(col("qid")).orderBy(col("cosine").desc, col("vec_id"))
     cand.withColumn("rank", row_number().over(w)).where(col("rank") <= k)
-      .select(col(qidCol), col("rank").cast("long").as("rank"), col(idCol).as("neighbor_id"), col("cosine"))
+      .select(col("qid"), col("rank").cast("long").as("rank"), col("vec_id").as("neighbor_id"), col("cosine"))
   }
 
   /**
@@ -276,17 +269,16 @@ object Ann {
    * Search", TPAMI 2011 — public paper): the vector splits into `m`
    * subspaces, each quantized against its own `k`-centroid codebook, so a
    * d-float vector stores as m small codes. Training is deterministic
-   * Lloyd's per subspace over a driver-side sample (ordered by id), with the
+   * Lloyd's (`iters` rounds) per subspace over a driver-side sample of the
+   * first `sampleN` vectors by id, with the
    * L2 argmin expressed as argmax(dot(v,c) - 0.5*dot(c,c)) — pure
    * sequential-double arithmetic, so codebooks double as DuckDB literals.
    * Returns [m][k][d/m].
    */
-  def trainPqCodebooks(data: DataFrame, m: Int = 8, k: Int = 16,
-                       iters: Int = 3, sampleN: Int = 256,
-                       idCol: String = "vec_id",
-                       vecCol: String = "embedding"): Array[Array[Array[Double]]] = {
-    val sample = data.orderBy(col(idCol)).limit(sampleN)
-      .select(col(vecCol)).collect()
+  def trainPqCodebooks(data: DataFrame): Array[Array[Array[Double]]] = {
+    val (m, k, iters, sampleN) = (8, 16, 3, 256)
+    val sample = data.orderBy(col("vec_id")).limit(sampleN)
+      .select(col("embedding")).collect()
       .map(_.getSeq[Float](0).toArray.map(_.toDouble))
     require(sample.nonEmpty && sample.head.length % m == 0,
       s"dim ${sample.headOption.map(_.length)} must divide into $m subspaces")
@@ -331,8 +323,7 @@ object Ann {
 
   /** PQ-encode every vector: (id, codes[m]). Codes-only storage downstream —
     * the shuffle and state cost per vector drops from d floats to m bytes. */
-  def pqEncode(data: DataFrame, codebooks: Array[Array[Array[Double]]],
-               idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+  def pqEncode(data: DataFrame, codebooks: Array[Array[Array[Double]]]): DataFrame = {
     val bc = data.sparkSession.sparkContext.broadcast(codebooks)
     val sub = codebooks.head.head.length
     val enc = udf { (vec: Seq[Float]) =>
@@ -345,7 +336,7 @@ object Ann {
         pqAssignOne(v, cb(s))
       }
     }
-    data.select(col(idCol), enc(col(vecCol)).as("codes"))
+    data.select(col("vec_id"), enc(col("embedding")).as("codes"))
   }
 
   /**
@@ -357,13 +348,11 @@ object Ann {
    * (qid, rank, neighbor_id) ranked by ADC score desc, id.
    */
   def cosinePq(data: DataFrame, queries: DataFrame, k: Int,
-               codebooks: Array[Array[Array[Double]]],
-               idCol: String = "vec_id", vecCol: String = "embedding",
-               qidCol: String = "qid", qvecCol: String = "qvec"): DataFrame = {
+               codebooks: Array[Array[Array[Double]]]): DataFrame = {
     val spark = data.sparkSession
     val bc = spark.sparkContext.broadcast(codebooks)
     val sub = codebooks.head.head.length
-    val codes = pqEncode(parallelized(data), codebooks, idCol, vecCol)
+    val codes = pqEncode(parallelized(data), codebooks)
     val score = udf { (qvec: Seq[Float], cds: Seq[Int]) =>
       val qv = qvec.toArray // unbox once; read twice per element below
       val cb = bc.value
@@ -389,25 +378,23 @@ object Ann {
       num / (math.sqrt(qq) * math.sqrt(rr))
     }
     val cand = codes.join(broadcast(queries))
-      .where(col(idCol) =!= col(qidCol))
-      .withColumn("adc", score(col(qvecCol), col("codes")))
-    val w = Window.partitionBy(col(qidCol)).orderBy(col("adc").desc, col(idCol))
+      .where(col("vec_id") =!= col("qid"))
+      .withColumn("adc", score(col("qvec"), col("codes")))
+    val w = Window.partitionBy(col("qid")).orderBy(col("adc").desc, col("vec_id"))
     cand.withColumn("rank", row_number().over(w)).where(col("rank") <= k)
-      .select(col(qidCol), col("rank").cast("long").as("rank"), col(idCol).as("neighbor_id"))
+      .select(col("qid"), col("rank").cast("long").as("rank"), col("vec_id").as("neighbor_id"))
   }
 
   /**
-   * LSH-bucketed approximate NN: join on signed-random-projection bucket over
-   * `tables` independent hash tables, then exact cosine within buckets.
+   * LSH-bucketed approximate NN: join on a 5-bit signed-random-projection
+   * bucket over 16 independent hash tables, then exact cosine within buckets.
    * Recall < 1 by construction; tested against the brute-force baseline.
    * Scale shape: the shuffle key is (table, bucket) — candidates meet by
    * bucket equi-join, never a cross join; the plane matrix is broadcast.
    */
-  def cosineLsh(data: DataFrame, queries: DataFrame, k: Int, bits: Int = 12,
-                tables: Int = 4,
-                idCol: String = "vec_id", vecCol: String = "embedding",
-                qidCol: String = "qid", qvecCol: String = "qvec"): DataFrame = {
+  def cosineLsh(data: DataFrame, queries: DataFrame, k: Int): DataFrame = {
     val spark = data.sparkSession
+    val (bits, tables) = (5, 16)
     // The query side is broadcast-sized by contract (the previous plan
     // already broadcast it twice); collecting it lets the WHOLE candidate
     // generation + exact scoring run as ONE scan-side pass over the data:
@@ -419,7 +406,7 @@ object Ann {
     // big side still never shuffles; the only Exchange left is the per-query
     // top-k window. The planes take their dim from those collected query
     // vectors, which share the data's embedding length.
-    val qRows = queries.select(col(qidCol).cast("long"), col(qvecCol)).collect()
+    val qRows = queries.select(col("qid").cast("long"), col("qvec")).collect()
     val qIds = qRows.map(_.getLong(0))
     val qVecs = qRows.map(_.getSeq[Float](1).toArray)
     val pl = planes(tables, bits, qVecs.headOption.fold(0)(_.length))
@@ -479,10 +466,10 @@ object Ann {
       out
     }
     val cand = observed(parallelized(data)
-      .select(col(idCol), explode(scoreMatches(col(idCol).cast("long"), col(vecCol))).as("__m"))
-      .select(col("__m._1").as(qidCol), col(idCol), col("__m._2").as("cosine")))
-    val w = Window.partitionBy(col(qidCol)).orderBy(col("cosine").desc, col(idCol))
+      .select(col("vec_id"), explode(scoreMatches(col("vec_id").cast("long"), col("embedding"))).as("__m"))
+      .select(col("__m._1").as("qid"), col("vec_id"), col("__m._2").as("cosine")))
+    val w = Window.partitionBy(col("qid")).orderBy(col("cosine").desc, col("vec_id"))
     cand.withColumn("rank", row_number().over(w)).where(col("rank") <= k)
-      .select(col(qidCol), col("rank"), col(idCol).as("neighbor_id"), col("cosine"))
+      .select(col("qid"), col("rank"), col("vec_id").as("neighbor_id"), col("cosine"))
   }
 }

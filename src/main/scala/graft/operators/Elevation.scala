@@ -10,7 +10,7 @@ import graft.functions.CellExprs._
  * (src/diagonal.works/b6/elevation.go:18-64: sorted-cell array of spots,
  * query = 1/d weighting of spots within radius via covering search).
  *
- * Spark shape: spots carry a cell at `level`; queries explode a neighbor disk
+ * Spark shape: spots carry a level-12 cell; queries explode a neighbor disk
  * large enough to cover `radius`, equi-join on cell, refine by haversine and
  * aggregate sum(e/d)/sum(1/d). Spot tables are usually broadcastable; at
  * terrain scale the equi-join sort-merges on cell with no skew (heights are
@@ -23,8 +23,8 @@ object Elevation {
    * Returns (qid, elevation) — IDW over spots within radiusMeters; queries with
    * no spot in range are absent (the reference returns an error for those).
    */
-  def elevationAt(queries: DataFrame, spots: DataFrame, radiusMeters: Double,
-                  level: Int = 12): DataFrame = {
+  def elevationAt(queries: DataFrame, spots: DataFrame, radiusMeters: Double): DataFrame = {
+    val level = 12
     val metersPerDegLat = math.Pi * graft.core.GeoOps.EarthRadiusMeters / 180.0
     val cellLatMeters = 180.0 / (1L << level).toDouble * metersPerDegLat
     // disk radius in cells: ceil(radius / min-cell-dimension) + 1 for safety;

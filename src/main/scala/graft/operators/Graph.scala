@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
@@ -77,23 +77,23 @@ object Graph {
     Csr(nodeIds, offsets, dstIdx, costs)
   }
 
-  /** A street network prepared for repeated searches: collect + CSR-build +
-    * broadcast happen ONCE; every reachable/closest/paths-to-reach call over
-    * the same Network reuses the executor-resident structure instead of
-    * re-collecting the edge table per query. */
-  final case class Network(bc: Broadcast[Csr])
-
-  def network(edges: DataFrame): Network = network(edges, edgeRows(edges).collect())
-
-  private def network(edges: DataFrame, rows: Array[(Long, Long, Double)]): Network =
-    Network(edges.sparkSession.sparkContext.broadcast(buildCsr(rows)))
-
-  private def edgeRows(edges: DataFrame): Dataset[(Long, Long, Double)] = {
+  /** The network as a CSR broadcast to every executor, from ONE guarded
+    * collect of up to `MaxBroadcastEdges + 1` edge rows: when they fit, they
+    * are the network; above the bound there is None (the knnJoin pattern). */
+  private def broadcastCsr(edges: DataFrame): Option[Broadcast[Csr]] = {
     val spark = edges.sparkSession
     import spark.implicits._
-    edges.select(col("src").cast("long"), col("dst").cast("long"),
+    val rows = edges.select(col("src").cast("long"), col("dst").cast("long"),
       col("cost_m").cast("double")).as[(Long, Long, Double)]
+      .limit(MaxBroadcastEdges + 1).collect()
+    if (rows.length > MaxBroadcastEdges) None
+    else Some(spark.sparkContext.broadcast(buildCsr(rows)))
   }
+
+  /** [[broadcastCsr]] for the searches that have no iterative path. */
+  private def requireBroadcast(edges: DataFrame, search: String): Broadcast[Csr] =
+    broadcastCsr(edges).getOrElse(throw new IllegalArgumentException(
+      s"$search runs on networks of at most $MaxBroadcastEdges edges; this one has more"))
 
   /**
    * Budget-bounded Dijkstra from one origin over the CSR (binary heap with
@@ -149,10 +149,43 @@ object Graph {
     reached
   }
 
-  /** Scratch arrays shared across the origins of one partition (version-stamped
-    * so per-origin reset is O(1), not O(n)). */
-  private def scratch(n: Int): (Array[Double], Array[Int], Array[Int]) =
-    (new Array[Double](n), new Array[Int](n), new Array[Int](n))
+  /** One origin's finished search: the `reached` node indices in settle
+    * order, with `dist` and `parent` filled for each (`parent` -1 at the
+    * origin); `isTarget` flags the target nodes, or is null. */
+  private final class Settled(val csr: Csr, val origin: Long, val originIdx: Int,
+      val reached: scala.collection.mutable.ArrayBuffer[Int], val dist: Array[Double],
+      val parent: Array[Int], val isTarget: Array[Boolean])
+
+  /**
+   * The per-origin search every operator below runs: the `origin` column
+   * fans out over partitions; each partition shares version-stamped scratch
+   * arrays across its origins (per-origin reset is O(1), not O(n)) and runs
+   * one [[dijkstra]] per origin found in the network, early-exiting at the
+   * nearest target when `targets` is given. `emit` turns each finished
+   * search into output rows.
+   */
+  private def searchEach[T: Encoder](origins: DataFrame, bc: Broadcast[Csr],
+      budgetMeters: Double, targets: Option[Broadcast[Set[Long]]])(
+      emit: Settled => Iterator[T]): Dataset[T] =
+    origins.select(col("origin").cast("long")).as[Long](Encoders.scalaLong).mapPartitions { it =>
+      val csr = bc.value
+      val isTarget = targets.map { t =>
+        val flags = new Array[Boolean](csr.n)
+        t.value.foreach { id => val i = csr.indexOf(id); if (i >= 0) flags(i) = true }
+        flags
+      }.orNull
+      val (dist, parent, stamp) = (new Array[Double](csr.n), new Array[Int](csr.n), new Array[Int](csr.n))
+      var version = 0
+      it.flatMap { o =>
+        val oi = csr.indexOf(o)
+        if (oi < 0) Iterator.empty
+        else {
+          version += 1
+          val reached = dijkstra(csr, oi, budgetMeters, dist, parent, stamp, version, isTarget)
+          emit(new Settled(csr, o, oi, reached, dist, parent, isTarget))
+        }
+      }
+    }
 
   // ---- public operators ------------------------------------------------------
 
@@ -161,39 +194,19 @@ object Graph {
    * (origin, node, dist_m) for every node with dist_m < budget.
    * b6 `accessible-all` semantics (api/functions/graph.go:185-245) — every
    * origin expands independently; here one partition-local Dijkstra per origin
-   * over the broadcast network.
+   * over the broadcast network. A network above `MaxBroadcastEdges` takes
+   * [[reachableIterative]] instead.
    */
-  def reachable(edges: DataFrame, origins: DataFrame, budgetMeters: Double,
-                originCol: String = "origin"): DataFrame = {
-    // ONE job decides broadcast-vs-iterative AND seeds the CSR: collect up to
-    // MaxBroadcastEdges + 1 edge rows — when they fit, they are the network
-    // (the knnJoin pattern); otherwise the iterative loop re-reads the table
-    val rows = edgeRows(edges).limit(MaxBroadcastEdges + 1).collect()
-    if (rows.length > MaxBroadcastEdges)
-      reachableIterative(edges, origins, budgetMeters, originCol)
-    else reachable(network(edges, rows), origins, budgetMeters, originCol)
-  }
-
-  /** Repeated-search variant over a prepared Network (no per-call collect). */
-  def reachable(net: Network, origins: DataFrame, budgetMeters: Double,
-                originCol: String): DataFrame = {
+  def reachable(edges: DataFrame, origins: DataFrame, budgetMeters: Double): DataFrame = {
     val spark = origins.sparkSession
     import spark.implicits._
-    val bc = net.bc
-    origins.select(col(originCol).cast("long")).as[Long].mapPartitions { it =>
-      val csr = bc.value
-      val (dist, parent, stamp) = scratch(csr.n)
-      var version = 0
-      it.flatMap { o =>
-        val oi = csr.indexOf(o)
-        if (oi < 0) Iterator.empty
-        else {
-          version += 1
-          val reached = dijkstra(csr, oi, budgetMeters, dist, parent, stamp, version, null)
-          reached.iterator.map(i => (o, csr.nodeIds(i), dist(i)))
-        }
-      }
-    }.toDF("origin", "node", "dist_m")
+    broadcastCsr(edges) match {
+      case Some(bc) =>
+        searchEach(origins, bc, budgetMeters, None) { s =>
+          s.reached.iterator.map(i => (s.origin, s.csr.nodeIds(i), s.dist(i)))
+        }.toDF("origin", "node", "dist_m")
+      case None => reachableIterative(edges, origins, budgetMeters)
+    }
   }
 
   /**
@@ -202,29 +215,13 @@ object Graph {
    * Returns (origin, node, dist_m, parent); parent is null at the origin.
    */
   def reachableWithParents(edges: DataFrame, origins: DataFrame,
-                           budgetMeters: Double, originCol: String = "origin"): DataFrame =
-    reachableWithParents(network(edges), origins, budgetMeters, originCol)
-
-  def reachableWithParents(net: Network, origins: DataFrame,
-                           budgetMeters: Double, originCol: String): DataFrame = {
+                           budgetMeters: Double): DataFrame = {
     val spark = origins.sparkSession
     import spark.implicits._
-    val bc = net.bc
-    origins.select(col(originCol).cast("long")).as[Long].mapPartitions { it =>
-      val csr = bc.value
-      val (dist, parent, stamp) = scratch(csr.n)
-      var version = 0
-      it.flatMap { o =>
-        val oi = csr.indexOf(o)
-        if (oi < 0) Iterator.empty
-        else {
-          version += 1
-          val reached = dijkstra(csr, oi, budgetMeters, dist, parent, stamp, version, null)
-          reached.iterator.map { i =>
-            val p: Option[Long] = if (parent(i) < 0) None else Some(csr.nodeIds(parent(i)))
-            (o, csr.nodeIds(i), dist(i), p)
-          }
-        }
+    searchEach(origins, requireBroadcast(edges, "reachableWithParents"), budgetMeters, None) { s =>
+      s.reached.iterator.map { i =>
+        val p: Option[Long] = if (s.parent(i) < 0) None else Some(s.csr.nodeIds(s.parent(i)))
+        (s.origin, s.csr.nodeIds(i), s.dist(i), p)
       }
     }.toDF("origin", "node", "dist_m", "parent")
   }
@@ -253,38 +250,20 @@ object Graph {
    * avoids; we take the early exit). Tiebreak: smaller node id on equal distance.
    */
   def closest(edges: DataFrame, origins: DataFrame, targets: DataFrame,
-              budgetMeters: Double): DataFrame =
-    closest(network(edges), origins, targets, budgetMeters)
-
-  def closest(net: Network, origins: DataFrame, targets: DataFrame,
               budgetMeters: Double): DataFrame = {
     val spark = origins.sparkSession
     import spark.implicits._
+    val bc = requireBroadcast(edges, "closest")
     val targetIds = targets.select(col(targets.columns.head).cast("long"))
       .as[Long].collect().toSet
-    val bc = net.bc
-    val bt = spark.sparkContext.broadcast(targetIds)
-    origins.select(col("origin").cast("long")).as[Long].mapPartitions { it =>
-      val csr = bc.value
-      val isTarget = new Array[Boolean](csr.n)
-      bt.value.foreach { t => val i = csr.indexOf(t); if (i >= 0) isTarget(i) = true }
-      val (dist, parent, stamp) = scratch(csr.n)
-      var version = 0
-      it.flatMap { o =>
-        val oi = csr.indexOf(o)
-        if (oi < 0) Iterator.empty
-        else {
-          version += 1
-          val reached = dijkstra(csr, oi, budgetMeters, dist, parent, stamp, version, isTarget)
-          var best = -1
-          reached.foreach { i =>
-            if (isTarget(i) && (best < 0 || dist(i) < dist(best) ||
-              (dist(i) == dist(best) && csr.nodeIds(i) < csr.nodeIds(best)))) best = i
-          }
-          if (best < 0) Iterator.empty
-          else Iterator((o, csr.nodeIds(best), dist(best)))
-        }
+    searchEach(origins, bc, budgetMeters, Some(spark.sparkContext.broadcast(targetIds))) { s =>
+      var best = -1
+      s.reached.foreach { i =>
+        if (s.isTarget(i) && (best < 0 || s.dist(i) < s.dist(best) ||
+          (s.dist(i) == s.dist(best) && s.csr.nodeIds(i) < s.csr.nodeIds(best)))) best = i
       }
+      if (best < 0) Iterator.empty
+      else Iterator((s.origin, s.csr.nodeIds(best), s.dist(best)))
     }.toDF("origin", "node", "dist_m")
   }
 
@@ -293,58 +272,32 @@ object Graph {
    * times it lies on THE backtraced shortest path (graph.go BuildPath) from an
    * origin to a reached destination — NOT "every tight edge"; parallel
    * equal-cost paths contribute only via the deterministically-chosen parent
-   * chain (smallest tight predecessor id). Destinations default to every
-   * reached node; pass `targets` to count paths to a subset only.
+   * chain (smallest tight predecessor id). Every reached node is a
+   * destination.
    */
-  def pathsToReach(edges: DataFrame, origins: DataFrame, budgetMeters: Double,
-                   targets: Option[DataFrame] = None): DataFrame =
-    pathsToReach(network(edges), origins, budgetMeters, targets)
-
-  def pathsToReach(net: Network, origins: DataFrame, budgetMeters: Double,
-                   targets: Option[DataFrame]): DataFrame = {
+  def pathsToReach(edges: DataFrame, origins: DataFrame, budgetMeters: Double): DataFrame = {
     val spark = origins.sparkSession
     import spark.implicits._
-    val bc = net.bc
-    val bt = spark.sparkContext.broadcast(
-      targets.map(_.select(col(targets.get.columns.head).cast("long")).as[Long].collect().toSet))
-    val uses = origins.select(col("origin").cast("long")).as[Long].mapPartitions { it =>
-      val csr = bc.value
-      val wanted: Int => Boolean = bt.value match {
-        case None => _ => true
-        case Some(s) =>
-          val flags = new Array[Boolean](csr.n)
-          s.foreach { t => val i = csr.indexOf(t); if (i >= 0) flags(i) = true }
-          flags(_)
-      }
-      val (dist, parent, stamp) = scratch(csr.n)
-      var version = 0
-      it.flatMap { o =>
-        val oi = csr.indexOf(o)
-        if (oi < 0) Iterator.empty
-        else {
-          version += 1
-          val reached = dijkstra(csr, oi, budgetMeters, dist, parent, stamp, version, null)
-          // count (src,dst) usage along each destination's single parent chain
-          val counts = new java.util.HashMap[Long, Long]()
-          reached.foreach { d =>
-            if (d != oi && wanted(d)) {
-              var v = d
-              while (parent(v) >= 0) {
-                val key = parent(v).toLong << 32 | (v.toLong & 0xffffffffL)
-                counts.merge(key, 1L, (a, b) => a + b)
-                v = parent(v)
-              }
-            }
+    searchEach(origins, requireBroadcast(edges, "pathsToReach"), budgetMeters, None) { s =>
+      // count (src,dst) usage along each destination's single parent chain
+      val counts = new java.util.HashMap[Long, Long]()
+      s.reached.foreach { d =>
+        if (d != s.originIdx) {
+          var v = d
+          while (s.parent(v) >= 0) {
+            val key = s.parent(v).toLong << 32 | (v.toLong & 0xffffffffL)
+            counts.merge(key, 1L, (a, b) => a + b)
+            v = s.parent(v)
           }
-          val out = new scala.collection.mutable.ArrayBuffer[(Long, Long, Long)](counts.size)
-          counts.forEach { (k, n) =>
-            out += ((csr.nodeIds((k >> 32).toInt), csr.nodeIds(k.toInt), n))
-          }
-          out.iterator
         }
       }
+      val out = new scala.collection.mutable.ArrayBuffer[(Long, Long, Long)](counts.size)
+      counts.forEach { (k, n) =>
+        out += ((s.csr.nodeIds((k >> 32).toInt), s.csr.nodeIds(k.toInt), n))
+      }
+      out.iterator
     }.toDF("src", "dst", "n_paths")
-    uses.groupBy("src", "dst").agg(sum("n_paths").as("n_paths"))
+      .groupBy("src", "dst").agg(sum("n_paths").as("n_paths"))
   }
 
   /**
@@ -353,31 +306,30 @@ object Graph {
    * survives, emit a single (key, invalid-id sentinel) row so callers can
    * count unserved origins. The reference's invalid FeatureID maps to -1.
    *
-   * One exchange keyed by `keyCol`: each OD row is marked surviving or not,
+   * Rows are (origin, node). One exchange keyed by origin: each OD row is
+   * marked surviving or not,
    * one aggregation per key lists the surviving destinations, and a key
    * whose list is empty gets the sentinel. The output stays hash-partitioned
-   * by `keyCol`, so a following per-key aggregation ([[Aggs.odHistogram]])
+   * by origin, so a following per-key aggregation ([[Aggs.odHistogram]])
    * adds no exchange. Survivors are read by one guarded
    * `limit(N + 1).collect()`: up to [[MaxDriverSurvivors]] ids they mark the
    * rows as an in-set test; more are joined (a left outer join against their
    * distinct ids, one more exchange). Duplicate survivor ids never
    * duplicate an OD row.
    */
-  def filterAccessible(od: DataFrame, survivors: DataFrame,
-                       keyCol: String = "origin", valueCol: String = "node",
-                       invalidId: Long = -1L): DataFrame = {
+  def filterAccessible(od: DataFrame, survivors: DataFrame): DataFrame = {
     val sv = survivors.select(col(survivors.columns.head).as("__sv"))
     val ids = sv.limit(MaxDriverSurvivors + 1).collect().map(_.get(0))
     val marked =
       if (ids.length <= MaxDriverSurvivors)
-        od.select(col(keyCol), col(valueCol), col(valueCol).isin(ids.distinct.toIndexedSeq: _*).as("__ok"))
+        od.select(col("origin"), col("node"), col("node").isin(ids.distinct.toIndexedSeq: _*).as("__ok"))
       else
-        od.join(sv.distinct(), od(valueCol) === col("__sv"), "left_outer")
-          .select(col(keyCol), col(valueCol), col("__sv").isNotNull.as("__ok"))
-    val kept = marked.groupBy(col(keyCol))
-      .agg(collect_list(when(col("__ok"), col(valueCol))).as("__kept"))
-    kept.select(col(keyCol), explode(
-      when(size(col("__kept")) > 0, col("__kept")).otherwise(array(lit(invalidId)))).as(valueCol))
+        od.join(sv.distinct(), od("node") === col("__sv"), "left_outer")
+          .select(col("origin"), col("node"), col("__sv").isNotNull.as("__ok"))
+    val kept = marked.groupBy(col("origin"))
+      .agg(collect_list(when(col("__ok"), col("node"))).as("__kept"))
+    kept.select(col("origin"), explode(
+      when(size(col("__kept")) > 0, col("__kept")).otherwise(array(lit(-1L)))).as("node"))
   }
 
   /** Survivor ids up to which [[filterAccessible]] tests membership against
@@ -388,16 +340,15 @@ object Graph {
 
   /**
    * Delta-only frontier expansion on DataFrames for networks too large to
-   * broadcast. Per round: relax `hopsPerRound` hops from the improved rows
+   * broadcast. Per round: relax 6 hops from the improved rows
    * only, aggregate the pending deltas, left-join them against the (already
    * hash-partitioned) distance table to keep genuine improvements, and merge
    * via a full-outer join — so each round shuffles O(|delta|), never the
    * accumulated table. Budget semantics match the broadcast path (< budget).
    */
-  def reachableIterative(edges: DataFrame, origins: DataFrame, budgetMeters: Double,
-                         originCol: String = "origin", hopsPerRound: Int = 6): DataFrame = {
+  def reachableIterative(edges: DataFrame, origins: DataFrame, budgetMeters: Double): DataFrame = {
     val e = edges.select(col("src"), col("dst"), col("cost_m")).cache()
-    var dist = origins.select(col(originCol).as("origin"), col(originCol).as("node"),
+    var dist = origins.select(col("origin"), col("origin").as("node"),
       lit(0.0).as("dist_m"))
       .repartition(col("origin"), col("node"))
       .localCheckpoint()
@@ -406,7 +357,7 @@ object Graph {
     while (!done) {
       var f = frontier
       var pending = frontier.limit(0)
-      (1 to hopsPerRound).foreach { _ =>
+      (1 to 6).foreach { _ =>
         val eh = e.select(col("src").as("__s"), col("dst").as("__d"), col("cost_m").as("__w"))
         f = f.join(eh, f("node") === col("__s"))
           .select(col("origin"), col("__d").as("node"),
@@ -470,7 +421,7 @@ object Graph {
    * like the reference's threshold behavior.
    */
   def connectToNetwork(features: DataFrame, nodes: DataFrame, edges: DataFrame,
-                       maxMeters: Double, level: Int = 0): DataFrame = {
+                       maxMeters: Double): DataFrame = {
     graft.functions.CellExprs.install(features.sparkSession)
     // grid level derived from the cap radius (guide §2.3 — shuffle/scan fewer
     // bytes): the finest level whose cell still spans >= maxMeters, so the
@@ -478,7 +429,7 @@ object Graph {
     // The old fixed level 12 (~4.9 km cells) over-covered an 800 m cap ~16x
     // in candidate area; results are level-invariant (the ring guarantee is
     // exact at any level — SpatialJoinsSpec).
-    val lvl = if (level > 0) level else SpatialJoins.levelForRadius(maxMeters)
+    val lvl = SpatialJoins.levelForRadius(maxMeters)
     // the network-node table is the big side of the kNN; the features being
     // connected are the (small) query side
     val big = nodes.select(col("node_id").as("point_id"), col("lat"), col("lng"))

@@ -22,47 +22,41 @@ object ImageOps {
 
   /**
    * Cross-modal consistency QA over an image+caption table (the input_hint
-   * row shape): among image NEAR-DUPLICATE pairs (phash Hamming <= hamming
-   * bound), flag pairs whose captions disagree — near-identical images
+   * row shape): among image NEAR-DUPLICATE pairs (phash Hamming <= 3),
+   * flag pairs whose captions disagree — near-identical images
    * carrying different labels are the classic mislabeled-duplicate defect a
    * training pipeline must surface before dedup keeps an arbitrary one.
    * Returns (id_a, id_b, hamming, caption_match); downstream filters
    * `!caption_match` for the conflict report. Same banded join as
    * phashNearDupPairs — captions re-attach by id.
    */
-  def captionConflicts(images: DataFrame, maxHamming: Int = 3,
-                       idCol: String = "image_id",
-                       phashCol: String = "phash",
-                       captionCol: String = "caption"): DataFrame = {
+  def captionConflicts(images: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions._
     // captions ride the banded join's own two re-attach joins (carry cols) —
     // one persisted projection, no extra joins against the input
     TextOps.hammingPairs64(
-        images.select(col(idCol), col(phashCol), col(captionCol)),
-        idCol, phashCol, maxHamming, carry = Seq(captionCol))
+        images.select(col("image_id"), col("phash"), col("caption")),
+        "image_id", "phash", carry = Seq("caption"))
       .select(col("id_a"), col("id_b"), col("hamming"),
-        (col(s"${captionCol}_a") === col(s"${captionCol}_b")).as("caption_match"))
+        (col("caption_a") === col("caption_b")).as("caption_match"))
   }
 
   /** LAION/DataComp-style image-curation gate over the input_hint row shape
     * (w:int, h:int, caption:string): first-match drop reason, NULL = keep.
-    * Rules: minimum dimension, maximum aspect ratio, minimum caption token
-    * count. The aspect test stays in INTEGER arithmetic
-    * (greatest(w,h) > maxAspect * least(w,h)) so a DuckDB oracle replays the
+    * Rules: minimum dimension (`minDim`), aspect ratio at most 3, at least 5
+    * caption tokens. The aspect test stays in INTEGER arithmetic
+    * (greatest(w,h) > 3 * least(w,h)) so a DuckDB oracle replays the
     * gate bit-exactly; token counting reuses the shared engine-portable
     * fragment ([[TextOps.tokenCountSql]]). Pure per-row expressions — the
     * gate rides the parquet scan at corpus scale (no shuffle, fully
     * codegen'd). */
-  def curationFilter(images: DataFrame, minDim: Int = 256, maxAspect: Int = 3,
-                     minCaptionTokens: Int = 5,
-                     wCol: String = "w", hCol: String = "h",
-                     captionCol: String = "caption"): DataFrame = {
+  def curationFilter(images: DataFrame, minDim: Int = 256): DataFrame = {
     import org.apache.spark.sql.functions._
     images.withColumn("drop_reason",
-      when(col(wCol) < minDim || col(hCol) < minDim, "small")
-        .when(greatest(col(wCol), col(hCol)) >
-          lit(maxAspect) * least(col(wCol), col(hCol)), "aspect")
-        .when(expr(TextOps.tokenCountSql(captionCol)) < minCaptionTokens, "caption")
+      when(col("w") < minDim || col("h") < minDim, "small")
+        .when(greatest(col("w"), col("h")) >
+          lit(3) * least(col("w"), col("h")), "aspect")
+        .when(expr(TextOps.tokenCountSql("caption")) < 5, "caption")
         .otherwise(lit(null).cast("string")))
   }
 
@@ -104,16 +98,15 @@ object ImageOps {
     * Tie rule: a row exactly ON a geometric midpoint takes the HIGHER
     * (wider-aspect) bucket — the strict `<` falls through the WHEN.
     */
-  def aspectBucketCaseSql(buckets: Seq[(Int, Int)], wCol: String = "w",
-                          hCol: String = "h"): String = {
+  def aspectBucketCaseSql(buckets: Seq[(Int, Int)]): String = {
     val bs = ratioSorted(buckets)
     if (bs.size == 1) return "CAST(0 AS INT)"
     val whens = bs.sliding(2).zipWithIndex.collect {
       case (Seq((bw1, bh1), (bw2, bh2)), i) =>
         val bhp = bh1.toLong * bh2
         val bwp = bw1.toLong * bw2
-        s"WHEN CAST($wCol AS BIGINT) * $wCol * $bhp < " +
-          s"CAST($hCol AS BIGINT) * $hCol * $bwp THEN $i"
+        s"WHEN CAST(w AS BIGINT) * w * $bhp < " +
+          s"CAST(h AS BIGINT) * h * $bwp THEN $i"
     }.mkString(" ")
     s"CAST(CASE $whens ELSE ${bs.size - 1} END AS INT)"
   }
@@ -141,11 +134,10 @@ object ImageOps {
     * reference surface, same family as [[curationFilter]].)
     */
   def aspectBuckets(images: DataFrame,
-                    buckets: Seq[(Int, Int)] = DefaultAspectBuckets,
-                    wCol: String = "w", hCol: String = "h"): DataFrame = {
+                    buckets: Seq[(Int, Int)] = DefaultAspectBuckets): DataFrame = {
     import org.apache.spark.sql.functions._
     images
-      .withColumn("bucket_id", expr(aspectBucketCaseSql(buckets, wCol, hCol)))
+      .withColumn("bucket_id", expr(aspectBucketCaseSql(buckets)))
       .withColumn("bucket_w", expr(bucketDimCaseSql(buckets, "bucket_id", _._1)))
       .withColumn("bucket_h", expr(bucketDimCaseSql(buckets, "bucket_id", _._2)))
   }
@@ -168,17 +160,15 @@ object ImageOps {
     * same probe-proven shape as TextOps.packPlan). ONE shuffle total.
     * Requires a non-negative 64-bit unique id column.
     */
-  def bucketBatches(images: DataFrame, batchSize: Int,
-                    buckets: Seq[(Int, Int)] = DefaultAspectBuckets,
-                    idCol: String = "image_id",
-                    wCol: String = "w", hCol: String = "h"): DataFrame = {
+  def bucketBatches(images: DataFrame, batchSize: Int): DataFrame = {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types._
     require(batchSize > 0, "batchSize must be positive")
     val spark = images.sparkSession
     val parts = math.max(spark.sessionState.conf.numShufflePartitions, 1)
     val sm = udf((id: Long) => graft.model.Fixtures.splitmix64(id))
-    val assigned = aspectBuckets(images, buckets, wCol, hCol)
+    val idCol = "image_id"
+    val assigned = aspectBuckets(images)
       .select(col(idCol).cast("long").as(idCol), col("bucket_id"),
         sm(col(idCol).cast("long")).as("__hs"))
     val ranged = assigned
@@ -230,10 +220,8 @@ object ImageOps {
     * Hamming <= 3 by the pigeonhole band guarantee; no decode needed, the
     * signature column IS the input (input_hint schema carries phash:int64).
     */
-  def phashNearDupPairs(images: DataFrame, maxHamming: Int = 3,
-                        idCol: String = "image_id",
-                        phashCol: String = "phash"): DataFrame =
-    TextOps.hammingPairs64(images, idCol, phashCol, maxHamming)
+  def phashNearDupPairs(images: DataFrame): DataFrame =
+    TextOps.hammingPairs64(images, "image_id", "phash")
 
   def psnr(ref: Array[Byte], got: Array[Byte]): Double = {
     if (ref.length != got.length || ref.length == 0) return 0.0
@@ -271,15 +259,16 @@ object ImageOps {
 
   /**
    * Distributed thumbnailing over the images table (input_hint schema):
-   * decode once, nearest-neighbor downscale so the longer side is `maxDim`
+   * decode once, nearest-neighbor downscale so the longer side is 64 px
    * (aspect preserved, integer arithmetic, never upscaled), re-encode as PPM
    * (P6). One mapPartitions pass — source bytes never leave the task; only
    * the (much smaller) thumbnail bytes flow on. The training-pipeline
    * preprocessing step next to decodeFeatures; caption passes through
    * untouched (the per-row invariant).
    */
-  def thumbnails(images: DataFrame, maxDim: Int = 64): Dataset[Thumb] = {
+  def thumbnails(images: DataFrame): Dataset[Thumb] = {
     val spark = images.sparkSession
+    val maxDim = 64
     import spark.implicits._
     images.select("image_id", "bytes", "fmt", "caption")
       .as[(String, Array[Byte], String, String)]

@@ -6,33 +6,25 @@ import graft.checkpoint.Snapshots
 
 /**
  * materialise / materialise-map / list-feature — storing a computed
- * collection under the name of the plan that defines it
+ * collection under the name of the expression that defines it
  * (src/diagonal.works/b6/api/functions/materialise.go:37-176,
  * api/functions/features.go:522-528).
  *
  * Spark mapping (SURVEY §1.6): a CollectionFeature is a committed snapshot
- * table, and named Scala plans in the registry stand in for the VM
- * language's stored expressions. materialise-map's per-feature fan-out
- * becomes a `partitionBy(key)` write — each key's rows land in their own directory, so
- * `listFeature(key)` reads one partition with partition pruning, not a scan.
+ * table, and the body is the collection an expression feature's stored
+ * `expression` tag evaluates to (the shell does that evaluation).
+ * materialise-map's per-feature fan-out becomes a `partitionBy(key)` write —
+ * each key's rows land in their own directory, so `listFeature(key)` reads
+ * one partition with partition pruning, not a scan.
  */
 object Materialise {
 
-  /** Named-plan registry — the engine's stand-in for stored VM expressions. */
-  type Plan = SparkSession => DataFrame
-  private val registry = new java.util.concurrent.ConcurrentHashMap[String, Plan]()
-
-  def register(name: String, plan: Plan): Unit = registry.put(name, plan)
-
   /**
-   * materialise (materialise.go:37-80): evaluate the named plan once and
-   * commit the result as a snapshot table; a later call reads it back.
+   * materialise (materialise.go:37-80): evaluate `body` once and commit the
+   * result as the snapshot table `name`; a later call reads it back.
    */
-  def materialise(spark: SparkSession, root: String, name: String): DataFrame = {
-    val plan = registry.get(name)
-    require(plan != null, s"no registered plan named $name")
-    Snapshots.stage(spark, root, name, Seq(s"expression:$name"))(plan(spark))
-  }
+  def materialise(spark: SparkSession, root: String, name: String)(body: => DataFrame): DataFrame =
+    Snapshots.stage(spark, root, name, Seq(s"expression:$name"))(body)
 
   /**
    * materialise-map (materialise.go:83-152): evaluate a keyed plan and
@@ -49,14 +41,6 @@ object Materialise {
     // commit through the snapshot manifest (atomic rename = the commit point)
     Snapshots.commitExisting(spark, root, name, dataPath, Seq(s"map:$keyCol"))
     spark.read.parquet(dataPath)
-  }
-
-  /** materialise-map over a REGISTERED named plan (the shell's entry). */
-  def materialiseMapNamed(spark: SparkSession, root: String, name: String,
-                          keyCol: String): DataFrame = {
-    val plan = registry.get(name)
-    require(plan != null, s"no registered plan named $name")
-    materialiseMap(spark, root, name, keyCol)(plan(spark))
   }
 
   /** list-feature (features.go:522-528): read one materialised key back —

@@ -57,10 +57,9 @@ object Multimodal {
       nFrames, Fixtures.caption(i))
   }
 
-  def videos(spark: org.apache.spark.sql.SparkSession, n: Long,
-             partitions: Int = 16): DataFrame = {
+  def videos(spark: org.apache.spark.sql.SparkSession, n: Long): DataFrame = {
     import spark.implicits._
-    spark.range(0, n, 1, partitions).map(videoRow(_)).toDF()
+    spark.range(0, n, 1, 16).map(videoRow(_)).toDF()
   }
 
   /**

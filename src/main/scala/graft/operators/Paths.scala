@@ -20,10 +20,10 @@ import graft.functions.GeoFunctions
 object Paths {
 
   /** explode a WKB geometry column into (vertex_idx, vlat, vlng) rows. */
-  def points(df: DataFrame, geomCol: String = "geom"): DataFrame = {
+  def points(df: DataFrame): DataFrame = {
     val verts = udf((wkb: Array[Byte]) =>
       GeoOps.fromWkb(wkb).getCoordinates.map(c => (c.y, c.x)).toSeq)
-    df.select(col("*"), posexplode(verts(col(geomCol))).as(Seq("vertex_idx", "__v")))
+    df.select(col("*"), posexplode(verts(col("geom"))).as(Seq("vertex_idx", "__v")))
       .withColumn("vlat", col("__v._1"))
       .withColumn("vlng", col("__v._2"))
       .drop("__v")
@@ -31,12 +31,11 @@ object Paths {
 
   /** sample-points-along-paths: equidistant samples every `spacing` meters,
     * deduplicated across paths (the reference dedups identical points). */
-  def samplePointsAlongPaths(df: DataFrame, spacingMeters: Double,
-                             geomCol: String = "geom"): DataFrame = {
+  def samplePointsAlongPaths(df: DataFrame, spacingMeters: Double): DataFrame = {
     val sample = udf((wkb: Array[Byte]) =>
       GeoFunctions.samplePoints(GeoOps.fromWkb(wkb), spacingMeters)
         .map { case (la, lo) => (la, lo) })
-    df.withColumn("__s", explode(sample(col(geomCol))))
+    df.withColumn("__s", explode(sample(col("geom"))))
       .select(col("__s._1").as("slat"), col("__s._2").as("slng"))
       .dropDuplicates("slat", "slng")
   }
@@ -62,12 +61,12 @@ object Paths {
    * covering-cell join; the per-area snap projects each vertex to the nearest
    * point on the closest candidate path (JTS DistanceOp).
    */
-  def snapAreaEdges(areas: DataFrame, paths: DataFrame, thresholdMeters: Double,
-                    level: Int = 14): DataFrame = {
+  def snapAreaEdges(areas: DataFrame, paths: DataFrame, thresholdMeters: Double): DataFrame = {
     val spark = areas.sparkSession
     import spark.implicits._
     graft.functions.CellExprs.install(spark)
     import graft.functions.CellExprs._
+    val level = 14 // candidate cells of ~1.2 km
     val a = areas.select(col("poly_id"), col("geom"))
       .withColumn("__c", explode(cell_covering(col("geom"), lit(level), lit(32))))
       .withColumn("__c", cell_parent_at(col("__c"), lit(level)))
@@ -105,10 +104,10 @@ object Paths {
     * partition, not one row per area), the same tree shape as the geo_hull
     * query; at 100x the polygon count the driver holds O(partitions)
     * geometries, not O(areas)). */
-  def collectAreas(df: DataFrame, geomCol: String = "geom"): Array[Byte] = {
+  def collectAreas(df: DataFrame): Array[Byte] = {
     val spark = df.sparkSession
     import spark.implicits._
-    val partials = df.select(col(geomCol)).as[Array[Byte]].mapPartitions { it =>
+    val partials = df.select(col("geom")).as[Array[Byte]].mapPartitions { it =>
       val gs = it.map(GeoOps.fromWkb).toArray
       if (gs.isEmpty) Iterator.empty
       else Iterator(GeoOps.toWkb(GeoOps.factory.createGeometryCollection(gs)))

@@ -17,7 +17,7 @@ import graft.functions.CellExprs
  * vertex angles make occlusion transitions exact at corners instead of
  * quantized to the ray spacing.
  *
- * Spark shape: occluders pair with origins through the covering-cell join
+ * Spark shape: occluders pair with origins through the level-13 covering-cell join
  * (only buildings within the radius disk are shipped to an origin's task);
  * the per-origin sweep runs in one mapGroups pass.
  */
@@ -26,8 +26,9 @@ object Sightline {
   case class SightlineRow(origin_id: Long, visible_wkb: Array[Byte], area_m2: Double)
 
   def sightlines(origins: DataFrame, occluders: DataFrame, radiusMeters: Double,
-                 rays: Int = 256, level: Int = 13): Dataset[SightlineRow] = {
+                 rays: Int = 256): Dataset[SightlineRow] = {
     val spark = origins.sparkSession
+    val level = 13 // origin and occluder cells of ~2.4 km
     import spark.implicits._
     CellExprs.install(spark)
     val metersPerDegLat = math.Pi * GeoOps.EarthRadiusMeters / 180.0

@@ -28,13 +28,10 @@ object SpatialJoins {
    * (boundary-inclusive `covers`, matching the reference's ContainsPoint refine,
    * src/diagonal.works/b6/api/functions/features.go:49-105).
    */
-  def pointInPolygonJoin(points: DataFrame, polygons: DataFrame,
-                         pointCell: String = "cell16",
-                         geomCol: String = "geom",
-                         coveringCol: String = "covering"): DataFrame = {
+  def pointInPolygonJoin(points: DataFrame, polygons: DataFrame): DataFrame = {
     val spark = points.sparkSession
     graft.functions.CellExprs.install(spark)
-    val polyCells = polygons.withColumn("__jcell", explode(col(coveringCol)))
+    val polyCells = polygons.withColumn("__jcell", explode(col("covering")))
     // One guarded collect decides the build side: when the exploded polygon
     // cells fit on the driver, their rows give the covering levels and are
     // broadcast as the build side as they are; otherwise the levels come
@@ -57,9 +54,9 @@ object SpatialJoins {
           .map(_.getInt(0)).sorted, polyCells)
     }
     val keyed = points.withColumn("__jcell",
-      explode(array(levels.map(l => cell_parent_at(col(pointCell), lit(l))): _*)))
+      explode(array(levels.map(l => cell_parent_at(col("cell16"), lit(l))): _*)))
     keyed.join(build, "__jcell")
-      .where(wkb_covers_point(col(geomCol), col("lat"), col("lng")))
+      .where(wkb_covers_point(col("geom"), col("lat"), col("lng")))
       .drop("__jcell")
   }
 
@@ -74,7 +71,7 @@ object SpatialJoins {
    * semantics of src/diagonal.works/b6/spatial.go:509-711.
    */
   def intersectionJoin(left: DataFrame, right: DataFrame,
-                       leftGeom: String = "geom", rightGeom: String = "geom",
+                       leftGeom: String, rightGeom: String,
                        level: Int = 12): DataFrame = {
     val l = left.withColumn("__lc", explode(cell_covering(col(leftGeom), lit(level), lit(64))))
       .withColumn("__lc", cell_parent_at(col("__lc"), lit(level) /* normalise */))
@@ -87,7 +84,8 @@ object SpatialJoins {
   }
 
   /**
-   * kNN join: for each site (small side), the k nearest points by haversine.
+   * kNN join: for each site (small side; site_lat, site_lng), the k nearest
+   * points (lat, lng, cell16) by haversine.
    * Neighbor-ring expansion (the reference's expanding closest-search,
    * src/diagonal.works/b6/api/functions/graph.go:402-446, geodesic variant):
    * candidates come from grid disks of growing Chebyshev radius around each
@@ -103,8 +101,6 @@ object SpatialJoins {
     * point (e.g. features beyond connect-to-network's threshold) to the
     * first qualifying ring instead of doubling to the grid limit. */
   def knnJoin(points: DataFrame, sites: DataFrame, k: Int, level: Int = 10,
-              pointCell: String = "cell16",
-              siteLat: String = "site_lat", siteLng: String = "site_lng",
               maxDistance: Option[Double] = None): DataFrame = {
     // Auto-select the execution mode by site count: up to DriverMaxSites the
     // driver-resident active set (broadcast LocalRelation per ring, settled
@@ -117,8 +113,8 @@ object SpatialJoins {
     // re-derives from the DataFrame.
     val headRows = sites.limit(DriverMaxSites + 1).collect()
     if (headRows.length <= DriverMaxSites)
-      knnJoinDriver(points, sites, headRows, k, level, pointCell, siteLat, siteLng, maxDistance)
-    else knnJoinDistributed(points, sites, k, level, pointCell, siteLat, siteLng, maxDistance)
+      knnJoinDriver(points, sites, headRows, k, level, maxDistance)
+    else knnJoinDistributed(points, sites, k, level, maxDistance)
   }
 
   /** Site count up to which [[knnJoin]] keeps the active set on the driver. */
@@ -126,8 +122,6 @@ object SpatialJoins {
 
   private def knnJoinDriver(points: DataFrame, sites: DataFrame,
               siteRows: Array[org.apache.spark.sql.Row], k: Int, level: Int,
-              pointCell: String,
-              siteLat: String, siteLng: String,
               maxDistance: Option[Double]): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val spark = points.sparkSession
@@ -135,7 +129,7 @@ object SpatialJoins {
     val metersPerDegLat = math.Pi * GeoOps.EarthRadiusMeters / 180.0
     val degPerCell = 180.0 / (1L << level).toDouble
 
-    val pCellAtLevel = cell_parent_at(col(pointCell), lit(level))
+    val pCellAtLevel = cell_parent_at(col("cell16"), lit(level))
     val pts = points.withColumn("__pc", pCellAtLevel)
 
     // Ring-loop scale shape — EXACTLY ONE Spark action per ring. Each ring's
@@ -169,14 +163,14 @@ object SpatialJoins {
       // only the NEW annulus of cells joins against the big side; earlier
       // rings' candidates are accumulated, so each doubling scans the probe
       // table once for the delta instead of re-scanning the whole disk
-      val siteCell = cell_of(col(siteLat), col(siteLng), lit(level))
+      val siteCell = cell_of(col("site_lat"), col("site_lng"), lit(level))
       val annulus =
         if (prevRing == 0) cell_neighbor_disk(siteCell, lit(ring))
         else array_except(cell_neighbor_disk(siteCell, lit(ring)),
           cell_neighbor_disk(siteCell, lit(prevRing)))
       val siteCells = activeDf.withColumn("__sc", explode(annulus))
       val delta = pts.join(broadcast(siteCells), col("__pc") === col("__sc"))
-        .withColumn("__dist", haversine_m(col("lat"), col("lng"), col(siteLat), col(siteLng)))
+        .withColumn("__dist", haversine_m(col("lat"), col("lng"), col("site_lat"), col("site_lng")))
         .localCheckpoint(eager = false) // materializes inside this ring's collect
       deltas ::= delta
       // accumulated candidates, filtered to the still-active sites by a
@@ -192,7 +186,7 @@ object SpatialJoins {
       // where the cells at the disk edge are materially narrower. The 0.99
       // covers the sin(dLng/2) curvature of the haversine lower bound.
       val extremeLat = least(lit(90.0),
-        abs(col(siteLat)) + lit((ring + 1).toDouble * degPerCell))
+        abs(col("site_lat")) + lit((ring + 1).toDouble * degPerCell))
       val minDim = least(
         lit(degPerCell * metersPerDegLat),
         cos(radians(extremeLat)) * lit(2.0 * 0.99 * degPerCell * metersPerDegLat))
@@ -218,7 +212,7 @@ object SpatialJoins {
       // a cap-settled site with ZERO candidates emits no row, so the active
       // pruning replays the cap test driver-side (identical JVM double
       // arithmetic to the Column form above)
-      val latIdx = siteSchema.fieldIndex(siteLat)
+      val latIdx = siteSchema.fieldIndex("site_lat")
       def capSettledDriver(lat: Double): Boolean = maxDistance.exists { md =>
         val extreme = math.min(90.0, math.abs(lat) + (ring + 1).toDouble * degPerCell)
         val minDimD = math.min(degPerCell * metersPerDegLat,
@@ -250,8 +244,6 @@ object SpatialJoins {
    * threshold.
    */
   def knnJoinDistributed(points: DataFrame, sites: DataFrame, k: Int, level: Int = 10,
-              pointCell: String = "cell16",
-              siteLat: String = "site_lat", siteLng: String = "site_lng",
               maxDistance: Option[Double] = None): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val spark = points.sparkSession
@@ -259,7 +251,7 @@ object SpatialJoins {
     val metersPerDegLat = math.Pi * GeoOps.EarthRadiusMeters / 180.0
     val degPerCell = 180.0 / (1L << level).toDouble
 
-    val pts = points.withColumn("__pc", cell_parent_at(col(pointCell), lit(level)))
+    val pts = points.withColumn("__pc", cell_parent_at(col("cell16"), lit(level)))
 
     // guarantee margin for disk radius `ring`, evaluated per row from the
     // site latitude column — same formula as driver mode (see there for the
@@ -297,7 +289,7 @@ object SpatialJoins {
     var carried: Option[DataFrame] = None
     var settled: List[DataFrame] = List(emptySettled)
     while (nActive > 0) {
-      val siteCell = cell_of(col(siteLat), col(siteLng), lit(level))
+      val siteCell = cell_of(col("site_lat"), col("site_lng"), lit(level))
       val annulus =
         if (prevRing == 0) cell_neighbor_disk(siteCell, lit(ring))
         else array_except(cell_neighbor_disk(siteCell, lit(ring)),
@@ -306,7 +298,7 @@ object SpatialJoins {
       // sort-merge by the actual size of the exploded active-site side
       val siteCells = active.withColumn("__sc", explode(annulus))
       val delta = pts.join(siteCells, col("__pc") === col("__sc"))
-        .withColumn("__dist", haversine_m(col("lat"), col("lng"), col(siteLat), col(siteLng)))
+        .withColumn("__dist", haversine_m(col("lat"), col("lng"), col("site_lat"), col("site_lng")))
         .localCheckpoint(eager = false)
       val cand = carried.map(_.unionByName(delta)).getOrElse(delta)
         .join(active.select(col("site_id")), Seq("site_id"), "left_semi")
@@ -317,8 +309,8 @@ object SpatialJoins {
         .withColumn("__ok",
           if (gridExhausted) lit(true)
           else (count(lit(1)).over(wSite) === k &&
-            max(col("__dist")).over(wSite) <= lit(ring.toDouble) * minDim(ring, col(siteLat))) ||
-            capSettledCol(ring, col(siteLat)))
+            max(col("__dist")).over(wSite) <= lit(ring.toDouble) * minDim(ring, col("site_lat"))) ||
+            capSettledCol(ring, col("site_lat")))
       val finished = top.where(col("__ok")).drop("__ok", "__pc", "__sc")
         .localCheckpoint(eager = false)
       settled ::= finished
@@ -327,7 +319,7 @@ object SpatialJoins {
       // site latitude — no settled row needed)
       val nextActive =
         if (gridExhausted) active.limit(0)
-        else active.where(!capSettledCol(ring, col(siteLat)))
+        else active.where(!capSettledCol(ring, col("site_lat")))
           .join(finished.select(col("site_id")), Seq("site_id"), "left_anti")
           .localCheckpoint(eager = false)
       // next ring's carried set: the unsettled sites' top-k (<= active x k
@@ -349,17 +341,16 @@ object SpatialJoins {
    * Mercator XYZ tiling (src/diagonal.works/b6/tiles.go:202-343). Pure
    * arithmetic on the scan; no shuffle until the per-tile aggregation.
    */
-  def tileAssignment(points: DataFrame, zoom: Int,
-                     latCol: String = "lat", lngCol: String = "lng"): DataFrame =
+  def tileAssignment(points: DataFrame, zoom: Int): DataFrame =
     points
       .withColumn("tile_z", lit(zoom))
-      .withColumn("tile_xx", tile_x(col(lngCol), lit(zoom)))
-      .withColumn("tile_yy", tile_y(col(latCol), lit(zoom)))
+      .withColumn("tile_xx", tile_x(col("lng"), lit(zoom)))
+      .withColumn("tile_yy", tile_y(col("lat"), lit(zoom)))
 
   /** Tile cover of polygon features at `zoom`: explode the per-geometry tile
     * range (CoverCellUnionWithTiles semantics, tiles.go:284-300). */
-  def tileCoverJoin(polygons: DataFrame, zoom: Int, geomCol: String = "geom"): DataFrame =
-    polygons.withColumn("tile", explode(tile_cover(col(geomCol), lit(zoom))))
+  def tileCoverJoin(polygons: DataFrame, zoom: Int): DataFrame =
+    polygons.withColumn("tile", explode(tile_cover(col("geom"), lit(zoom))))
 
   /** The finest cell level whose latitudinal cell span still covers
     * `radiusMeters` — callers with a distance cap pick this so the kNN ring-1

@@ -240,7 +240,7 @@ object TextOps {
     // CollectMetrics node aggregates markers BEFORE they are filtered out —
     // same degraded_buckets / forgone_pairs values as the old reps aggregate.
     // `keep` is the caller's exact per-pair verification predicate over the
-    // two payload arrays (e.g. popcount(sig_a ^ sig_b) <= maxHamming),
+    // two payload arrays (e.g. popcount(sig_a ^ sig_b) <= 3),
     // applied INSIDE the pair loop: with 16-bit bands the pre-verify
     // candidate volume is ~n²/65536 per band (measured ~10M rows at sf0.1,
     // of which ~37k survive), so verifying before the row even materializes
@@ -407,16 +407,16 @@ object TextOps {
   }
 
   /**
-   * MinHash-LSH near-duplicate pairs: band the signature (bands x rowsPerBand =
-   * numHashes), bucket-join on (band, bandHash), verify candidates with exact
-   * shingle-set Jaccard >= threshold. Shuffle only on band hashes; candidate
+   * MinHash-LSH near-duplicate pairs over 3-shingles: band the 32-hash
+   * signature (8 bands x 4 rows), bucket-join on (band, bandHash), verify
+   * candidates with exact shingle-set Jaccard >= threshold. Shuffle only on band hashes; candidate
    * verification stays pairwise within buckets, with oversized buckets
    * degraded to representative stars (`bucketCandidates`). Returns
    * (id_a, id_b, jaccard) with id_a < id_b.
    */
   def dedupMinhashLsh(df: DataFrame, idCol: String, textCol: String,
-                      k: Int = 3, numHashes: Int = 32, bands: Int = 8,
-                      threshold: Double = 0.7, maxBucketSize: Int = 1024): DataFrame = {
+                      threshold: Double, maxBucketSize: Int = 1024): DataFrame = {
+    val (k, numHashes, bands) = (3, 32, 8)
     val rowsPerBand = numHashes / bands
     // Shingle sets are computed ONCE and persisted: the banded self-join would
     // otherwise recompute the (expensive) shingling per branch, and carrying
@@ -488,9 +488,7 @@ object TextOps {
    * re-attach by id for the verify.
    */
   def hammingPairs64(sig: DataFrame, idCol: String, sigCol: String,
-                     maxHamming: Int = 3, maxBucketSize: Int = 1024,
                      carry: Seq[String] = Nil): DataFrame = {
-    require(maxHamming <= 3, "4x16 banding guarantees recall only to Hamming 3")
     // The 8-byte signature (and any small carry columns: a caption, a label)
     // CARRY through the band shuffle and come back per endpoint directly from
     // the bucket pass — the input is scanned exactly ONCE and there are no
@@ -518,13 +516,12 @@ object TextOps {
     // the exact popcount verify runs INSIDE the pair loop (keep): candidates
     // that fail Hamming never materialize as rows, so the dedup shuffle sees
     // only true near-dup pairs (~0.4% of candidates at sf0.1)
-    val maxH = maxHamming
     val keep = (a: Array[Any], b: Array[Any]) =>
-      java.lang.Long.bitCount(a(0).asInstanceOf[Long] ^ b(0).asInstanceOf[Long]) <= maxH
-    bucketCandidatesCarrying(banded, Seq("__bb", "__bk"), maxBucketSize,
+      java.lang.Long.bitCount(a(0).asInstanceOf[Long] ^ b(0).asInstanceOf[Long]) <= 3
+    bucketCandidatesCarrying(banded, Seq("__bb", "__bk"), 1024,
         "__sig" +: carry, keep = Some(keep))
       .withColumn("hamming", bit_count(col("__sig_a").bitwiseXOR(col("__sig_b"))))
-      .where(col("hamming") <= maxHamming)
+      .where(col("hamming") <= 3)
       .select(col("id_a") +: col("id_b") +: col("hamming") +:
         carry.flatMap(c => Seq(col(s"${c}_a"), col(s"${c}_b"))): _*)
   }
@@ -541,11 +538,10 @@ object TextOps {
    * the label-of-label hop halves chain lengths, so convergence is
    * O(log diameter) rounds of ids-only shuffles (the LSH pair graphs here
    * are star-dominated: 2-3 rounds), each round one localCheckpoint'd table
-   * and ONE action for the convergence test.
+   * and ONE action for the convergence test. Pairs are (id_a, id_b),
+   * vertices (doc_id).
    */
-  def dedupClusters(pairs: DataFrame, vertices: DataFrame,
-                    idCol: String = "doc_id",
-                    idA: String = "id_a", idB: String = "id_b"): DataFrame = {
+  def dedupClusters(pairs: DataFrame, vertices: DataFrame): DataFrame = {
     // Dual-mode, like SpatialJoins.knnJoin: the pair list is ids-only and a
     // dedup graph touches a small fraction of the corpus, so up to
     // DriverMaxEdges (~2M edges = tens of MB of longs) a driver-side
@@ -556,7 +552,7 @@ object TextOps {
     // distributed.
     val spark = pairs.sparkSession
     import spark.implicits._
-    val sym0 = pairs.select(col(idA).as("u"), col(idB).as("v"))
+    val sym0 = pairs.select(col("id_a"), col("id_b"))
       .distinct().localCheckpoint(eager = false)
     val edges = sym0.as[(Long, Long)].limit(DriverMaxEdges + 1).collect()
     if (edges.length <= DriverMaxEdges) {
@@ -576,21 +572,19 @@ object TextOps {
       }
       val labels = edges.iterator.flatMap { case (u, v) => Iterator(u, v) }
         .toSeq.distinct.map(x => (x, find(x)))
-      val labDf = labels.toDF(idCol, "cluster")
-      vertices.select(col(idCol))
-        .join(org.apache.spark.sql.functions.broadcast(labDf), Seq(idCol), "left")
-        .select(col(idCol), coalesce(col("cluster"), col(idCol)).as("cluster"))
-    } else dedupClustersWithRounds(sym0, vertices, idCol, "u", "v")._1
+      val labDf = labels.toDF("doc_id", "cluster")
+      vertices.select(col("doc_id"))
+        .join(org.apache.spark.sql.functions.broadcast(labDf), Seq("doc_id"), "left")
+        .select(col("doc_id"), coalesce(col("cluster"), col("doc_id")).as("cluster"))
+    } else dedupClustersWithRounds(sym0, vertices)._1
   }
 
   /** The distributed pointer-doubling mode of [[dedupClusters]], plus the
     * number of label-propagation rounds run — exposed so the chain-diameter
     * property spec can assert O(log n) convergence on path graphs. */
-  def dedupClustersWithRounds(pairs: DataFrame, vertices: DataFrame,
-                    idCol: String = "doc_id",
-                    idA: String = "id_a", idB: String = "id_b"): (DataFrame, Int) = {
-    val sym = pairs.select(col(idA).as("u"), col(idB).as("v"))
-      .unionByName(pairs.select(col(idB).as("u"), col(idA).as("v")))
+  def dedupClustersWithRounds(pairs: DataFrame, vertices: DataFrame): (DataFrame, Int) = {
+    val sym = pairs.select(col("id_a").as("u"), col("id_b").as("v"))
+      .unionByName(pairs.select(col("id_b").as("u"), col("id_a").as("v")))
       .distinct().localCheckpoint(eager = false)
     // only PAIR ENDPOINTS enter the iteration — an isolated vertex is its own
     // cluster by definition and joins back in one pass at the end. Dedup
@@ -641,9 +635,9 @@ object TextOps {
       lab = next
       rounds += 1
     }
-    (vertices.select(col(idCol))
-      .join(lab.withColumnRenamed("id", idCol), Seq(idCol), "left")
-      .select(col(idCol), coalesce(col("label"), col(idCol)).as("cluster")), rounds)
+    (vertices.select(col("doc_id"))
+      .join(lab.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left")
+      .select(col("doc_id"), coalesce(col("label"), col("doc_id")).as("cluster")), rounds)
   }
 
   /** EXACT n-gram Jaccard similarity join: every pair with Jaccard >=
@@ -661,7 +655,7 @@ object TextOps {
     * prefix of exactly the documents that own nothing rarer; the df-ascending
     * order merely minimises how many postings a hot shingle contributes. */
   def ngramJaccardJoin(df: DataFrame, idCol: String, textCol: String,
-                       k: Int = 3, threshold: Double = 0.5): DataFrame = {
+                       k: Int, threshold: Double): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // inverted index moves only (shingle-hash, id); shingle sets re-attach by
     // id for the exact verify (same shuffle discipline as dedupMinhashLsh)

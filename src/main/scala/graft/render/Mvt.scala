@@ -198,9 +198,7 @@ object Mvt {
    * Render features (id, layer, geom wkb, tags map, tile cover at zoom) into
    * binary MVT tiles: one row per (z, x, y, bytes).
    */
-  def renderTiles(features: DataFrame, zoom: Int,
-                  fidCol: String = "fid", layerCol: String = "layer",
-                  geomCol: String = "geom", tagsCol: String = "tags",
+  def renderTiles(features: DataFrame, zoom: Int, tagsCol: String = "tags",
                   sortRankCol: Option[String] = None,
                   layerOrder: Seq[String] = Nil,
                   tileCol: Option[String] = None): DataFrame = {
@@ -214,9 +212,9 @@ object Mvt {
     // a multi-tile feature inside every tile it covers
     val covered = tileCol.map(tc => features.withColumn("__tile", col(tc)))
       .getOrElse(features.withColumn("__tile",
-        explode(graft.functions.CellExprs.tile_cover(col(geomCol), lit(zoom)))))
-      .select(col("__tile"), col(fidCol).as("fid"), col(layerCol).as("layer"),
-        col(geomCol).as("geom"), col(tagsCol).as("tags"), rankCol.cast("int").as("srank"))
+        explode(graft.functions.CellExprs.tile_cover(col("geom"), lit(zoom)))))
+      .select(col("__tile"), col("fid").as("fid"), col("layer").as("layer"),
+        col("geom").as("geom"), col(tagsCol).as("tags"), rankCol.cast("int").as("srank"))
     // ONE tile-keyed shuffle + an ordered streaming pass (guide §2.4):
     // hash-repartition on the tile, sort within partitions on
     // (tile, layer, srank, fid), then cap + encode in a single mapPartitions.

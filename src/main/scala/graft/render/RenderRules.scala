@@ -125,8 +125,8 @@ object RenderRules {
     * (RenderRules.ToQuery, renderer.go:140-149). One probe per distinct key:
     * `tags[k] IN (values)` per key, or `tags[k] IS NOT NULL` when any active
     * rule for the key is a wildcard (OR order is immaterial). */
-  def zoomPredicate(zoom: Int, tags: Column, rules: Seq[RenderRule] = basemap): Column = {
-    val act = rules.filter(active(_, zoom))
+  def zoomPredicate(zoom: Int, tags: Column): Column = {
+    val act = basemap.filter(active(_, zoom))
     val byKey = act.map(_.key).distinct.map { k => k -> act.filter(_.key == k) }
     byKey.map { case (k, rs) =>
       val v = tags.getItem(k)
@@ -137,36 +137,28 @@ object RenderRules {
 
   /** First-matching-rule layer pick (renderFeature, renderer.go:253-263 —
     * the full table, NOT zoom-gated). */
-  def layerColumn(tags: Column, rules: Seq[RenderRule] = basemap): Column = {
-    val runs = keyRuns(rules)
-    if (runs.isEmpty) lit(null).cast("string")
-    else coalesce(runs.map { case (k, run) =>
-      runResult(tags.getItem(k), run, _.layer)
-    }: _*)
-  }
+  def layerColumn(tags: Column): Column = firstMatch(tags, _.layer)
+
+  /** The basemap's key runs ([[keyRuns]]). */
+  private val basemapRuns = keyRuns(basemap)
+
+  /** `result` of the first basemap rule matching `tags`, null when none does. */
+  private def firstMatch(tags: Column, result: RenderRule => String): Column =
+    coalesce(basemapRuns.map { case (k, run) => runResult(tags.getItem(k), run, result) }: _*)
 
   /** The rendered tag map: rule key without '#' -> the feature's value, plus
     * 'name' for labelled rules (addr:housename wins) and the hex id. */
-  def renderTagsColumn(tags: Column, idValue: Column,
-                       rules: Seq[RenderRule] = basemap): Column = {
+  def renderTagsColumn(tags: Column, idValue: Column): Column = {
     // same per-run compilation as layerColumn: the three first-match chains
     // cost one tag-map probe per key run each, not one per rule
-    val runs = keyRuns(rules)
-    def firstMatch(f: RenderRule => String): Column =
-      if (runs.isEmpty) lit(null).cast("string")
-      else coalesce(runs.map { case (k, run) =>
-        runResult(tags.getItem(k), run, f)
-      }: _*)
-    val strippedKey = firstMatch(_.key.stripPrefix("#"))
-    val strippedVal =
-      if (runs.isEmpty) lit(null).cast("string")
-      else coalesce(runs.map { case (k, run) =>
-        val v = tags.getItem(k)
-        // a run match implies v is non-null, so the matched rule's
-        // coalesce(tags[key], '') is just v
-        when(runResult(v, run, _ => "1").isNotNull, v)
-      }: _*)
-    val labelled = firstMatch(_.label.toString) === "true"
+    val strippedKey = firstMatch(tags, _.key.stripPrefix("#"))
+    val strippedVal = coalesce(basemapRuns.map { case (k, run) =>
+      val v = tags.getItem(k)
+      // a run match implies v is non-null, so the matched rule's
+      // coalesce(tags[key], '') is just v
+      when(runResult(v, run, _ => "1").isNotNull, v)
+    }: _*)
+    val labelled = firstMatch(tags, _.label.toString) === "true"
     val name = when(labelled,
       coalesce(tags.getItem("addr:housename"), tags.getItem("name")))
     map_filter(

@@ -186,8 +186,7 @@ object Renderers {
     Mvt.renderTiles(
       capped.select(col("__tile"), col("__fid").as("fid"), lit(layer).as("layer"),
         col("geom"), col("__rtags").as("tags")),
-      zoom, fidCol = "fid", layerCol = "layer", geomCol = "geom", tagsCol = "tags",
-      tileCol = Some("__tile"))
+      zoom, tileCol = Some("__tile"))
   }
 
   /**

@@ -45,7 +45,7 @@ object EvaluateService {
 
   def evaluate(reg: WorldRegistry, expression: String,
                world: Option[String], version: String): EvaluateResult =
-    toJson(evaluateOutcome(reg, worldId(world), version, w => Shell.run(w, expression)))
+    toJson(evaluateOutcome(reg, worldId(world), version, env => Shell.run(env, expression)))
 
   /** What an evaluation produced, before response encoding — shared by the
     * JSON and the gRPC doors so change application happens exactly once in
@@ -56,12 +56,14 @@ object EvaluateService {
   private case class Value(v: Any) extends Outcome
 
   private def evaluateOutcome(reg: WorldRegistry, id: WorldId,
-                              version: String, runIn: DataFrame => Any): Outcome = {
+                              version: String, runIn: Shell.Env => Any): Outcome = {
     if (version.takeWhile(_ != '.') != ApiVersion)
       throw Shell.ShellException(
         s"client version $version is not compatible with b6 version $ApiVersion")
     val w = reg.findOrCreate(id)
-    runIn(w.features) match {
+    // the world's features and its references table (point-paths,
+    // point-features, entrance-approach); no street network is derived
+    runIn(Shell.Env(w.features, None, refs = Some(w.refs))) match {
       case change: graft.operators.Changes.ChangeSet =>
         // a Change result applies TRANSACTIONALLY to the requested world and
         // the changed ids come back (grpc/service.go:60-67)
@@ -203,7 +205,7 @@ object EvaluateService {
         .getOrElse(DefaultWorldId)
       val outcome = evaluateOutcome(reg, id,
         if (version.isEmpty) ApiVersion else version,
-        w => Shell.runParsed(Shell.Env(w, None), node))
+        env => Shell.runParsed(env, node))
       graft.proto.ExprProto.encodeEvaluateResponse(resultNode(outcome))
     },
     "/b6.grpc.B6/ListWorlds" -> { _ =>

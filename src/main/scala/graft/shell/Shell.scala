@@ -627,17 +627,7 @@ object Shell {
       case ("divide", List(a: Long, b: Long)) => a / b // truncating, like the reference
       case ("divide", List(a, b)) => num(a) / num(b)
       case ("to-str", List(v)) => v.toString
-      // evaluate-feature (api/functions/features.go:530-537): the expression
-      // feature's stored `expression` tag IS a shell string here — stored
-      // plans round-trip through the same parser and run against the
-      // current world
-      case ("evaluate-feature", List(FeatureIdE(t, ns, v))) =>
-        val row = world.where(col("id.ftype") === t && col("id.ns") === ns &&
-            col("id.value") === v)
-          .select(col("tags").getItem("expression")).collect()
-        if (row.isEmpty || row.head.isNullAt(0))
-          throw ShellException(s"no expression feature /$t/$ns/$v")
-        eval(env, simplify(parse(row.head.getString(0))))
+      case ("evaluate-feature", List(FeatureIdE(t, ns, v))) => evaluateFeature(env, t, ns, v)
       // graph plane over the world-derived street network (api/functions/
       // graph.go:185-245; network derivation = OsmWorld.networkEdges, passed
       // via Shell.run(world, network, expr) — the reference gets it from the
@@ -698,7 +688,7 @@ object Shell {
         val key = if (df.columns.contains("key")) "key" else "id.value"
         graft.operators.Aggs.countValidKeys(df, key, col("value").isNotNull)
       case ("count-valid-ids", List(c)) =>
-        asDf(c).where(col("value").isNotNull).count()
+        countRows(asDf(c).where(col("value").isNotNull))
       case ("sum", List(c)) =>
         asDf(c).agg(sum(col("value"))).head.get(0)
       case ("add-ints", List(a: Long, b: Long)) => a + b
@@ -762,8 +752,11 @@ object Shell {
         graft.sources.GeoJson.parseFeatures(json)
           .map { case (g, props) => (graft.core.GeoOps.toWkb(g), props) }
           .toDF("geom", "tags")
-      case ("materialise", List(nm: String)) =>
-        graft.operators.Materialise.materialise(world.sparkSession, materialiseRoot, nm)
+      // materialise / materialise-map / list-feature name their snapshot by
+      // the expression feature whose `expression` tag defines the collection
+      case ("materialise", List(FeatureIdE(t, ns, v))) =>
+        graft.operators.Materialise.materialise(world.sparkSession, materialiseRoot,
+          s"/$t/$ns/$v")(asDf(evaluateFeature(env, t, ns, v)))
       case ("sightline", List(LatLngE(la, lo), r)) =>
         val spark = world.sparkSession
         import spark.implicits._
@@ -812,9 +805,9 @@ object Shell {
         histogramChangeOf(asDf(c), "graft/histogram", 0L, swatch = true)
       case ("histogram-swatch-with-id", List(c, FeatureIdE(_, ns, v))) =>
         histogramChangeOf(asDf(c), ns, v, swatch = true)
-      case ("list-feature", List(nm: String, keyCol: String, key: String)) =>
+      case ("list-feature", List(FeatureIdE(t, ns, v), keyCol: String, key: String)) =>
         graft.operators.Materialise.listFeature(world.sparkSession,
-          materialiseRoot, nm, keyCol, key)
+          materialiseRoot, s"/$t/$ns/$v", keyCol, key)
       case ("find-collection", List(FeatureIdE(_, ns, v))) =>
         world.where(col("id.ftype") === "collection" && col("id.ns") === ns &&
           col("id.value") === v)
@@ -960,9 +953,9 @@ object Shell {
         path
       case ("changes-from-file", List(path: String)) =>
         graft.operators.Changes.fromFile(world.sparkSession, path)
-      case ("materialise-map", List(nm: String, keyCol: String)) =>
-        graft.operators.Materialise.materialiseMapNamed(
-          world.sparkSession, materialiseRoot, nm, keyCol)
+      case ("materialise-map", List(FeatureIdE(t, ns, v), keyCol: String)) =>
+        graft.operators.Materialise.materialiseMap(world.sparkSession, materialiseRoot,
+          s"/$t/$ns/$v", keyCol)(asDf(evaluateFeature(env, t, ns, v)))
       case ("add-world-with-change", List(FeatureIdE(t, ns, v), l: LambdaE)) =>
         // change.go:213-218: evaluate the change under the CURRENT world and
         // hand the (world id, change) pair to the evaluation boundary, which
@@ -984,6 +977,19 @@ object Shell {
     }
     case other => throw ShellException(s"not callable: $other")
   }
+  }
+
+  /** evaluate-feature (api/functions/features.go:530-537): the expression
+    * feature's stored `expression` tag IS a shell string here — stored
+    * plans round-trip through the same parser and run against the current
+    * world. */
+  private def evaluateFeature(env: Env, t: String, ns: String, v: Long): Any = {
+    val row = env.world.where(col("id.ftype") === t && col("id.ns") === ns &&
+        col("id.value") === v)
+      .select(col("tags").getItem("expression")).collect()
+    if (row.isEmpty || row.head.isNullAt(0))
+      throw ShellException(s"no expression feature /$t/$ns/$v")
+    eval(env, simplify(parse(row.head.getString(0))))
   }
 
   private def requireNetwork(env: Env): DataFrame =

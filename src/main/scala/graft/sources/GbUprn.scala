@@ -47,13 +47,12 @@ object GbUprn {
   }
 
   /** uprn_cluster features: one point per occupied fine cell, sized. */
-  def clusters(spark: SparkSession, csvPath: String,
-               crop: Option[(Double, Double, Double, Double)] = None): DataFrame = {
+  def clusters(spark: SparkSession, csvPath: String): DataFrame = {
     graft.functions.CellExprs.install(spark)
     import graft.functions.CellExprs._
     val wkbPoint = udf((lat: Double, lng: Double) =>
       graft.core.GeoOps.toWkb(graft.core.GeoOps.point(lat, lng)))
-    features(spark, csvPath, crop)
+    features(spark, csvPath)
       .withColumn("__c", cell_of(col("lat"), col("lng"), lit(ClusterLevel)))
       .groupBy("__c").agg(count(lit(1)).as("n"))
       .select(

@@ -175,32 +175,27 @@ object Shapefile {
   /**
    * World-shaped feature rows from a shapefile (≙ ingest/gdal/source.go):
    * `copyTags` maps dBase fields to tag keys; `addTags` are literal tags;
-   * `idField` + `onsYear` select the UK ONS id strategy (index ids otherwise).
+   * feature ids are the UK ONS ids of the 2011 codes in the `idField` field.
    */
-  def features(spark: SparkSession, shpPath: String,
+  def features(spark: SparkSession, shpPath: String, idField: String,
                copyTags: Map[String, String] = Map.empty,
                addTags: Map[String, String] = Map.empty,
-               copyAllFields: Boolean = false,
-               idField: Option[String] = None, onsYear: Int = 2011): DataFrame = {
+               copyAllFields: Boolean = false): DataFrame = {
     graft.functions.CellExprs.install(spark)
     import spark.implicits._
-    val rows = read(shpPath).zipWithIndex.map { case (r, i) =>
+    val rows = read(shpPath).map { r =>
       val copied = copyTags.map { case (field, key) => key -> r.attrs.getOrElse(field, "") }
       val all = if (copyAllFields)
         r.attrs.filterNot { case (k, _) => copyTags.contains(k) } else Map.empty[String, String]
       val tags = all ++ copied ++ addTags
-      val value = idField match {
-        case Some(f) => onsId(r.attrs.getOrElse(f, ""), onsYear)
-        case None => i.toLong
-      }
-      val ns = if (idField.isDefined) OnsNamespace else s"graft/shapefile"
+      val value = onsId(r.attrs.getOrElse(idField, ""), 2011)
       val ftype = r.geom.getGeometryType match {
         case "Point" => "point"
         case "LineString" | "MultiLineString" => "path"
         case _ => "area"
       }
       val c = if (ftype == "point") r.geom.getCoordinate else r.geom.getCentroid.getCoordinate
-      (ftype, ns, value, tags, c.y, c.x, GeoOps.toWkb(r.geom))
+      (ftype, OnsNamespace, value, tags, c.y, c.x, GeoOps.toWkb(r.geom))
     }
     rows.toDF("ftype", "ns", "value", "tags", "lat", "lng", "geom")
       .select(struct(col("ftype"), col("ns"), col("value")).as("id"),

@@ -67,11 +67,12 @@ object Terrain {
     out.result()
   }
 
-  /** Spot heights as a (slat, slng, elevation) DataFrame in WGS84. */
-  def spots(spark: SparkSession, path: String, bng: Boolean = true): DataFrame = {
+  /** Spot heights as a (slat, slng, elevation) DataFrame in WGS84, from a
+    * grid in British National Grid eastings/northings. */
+  def spots(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
     readAsciiGrid(path).map { case (e, n, v) =>
-      val (lat, lng) = if (bng) GbCodePoint.wgs84FromGrid(e, n) else (n, e)
+      val (lat, lng) = GbCodePoint.wgs84FromGrid(e, n)
       (lat, lng, v)
     }.toDF("slat", "slng", "elevation")
   }
@@ -82,7 +83,7 @@ object Terrain {
    * column (0 when either endpoint has no terrain within `radiusMeters`).
    */
   def climbForEdges(edges: DataFrame, nodes: DataFrame, spotsDf: DataFrame,
-                    radiusMeters: Double = 1000.0): DataFrame = {
+                    radiusMeters: Double): DataFrame = {
     graft.functions.CellExprs.install(edges.sparkSession)
     val e = graft.operators.Elevation.elevationAt(
       nodes.select(col("node_id").as("qid"), col("lat"), col("lng")), spotsDf, radiusMeters)

@@ -11,33 +11,32 @@ import org.apache.spark.sql.functions._
  */
 object Streaming {
 
-  /** Watermarked hourly (by default) windowed aggregate; works on both batch
+  /** Watermarked (2 hours) hourly windowed aggregate; works on both batch
     * and streaming DataFrames (identical results by construction). */
-  def windowedEventCounts(events: DataFrame, windowLen: String = "1 hour",
-                          watermark: String = "2 hours"): DataFrame = {
+  def windowedEventCounts(events: DataFrame): DataFrame = {
     // watermarks require TIMESTAMP (LTZ); parquet testdata carries NTZ. The
     // session runs in UTC, so the LTZ<->NTZ casts are value-preserving; the
     // output is normalised to NTZ in both modes (oracle-comparable).
     val src0 = events.withColumn("__ts", col("ts").cast("timestamp"))
-    val src = if (events.isStreaming) src0.withWatermark("__ts", watermark) else src0
-    src.groupBy(window(col("__ts"), windowLen).as("w"), col("event_type"))
+    val src = if (events.isStreaming) src0.withWatermark("__ts", "2 hours") else src0
+    src.groupBy(window(col("__ts"), "1 hour").as("w"), col("event_type"))
       .agg(count(lit(1)).as("n"), min(col("value")).as("min_v"), max(col("value")).as("max_v"))
       .select(col("w.start").cast("timestamp_ntz").as("wstart"),
         col("event_type"), col("n"), col("min_v"), col("max_v"))
   }
 
   /** Gap-based sessionization: events grouped per user into sessions split at
-    * `gap` inactivity. Batch plan: ONE (user_id) shuffle of the two needed
+    * 30 minutes of inactivity. Batch plan: ONE (user_id) shuffle of the two needed
     * columns + a partition-local ordered pass that emits each session row as
     * it closes — the former lag-window + running-sum-window + hash-aggregate
     * chain re-ran two (non-codegen) Window nodes over every event and, when a
     * caller sorts the result, the orderBy's range-boundary sampling
     * re-executed that whole subtree a second time. Emits
     * (user_id, session_idx, n_events, t_start, t_end) rows. */
-  def sessionize(events: DataFrame, gapMinutes: Int = 30): DataFrame = {
+  def sessionize(events: DataFrame): DataFrame = {
     val spark = events.sparkSession
     val np = math.max(spark.sessionState.conf.numShufflePartitions, 1)
-    val gap = gapMinutes.toLong * 60000000L
+    val gap = 30L * 60000000L
     val src = events.select(col("user_id"), col("ts"))
     val tsField = src.schema(src.schema.fieldIndex("ts"))
     val outSchema = org.apache.spark.sql.types.StructType(Seq(

@@ -34,7 +34,7 @@ class AnnSpec extends SparkSuite {
   }
 
   test("approximate paths observe their candidate-set size (no-silent-recall discipline)") {
-    val lsh = Ann.cosineLsh(data, queries, 5, bits = 5, tables = 16)
+    val lsh = Ann.cosineLsh(data, queries, 5)
       .select("qid", "rank", "neighbor_id")
     lsh.collect()
     // the candidate metrics observed by the action on `lsh` itself
@@ -49,7 +49,7 @@ class AnnSpec extends SparkSuite {
   }
 
   test("PQ: codes are m small ints; ADC recalls far above chance; clone ranks top") {
-    val cbs = Ann.trainPqCodebooks(data, m = 8, k = 16, iters = 3, sampleN = 256)
+    val cbs = Ann.trainPqCodebooks(data)
     assert(cbs.length == 8 && cbs.forall(_.length == 16) && cbs(0)(0).length == 8)
     val codes = Ann.pqEncode(data, cbs).collect()
     assert(codes.forall(_.getSeq[Int](1).forall(c => c >= 0 && c < 16)))
@@ -169,7 +169,7 @@ class AnnSpec extends SparkSuite {
 
   test("cosineLsh achieves reasonable recall vs brute force") {
     val exact = bruteForce(5).map { case (q, _, n) => (q, n) }
-    val got = Ann.cosineLsh(data, queries, 5, bits = 5, tables = 16)
+    val got = Ann.cosineLsh(data, queries, 5)
       .select("qid", "neighbor_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val recall = exact.count(got.contains).toDouble / exact.size
@@ -181,6 +181,6 @@ class AnnSpec extends SparkSuite {
     val empty = data.where(col("vec_id") < 0)
     val emptyQueries = empty.select(col("vec_id").as("qid"), col("embedding").as("qvec"))
     assert(Ann.cosineNearDupPairs(empty, 0.99, bits = 12, tables = 4).count() == 0)
-    assert(Ann.cosineLsh(empty, emptyQueries, 5, bits = 5, tables = 16).count() == 0)
+    assert(Ann.cosineLsh(empty, emptyQueries, 5).count() == 0)
   }
 }

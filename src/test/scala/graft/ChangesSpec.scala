@@ -74,12 +74,11 @@ class ChangesSpec extends SparkSuite {
   test("materialise commits once and resumes from its snapshot") {
     val root = java.nio.file.Files.createTempDirectory("mat").toString
     var runs = 0
-    Materialise.register("plan_x", s => { runs += 1
-      s.range(3).toDF("n") })
-    val out = Materialise.materialise(spark, root, "plan_x")
+    def plan = { runs += 1; spark.range(3).toDF("n") }
+    val out = Materialise.materialise(spark, root, "plan_x")(plan)
     assert(out.count() == 3 && runs == 1)
     // second materialise resumes from the snapshot, body not re-run
-    Materialise.materialise(spark, root, "plan_x")
+    Materialise.materialise(spark, root, "plan_x")(plan)
     assert(runs == 1)
   }
 

@@ -326,6 +326,57 @@ class EvaluateServiceSpec extends SparkSuite {
     }
   }
 
+  /** The JSON rows of `df` as the /evaluate reply carries them. */
+  private def jsonRows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.select(to_json(struct(col("*")))).collect().map(_.getString(0)).toSeq
+
+  /** `reply` is a collection reply holding exactly `rows`, in any order. */
+  private def holdsExactly(reply: String, rows: Seq[String]): Boolean =
+    reply.startsWith("""{"type":"collection","result":[""") && rows.forall(reply.contains) &&
+      reply.length == """{"type":"collection","result":[]}""".length + rows.map(_.length).sum +
+        math.max(rows.length - 1, 0)
+
+  test("sf world: materialise evaluates an added expression feature and answers its rows") {
+    val root = java.nio.file.Files.createTempDirectory("graft-eval-mat").toString
+    sys.props("graft.materialise.root") = root
+    try withServer(ServingWorld.registry(spark, sfFeatures)) { port =>
+      val (added, addResp) = evaluateJson(port,
+        """{"expression": "add-expression /expression/graft/mat/7 \"find [#amenity=cafe]\"", "version": "1"}""")
+      assert(added == 200 && addResp.contains("/expression/graft/mat/7"), addResp)
+      val (status, resp) = evaluateJson(port,
+        """{"expression": "materialise /expression/graft/mat/7", "version": "1"}""")
+      assert(status == 200, resp)
+      val cafeRows = jsonRows(sfFeatures.where(col("tags").getItem("#amenity") === "cafe"))
+      assert(cafeRows.nonEmpty && holdsExactly(resp, cafeRows), resp.take(300))
+    } finally sys.props.remove("graft.materialise.root")
+  }
+
+  test("sf world: point-features over /evaluate reads the registry world's references table") {
+    import spark.implicits._
+    val cafeIds = sfFeatures.where(col("tags").getItem("#amenity") === "cafe")
+      .orderBy("id.value").select("id.value").as[Long].take(2)
+    val refs = Seq(("path", 900001L, "point", cafeIds(0), "", 0),
+        ("area", 900002L, "point", cafeIds(1), "", 1))
+      .toDF("from_type", "from_id", "to_type", "to_id", "role", "pos")
+    val withRefs = new WorldRegistry(spark,
+      Renderers.World(sfFeatures, refs, Seq.empty[Changes.ItemAdd].toDF()))
+    withServer(withRefs) { port =>
+      val (status, resp) = evaluateJson(port,
+        """{"expression": "find [#amenity=cafe] | point-features", "version": "1"}""")
+      assert(status == 200, resp)
+      val expected = Seq(s"""{"to_id":${cafeIds(0)},"from_type":"path","from_id":900001}""",
+        s"""{"to_id":${cafeIds(1)},"from_type":"area","from_id":900002}""")
+      assert(holdsExactly(resp, expected), resp)
+    }
+  }
+
+  test("count-valid-ids runs one Spark job") {
+    budgetWorld.count()
+    val (n, jobs) = JobCount(spark)(graft.shell.Shell.run(budgetWorld,
+      "find [#amenity=cafe] | map {f -> get f \"#amenity\"} | count-valid-ids"))
+    assert(n == cafes && jobs == 1, s"$n ids, $jobs jobs")
+  }
+
   // ---- serving budget: Spark jobs and code compiles per request ---------------
 
   /** The sf world plus the fixture polygons as areas, cached in 5 partitions

@@ -133,17 +133,6 @@ class GraphSpec extends SparkSuite {
       s"missing=${(expected.keySet -- used.keySet).take(5)} extra=${(used.keySet -- expected.keySet).take(5)}")
   }
 
-  test("a prepared Network reuses the broadcast across searches, same results") {
-    val net = Graph.network(edges)
-    val viaNet = Graph.reachable(net, Seq(0L).toDF("origin"), 900.0, "origin")
-      .as[(Long, Long, Double)].collect().toSet
-    val viaDf = Graph.reachable(edges, Seq(0L).toDF("origin"), 900.0)
-      .as[(Long, Long, Double)].collect().toSet
-    assert(viaNet == viaDf)
-    val c = Graph.closest(net, Seq(0L).toDF("origin"), Seq(60L).toDF("target"), 5000.0)
-    assert(c.count() == 1)
-  }
-
   test("connect adds an edge only when the points are not already adjacent") {
     val e0 = Seq((1L, 2L, 10.0), (2L, 1L, 10.0)).toDF("src", "dst", "cost_m")
     assert(Graph.connect(e0, 1L, 2L, 99.0).count() == 2, "already connected: unchanged")

@@ -33,7 +33,7 @@ class ImageSpec extends SparkSuite {
 
   test("thumbnails: aspect-preserved dims, exact nearest-neighbor pixel replay, caption intact") {
     val images = Fixtures.images(spark, 90)
-    val thumbs = ImageOps.thumbnails(images, 64).collect()
+    val thumbs = ImageOps.thumbnails(images).collect()
     assert(thumbs.length == 90)
     thumbs.foreach { t =>
       // generator dims cycle (64,64) (128,96) (256,256) -> thumbs all tw=64
@@ -73,7 +73,7 @@ class ImageSpec extends SparkSuite {
       (10007L, Fixtures.splitmix64(7L) ^ 1L, "cap-2"),   // 7 % 5 = 2 -> match
       (10010L, Fixtures.splitmix64(10L) ^ 1L, "cap-x"))  // conflict
       .toDF("image_id", "phash", "caption")
-    val got = ImageOps.captionConflicts(base.unionByName(clones), maxHamming = 3)
+    val got = ImageOps.captionConflicts(base.unionByName(clones))
       .select("id_a", "id_b", "caption_match").collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getBoolean(2)).toMap
     assert(got((7L, 10007L)) === true)

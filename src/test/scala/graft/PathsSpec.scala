@@ -66,7 +66,7 @@ class PathsSpec extends SparkSuite {
 
   test("stateful sessionization equals the batch window plan") {
     val ev = spark.read.parquet(s"$sf001/events.parquet")
-    val batch = Streaming.sessionize(ev, 30)
+    val batch = Streaming.sessionize(ev)
       .select(col("user_id"), col("session_idx"), col("n_events"),
         unix_micros(col("t_start").cast("timestamp")).as("s"),
         unix_micros(col("t_end").cast("timestamp")).as("e"))

@@ -17,10 +17,9 @@ class ShapefileSpec extends SparkSuite {
   }
 
   test("LSOA GOLDEN: E01000858 is Camden 018B with #boundary=lsoa (source_test.go:16-47)") {
-    val world = Shapefile.features(spark, shp,
+    val world = Shapefile.features(spark, shp, "LSOA11CD",
       copyTags = Map("LSOA11CD" -> "code", "LSOA11NM" -> "name", "POPULATION" -> "population"),
-      addTags = Map("#boundary" -> "lsoa"),
-      idField = Some("LSOA11CD"), onsYear = 2011)
+      addTags = Map("#boundary" -> "lsoa"))
     val found = world.where(col("id.value") === Shapefile.onsId("E01000858", 2011))
       .select(col("id.ns"), col("id.ftype"), col("tags")).collect()
     assert(found.length == 1, "boundary must be found by ONS id")
@@ -31,18 +30,16 @@ class ShapefileSpec extends SparkSuite {
   }
 
   test("copy-all-fields copies the remaining attributes (source_test.go:49-80)") {
-    val world = Shapefile.features(spark, shp,
+    val world = Shapefile.features(spark, shp, "LSOA11CD",
       copyTags = Map("LSOA11CD" -> "code"), copyAllFields = true,
-      addTags = Map("#boundary" -> "lsoa"),
-      idField = Some("LSOA11CD"))
+      addTags = Map("#boundary" -> "lsoa"))
     val tags = world.where(col("id.value") === Shapefile.onsId("E01000858", 2011))
       .select("tags").as[Map[String, String]].head()
     assert(tags("code") == "E01000858" && tags("LSOA11NM") == "Camden 018B")
   }
 
   test("BNG coordinates transform to WGS84: camden LSOAs land in camden") {
-    val world = Shapefile.features(spark, shp,
-      idField = Some("LSOA11CD"))
+    val world = Shapefile.features(spark, shp, "LSOA11CD")
     val stats = world.agg(min("lat"), max("lat"), min("lng"), max("lng")).head()
     assert(stats.getDouble(0) > 51.4 && stats.getDouble(1) < 51.7, stats.toString)
     assert(stats.getDouble(2) > -0.3 && stats.getDouble(3) < 0.05, stats.toString)
@@ -52,8 +49,8 @@ class ShapefileSpec extends SparkSuite {
   }
 
   test("LSOA polygons compose with the spatial plane: PIP join finds every interior point") {
-    val world = Shapefile.features(spark, shp,
-      copyTags = Map("LSOA11NM" -> "name"), idField = Some("LSOA11CD")).cache()
+    val world = Shapefile.features(spark, shp, "LSOA11CD",
+      copyTags = Map("LSOA11NM" -> "name")).cache()
     graft.functions.CellExprs.install(spark)
     // probe with a guaranteed-interior point of every 7th LSOA: each must land
     // in its own polygon through the engine's covering join

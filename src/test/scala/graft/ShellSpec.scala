@@ -669,15 +669,25 @@ class ShellSpec extends SparkSuite {
     assert(java.nio.file.Files.list(java.nio.file.Paths.get(exp)).count() > 0)
   }
 
-  test("eval: materialise reads back a registered named plan (materialise.go:37-80)") {
+  test("eval: materialise reads back an expression feature's collection (materialise.go:37-80)") {
     import spark.implicits._
+    import org.apache.spark.sql.functions.{lit, struct}
     val root = java.nio.file.Files.createTempDirectory("graft-shell-mat").toString
     sys.props("graft.materialise.root") = root
     try {
-      graft.operators.Materialise.register("shell-test-plan",
-        s => { import s.implicits._; Seq((1L, "a"), (2L, "b")).toDF("k", "v") })
-      val df = Shell.runDf(world, "materialise \"shell-test-plan\"")
+      // a point tagged a and b, and two expression features listing its tags
+      val tagsOfPoint = "find-feature /point/graft/mat/1 | all-tags"
+      val w = Seq(("point", 1L, Map("a" -> "1", "b" -> "2")),
+          ("expression", 2L, Map("b6" -> "expression", "expression" -> tagsOfPoint)),
+          ("expression", 3L, Map("b6" -> "expression", "expression" -> tagsOfPoint)))
+        .toDF("ftype", "value", "tags")
+        .select(struct(c_("ftype"), lit("graft/mat").as("ns"), c_("value")).as("id"), c_("tags"))
+      val df = Shell.runDf(w, "materialise /expression/graft/mat/2")
       assert(df.collect().map(_.getString(1)).toSet == Set("a", "b"))
+      // materialise-map writes one partition per key; list-feature reads one
+      assert(Shell.runDf(w, "materialise-map /expression/graft/mat/3 \"key\"").count() == 2)
+      val one = Shell.runDf(w, "list-feature /expression/graft/mat/3 \"key\" \"a\"")
+      assert(one.select("value").as[String].collect().toSeq == Seq("1"))
     } finally sys.props.remove("graft.materialise.root")
   }
 }

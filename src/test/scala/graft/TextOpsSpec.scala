@@ -23,7 +23,7 @@ class TextOpsSpec extends SparkSuite {
   }
 
   test("minhash LSH finds the near-dup and exact-dup pairs, not unrelated docs") {
-    val pairs = TextOps.dedupMinhashLsh(docs, "doc_id", "text", k = 3, threshold = 0.5)
+    val pairs = TextOps.dedupMinhashLsh(docs, "doc_id", "text", threshold = 0.5)
       .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs.contains((1L, 6L)), "exact dup must be found")
     assert(pairs.contains((1L, 2L)) && pairs.contains((2L, 6L)), "near dup must be found")
@@ -42,7 +42,7 @@ class TextOpsSpec extends SparkSuite {
       (9000L, "completely original text about spark catalyst expression codegen"),
       (9001L, "completely original text about spark catalyst expression codegen too"))
     val df = (boiler ++ real).toDF("doc_id", "text")
-    val pairs = TextOps.dedupMinhashLsh(df, "doc_id", "text", k = 3, threshold = 0.5,
+    val pairs = TextOps.dedupMinhashLsh(df, "doc_id", "text", threshold = 0.5,
       maxBucketSize = 64)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     val star = (1L until 800L).map(i => (0L, i)).toSet
@@ -61,7 +61,7 @@ class TextOpsSpec extends SparkSuite {
     val df = (0 until n).map(i =>
       (i.toLong, "same boilerplate text repeated in every document body verbatim"))
       .toDF("doc_id", "text")
-    val projected = TextOps.dedupMinhashLsh(df, "doc_id", "text", k = 3,
+    val projected = TextOps.dedupMinhashLsh(df, "doc_id", "text",
       threshold = 0.5, maxBucketSize = 64).select("id_a", "id_b")
     // NB collect on `projected` ITSELF: observed metrics attach to the
     // QueryExecution the action ran on, not to derived Datasets
@@ -78,7 +78,7 @@ class TextOpsSpec extends SparkSuite {
   }
 
   test("minhash jaccard estimate equals exact shingle jaccard on verification") {
-    val pairs = TextOps.dedupMinhashLsh(docs, "doc_id", "text", k = 3, threshold = 0.0)
+    val pairs = TextOps.dedupMinhashLsh(docs, "doc_id", "text", threshold = 0.0)
       .where(col("id_a") === 1L && col("id_b") === 6L).collect()
     assert(pairs.length == 1 && pairs(0).getDouble(2) == 1.0)
   }
