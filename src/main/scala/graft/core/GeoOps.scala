@@ -105,39 +105,39 @@ object GeoOps {
   }
 
   /**
-   * Point-in-area locators cached by WKB content (per thread). Identity
+   * Point-in-area tests cached by WKB content (per thread). Identity
    * caching does NOT work here: the join's build side stores rows in unsafe
    * format and materializes a fresh byte array per probe row, so the content
    * hash (one pass over the polygon bytes) is the unavoidable per-row lookup
-   * cost. The locate path avoids the per-row Point allocation via a scratch
-   * Coordinate (IndexedPointInAreaLocator does not retain it).
+   * cost.
    */
-  private val locatorCache = ThreadLocal.withInitial[java.util.LinkedHashMap[java.nio.ByteBuffer, AnyRef]](() =>
-    new java.util.LinkedHashMap[java.nio.ByteBuffer, AnyRef](64, 0.75f, true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[java.nio.ByteBuffer, AnyRef]): Boolean =
+  private val locatorCache = ThreadLocal.withInitial[java.util.LinkedHashMap[java.nio.ByteBuffer, (Double, Double) => Boolean]](() =>
+    new java.util.LinkedHashMap[java.nio.ByteBuffer, (Double, Double) => Boolean](64, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[java.nio.ByteBuffer, (Double, Double) => Boolean]): Boolean =
         size() > 512
     })
-  private val scratchCoord = ThreadLocal.withInitial[Coordinate](() => new Coordinate())
 
   /** covers (boundary-inclusive containment) of a lat/lng point by a WKB geometry. */
   def wkbCoversPoint(wkb: Array[Byte], lat: Double, lng: Double): Boolean = {
     val cache = locatorCache.get
     val key = java.nio.ByteBuffer.wrap(wkb)
-    var l = cache.get(key)
-    if (l == null) {
-      val g = fromWkb(wkb)
-      l = if (g.getDimension == 2)
-        new org.locationtech.jts.algorithm.locate.IndexedPointInAreaLocator(g)
-      else prepare(g)
-      cache.put(key, l)
-    }
-    l match {
-      case loc: org.locationtech.jts.algorithm.locate.IndexedPointInAreaLocator =>
-        val c = scratchCoord.get
-        c.x = lng; c.y = lat
-        loc.locate(c) != org.locationtech.jts.geom.Location.EXTERIOR
-      case p: PreparedGeometry => p.covers(point(lat, lng))
-    }
+    var covers = cache.get(key)
+    if (covers == null) { covers = pointCovers(wkb); cache.put(key, covers) }
+    covers(lat, lng)
+  }
+
+  /** covers of (lat, lng) points by one WKB geometry, prepared once and safe
+    * to share between threads: an area locates points through an
+    * `IndexedPointInAreaLocator` whose index is built here (its lazy build
+    * is then done before any thread reads it); any other geometry tests
+    * `covers` directly. */
+  def pointCovers(wkb: Array[Byte]): (Double, Double) => Boolean = {
+    val g = fromWkb(wkb)
+    if (g.getDimension == 2) {
+      val loc = new org.locationtech.jts.algorithm.locate.IndexedPointInAreaLocator(g)
+      loc.locate(new Coordinate())
+      (lat, lng) => loc.locate(new Coordinate(lng, lat)) != org.locationtech.jts.geom.Location.EXTERIOR
+    } else (lat, lng) => g.covers(point(lat, lng))
   }
 
   /** exact intersection of two WKB geometries (refine step of intersection joins). */

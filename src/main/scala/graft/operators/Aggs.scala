@@ -14,13 +14,21 @@ import org.apache.spark.unsafe.types.UTF8String
  */
 object Aggs {
 
-  /** count-values (collections.go:303-326): value -> occurrence count. */
-  def countValues(df: DataFrame, valueCol: String): DataFrame =
-    df.groupBy(col(valueCol)).agg(count(lit(1)).as("n"))
-
-  /** count-keys (collections.go:329-352). */
-  def countKeys(df: DataFrame, keyCol: String): DataFrame =
-    df.groupBy(col(keyCol)).agg(count(lit(1)).as("n"))
+  /** count-values (collections.go:303-326) and count-keys (:329-352):
+    * value -> occurrence count `n`. Up to [[SmallDistinct]] distinct values
+    * of a [[keyedOnDriver]] type the counts come from [[smallCounts]] (one
+    * Spark job) as a local relation, so collecting them runs no job; wider
+    * inputs and other types group by the value. */
+  def countValues(df: DataFrame, valueCol: String): DataFrame = {
+    val value = df.select(col(valueCol)).schema.head
+    smallCounts(df, col(valueCol)) match {
+      case Some(counts) =>
+        df.sparkSession.createDataFrame(
+          java.util.Arrays.asList(counts.map { case (v, c) => Row(v, c) }: _*),
+          StructType(Seq(value, StructField("n", LongType, nullable = false))))
+      case None => df.groupBy(col(valueCol)).agg(count(lit(1)).as("n"))
+    }
+  }
 
   /** sum-by-key (collections.go:278-300). */
   def sumByKey(df: DataFrame, keyCol: String, valueCol: String): DataFrame =

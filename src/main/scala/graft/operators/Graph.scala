@@ -255,8 +255,10 @@ object Graph {
     import spark.implicits._
     val bc = requireBroadcast(edges, "closest")
     val targetIds = targets.select(col(targets.columns.head).cast("long"))
-      .as[Long].collect().toSet
-    searchEach(origins, bc, budgetMeters, Some(spark.sparkContext.broadcast(targetIds))) { s =>
+      .as[Long].limit(MaxDriverTargets + 1).collect()
+    if (targetIds.length > MaxDriverTargets) throw graft.shell.Shell.ShellException(
+      s"closest searches for at most $MaxDriverTargets targets; this search has more")
+    searchEach(origins, bc, budgetMeters, Some(spark.sparkContext.broadcast(targetIds.toSet))) { s =>
       var best = -1
       s.reached.foreach { i =>
         if (s.isTarget(i) && (best < 0 || s.dist(i) < s.dist(best) ||
@@ -266,6 +268,10 @@ object Graph {
       else Iterator((s.origin, s.csr.nodeIds(best), s.dist(best)))
     }.toDF("origin", "node", "dist_m")
   }
+
+  /** Target ids up to which [[closest]] holds them on the driver; above it
+    * the search is refused. */
+  private[graft] val MaxDriverTargets = 100000
 
   /**
    * b6 `paths-to-reach` (api/functions/graph.go:451-499): per edge, how many

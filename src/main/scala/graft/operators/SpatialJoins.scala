@@ -1,7 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.api.java.UDF1
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.core.{Cells, GeoOps}
 import graft.functions.CellExprs._
 
@@ -11,13 +14,13 @@ import graft.functions.CellExprs._
  * Join shape mirrors the reference's spatial index duality
  * (src/diagonal.works/b6/search/spatial.go:65-113): polygon features are keyed
  * by their covering cells; a point's candidate polygons are those whose
- * covering contains one of the point's ancestors. We realise it as a pure
- * equi-join: explode the (small) polygon covering, take its distinct
- * covering levels (a <=30-element set) from one guarded collect of the
- * exploded cells, emit per point one join key per such level, then refine
- * exactly with JTS. A build side that fits on the driver is broadcast from
- * the collected rows; a larger one is left to Catalyst/AQE, which picks
- * broadcast vs sort-merge and splits skewed cells.
+ * covering contains one of the point's ancestors. One guarded collect of
+ * the exploded polygon covering decides the build side: when it fits on the
+ * driver it becomes an [[SpatialJoins.AreaIndex]] that each point probes,
+ * per covering level, inside the point scan; a larger one is joined on its
+ * cells (one join key per point and level) and left to Catalyst/AQE, which
+ * picks broadcast vs sort-merge and splits skewed cells. Either way the
+ * refine is exact JTS covers.
  */
 object SpatialJoins {
 
@@ -27,42 +30,122 @@ object SpatialJoins {
    * Returns points columns + polygon columns for each containment
    * (boundary-inclusive `covers`, matching the reference's ContainsPoint refine,
    * src/diagonal.works/b6/api/functions/features.go:49-105).
+   * A polygon side that fits on the driver is probed through an
+   * [[AreaIndex]]; a larger one, or one carrying a join hint, takes
+   * [[cellJoin]].
    */
-  def pointInPolygonJoin(points: DataFrame, polygons: DataFrame): DataFrame = {
-    val spark = points.sparkSession
-    graft.functions.CellExprs.install(spark)
+  def pointInPolygonJoin(points: DataFrame, polygons: DataFrame): DataFrame =
+    AreaIndex(polygons).fold(cellJoin(points, polygons))(_.join(points))
+
+  /** [[pointInPolygonJoin]] as an equi-join on covering cells: the covering
+    * levels come from a distinct over the (<= MaxLevel+1 values) level
+    * column, each point emits one join key per level, and Catalyst/AQE picks
+    * broadcast vs sort-merge (a caller's hint, e.g. `hint("merge")`,
+    * decides it) and splits skewed cells. */
+  def cellJoin(points: DataFrame, polygons: DataFrame): DataFrame = {
+    graft.functions.CellExprs.install(points.sparkSession)
     val polyCells = polygons.withColumn("__jcell", explode(col("covering")))
-    // One guarded collect decides the build side: when the exploded polygon
-    // cells fit on the driver, their rows give the covering levels and are
-    // broadcast as the build side as they are; otherwise the levels come
-    // from a distinct over the (still small, <= MaxLevel+1 values) level
-    // column and Catalyst/AQE picks the join. A caller's join hint on the
-    // polygon side (e.g. `hint("merge")`) also takes the second path, so the
-    // hint still decides the join. Either way the big point side needs
-    // exactly one pass.
-    val hinted = polygons.queryExecution.analyzed.exists(
-      _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.ResolvedHint])
-    val head = if (hinted) None
-      else Some(polyCells.limit(MaxDriverCells + 1).collect()).filter(_.length <= MaxDriverCells)
-    val (levels, build) = head match {
-      case Some(rows) =>
-        val cell = polyCells.schema.fieldIndex("__jcell")
-        (rows.map(r => Cells.level(r.getLong(cell))).distinct.sorted,
-          broadcast(spark.createDataFrame(java.util.Arrays.asList(rows: _*), polyCells.schema)))
-      case None =>
-        (polyCells.select(cell_level(col("__jcell")).as("l")).distinct().collect()
-          .map(_.getInt(0)).sorted, polyCells)
-    }
+    val levels = polyCells.select(cell_level(col("__jcell")).as("l")).distinct().collect()
+      .map(_.getInt(0)).sorted
     val keyed = points.withColumn("__jcell",
       explode(array(levels.map(l => cell_parent_at(col("cell16"), lit(l))): _*)))
-    keyed.join(build, "__jcell")
+    keyed.join(polyCells, "__jcell")
       .where(wkb_covers_point(col("geom"), col("lat"), col("lng")))
       .drop("__jcell")
   }
 
-  /** Exploded polygon cells up to which [[pointInPolygonJoin]] collects its
-    * build side on the driver and broadcasts it. */
+  /** Exploded polygon cells up to which [[AreaIndex]] holds a polygon side
+    * on the driver. */
   private val MaxDriverCells = 20000
+
+  /**
+   * The small build side of [[pointInPolygonJoin]]: the polygon rows, their
+   * covering levels and a covering cell -> polygon ordinals map, in one
+   * broadcast variable. Each executor prepares every polygon's locator once.
+   * [[join]] probes it inside the point scan: per covering level, a hash
+   * lookup of the point's parent cell, then the covers test of each
+   * candidate. It needs no exchange and no broadcast job.
+   */
+  final class AreaIndex private (polygons: StructType, areas: Broadcast[AreaIndex.Areas]) {
+
+    /** The points columns, then the polygon columns, of each containment:
+      * one row per (point, matching covering cell, polygon), as the
+      * equi-join of [[cellJoin]] gives. The ordinals of a point's polygons
+      * are exploded and each polygon column is a lookup by ordinal, so the
+      * points stay in Spark's row format and a column nobody selects is
+      * never looked up. */
+    def join(points: DataFrame): DataFrame = {
+      val areas = this.areas
+      val within = udf((cell16: Long, lat: Double, lng: Double) => areas.value.containing(cell16, lat, lng))
+      val polygonCols = polygons.fields.indices.map { k =>
+        val field: UDF1[Int, Any] = i => areas.value.rows(i).get(k)
+        udf(field, polygons(k).dataType)(col("__area")).as(polygons(k).name)
+      }
+      points.withColumn("__area", explode(within(col("cell16"), col("lat"), col("lng"))))
+        .select(points.columns.map(points.col) ++ polygonCols: _*)
+    }
+
+    /** Drop the executors' copies. A task already holding the index still
+      * runs: the driver keeps the value (unlike `destroy`). */
+    def unpersist(): Unit = areas.unpersist(false)
+  }
+
+  object AreaIndex {
+
+    /** The broadcast value. `cells` maps a covering cell to the ordinals
+      * (into `rows`) of the polygons it covers, one entry per covering cell
+      * of a polygon. */
+    private[SpatialJoins] final class Areas(val rows: Array[Row], geomAt: Int, levels: Array[Int],
+        cells: java.util.HashMap[java.lang.Long, Array[Int]]) extends Serializable {
+
+      /** Each polygon's covers test, built on an executor's first use and
+        * then shared by its task threads. */
+      @transient private lazy val covers: Array[(Double, Double) => Boolean] =
+        rows.map(r => if (r.isNullAt(geomAt)) null else GeoOps.pointCovers(r.getAs[Array[Byte]](geomAt)))
+
+      /** The ordinals of the polygons covering the point, or null for none. */
+      def containing(cell16: Long, lat: Double, lng: Double): Array[Int] = {
+        val c = covers
+        var out: Array[Int] = null
+        levels.foreach { l =>
+          val hit = cells.get(Cells.parentAt(cell16, l))
+          if (hit != null) hit.foreach { i =>
+            if (c(i) != null && c(i)(lat, lng)) out = if (out == null) Array(i) else out :+ i
+          }
+        }
+        out
+      }
+    }
+
+    /**
+     * The index of `polygons` from one guarded `limit(N + 1).collect()` of
+     * their exploded covering cells, or None above [[MaxDriverCells]] cells
+     * or when the polygon side carries a join hint (the hint then decides
+     * the join). `posexplode` numbers each polygon's cells from 0, and a
+     * polygon's cells arrive together (nothing reorders rows between the
+     * generator and the collect), so cell 0 starts the next polygon.
+     */
+    def apply(polygons: DataFrame): Option[AreaIndex] = {
+      val hinted = polygons.queryExecution.analyzed.exists(
+        _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.ResolvedHint])
+      if (hinted) return None
+      val n = polygons.schema.length
+      val rows = polygons.select(col("*"), posexplode(col("covering")).as(Seq("__jpos", "__jcell")))
+        .limit(MaxDriverCells + 1).collect()
+      Option.when(rows.length <= MaxDriverCells) {
+        val areas = Array.newBuilder[Row]
+        var ordinal = -1
+        val byCell = new java.util.HashMap[java.lang.Long, Array[Int]]()
+        rows.foreach { r =>
+          if (r.getInt(n) == 0) { areas += Row.fromSeq(r.toSeq.take(n)); ordinal += 1 }
+          byCell.merge(r.getLong(n + 1), Array(ordinal), (a, b) => a ++ b)
+        }
+        val levels = byCell.keySet.toArray(Array.empty[java.lang.Long]).map(c => Cells.level(c)).distinct.sorted
+        new AreaIndex(polygons.schema, polygons.sparkSession.sparkContext.broadcast(
+          new Areas(areas.result(), polygons.schema.fieldIndex("geom"), levels, byCell)))
+      }
+    }
+  }
 
   /**
    * Geometry-intersection join (polyline/polygon features vs polygon query

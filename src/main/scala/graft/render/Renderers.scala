@@ -32,7 +32,16 @@ object Renderers {
     token.flatMap(Shell.parseFeatureIdToken)
       .map { case (t, ns, v) => WorldId(t, ns, v) }.getOrElse(DefaultWorldId)
 
-  case class World(features: DataFrame, refs: DataFrame, items: DataFrame)
+  /** A world and what requests derive from it once: its [[Shell.Areas]],
+    * whose index the first `containing-areas` request builds. A changed
+    * world is a new World, so it derives its own. */
+  case class World(features: DataFrame, refs: DataFrame, items: DataFrame) {
+    val areas = new Shell.Areas(features)
+
+    /** The evaluation environment of a request: the world's features, its
+      * references table and its areas; no street network is derived. */
+    def env: Shell.Env = Shell.Env(features, None, refs = Some(refs), areas = Some(areas))
+  }
 
   /**
    * MutableWorlds (ingest/worlds.go:22-62): FindOrCreateWorld lazily builds
@@ -57,7 +66,13 @@ object Renderers {
 
     /** DeleteWorld RPC: drop a world from the registry
       * (grpc/service.go:102-105); a later findOrCreate re-derives it. */
-    def deleteWorld(id: WorldId): Unit = worlds.remove(id)
+    def deleteWorld(id: WorldId): Unit = worlds.remove(id).foreach(release)
+
+    /** Unpersist the area index of a world no id names any more. The base,
+      * and a World value another id still holds, keep theirs. Unpersist,
+      * not destroy, so a request already running on the world finishes. */
+    private def release(w: World): Unit =
+      if ((w ne base) && !worlds.values.exists(_ eq w)) w.areas.unpersist()
 
     private def valid(id: WorldId): Boolean = id.ns.nonEmpty && id.value >= 0
 
@@ -69,7 +84,7 @@ object Renderers {
       val items = if (newItems.isEmpty) w.items
         else w.items.unionByName(newItems, allowMissingColumns = true)
       val key = if (valid(id)) id else DefaultWorldId
-      worlds(key) = World(features, refs, items)
+      worlds.put(key, World(features, refs, items)).foreach(release)
       id
     }
   }

@@ -60,10 +60,7 @@ object EvaluateService {
     if (version.takeWhile(_ != '.') != ApiVersion)
       throw Shell.ShellException(
         s"client version $version is not compatible with b6 version $ApiVersion")
-    val w = reg.findOrCreate(id)
-    // the world's features and its references table (point-paths,
-    // point-features, entrance-approach); no street network is derived
-    runIn(Shell.Env(w.features, None, refs = Some(w.refs))) match {
+    runIn(reg.findOrCreate(id).env) match {
       case change: graft.operators.Changes.ChangeSet =>
         // a Change result applies TRANSACTIONALLY to the requested world and
         // the changed ids come back (grpc/service.go:60-67)

@@ -2,6 +2,7 @@ package graft.shell
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.operators.SpatialJoins
 import graft.query._
 
 /**
@@ -466,10 +467,35 @@ object Shell {
     * implicitly; here network derivation is an explicit ingest step —
     * OsmWorld.networkEdges — passed alongside), optionally the network's
     * node coordinates (node_id, lat, lng), and optionally the references
-    * table (point-paths / point-features / entrance-approach). */
+    * table (point-paths / point-features / entrance-approach), and
+    * optionally the world's [[Areas]], which a served world keeps across
+    * requests (without them `containing-areas` indexes the areas again). */
   case class Env(world: DataFrame, network: Option[DataFrame],
                  nodes: Option[DataFrame] = None,
-                 refs: Option[DataFrame] = None)
+                 refs: Option[DataFrame] = None,
+                 areas: Option[Areas] = None)
+
+  /** A world's area features, the build side of `containing-areas`, and
+    * their [[SpatialJoins.AreaIndex]], built by the first request that
+    * joins against them (None above the index's bound: such requests take
+    * the cell join). */
+  final class Areas(world: DataFrame) {
+    private lazy val polygons = world.where(col("id.ftype") === "area" && col("geom").isNotNull)
+      .select(col("id.value").as("poly_id"), col("geom"), col("covering"))
+    private var built: Option[Option[SpatialJoins.AreaIndex]] = None
+
+    private def index: Option[SpatialJoins.AreaIndex] = synchronized {
+      if (built.isEmpty) built = Some(SpatialJoins.AreaIndex(polygons))
+      built.get
+    }
+
+    /** Points (point_fid, lat, lng, cell16) joined to the areas that cover them. */
+    def containing(points: DataFrame): DataFrame =
+      index.fold(SpatialJoins.cellJoin(points, polygons))(_.join(points))
+
+    /** Release the index's broadcast, if one was built. */
+    def unpersist(): Unit = synchronized { built.flatten.foreach(_.unpersist()) }
+  }
 
   /** Evaluate under a fully-populated environment. */
   def run(env: Env, expression: String): Any =
@@ -587,7 +613,7 @@ object Shell {
       case ("count-values", List(c)) =>
         graft.operators.Aggs.countValues(asDf(c), "value")
       case ("count-keys", List(c)) =>
-        graft.operators.Aggs.countKeys(asDf(c), "key")
+        graft.operators.Aggs.countValues(asDf(c), "key")
       case ("sum-by-key", List(c)) =>
         graft.operators.Aggs.sumByKey(asDf(c), "key", "value")
       case ("histogram", List(c)) =>
@@ -814,11 +840,8 @@ object Shell {
       case ("containing-areas", List(c)) =>
         // PIP join of the collection's points vs the world's area features
         // (api/functions/search.go findAreasContainingPoints)
-        val areas = world.where(col("id.ftype") === "area" && col("geom").isNotNull)
-          .select(col("id.value").as("poly_id"), col("geom"), col("covering"))
-        graft.operators.SpatialJoins.pointInPolygonJoin(
-          asDf(c).select(col("id.value").as("point_fid"), col("lat"), col("lng"), col("cell16")),
-          areas)
+        env.areas.getOrElse(new Areas(world)).containing(
+          asDf(c).select(col("id.value").as("point_fid"), col("lat"), col("lng"), col("cell16")))
       case ("within", List(g: org.locationtech.jts.geom.Geometry)) =>
         IntersectsGeom(graft.core.GeoOps.toWkb(g))
       case ("within-cap", List(LatLngE(la, lo), r)) => IntersectsCap(la, lo, num(r))

@@ -38,6 +38,11 @@ class BatchBudgetSpec extends SparkSuite {
     assert(jobs <= 5, s"$jobs jobs")
   }
 
+  test("batch budget: sj_pip built and run starts at most 6 Spark jobs") {
+    val jobs = warmJobs("sj_pip")
+    assert(jobs <= 6, s"$jobs jobs")
+  }
+
   test("Tables.schema is spark.read.parquet's schema, inferred again for a rewritten file") {
     Seq("events", "lineitem", "documents").foreach { t =>
       val path = s"$sf001/$t.parquet"

@@ -416,12 +416,94 @@ class EvaluateServiceSpec extends SparkSuite {
     assert(tile.nonEmpty && tileJobs == 1)
   }
 
-  test("serving budget: containing-areas | count runs at most 4 Spark jobs") {
+  test("serving budget: a warm containing-areas | count runs one Spark job") {
     budgetWorld.count()
-    val (r, jobs) = JobCount(spark)(EvaluateService.evaluate(budgetReg,
-      "find [#amenity=cafe] | containing-areas | count", None, "1"))
-    assert(r.kind == "long" && r.json.toLong > 0, r)
-    assert(jobs <= 4, s"$jobs jobs")
+    def eval() = EvaluateService.evaluate(budgetReg,
+      "find [#amenity=cafe] | containing-areas | count", None, "1")
+    val first = eval()
+    val (r, jobs) = JobCount(spark)(eval())
+    assert(r.kind == "long" && r.json.toLong > 0 && r == first, r)
+    assert(jobs == 1, s"$jobs jobs")
+  }
+
+  test("serving budget: count-values and count-keys run one Spark job each, and equal a groupBy") {
+    budgetWorld.count()
+    def counts(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val amenities = budgetWorld.where(col("tags").getItem("#amenity").isNotNull)
+    val (values, valueJobs) = JobCount(spark)(counts(graft.shell.Shell.runDf(budgetWorld,
+      "find [#amenity] | map {f -> get f \"#amenity\"} | count-values")))
+    assert(valueJobs == 1, s"$valueJobs jobs")
+    assert(values == counts(amenities.groupBy(col("tags").getItem("#amenity")).count()))
+    val (keys, keyJobs) = JobCount(spark)(counts(graft.shell.Shell.runDf(budgetWorld,
+      "find [#amenity] | all-tags | count-keys")))
+    assert(keyJobs == 1, s"$keyJobs jobs")
+    assert(keys == counts(amenities.select(explode(map_keys(col("tags"))).as("k")).groupBy("k").count()))
+    val (reply, replyJobs) = JobCount(spark)(EvaluateService.evaluate(budgetReg,
+      "find [#amenity] | map {f -> get f \"#amenity\"} | count-values", None, "1"))
+    assert(reply.kind == "collection" && replyJobs == 1, s"$replyJobs jobs: $reply")
+  }
+
+  /** The cafes of a registry world joined to its areas, as a served
+    * containing-areas builds them, and the same pairs from the cell join. */
+  private def cafeAreas(r: WorldRegistry, id: WorldId) = {
+    val world = r.findOrCreate(id)
+    val served = graft.shell.Shell.run(world.env, "find [#amenity=cafe] | containing-areas")
+      .asInstanceOf[org.apache.spark.sql.DataFrame]
+    val direct = graft.operators.SpatialJoins.cellJoin(
+      world.features.where(col("tags").getItem("#amenity") === "cafe")
+        .select(col("id.value").as("point_fid"), col("lat"), col("lng"), col("cell16")),
+      world.features.where(col("id.ftype") === "area" && col("geom").isNotNull)
+        .select(col("id.value").as("poly_id"), col("geom"), col("covering")))
+    (served, direct)
+  }
+
+  private def pairs(df: org.apache.spark.sql.DataFrame) =
+    df.select("point_fid", "poly_id").collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+
+  test("serving: a served containing-areas plans no exchange and no areas scan, and equals the cell join") {
+    val (served, direct) = cafeAreas(budgetReg, DefaultWorldId)
+    // the physical operators over the cached world (its own cached plan,
+    // repartition included, is an inner child of the cache scan)
+    val plan = served.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    val nodes = plan.collect { case p => p.nodeName }
+    assert(nodes.contains("InMemoryTableScan") && nodes.contains("Generate"), plan)
+    assert(!nodes.exists(n => n.contains("Exchange") || n.contains("LocalTableScan")), plan)
+    assert(pairs(served).nonEmpty && pairs(served) == pairs(direct))
+    assert(served.columns.toSeq == direct.columns.toSeq)
+  }
+
+  test("serving: an area added by applyChange is found in the changed world, not in the base") {
+    val id = WorldId("collection", "graft/areas", 1L)
+    val cafe = sfFeatures.where(col("tags").getItem("#amenity") === "cafe")
+      .orderBy("point_id").select("id.value", "lat", "lng").head()
+    val added = 990001L
+    // the base world has answered (and indexed) before the change
+    assert(!pairs(cafeAreas(budgetReg, DefaultWorldId)._1).exists(_._2 == added))
+    budgetReg.applyChange(id, Changes.ChangeSet(adds = Seq(Changes.FeatureAdd(
+      "area", "graft/test", added, Map("#landuse" -> "added"), cafe.getDouble(1), cafe.getDouble(2)))))
+    val (changed, direct) = cafeAreas(budgetReg, id)
+    assert(pairs(changed).contains((cafe.getLong(0), added)))
+    assert(pairs(changed) == pairs(direct))
+    assert(!pairs(cafeAreas(budgetReg, DefaultWorldId)._1).exists(_._2 == added))
+  }
+
+  test("serving: deleting or replacing a world does not fail a request already running on it") {
+    val id = WorldId("collection", "graft/areas", 2L)
+    def change(v: String) = Changes.tagChange("point", "graft/test", 1L, "#note", Some(v))
+    budgetReg.applyChange(id, change("a"))
+    // each request has built its plan over the world's index; the world is
+    // then replaced, or deleted, before the request's job runs
+    val (beforeReplace, expected) = cafeAreas(budgetReg, id)
+    budgetReg.applyChange(id, change("b"))
+    assert(pairs(beforeReplace) == pairs(expected))
+    val (beforeDelete, _) = cafeAreas(budgetReg, id)
+    budgetReg.deleteWorld(id)
+    assert(pairs(beforeDelete) == pairs(expected))
+    assert(!budgetReg.listWorlds.contains(id))
   }
 
   test("serving budget: a new cap centre and radius, a new take n, or a new tile compiles no code") {

@@ -89,6 +89,13 @@ class GraphSpec extends SparkSuite {
     assert(got(0)._2 == best._1 && got(0)._3 == best._2)
   }
 
+  test("closest above its target bound is refused with a ShellException naming the bound") {
+    val targets = spark.range(Graph.MaxDriverTargets + 1L).toDF("target")
+    val e = intercept[graft.shell.Shell.ShellException](
+      Graph.closest(edges, Seq(0L).toDF("origin"), targets, 5000.0))
+    assert(e.getMessage.contains(s"${Graph.MaxDriverTargets}"), e.getMessage)
+  }
+
   test("closest drops origins that reach no target within budget") {
     val origins = Seq(0L, 143L).toDF("origin")
     val targets = Seq(11L).toDF("target") // corner near node 0

@@ -40,7 +40,7 @@ class MapPlaneSpec extends SparkSuite {
 
   test("count-keys and count-valid-ids (collections.go:329-352, math.go:125-140)") {
     val df = Seq(("a", 1L), ("a", -1L), ("b", 2L)).toDF("key", "id")
-    val ck = Aggs.countKeys(df, "key").collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val ck = Aggs.countValues(df, "key").collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(ck == Map("a" -> 2L, "b" -> 1L))
     val validIds = df.where(col("id") >= 0).count()
     assert(validIds == 2)

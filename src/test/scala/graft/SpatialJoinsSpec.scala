@@ -52,6 +52,111 @@ class SpatialJoinsSpec extends SparkSuite {
     assert(wide.count() == SpatialJoins.pointInPolygonJoin(points, polys).count())
   }
 
+  /** Seeded random areas over lat [51.40, 51.60] x lng [-0.20, 0.00]:
+    * star-shaped polygons, some with a hole, two-part multipolygons with
+    * holes, and slivers. Every other area has its vertices snapped to level
+    * 16 cell corners, so its vertex points also lie on cell boundaries;
+    * invalid shapes (a snap can fold a ring) are dropped. */
+  private def randomAreas(rnd: scala.util.Random): Seq[(Long, String)] = {
+    def snap(lat: Double, lng: Double) = {
+      val c = graft.core.Cells.cellOf(lat, lng, 16)
+      (graft.core.Cells.latLo(c), graft.core.Cells.lngLo(c))
+    }
+    def ring(pts: Seq[(Double, Double)]) = (pts :+ pts.head).map { case (la, ln) => s"$ln $la" }
+      .mkString("(", ", ", ")")
+    // a star-shaped ring around (la, ln): sorted angles, radii in [r/2, r]
+    def star(la: Double, ln: Double, r: Double, n: Int, snapped: Boolean) = {
+      val angles = Seq.fill(n)(rnd.nextDouble() * 2 * math.Pi).sorted
+      val pts = angles.map { a =>
+        val rr = r * (0.5 + 0.5 * rnd.nextDouble())
+        (la + rr * math.sin(a), ln + rr * math.cos(a))
+      }
+      (if (snapped) pts.map { case (a, b) => snap(a, b) } else pts).distinct
+    }
+    // a square hole inside the star's inner radius r/2
+    def hole(la: Double, ln: Double, r: Double) = {
+      val h = r * 0.2
+      Seq((la - h, ln - h), (la - h, ln + h), (la + h, ln + h), (la + h, ln - h))
+    }
+    def polygon(la: Double, ln: Double, r: Double, snapped: Boolean) = {
+      val shell = star(la, ln, r, 5 + rnd.nextInt(8), snapped)
+      if (rnd.nextBoolean()) s"(${ring(shell)}, ${ring(hole(la, ln, r))})" else s"(${ring(shell)})"
+    }
+    (0 until 30).map { i =>
+      val la = 51.42 + rnd.nextDouble() * 0.16
+      val ln = -0.18 + rnd.nextDouble() * 0.16
+      val snapped = i % 2 == 0
+      val r = (if (snapped) 0.008 else 0.002) + rnd.nextDouble() * 0.01
+      val wkt = i % 3 match {
+        case 0 => s"POLYGON ${polygon(la, ln, r, snapped)}"
+        case 1 => // two parts 3r apart, so they never touch
+          s"MULTIPOLYGON (${polygon(la, ln, r, snapped)}, ${polygon(la, ln + 3 * r, r, snapped)})"
+        case _ => // a sliver: a long triangle a few metres wide
+          val w = 1e-5 * (1 + rnd.nextInt(5))
+          s"POLYGON (${ring(Seq((la, ln), (la + w, ln + r * 2), (la - w, ln + r * 4)))})"
+      }
+      (1000L + i, wkt)
+    }.filter { case (_, wkt) => scala.util.Try(GeoOps.fromWkt(wkt).isValid).getOrElse(false) }
+  }
+
+  /** Random points, the areas' vertices, points along their edges and
+    * points on cell boundaries at the covering levels. */
+  private def randomPoints(rnd: scala.util.Random, areas: Seq[org.locationtech.jts.geom.Geometry]) = {
+    val uniform = Seq.fill(1500)((51.40 + rnd.nextDouble() * 0.2, -0.20 + rnd.nextDouble() * 0.2))
+    val vertices = areas.flatMap(_.getCoordinates.toSeq).map(c => (c.y, c.x))
+    val edges = areas.flatMap { g =>
+      val cs = g.getCoordinates
+      (1 until cs.length).map { i =>
+        val t = if (rnd.nextBoolean()) 0.5 else rnd.nextDouble()
+        (cs(i - 1).y + t * (cs(i).y - cs(i - 1).y), cs(i - 1).x + t * (cs(i).x - cs(i - 1).x))
+      }
+    }
+    val cellEdges = uniform.take(600).zipWithIndex.map { case ((la, ln), i) =>
+      val c = graft.core.Cells.cellOf(la, ln, 10 + i % 7)
+      i % 3 match {
+        case 0 => (graft.core.Cells.latLo(c), ln)
+        case 1 => (la, graft.core.Cells.lngLo(c))
+        case _ => (graft.core.Cells.latLo(c), graft.core.Cells.lngLo(c))
+      }
+    }
+    (uniform ++ vertices ++ edges ++ cellEdges).zipWithIndex.map { case ((la, ln), i) => (i.toLong, la, ln) }
+  }
+
+  test("the area index join equals brute-force JTS covers and the hinted cell join (random holes, multipolygons, slivers)") {
+    import spark.implicits._
+    Seq(7L, 19L, 42L).foreach { seed =>
+      val rnd = new scala.util.Random(seed)
+      val areas = randomAreas(rnd)
+      val geoms = areas.map { case (id, wkt) => id -> GeoOps.fromWkt(wkt) }
+      val pointRows = randomPoints(rnd, geoms.map(_._2))
+      val points = pointRows.toDF("point_id", "lat", "lng")
+        .withColumn("cell16", graft.functions.CellExprs.cell_of(col("lat"), col("lng"), lit(16)))
+      val polygons = geoms.map { case (id, g) => (id, GeoOps.toWkb(g)) }.toDF("poly_id", "geom")
+        .withColumn("covering", graft.functions.CellExprs.cell_covering(col("geom"), lit(16), lit(8)))
+      val indexed = SpatialJoins.pointInPolygonJoin(points, polygons)
+      val hinted = SpatialJoins.pointInPolygonJoin(points, polygons.hint("merge"))
+      def nodes(df: org.apache.spark.sql.DataFrame) = (df.queryExecution.executedPlan match {
+        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
+        case p => p
+      }).collect { case p => p.nodeName }
+      assert(!nodes(indexed).exists(n => n.contains("Join") || n.contains("Exchange")), nodes(indexed))
+      assert(nodes(hinted).exists(_.contains("Join")), nodes(hinted))
+      def pairs(df: org.apache.spark.sql.DataFrame) =
+        df.select("point_id", "poly_id").as[(Long, Long)].collect().sorted.toSeq
+      val expected = (for {
+        (pid, la, ln) <- pointRows
+        (id, g) <- geoms
+        if g.covers(GeoOps.point(la, ln))
+      } yield (pid, id)).sorted
+      val got = pairs(indexed)
+      assert(got == expected,
+        s"seed $seed: missing=${expected.diff(got).take(5)} extra=${got.diff(expected).take(5)}")
+      assert(pairs(hinted) == got, s"seed $seed")
+      assert(indexed.schema.map(f => (f.name, f.dataType)) == hinted.schema.map(f => (f.name, f.dataType)))
+      assert(indexed.columns.toSeq == points.columns.toSeq ++ polygons.columns)
+    }
+  }
+
   test("knnJoin is exact vs brute-force haversine top-k") {
     val got = SpatialJoins.knnJoin(Fixtures.points(spark, sf001), Fixtures.sites(spark), 3)
       .select("site_id", "rank", "point_id").collect()
