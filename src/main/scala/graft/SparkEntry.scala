@@ -56,42 +56,44 @@ object SparkEntry {
 
   // ---- the operator inventory --------------------------------------------------
 
+  /** Each query's result is a row multiset: no root sort, since nothing reads
+    * the order (`Verify.dump` orders what it writes). */
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // -- query algebra (SURVEY §2.A) --
     "qa_tagged" -> ((s, d) => QueryPlanner.find(features(s, d), Tagged("#amenity", "cafe"))
-      .select(col("point_id"), col("lat"), col("lng")).orderBy("point_id")),
+      .select(col("point_id"), col("lat"), col("lng"))),
     "qa_keyed" -> ((s, d) => QueryPlanner.find(features(s, d), Keyed("@name"))
-      .select(col("point_id"), col("tags").getItem("@name").as("name")).orderBy("point_id")),
+      .select(col("point_id"), col("tags").getItem("@name").as("name"))),
     "qa_typed" -> ((s, d) => QueryPlanner.find(features(s, d), TypedQ("point", Keyed("#amenity")))
-      .select(col("point_id")).orderBy("point_id")),
+      .select(col("point_id"))),
     "qa_and_or" -> ((s, d) => QueryPlanner.find(features(s, d),
       Or(Seq(And(Seq(Tagged("#amenity", "cafe"), Keyed("@name"))), Tagged("#amenity", "fountain"))))
-      .select(col("point_id")).orderBy("point_id")),
+      .select(col("point_id"))),
     "qa_token_prefix" -> ((s, d) => QueryPlanner.find(features(s, d), TokenPrefix("@name", "site-1"))
-      .select(col("point_id")).orderBy("point_id")),
+      .select(col("point_id"))),
     "qa_keyrange" -> ((s, d) => QueryPlanner.find(features(s, d),
       And(Seq(KeyRange(1000, 2000), Tagged("#amenity", "restaurant"))))
-      .select(col("point_id")).orderBy("point_id")),
+      .select(col("point_id"))),
     "qa_intersects_cap" -> ((s, d) => QueryPlanner.find(features(s, d),
       IntersectsCap(51.5353, -0.1258, 900.0))
-      .select(col("point_id")).orderBy("point_id")),
+      .select(col("point_id"))),
     "qa_intersects_geom" -> ((s, d) => {
       val wkb = GeoOps.toWkb(GeoOps.fromWkt(
         "POLYGON ((-0.13 51.53, -0.12 51.529, -0.115 51.536, -0.124 51.541, -0.132 51.537, -0.13 51.53))"))
       QueryPlanner.find(features(s, d), IntersectsGeom(wkb))
-        .select(col("point_id")).orderBy("point_id")
+        .select(col("point_id"))
     }),
 
     // -- spatial joins (SURVEY §2.B joins + §7.6) --
     "sj_pip" -> ((s, d) => SpatialJoins.pointInPolygonJoin(
       Fixtures.points(s, d), Fixtures.polygons(s))
-      .select(col("point_id"), col("poly_id")).orderBy("point_id", "poly_id")),
+      .select(col("point_id"), col("poly_id"))),
     "sj_pip_rect" -> ((s, d) => {
       val p = Fixtures.points(s, d)
       p.join(broadcast(Fixtures.rectsDf(s)),
         col("lat") >= col("lat_lo") && col("lat") < col("lat_hi") &&
           col("lng") >= col("lng_lo") && col("lng") < col("lng_hi"))
-        .select(col("point_id"), col("rect_id")).orderBy("point_id", "rect_id")
+        .select(col("point_id"), col("rect_id"))
     }),
     // level 14 (~1.2 km cells): the old default level 10 (~19.6 km cells) made
     // every site's ring-1 disk cover the whole fixture region (~500k candidate
@@ -99,13 +101,12 @@ object SparkEntry {
     // candidates) and ring 1 still settles k=3 at this density. Results are
     // level-invariant (ring guarantee exact at any level; oracle-gated).
     "sj_knn" -> ((s, d) => SpatialJoins.knnJoin(Fixtures.points(s, d), Fixtures.sites(s), 3, level = 14)
-      .select(col("site_id"), col("rank").cast("long").as("rank"), col("point_id"))
-      .orderBy("site_id", "rank")),
+      .select(col("site_id"), col("rank").cast("long").as("rank"), col("point_id"))),
     "sj_tile" -> ((s, d) => SpatialJoins.tileAssignment(Fixtures.points(s, d), 14)
       .groupBy(col("tile_xx").as("tx"), col("tile_yy").as("ty"))
-      .agg(count(lit(1)).as("n")).orderBy("tx", "ty")),
+      .agg(count(lit(1)).as("n"))),
     "sj_cap_agg" -> ((s, d) => SpatialJoins.withinCap(Fixtures.points(s, d), 51.5353, -0.1258, 1500.0)
-      .groupBy(col("event_type")).agg(count(lit(1)).as("n")).orderBy("event_type")),
+      .groupBy(col("event_type")).agg(count(lit(1)).as("n"))),
     "sj_intersection" -> ((s, d) => {
       // geometry-intersection join: a box around every 100th point vs the
       // fixture polygons (IntersectsMultiPolygon semantics, spatial.go:609-711).
@@ -121,31 +122,26 @@ object SparkEntry {
       SpatialJoins.intersectionJoin(boxes,
           Fixtures.polygons(s).select(col("poly_id"), col("geom").as("pgeom")),
           leftGeom = "geom", rightGeom = "pgeom")
-        .select(col("point_id"), col("poly_id")).orderBy("point_id", "poly_id")
+        .select(col("point_id"), col("poly_id"))
     }),
 
     // -- aggregations (SURVEY §2.B aggregations) --
-    "ag_count_values" -> ((s, d) => Aggs.countValues(t(s, d, "events"), "event_type")
-      .orderBy("event_type")),
-    "ag_sum_by_key" -> ((s, d) => Aggs.sumByKey(t(s, d, "lineitem"), "l_returnflag", "l_quantity")
-      .orderBy("l_returnflag")),
+    "ag_count_values" -> ((s, d) => Aggs.countValues(t(s, d, "events"), "event_type")),
+    "ag_sum_by_key" -> ((s, d) => Aggs.sumByKey(t(s, d, "lineitem"), "l_returnflag", "l_quantity")),
     "ag_top" -> ((s, d) => Aggs.top(t(s, d, "orders"), "o_totalprice", 10, "o_orderkey")
       .select("o_orderkey", "o_totalprice")),
     "ag_take" -> ((s, d) => Aggs.take(t(s, d, "orders"), 20, "o_orderkey")
       .select("o_orderkey", "o_orderstatus")),
     "ag_percentiles" -> ((s, d) => Aggs.percentiles(t(s, d, "lineitem"), "l_quantity")
-      .select(col("l_quantity"), col("percentile")).distinct().orderBy("l_quantity")),
+      .select(col("l_quantity"), col("percentile")).distinct()),
     "ag_hist_uniform" -> ((s, d) => Aggs.histogramUniform(t(s, d, "lineitem"), "l_quantity")
-      .select(col("bucket").cast("long").as("bucket"), col("lo"), col("hi"), col("n"))
-      .orderBy("bucket")),
-    "ag_hist_categorical" -> ((s, d) => Aggs.histogramCategorical(t(s, d, "documents"), "source")
-      .orderBy("bucket")),
+      .select(col("bucket").cast("long").as("bucket"), col("lo"), col("hi"), col("n"))),
+    "ag_hist_categorical" -> ((s, d) => Aggs.histogramCategorical(t(s, d, "documents"), "source")),
     "ag_count_valid_keys" -> ((s, d) => {
       val c = t(s, d, "customer"); val o = t(s, d, "orders")
       Aggs.countValidKeys(
         c.join(o, col("c_custkey") === col("o_custkey"), "left"),
         "c_custkey", col("o_orderstatus") === "O")
-        .orderBy("c_custkey")
     }),
 
     // -- collection ops (SURVEY §2.B set ops / projections) --
@@ -155,23 +151,22 @@ object SparkEntry {
         .select(col("o_orderkey"), lit("base").as("src"))
       val joined = o.where(col("o_totalprice") > 400000.0)
         .select(col("o_orderkey"), lit("joined").as("src"))
-      Aggs.joinMissing(base, joined, "o_orderkey").orderBy("o_orderkey", "src")
+      Aggs.joinMissing(base, joined, "o_orderkey")
     }),
     "co_flatten" -> ((s, d) => Aggs.flatten(
       t(s, d, "documents").select(col("doc_id"), split(col("text"), " ").as("words")),
       "words", "word")
-      .groupBy("word").agg(count(lit(1)).as("n")).orderBy("word")),
+      .groupBy("word").agg(count(lit(1)).as("n"))),
 
     // -- training-data text ops --
     "td_token_count" -> ((s, d) => TextOps.tokenCount(t(s, d, "documents"), "text")
-      .select(col("doc_id"), col("n_tokens").cast("long").as("n_tokens")).orderBy("doc_id")),
+      .select(col("doc_id"), col("n_tokens").cast("long").as("n_tokens"))),
     "td_lang_id" -> ((s, d) => TextOps.langId(t(s, d, "documents"), "text")
-      .select("doc_id", "lang_pred").orderBy("doc_id")),
+      .select("doc_id", "lang_pred")),
     "td_quality" -> ((s, d) => TextOps.quality(t(s, d, "documents"), "text")
-      .select("doc_id", "quality").orderBy("doc_id")),
+      .select("doc_id", "quality")),
     "td_repetition" -> ((s, d) => TextOps.repetitionSignals(t(s, d, "documents"), "text")
-      .select("doc_id", "n_words", "dup_word_frac", "top_bigram", "top_bigram_frac")
-      .orderBy("doc_id")),
+      .select("doc_id", "n_words", "dup_word_frac", "top_bigram", "top_bigram_frac")),
     "td_pii" -> ((s, d) => {
       // deterministic PII injection (the fixture corpus has none), then the
       // C4/Dolma-style scrub: every doc gets one email; %3==0 docs a second
@@ -191,20 +186,15 @@ object SparkEntry {
         .select(col("doc_id"), col("n_emails"), col("n_phones"),
           length(col("scrubbed")).cast("long").as("n_chars_scrubbed"),
           md5(col("scrubbed").cast("binary")).as("scrub_md5"))
-        .orderBy("doc_id")
     }),
-    "td_dedup_exact" -> ((s, d) => TextOps.dedupExact(t(s, d, "documents"), "doc_id", "text")
-      .orderBy("content_hash")),
+    "td_dedup_exact" -> ((s, d) => TextOps.dedupExact(t(s, d, "documents"), "doc_id", "text")),
     "td_fingerprint" -> ((s, d) => TextOps.fingerprint(t(s, d, "documents"), "text")
-      .select("doc_id", "fingerprint").orderBy("doc_id")),
+      .select("doc_id", "fingerprint")),
     "td_minhash_pairs" -> ((s, d) => TextOps.dedupMinhashLsh(
-      t(s, d, "documents"), "doc_id", "text", threshold = 0.4)
-      .orderBy("id_a", "id_b")),
-    "td_simhash" -> ((s, d) => TextOps.simhash(t(s, d, "documents"), "doc_id", "text")
-      .orderBy("doc_id")),
+      t(s, d, "documents"), "doc_id", "text", threshold = 0.4)),
+    "td_simhash" -> ((s, d) => TextOps.simhash(t(s, d, "documents"), "doc_id", "text")),
     "td_ngram_jaccard" -> ((s, d) => TextOps.ngramJaccardJoin(
-      t(s, d, "documents"), "doc_id", "text", k = 5, threshold = 0.2)
-      .orderBy("id_a", "id_b")),
+      t(s, d, "documents"), "doc_id", "text", k = 5, threshold = 0.2)),
 
     "td_split" -> ((s, d) =>
       // deterministic 80/10/10 train/val/test assignment (scan-side map, no
@@ -214,34 +204,29 @@ object SparkEntry {
         .groupBy("split")
         .agg(count(lit(1)).as("n_docs"),
           sum(col("n_chars").cast("long")).as("sum_chars"),
-          sum(col("doc_id")).as("id_checksum"))
-        .orderBy("split")),
+          sum(col("doc_id")).as("id_checksum"))),
     "td_sample_stratified" -> ((s, d) =>
       // deterministic k-per-language sample via the salted two-stage rank
       TextOps.stratifiedSample(t(s, d, "documents"), "lang", "doc_id", 5)
-        .select(col("lang"), col("rank"), col("doc_id"))
-        .orderBy("lang", "rank")),
+        .select(col("lang"), col("rank"), col("doc_id"))),
     "td_decontaminate" -> ((s, d) => {
       // benchmark = every 11th doc; corpus = the rest, reported per-doc with
       // its distinct-8-gram count and how many appear in the benchmark
       val docs = t(s, d, "documents")
       TextOps.contaminationScreen(docs.where(col("doc_id") % 11 =!= 0),
           docs.where(col("doc_id") % 11 === 0), "doc_id", "text", 8)
-        .orderBy("doc_id")
     }),
     "td_pack" -> ((s, d) =>
       // GPT-style packing plan: distributed prefix sum (range partition +
       // broadcast offsets), 256-token chunks
       TextOps.packPlan(TextOps.tokenCount(t(s, d, "documents"), "text"),
-          "doc_id", "n_tokens", 256)
-        .orderBy("doc_id")),
+          "doc_id", "n_tokens", 256)),
     "td_mixture" -> ((s, d) =>
       // domain-mixture resampling: 50/30/20 target over three sources, the
       // feasible total and per-source quotas derived from the data
       TextOps.mixturePlan(t(s, d, "documents"), "doc_id", "source",
           Map("src0" -> 0.5, "src1" -> 0.3, "src2" -> 0.2))
-        .select(col("source"), col("rank"), col("doc_id"))
-        .orderBy("source", "rank")),
+        .select(col("source"), col("rank"), col("doc_id"))),
 
     "td_dedup_clusters" -> ((s, d) => {
       // duplicate-CLUSTER assignment: connected components over the EXACT
@@ -250,7 +235,6 @@ object SparkEntry {
       val docs = t(s, d, "documents")
       val pairs = TextOps.ngramJaccardJoin(docs, "doc_id", "text", k = 5, threshold = 0.2)
       TextOps.dedupClusters(pairs, docs.select("doc_id"))
-        .orderBy("doc_id")
     }),
 
     // -- image curation gate (LAION/DataComp-style min-dim/aspect/caption) --
@@ -265,7 +249,6 @@ object SparkEntry {
         when(col("doc_id") % 11 === 0, lit("tiny cap")).otherwise(col("text")).as("caption"))
       ImageOps.curationFilter(meta)
         .select(col("image_id"), col("w"), col("h"), col("drop_reason"))
-        .orderBy("image_id")
     }),
 
     // -- SDXL-style aspect-ratio bucket assignment (nearest in log-aspect) --
@@ -280,7 +263,6 @@ object SparkEntry {
       ImageOps.aspectBuckets(meta)
         .select(col("image_id"), col("w"), col("h"), col("bucket_id"),
           col("bucket_w"), col("bucket_h"))
-        .orderBy("image_id")
     }),
 
     // -- per-bucket training batch assignment (distributed two-stage rank) --
@@ -293,7 +275,6 @@ object SparkEntry {
         (lit(16) + (col("doc_id") * 7919) % 4096).cast("int").as("w"),
         (lit(16) + (col("doc_id") * 104729) % 4096).cast("int").as("h"))
       ImageOps.bucketBatches(meta, batchSize = 32)
-        .orderBy("image_id")
     }),
 
     // -- image near-dup by perceptual hash (input_hint phash:int64 column) --
@@ -308,7 +289,6 @@ object SparkEntry {
           col("phash").bitwiseXOR(lit(3L)).as("phash"))
       ImageOps.phashNearDupPairs(base.unionByName(clones))
         .select(col("id_a"), col("id_b"), col("hamming").cast("long").as("hamming"))
-        .orderBy("id_a", "id_b")
     }),
 
     // -- cross-modal QA: caption conflicts among image near-duplicates --
@@ -328,7 +308,6 @@ object SparkEntry {
       ImageOps.captionConflicts(base.unionByName(clones))
         .select(col("id_a"), col("id_b"),
           col("hamming").cast("long").as("hamming"), col("caption_match"))
-        .orderBy("id_a", "id_b")
     }),
 
     // -- similarity search --
@@ -338,7 +317,6 @@ object SparkEntry {
         .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
       Ann.cosineTopK(e, q, 5)
         .select(col("qid"), col("rank").cast("long").as("rank"), col("neighbor_id"))
-        .orderBy("qid", "rank")
     }),
     "ann_lsh" -> ((s, d) => {
       val e = t(s, d, "embeddings")
@@ -346,7 +324,6 @@ object SparkEntry {
         .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
       Ann.cosineLsh(e, q, 5)
         .select(col("qid"), col("rank").cast("long").as("rank"), col("neighbor_id"))
-        .orderBy("qid", "rank")
     }),
 
     "ann_ivf" -> ((s, d) => {
@@ -361,7 +338,7 @@ object SparkEntry {
       val q = e.where(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
       Ann.cosineIvf(e, q, 5, cents, nProbe = 4)
-        .select("qid", "rank", "neighbor_id").orderBy("qid", "rank")
+        .select("qid", "rank", "neighbor_id")
     }),
 
     "ann_ivf_trained" -> ((s, d) => {
@@ -374,7 +351,7 @@ object SparkEntry {
       val q = e.where(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
       Ann.cosineIvf(e, q, 5, cents, nProbe = 3)
-        .select("qid", "rank", "neighbor_id").orderBy("qid", "rank")
+        .select("qid", "rank", "neighbor_id")
     }),
 
     "ann_pq" -> ((s, d) => {
@@ -385,7 +362,7 @@ object SparkEntry {
       val cbs = trainedPqCodebooks(s, d)
       val q = e.where(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-      Ann.cosinePq(e, q, 5, cbs).orderBy("qid", "rank")
+      Ann.cosinePq(e, q, 5, cbs)
     }),
 
     "ann_neardup" -> ((s, d) => {
@@ -401,7 +378,7 @@ object SparkEntry {
       // collide in every table
       graft.operators.Ann.cosineNearDupPairs(e.unionByName(dupes), 0.99,
           bits = 12, tables = 4)
-        .select("id_a", "id_b").orderBy("id_a", "id_b")
+        .select("id_a", "id_b")
     }),
 
     // -- graph reachability (SURVEY §2.B graph operators) --
@@ -414,7 +391,6 @@ object SparkEntry {
       val origins = Seq(0L, 71L, 143L).toDF("origin")
       graft.operators.Graph.reachable(edges, origins, 1200.0)
         .select(col("origin"), col("node"), round(col("dist_m"), 3).as("dist_m"))
-        .orderBy("origin", "node")
     }),
     "gr_closest" -> ((s, d) => {
       import s.implicits._
@@ -423,13 +399,11 @@ object SparkEntry {
       val targets = Seq(27L, 60L, 105L).toDF("target")
       graft.operators.Graph.closest(edges, origins, targets, 1200.0)
         .select(col("origin"), col("node"), round(col("dist_m"), 3).as("dist_m"))
-        .orderBy("origin")
     }),
     "gr_paths" -> ((s, d) => {
       import s.implicits._
       val (_, edges) = graft.operators.Graph.syntheticGrid(s, gridN)
       graft.operators.Graph.pathsToReach(edges, Seq(0L).toDF("origin"), 900.0)
-        .orderBy("src", "dst")
     }),
     "gr_filter_acc" -> ((s, d) => {
       import s.implicits._
@@ -438,7 +412,6 @@ object SparkEntry {
         edges, Seq(0L, 143L).toDF("origin"), 700.0).select("origin", "node")
       val survivors = nodes.where(col("node_id") >= 100).select("node_id")
       graft.operators.Graph.filterAccessible(od, survivors)
-        .orderBy("origin", "node")
     }),
 
     "gr_od_hist" -> ((s, d) => {
@@ -448,7 +421,6 @@ object SparkEntry {
         edges, Seq(0L, 71L, 143L).toDF("origin"), 700.0).select("origin", "node")
       val survivors = nodes.where(col("node_id") >= 100).select("node_id")
       Aggs.odHistogram(graft.operators.Graph.filterAccessible(od, survivors))
-        .orderBy("n_valid")
     }),
 
     "gr_connect" -> ((s, d) => {
@@ -459,14 +431,13 @@ object SparkEntry {
       val feats = Fixtures.points(s, d).where(col("point_id") % 50 === 0)
         .select((col("point_id") + 100000L).as("fid"), col("lat"), col("lng"))
       graft.operators.Graph.connectToNetwork(feats, nodes, edges, 800.0)
-        .select("src", "dst").orderBy("src", "dst")
+        .select("src", "dst")
     }),
 
     "gr_degree" -> ((s, d) => {
       // degree (features.go:212-219): segments meeting at each node
       val (_, edges) = graft.operators.Graph.syntheticGrid(s, gridN)
       edges.groupBy(col("src").as("node_id")).agg(count(lit(1)).as("degree"))
-        .orderBy("node_id")
     }),
 
     // -- relations / reference joins (world.go:1313-1319, features.go:362-406) --
@@ -506,7 +477,6 @@ object SparkEntry {
           col("tags").getItem("#amenity").as("amenity"),
           col("tags").getItem("@name").as("name"),
           col("tags").getItem("#route").as("route"))
-        .orderBy("ftype", "value")
     }),
 
     // -- basemap renderer (renderer.go:171-233) + sightlines: rows-only --
@@ -517,7 +487,6 @@ object SparkEntry {
           map(concat(lit("#"), col("tag")), lit("park")).as("tags"), col("geom"))
       graft.render.RenderRules.basemapTiles(feats, 14)
         .select(col("z"), col("x"), col("y"), length(col("mvt")).as("n_bytes"))
-        .orderBy("z", "x", "y")
     }),
     "rd_assign" -> ((s, d) => {
       // the tile-ASSIGNMENT half of the basemap pipeline, fully oracled
@@ -535,7 +504,7 @@ object SparkEntry {
         .withColumn("layer", graft.render.RenderRules.layerColumn(col("tags")))
       SpatialJoins.tileAssignment(in, 13)
         .groupBy(col("tile_xx").as("tx"), col("tile_yy").as("ty"), col("layer"))
-        .agg(count(lit(1)).as("n")).orderBy("tx", "ty", "layer")
+        .agg(count(lit(1)).as("n"))
     }),
     "sl_rays" -> ((s, d) => {
       // per-ray occlusion parameters in degree space over the literal
@@ -544,14 +513,12 @@ object SparkEntry {
       graft.operators.Sightline.rayOcclusions(sightlineOrigins(s, d),
           graft.operators.Sightline.rationalDirections, sightlineEdges)
         .select(col("origin_id"), col("ray_idx").cast("long").as("ray_idx"), col("occlusion"))
-        .orderBy("origin_id", "ray_idx")
     }),
     "sl_sightline" -> ((s, d) => {
       val origins = Fixtures.points(s, d).where(col("point_id") % 5000 === 0)
         .select(col("point_id").as("origin_id"), col("lat"), col("lng"))
       graft.operators.Sightline.sightlines(origins, Fixtures.polygons(s), 400.0, rays = 64)
         .toDF().select(col("origin_id"), round(col("area_m2"), 0).as("area_m2"))
-        .orderBy("origin_id")
     }),
     "sl_polygon" -> ((s, d) => {
       // the visibility-POLYGON half of sightline (renderer.go sightline UI /
@@ -562,14 +529,13 @@ object SparkEntry {
       // oracles the whole sightline computation except the trig angle grid.
       graft.operators.Sightline.fanArea(sightlineOrigins(s, d),
           graft.operators.Sightline.rationalDirections, sightlineEdges)
-        .orderBy("origin_id")
     }),
 
     // -- map/filter plane (map.go:12-67, collections.go:215-274) --
     "co_map_filter" -> ((s, d) => Fixtures.points(s, d)
       .withColumn("score", col("lat") * 2.0 + col("lng"))
       .where(col("score") > 102.9)
-      .select(col("point_id"), col("score")).orderBy("point_id")),
+      .select(col("point_id"), col("score"))),
 
     // -- convex hull / reachable-area (geometry.go:207-232, graph.go:503-519) --
     "geo_hull" -> ((s, d) => {
@@ -600,7 +566,6 @@ object SparkEntry {
       verts.zipWithIndex.map { case ((x, y), i) =>
         (i.toLong, x, y, verts.length.toLong, area)
       }.toDF("vertex_idx", "vlng", "vlat", "n_vertices", "area_deg2")
-        .orderBy("vertex_idx")
     }),
 
     // -- vector-tile feature ids (FNV-1, api/tiles.go:10-32) --
@@ -608,7 +573,6 @@ object SparkEntry {
       val fid = udf((pid: Long) =>
         graft.functions.TileIds.tileFeatureId(0L, "graft/events", pid))
       Fixtures.points(s, d).select(col("point_id"), fid(col("point_id")).as("fid"))
-        .orderBy("point_id")
     }),
 
     // -- world overlay + mutation plane --
@@ -618,14 +582,12 @@ object SparkEntry {
       val delta = f.where(col("point_id") % 7 === 0)
         .withColumn("amenity", lit("modified"))
       graft.operators.Worlds.overlay(f, delta, Seq("point_id"))
-        .orderBy("point_id")
     }),
     "w_add_tag" -> ((s, d) => {
       val f = graft.operators.Worlds.addTag(features(s, d), "#status",
         concat(lit("st-"), col("point_id") % 4))
       QueryPlanner.find(f, Keyed("#status"))
         .select(col("point_id"), col("tags").getItem("#status").as("status"))
-        .orderBy("point_id")
     }),
 
     // -- geometry scalar functions: degree-space shoelace area/centroid over
@@ -641,28 +603,24 @@ object SparkEntry {
           (shoelace_area_deg2(col("geom")) * expr(Fixtures.shoelaceFactorCaseSql)).as("area_m2"),
           shoelace_centroid_lat(col("geom")).as("c_lat"),
           shoelace_centroid_lng(col("geom")).as("c_lng"))
-        .orderBy("poly_id")
     }),
 
     // -- event-time windowed aggregation (streaming-equivalent batch plan) --
     "ag_time_window" -> ((s, d) => graft.streaming.Streaming.windowedEventCounts(
-      t(s, d, "events")).orderBy("wstart", "event_type")),
+      t(s, d, "events"))),
 
     // -- sessionization (stateful-streaming plane; batch-equivalent plan) --
-    "st_sessions" -> ((s, d) => graft.streaming.Streaming.sessionize(t(s, d, "events"))
-      .orderBy("user_id", "session_idx")),
+    "st_sessions" -> ((s, d) => graft.streaming.Streaming.sessionize(t(s, d, "events"))),
 
     // -- vertex plane: points / sample-points --
     "pt_points" -> ((s, d) => graft.operators.Paths.points(Fixtures.polygons(s))
       .select(col("poly_id"), col("vertex_idx").cast("long").as("vertex_idx"),
-        col("vlat"), col("vlng"))
-      .orderBy("poly_id", "vertex_idx")),
+        col("vlat"), col("vlng"))),
     "gr_routes" -> ((s, d) => {
       import s.implicits._
       val (_, edges) = graft.operators.Graph.syntheticGrid(s, gridN)
       graft.operators.Graph.reachableWithParents(edges, Seq(0L, 71L).toDF("origin"), 900.0)
         .select(col("origin"), col("node"), round(col("dist_m"), 3).as("dist_m"), col("parent"))
-        .orderBy("origin", "node")
     }),
 
     // -- vector-tile rendering (MVT encode per tile, SURVEY §2.C) --
@@ -672,7 +630,6 @@ object SparkEntry {
           map(lit("name"), concat(lit("poly-"), col("poly_id"))).as("tags"))
       graft.render.Mvt.renderTiles(feats, 14)
         .select(col("z"), col("x"), col("y"), length(col("mvt")).as("n_bytes"))
-        .orderBy("z", "x", "y")
     }),
     "rd_mvt_cmds" -> ((s, d) => {
       // the encoder's per-(feature, tile) COMMAND STREAM fully oracled
@@ -702,7 +659,6 @@ object SparkEntry {
           shiftrightunsigned(col("tile"), 29).bitwiseAND(lit((1L << 29) - 1)).as("tx"),
           col("tile").bitwiseAND(lit((1L << 29) - 1)).as("ty"),
           col("st._1").as("gtype"), col("st._2").as("n_cmds"), col("st._3").as("cmd_sum"))
-        .orderBy("fid", "tx", "ty")
     }),
 
     // -- elevation field (IDW via cell index, SURVEY §2.D) --
@@ -717,14 +673,13 @@ object SparkEntry {
         .select(col("point_id").as("qid"), col("lat"), col("lng"))
       graft.operators.Elevation.elevationAt(queries, spots, 3000.0)
         .select(col("qid"), round(col("elevation"), 6).as("elevation"))
-        .orderBy("qid")
     }),
 
     // -- shell expression language end-to-end (api/shell.y, shell.go:612-824):
     //    parse -> simplify -> compile onto the Query ADT + Column lambdas --
     "sh_pipeline" -> ((s, d) => graft.shell.Shell.runDf(features(s, d),
       "find [#amenity=cafe & @name] | map {f -> get f \"@name\"}")
-      .select(col("point_id"), col("value").as("name")).orderBy("point_id")),
+      .select(col("point_id"), col("value").as("name"))),
 
     // -- multimodal video: every-3rd-frame sampling; the frame METADATA
     //    (idx/timestamp/dims) is pure arithmetic over the deterministic
@@ -733,8 +688,7 @@ object SparkEntry {
     "mm_frames" -> ((s, d) => graft.operators.Multimodal
       .sampleFrames(graft.operators.Multimodal.videos(s, 200L), everyNth = 3).toDF()
       .select(col("video_id"), col("frame_idx").cast("long").as("frame_idx"),
-        col("t_seconds"), col("w").cast("long").as("w"), col("h").cast("long").as("h"))
-      .orderBy("video_id", "frame_idx")),
+        col("t_seconds"), col("w").cast("long").as("w"), col("h").cast("long").as("h"))),
 
     // -- multimodal (images decoded once; plumbing real, payload synthetic) --
     "mm_decode" -> ((s, d) => {
@@ -742,7 +696,6 @@ object SparkEntry {
       ImageOps.decodeFeatures(Fixtures.images(s, n)).toDF()
         .select(col("image_id"), col("w"), col("h"), col("fmt"),
           col("psnr_db") >= 40.0 as "psnr_ok", col("decoded_ok"))
-        .orderBy("image_id")
     }),
 
     // thumbnails: decode-once -> aspect-preserving integer downscale -> PPM
@@ -753,7 +706,6 @@ object SparkEntry {
       ImageOps.thumbnails(Fixtures.images(s, n)).toDF()
         .select(col("image_id"), col("tw"), col("th"),
           length(col("thumb")).cast("int").as("thumb_len"))
-        .orderBy("image_id")
     }),
   )
 

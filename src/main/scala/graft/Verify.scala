@@ -1,7 +1,8 @@
 package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.RowOrdering
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
+/** Driver-run correctness dump: each SparkEntry.queries result → sorted parquet,
   * plus oracle_sql.json, for the DuckDB oracle compare. Exits non-zero,
   * naming each failure, when any query or the dynamic oracle set fails. */
 object Verify {
@@ -15,6 +16,15 @@ object Verify {
       sys.exit(1)
     }
   }
+
+  /** One partition sorted by every orderable column in schema order, so a
+    * query's dump holds its rows in one order whatever order they come in,
+    * with no range-sampling job. `repartition(1)`, not `coalesce(1)`: a
+    * coalesce would run the query's last stage as one task. */
+  private def sorted(df: DataFrame): DataFrame =
+    df.repartition(1).sortWithinPartitions(df.schema.fields.collect {
+      case f if RowOrdering.isOrderable(f.dataType) => df.col(s"`${f.name}`")
+    }.toSeq: _*)
 
   /** Writes each query's result to `outDir/<name>` and the static plus
     * dynamic oracle SQL to `outDir/oracle_sql.json`. A failing query is
@@ -33,8 +43,7 @@ object Verify {
     queries.foreach { case (name, fn) =>
       val t0 = System.nanoTime()
       try {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
+        sorted(fn(spark, sfDir)).write.mode("overwrite").parquet(s"$outDir/$name")
         System.err.println(f"[verify] $name ok in ${(System.nanoTime() - t0) / 1e9}%.1fs")
       } catch { case e: Throwable => failed(name, e) }
     }

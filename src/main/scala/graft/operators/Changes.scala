@@ -92,7 +92,13 @@ object Changes {
       .withColumn("cell16", graft.functions.CellExprs.cell_of(col("lat"), col("lng"), lit(16)))
       .withColumn("covering",
         graft.functions.CellExprs.cell_covering(col("geom"), lit(16), lit(5)))
-    val withAdds = world.unionByName(addedRows, allowMissingColumns = true)
+    // an add replaces the world's feature of the same id (b6's overlay
+    // AddFeatures), so a feature re-added with new tags has one row
+    val readded = change.adds.groupBy(a => (a.ftype, a.ns)).map { case ((t, ns), as) =>
+      col("id.ftype") === t && col("id.ns") === ns && col("id.value").isin(as.map(_.value): _*)
+    }.reduceOption(_ || _)
+    val withAdds = readded.fold(world)(r => world.where(!coalesce(r, lit(false))))
+      .unionByName(addedRows, allowMissingColumns = true)
 
     val edited = if (change.tagEdits.isEmpty) withAdds else {
       val edits = change.tagEdits

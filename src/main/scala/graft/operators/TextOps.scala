@@ -547,9 +547,10 @@ object TextOps {
     // DriverMaxEdges (~2M edges = tens of MB of longs) a driver-side
     // union-find with min-id representatives replaces O(log diameter) rounds
     // of distributed joins. ONE guarded collect of DriverMaxEdges + 1 edges
-    // decides the mode AND is the union-find input; then one broadcast join
-    // back. Above it, the pointer-doubling label-propagation loop runs fully
-    // distributed.
+    // decides the mode AND is the union-find input; the labels then reach
+    // the vertices as broadcast sorted id and label arrays behind a lookup
+    // UDF (a broadcast LocalRelation would be one more job). Above it, the
+    // pointer-doubling label-propagation loop runs fully distributed.
     val spark = pairs.sparkSession
     import spark.implicits._
     val sym0 = pairs.select(col("id_a"), col("id_b"))
@@ -570,12 +571,14 @@ object TextOps {
           if (ru < rv) parent(rv) = ru else parent(ru) = rv
         }
       }
-      val labels = edges.iterator.flatMap { case (u, v) => Iterator(u, v) }
-        .toSeq.distinct.map(x => (x, find(x)))
-      val labDf = labels.toDF("doc_id", "cluster")
-      vertices.select(col("doc_id"))
-        .join(org.apache.spark.sql.functions.broadcast(labDf), Seq("doc_id"), "left")
-        .select(col("doc_id"), coalesce(col("cluster"), col("doc_id")).as("cluster"))
+      val ids = edges.flatMap { case (u, v) => Array(u, v) }.distinct.sorted
+      val labels = spark.sparkContext.broadcast((ids, ids.map(find)))
+      val cluster = udf { (id: Long) =>
+        val (ks, vs) = labels.value
+        val i = java.util.Arrays.binarySearch(ks, id)
+        if (i >= 0) vs(i) else id
+      }
+      vertices.select(col("doc_id"), cluster(col("doc_id")).as("cluster"))
     } else dedupClustersWithRounds(sym0, vertices)._1
   }
 

@@ -653,7 +653,8 @@ object Shell {
       case ("divide", List(a: Long, b: Long)) => a / b // truncating, like the reference
       case ("divide", List(a, b)) => num(a) / num(b)
       case ("to-str", List(v)) => v.toString
-      case ("evaluate-feature", List(FeatureIdE(t, ns, v))) => evaluateFeature(env, t, ns, v)
+      case ("evaluate-feature", List(FeatureIdE(t, ns, v))) =>
+        eval(env, simplify(parse(expressionOf(env, t, ns, v))))
       // graph plane over the world-derived street network (api/functions/
       // graph.go:185-245; network derivation = OsmWorld.networkEdges, passed
       // via Shell.run(world, network, expr) — the reference gets it from the
@@ -779,10 +780,12 @@ object Shell {
           .map { case (g, props) => (graft.core.GeoOps.toWkb(g), props) }
           .toDF("geom", "tags")
       // materialise / materialise-map / list-feature name their snapshot by
-      // the expression feature whose `expression` tag defines the collection
+      // the expression feature whose `expression` tag defines the
+      // collection, its text and the world it runs on (snapshotName)
       case ("materialise", List(FeatureIdE(t, ns, v))) =>
+        val e = expressionOf(env, t, ns, v)
         graft.operators.Materialise.materialise(world.sparkSession, materialiseRoot,
-          s"/$t/$ns/$v")(asDf(evaluateFeature(env, t, ns, v)))
+          snapshotName(env, t, ns, v, e))(asDf(eval(env, simplify(parse(e)))))
       case ("sightline", List(LatLngE(la, lo), r)) =>
         val spark = world.sparkSession
         import spark.implicits._
@@ -832,8 +835,8 @@ object Shell {
       case ("histogram-swatch-with-id", List(c, FeatureIdE(_, ns, v))) =>
         histogramChangeOf(asDf(c), ns, v, swatch = true)
       case ("list-feature", List(FeatureIdE(t, ns, v), keyCol: String, key: String)) =>
-        graft.operators.Materialise.listFeature(world.sparkSession,
-          materialiseRoot, s"/$t/$ns/$v", keyCol, key)
+        graft.operators.Materialise.listFeature(world.sparkSession, materialiseRoot,
+          snapshotName(env, t, ns, v, expressionOf(env, t, ns, v)), keyCol, key)
       case ("find-collection", List(FeatureIdE(_, ns, v))) =>
         world.where(col("id.ftype") === "collection" && col("id.ns") === ns &&
           col("id.value") === v)
@@ -977,8 +980,9 @@ object Shell {
       case ("changes-from-file", List(path: String)) =>
         graft.operators.Changes.fromFile(world.sparkSession, path)
       case ("materialise-map", List(FeatureIdE(t, ns, v), keyCol: String)) =>
+        val e = expressionOf(env, t, ns, v)
         graft.operators.Materialise.materialiseMap(world.sparkSession, materialiseRoot,
-          s"/$t/$ns/$v", keyCol)(asDf(evaluateFeature(env, t, ns, v)))
+          snapshotName(env, t, ns, v, e), keyCol)(asDf(eval(env, simplify(parse(e)))))
       case ("add-world-with-change", List(FeatureIdE(t, ns, v), l: LambdaE)) =>
         // change.go:213-218: evaluate the change under the CURRENT world and
         // hand the (world id, change) pair to the evaluation boundary, which
@@ -1002,18 +1006,24 @@ object Shell {
   }
   }
 
-  /** evaluate-feature (api/functions/features.go:530-537): the expression
-    * feature's stored `expression` tag IS a shell string here — stored
-    * plans round-trip through the same parser and run against the current
-    * world. */
-  private def evaluateFeature(env: Env, t: String, ns: String, v: Long): Any = {
+  /** The `expression` tag of feature /t/ns/v in the world, which
+    * evaluate-feature (api/functions/features.go:530-537) and the
+    * materialise functions run: it IS a shell string here — stored plans
+    * round-trip through the same parser and run against the current world. */
+  private def expressionOf(env: Env, t: String, ns: String, v: Long): String = {
     val row = env.world.where(col("id.ftype") === t && col("id.ns") === ns &&
         col("id.value") === v)
       .select(col("tags").getItem("expression")).collect()
     if (row.isEmpty || row.head.isNullAt(0))
       throw ShellException(s"no expression feature /$t/$ns/$v")
-    eval(env, simplify(parse(row.head.getString(0))))
+    row.head.getString(0)
   }
+
+  /** The snapshot name of expression feature /t/ns/v: its id, a hash of its
+    * expression text and the world's analyzed-plan hash. New text under the
+    * same id, or the same id on another world, names another snapshot. */
+  private def snapshotName(env: Env, t: String, ns: String, v: Long, expression: String): String =
+    f"/$t/$ns/$v/${scala.util.hashing.MurmurHash3.stringHash(expression)}%08x${env.world.semanticHash()}%08x"
 
   private def requireNetwork(env: Env): DataFrame =
     env.network.getOrElse(throw ShellException(

@@ -351,6 +351,55 @@ class EvaluateServiceSpec extends SparkSuite {
     } finally sys.props.remove("graft.materialise.root")
   }
 
+  /** Runs `f` with the materialise root at a fresh temp directory and a
+    * server over a fresh registry of the sf world; `f` gets an /evaluate
+    * caller taking an expression and an optional world token. */
+  private def withMaterialiseServer(f: ((String, Option[String]) => (Int, String)) => Unit): Unit = {
+    sys.props("graft.materialise.root") = java.nio.file.Files.createTempDirectory("graft-eval-mat").toString
+    try withServer(ServingWorld.registry(spark, sfFeatures)) { port =>
+      f((e, world) => evaluateJson(port, s"""{"expression": "${graft.server.Http.escape(e)}", """ +
+        world.map(w => s""""world": "$w", """).getOrElse("") + """"version": "1"}"""))
+    } finally sys.props.remove("graft.materialise.root")
+  }
+
+  private def amenityRows(amenity: String) =
+    jsonRows(sfFeatures.where(col("tags").getItem("#amenity") === amenity))
+
+  test("sf world: materialise after add-expression with new text under the same id answers the new rows") {
+    withMaterialiseServer { evaluate =>
+      assert(evaluate("add-expression /expression/graft/mat/9 \"find [#amenity=cafe]\"", None)._1 == 200)
+      val (s1, cafes) = evaluate("materialise /expression/graft/mat/9", None)
+      assert(s1 == 200 && holdsExactly(cafes, amenityRows("cafe")), cafes.take(300))
+      assert(evaluate("add-expression /expression/graft/mat/9 \"find [#amenity=school]\"", None)._1 == 200)
+      val (s2, schools) = evaluate("materialise /expression/graft/mat/9", None)
+      val want = amenityRows("school")
+      assert(want.nonEmpty && want != amenityRows("cafe"))
+      assert(s2 == 200 && holdsExactly(schools, want), schools.take(300))
+    }
+  }
+
+  test("sf world: materialise of one id on the base and a scenario world answers each world's rows") {
+    val cafe = sfFeatures.where(col("tags").getItem("#amenity") === "cafe")
+      .orderBy("id.value").select("id.ftype", "id.value").head
+    val (ftype, fid) = (cafe.getString(0), cafe.getLong(1))
+    val scenario = Some("/collection/graft/mat-scenario/1")
+    withMaterialiseServer { evaluate =>
+      val add = "add-expression /expression/graft/mat/10 \"find [#amenity=cafe]\""
+      assert(evaluate(add, None)._1 == 200 && evaluate(add, scenario)._1 == 200)
+      val (s0, base) = evaluate("materialise /expression/graft/mat/10", None)
+      assert(s0 == 200 && holdsExactly(base, amenityRows("cafe")), base.take(300))
+      // the scenario world re-tags one cafe as a bench
+      assert(evaluate(s"with-change {-> add-tag /$ftype/graft/events/$fid #amenity=bench}", scenario)._1 == 200)
+      val (s1, changed) = evaluate("materialise /expression/graft/mat/10", scenario)
+      val want = jsonRows(sfFeatures.where(col("tags").getItem("#amenity") === "cafe" &&
+        !(col("id.ftype") === ftype && col("id.value") === fid)))
+      assert(want.length == amenityRows("cafe").length - 1)
+      assert(s1 == 200 && holdsExactly(changed, want), changed.take(300))
+      val (s2, baseAgain) = evaluate("materialise /expression/graft/mat/10", None)
+      assert(s2 == 200 && holdsExactly(baseAgain, amenityRows("cafe")), baseAgain.take(300))
+    }
+  }
+
   test("sf world: point-features over /evaluate reads the registry world's references table") {
     import spark.implicits._
     val cafeIds = sfFeatures.where(col("tags").getItem("#amenity") === "cafe")
