@@ -154,8 +154,6 @@ object GeoOps {
     s
   }
 
-  def envelope(g: Geometry): Envelope = g.getEnvelopeInternal
-
   // ---- region coverer ------------------------------------------------------
 
   /**

@@ -453,12 +453,4 @@ object SpatialJoins {
     * (src/diagonal.works/b6/spatial.go:203-371). */
   def withinCap(points: DataFrame, lat: Double, lng: Double, radiusMeters: Double): DataFrame =
     points.where(haversine_m(col("lat"), col("lng"), lit(lat), lit(lng)) < lit(radiusMeters))
-
-  /**
-   * Salted repartition helper for skewed hot cells: appends a salt column
-   * 0..(factor-1) derived from a stable hash of `saltBy`, so one hot cell
-   * spreads over `factor` reducers. Use before cell-keyed aggregations.
-   */
-  def salted(df: DataFrame, cellCol: String, factor: Int): DataFrame =
-    df.withColumn("__salt", pmod(hash(col(cellCol), monotonically_increasing_id()), lit(factor)))
 }
