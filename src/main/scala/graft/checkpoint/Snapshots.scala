@@ -2,6 +2,7 @@ package graft.checkpoint
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import scala.jdk.CollectionConverters._
 
 /**
  * Snapshot-checkpointed table commits — the resumability layer of the north
@@ -115,13 +116,6 @@ object Snapshots {
       case None =>
         val snap = commit(body, root, table, lineage)
         spark.read.parquet(snap.dataPath)
-    }
-  }
-
-  private implicit class IterScala[A](it: java.util.Iterator[A]) {
-    def asScala: Iterator[A] = new Iterator[A] {
-      def hasNext: Boolean = it.hasNext
-      def next(): A = it.next()
     }
   }
 }

@@ -78,8 +78,6 @@ object Cells {
     (((cell >>> 5) >>> (2 * (l - lvl))) << 5) | lvl.toLong
   }
 
-  def parent(cell: Long): Long = parentAt(cell, level(cell) - 1)
-
   /** Ancestors from level 0 up to and including the cell itself. */
   def ancestors(cell: Long): Array[Long] = {
     val l = level(cell)
@@ -122,12 +120,6 @@ object Cells {
       else lo = mid + 1
     }
     false
-  }
-
-  /** True if `anc` is `cell` or an ancestor of it. */
-  def contains(anc: Long, cell: Long): Boolean = {
-    val la = level(anc); val lc = level(cell)
-    la <= lc && parentAt(cell, la) == anc
   }
 
   // ---- geometry of a cell --------------------------------------------------

@@ -86,45 +86,31 @@ object GeoOps {
   def prepare(g: Geometry): PreparedGeometry = PreparedGeometryFactory.prepare(g)
 
   /**
-   * Per-thread LRU of prepared geometries keyed by WKB bytes. In a spatial
-   * join the (small) geometry side repeats per probe row; preparing once makes
-   * the exact refine test ~constant after the first hit per task.
+   * `make(wkb)` cached per thread in a 512-entry LRU keyed by the WKB
+   * content. Identity caching does NOT work here: the join's build side
+   * stores rows in unsafe format and materializes a fresh byte array per
+   * probe row, so the content hash (one pass over the geometry bytes) is the
+   * unavoidable per-row lookup cost.
    */
-  private val prepCache = ThreadLocal.withInitial[java.util.LinkedHashMap[java.nio.ByteBuffer, PreparedGeometry]](() =>
-    new java.util.LinkedHashMap[java.nio.ByteBuffer, PreparedGeometry](64, 0.75f, true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[java.nio.ByteBuffer, PreparedGeometry]): Boolean =
-        size() > 512
-    })
-
-  def prepared(wkb: Array[Byte]): PreparedGeometry = {
-    val cache = prepCache.get
-    val key = java.nio.ByteBuffer.wrap(wkb)
-    var p = cache.get(key)
-    if (p == null) { p = prepare(fromWkb(wkb)); cache.put(key, p) }
-    p
+  private def wkbLru[V <: AnyRef](make: Array[Byte] => V): Array[Byte] => V = {
+    val caches = ThreadLocal.withInitial[java.util.LinkedHashMap[java.nio.ByteBuffer, V]](() =>
+      new java.util.LinkedHashMap[java.nio.ByteBuffer, V](64, 0.75f, true) {
+        override def removeEldestEntry(e: java.util.Map.Entry[java.nio.ByteBuffer, V]): Boolean =
+          size() > 512
+      })
+    wkb => caches.get.computeIfAbsent(java.nio.ByteBuffer.wrap(wkb), _ => make(wkb))
   }
 
-  /**
-   * Point-in-area tests cached by WKB content (per thread). Identity
-   * caching does NOT work here: the join's build side stores rows in unsafe
-   * format and materializes a fresh byte array per probe row, so the content
-   * hash (one pass over the polygon bytes) is the unavoidable per-row lookup
-   * cost.
-   */
-  private val locatorCache = ThreadLocal.withInitial[java.util.LinkedHashMap[java.nio.ByteBuffer, (Double, Double) => Boolean]](() =>
-    new java.util.LinkedHashMap[java.nio.ByteBuffer, (Double, Double) => Boolean](64, 0.75f, true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[java.nio.ByteBuffer, (Double, Double) => Boolean]): Boolean =
-        size() > 512
-    })
+  private val preparedOf = wkbLru(wkb => prepare(fromWkb(wkb)))
+  private val coversOf = wkbLru(pointCovers)
+
+  /** The prepared geometry of a WKB: in a spatial join the (small) geometry
+    * side repeats per probe row; preparing once makes the exact refine test
+    * ~constant after the first hit per task. */
+  def prepared(wkb: Array[Byte]): PreparedGeometry = preparedOf(wkb)
 
   /** covers (boundary-inclusive containment) of a lat/lng point by a WKB geometry. */
-  def wkbCoversPoint(wkb: Array[Byte], lat: Double, lng: Double): Boolean = {
-    val cache = locatorCache.get
-    val key = java.nio.ByteBuffer.wrap(wkb)
-    var covers = cache.get(key)
-    if (covers == null) { covers = pointCovers(wkb); cache.put(key, covers) }
-    covers(lat, lng)
-  }
+  def wkbCoversPoint(wkb: Array[Byte], lat: Double, lng: Double): Boolean = coversOf(wkb)(lat, lng)
 
   /** covers of (lat, lng) points by one WKB geometry, prepared once and safe
     * to share between threads: an area locates points through an

@@ -123,13 +123,10 @@ object Aggs {
   /**
    * Global rank/cumulative-count over the distinct (v, c) pairs WITHOUT a
    * single-task sort, for the wide path of the ranking operators (more than
-   * [[SmallDistinct]] distinct values): the distinct set is range-partitioned
-   * on the sort key, ranked within each partition, and the per-partition
-   * (distinct-count, row-count) totals — one tiny row per shuffle partition —
-   * are collected to the driver, turned into cumulative offsets and
-   * broadcast back. At 10M+ distinct values the old `Window.orderBy` plan
-   * funneled every distinct value through ONE task; this plan's widest
-   * single task holds one range partition.
+   * [[SmallDistinct]] distinct values): [[Sorted.runningTotals]] with the
+   * weights 1 and c. At 10M+ distinct values a `Window.orderBy` plan would
+   * funnel every distinct value through ONE task; this plan's widest single
+   * task holds one range partition.
    *
    * `counts` must have columns (v, c); `order` is the total sort order over
    * `v`-rows (e.g. `col("v")` ascending, or `(c desc, v)` for categorical
@@ -137,60 +134,15 @@ object Aggs {
    * rank, cum_before = total c over strictly-earlier rows, d = distinct
    * count, total = sum of c.
    */
-  private def rankedCounts(counts: DataFrame, order: Seq[Column]): DataFrame = {
-    val spark = counts.sparkSession
-    // scale-adaptive partition count (guide §2.2): the session's shuffle
-    // parallelism instead of a constant
-    val np = math.max(spark.sessionState.conf.numShufflePartitions, 1)
+  private def rankedCounts(counts: DataFrame, order: Seq[Column]): DataFrame =
     // persist the aggregated distinct set BEFORE the range partition:
     // repartitionByRange runs a hidden SAMPLING job over its input, which
-    // otherwise re-executes the full input aggregation a second time — with
-    // the cache the sampling pass fills it and the range exchange (and the
-    // final pass below) read back the distinct set, one full input scan
-    // total. The distinct set is <= the input by construction, so this is
-    // also the cheaper cache at any scale.
-    val aggd = counts.persist()
-    val parts = aggd.repartitionByRange(np, order: _*)
-      .withColumn("__pid", spark_partition_id())
-      .persist()
-    val perPart = parts.groupBy("__pid")
-      .agg(count(lit(1)).as("nd"), sum(col("c")).as("nc"))
-      .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).sortBy(_._1)
-    var dOff = 0L; var cOff = 0L
-    val offs = perPart.map { case (pid, nd, nc) =>
-      val o = pid -> (dOff, cOff); dOff += nd; cOff += nc; o
-    }.toMap
-    val offB = spark.sparkContext.broadcast(offs)
-    // per-partition rank + running count in ONE partition-local ordered pass:
-    // a Window.partitionBy(__pid) here would re-Exchange the whole table to
-    // hashpartitioning(__pid) on top of the range shuffle (plan-probed — the
-    // CLAUDE.md trap), and the per-partition offsets would need one more
-    // broadcast join. sortWithinPartitions + mapPartitions keeps the range
-    // partitioning, adds ZERO shuffle, and folds the offsets in directly.
-    val vIdx = parts.schema.fieldIndex("v")
-    val cIdx = parts.schema.fieldIndex("c")
-    val pIdx = parts.schema.fieldIndex("__pid")
-    val outSchema = StructType(Seq(
-      parts.schema(vIdx), parts.schema(cIdx),
-      StructField("r", LongType, nullable = false),
-      StructField("cum_before", LongType, nullable = false)))
-    val dTot = dOff; val cTot = cOff
-    parts.sortWithinPartitions(order: _*)
-      .mapPartitions { it =>
-        var r = 0L; var cum = 0L; var init = false
-        it.map { row =>
-          if (!init) {
-            val (doff, coff) = offB.value.getOrElse(row.getInt(pIdx), (0L, 0L))
-            r = doff; cum = coff; init = true
-          }
-          val c = row.getLong(cIdx)
-          val out = Row(row.get(vIdx), c, r, cum)
-          r += 1; cum += c
-          out
-        }
-      }(org.apache.spark.sql.Encoders.row(outSchema))
-      .withColumn("d", lit(dTot)).withColumn("total", lit(cTot))
-  }
+    // otherwise re-executes the input aggregation a second time — with the
+    // cache the sampling pass fills it and the range exchange reads back the
+    // distinct set, one full input scan total.
+    Sorted.runningTotals(counts.persist(), Nil, order, Seq("r" -> lit(1L), "c" -> col("c")))
+      .select(col("v"), col("c"), col("r_before").as("r"), col("c_before").as("cum_before"),
+        col("r_total").as("d"), col("c_total").as("total"))
 
   /**
    * percentiles (math.go:85-115): sort ascending; each value maps to

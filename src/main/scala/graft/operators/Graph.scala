@@ -226,21 +226,6 @@ object Graph {
     }.toDF("origin", "node", "dist_m", "parent")
   }
 
-  /** Backtrace one route from the parent-pointer table (driver-side walk over
-    * the collected per-origin parents — routes are short). */
-  def route(parents: Map[Long, Long], origin: Long, target: Long): Seq[Long] = {
-    val out = Seq.newBuilder[Long]
-    var cur = target
-    var guard = 0
-    while (cur != origin && guard < 100000) {
-      out += cur
-      cur = parents.getOrElse(cur, origin)
-      guard += 1
-    }
-    out += origin
-    out.result().reverse
-  }
-
   /**
    * b6 `closest` (api/functions/graph.go:402-446): the nearest target by
    * network distance within budget, one row per origin that reaches any

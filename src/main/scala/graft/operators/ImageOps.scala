@@ -150,68 +150,27 @@ object ImageOps {
     * batch_id (drop_last semantics). Returns (id, bucket_id, bk_rank,
     * batch_id).
     *
-    * Scale shape: the per-bucket dense rank is a DISTRIBUTED two-stage rank,
-    * not a Window over 11 bucket keys (which would funnel 10^12 rows through
-    * |buckets| tasks): range partition by (bucket, hash, id) — so each
-    * bucket spans many partitions — then per-(partition, bucket) counts
-    * (O(partitions x buckets) longs on the driver, by contract tiny),
-    * broadcast exclusive offsets, and one partition-LOCAL ordered pass
-    * (sortWithinPartitions adds no Exchange on top of the range shuffle —
-    * same probe-proven shape as TextOps.packPlan). ONE shuffle total.
-    * Requires a non-negative 64-bit unique id column.
+    * Scale shape: the per-bucket dense rank is [[Sorted.runningTotals]]
+    * restarting per bucket, not a Window over 11 bucket keys (which would
+    * funnel 10^12 rows through |buckets| tasks): the range partition on
+    * (bucket, hash, id) spreads each bucket over many partitions. ONE
+    * shuffle total. Requires a non-negative 64-bit unique id column.
     */
   def bucketBatches(images: DataFrame, batchSize: Int): DataFrame = {
     import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.types._
     require(batchSize > 0, "batchSize must be positive")
-    val spark = images.sparkSession
-    val parts = math.max(spark.sessionState.conf.numShufflePartitions, 1)
     val sm = udf((id: Long) => graft.model.Fixtures.splitmix64(id))
     val idCol = "image_id"
     val assigned = aspectBuckets(images)
       .select(col(idCol).cast("long").as(idCol), col("bucket_id"),
         sm(col(idCol).cast("long")).as("__hs"))
-    val ranged = assigned
-      .repartitionByRange(parts, col("bucket_id"), col("__hs"), col(idCol))
-      .withColumn("__pid", spark_partition_id())
-      .persist()
-    val totals = ranged.groupBy("__pid", "bucket_id").count()
-      .collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2)))
-    // exclusive per-bucket offsets in partition order (range partitions are
-    // ordered, so lower pids hold lexicographically earlier (hs, id) rows)
-    val offsets: Map[(Int, Int), Long] = totals.groupBy(_._2).flatMap {
-      case (b, rows) =>
-        val byPid = rows.sortBy(_._1)
-        byPid.map(_._1).zip(byPid.scanLeft(0L)(_ + _._3).init)
-          .map { case (pid, off) => (pid, b) -> off }
-    }
-    val bucketTotals: Map[Int, Long] =
-      totals.groupBy(_._2).map { case (b, rows) => b -> rows.map(_._3).sum }
-    val offB = spark.sparkContext.broadcast(offsets)
-    val totB = spark.sparkContext.broadcast(bucketTotals)
-    val outSchema = StructType(Seq(
-      StructField(idCol, LongType, nullable = false),
-      StructField("bucket_id", IntegerType, nullable = false),
-      StructField("bk_rank", LongType, nullable = false),
-      StructField("batch_id", LongType, nullable = true)))
-    val bs = batchSize.toLong
-    ranged.sortWithinPartitions(col("bucket_id"), col("__hs"), col(idCol))
-      .mapPartitions { it =>
-        var curBucket = Int.MinValue
-        var acc = 0L
-        it.map { r =>
-          val pid = r.getAs[Int]("__pid")
-          val b = r.getAs[Int]("bucket_id")
-          if (b != curBucket) {
-            curBucket = b; acc = offB.value.getOrElse((pid, b), 0L)
-          }
-          val rank0 = acc; acc += 1
-          val nFull = (totB.value.getOrElse(b, 0L) / bs) * bs
-          val batch: java.lang.Long =
-            if (rank0 < nFull) java.lang.Long.valueOf(rank0 / bs) else null
-          org.apache.spark.sql.Row(r.getAs[Long](idCol), b, rank0, batch)
-        }
-      }(org.apache.spark.sql.Encoders.row(outSchema))
+    val bs = lit(batchSize.toLong)
+    Sorted.runningTotals(assigned, Seq("bucket_id"), Seq(col("__hs"), col(idCol)), Seq("n" -> lit(1L)))
+      // ids are non-null by contract; the coalesce keeps the column non-null
+      .select(coalesce(col(idCol), lit(0L)).as(idCol), col("bucket_id"), col("n_before").as("bk_rank"),
+        // drop_last: ranks past the last full batch get no batch
+        when(col("n_before") < call_function("div", col("n_total"), bs) * bs,
+          call_function("div", col("n_before"), bs)).as("batch_id"))
   }
 
   /** Image near-duplicate PAIRS by perceptual hash: 4x16-bit banded Hamming

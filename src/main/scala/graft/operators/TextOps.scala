@@ -269,130 +269,41 @@ object TextOps {
       paySchema.map(f => f.copy(name = s"${f.name}_a")) ++
       paySchema.map(f => f.copy(name = s"${f.name}_b")))
     val pairRows = parted.mapPartitions { it =>
-      new Iterator[org.apache.spark.sql.Row] {
-        // states: CONSUME (filling buf for the current bucket),
-        // EMIT_SMALL (pair cursor i<j over buf), STAR (bucket overflowed cap:
-        // members stream out as (rep, id) immediately; marker row on close)
-        private val ids = new scala.collection.mutable.ArrayBuffer[Long](64)
-        private val pays =
-          if (nPay > 0) new scala.collection.mutable.ArrayBuffer[Array[Any]](64) else null
-        private val curKey = new Array[Any](nKeys)
-        private var inBucket = false
-        private var star = false
-        private var starN = 0L
-        private var rep = 0L
-        private var repPay: Array[Any] = null
-        private var emitI = 0
-        private var emitJ = 0
-        private var emitting = false
-        private var pendingRow: org.apache.spark.sql.Row = null
-        private var out: org.apache.spark.sql.Row = null
-
-        private def payOf(r: org.apache.spark.sql.Row): Array[Any] = {
-          val a = new Array[Any](nPay)
-          var i = 0
-          while (i < nPay) { a(i) = r.get(1 + nKeys + i); i += 1 }
-          a
-        }
-        private def mk(idA: Long, idB: Long, bn: Long,
-                       pA: Array[Any], pB: Array[Any]): org.apache.spark.sql.Row = {
-          val vals = new Array[Any](3 + 2 * nPay)
-          vals(0) = idA; vals(1) = idB; vals(2) = bn
-          var i = 0
-          while (i < nPay) { vals(3 + i) = pA(i); vals(3 + nPay + i) = pB(i); i += 1 }
-          new org.apache.spark.sql.catalyst.expressions.GenericRow(vals)
-        }
-        private val noPay = new Array[Any](0)
-        private def payAt(i: Int): Array[Any] = if (nPay > 0) pays(i) else noPay
-        private def add(r: org.apache.spark.sql.Row): Unit = {
-          ids += r.getLong(0)
-          if (nPay > 0) pays += payOf(r)
-        }
-        private def clearBuf(): Unit = { ids.clear(); if (nPay > 0) pays.clear() }
-        private def sameKey(r: org.apache.spark.sql.Row): Boolean = {
-          var i = 0
-          while (i < nKeys) { if (r.get(i + 1) != curKey(i)) return false; i += 1 }
-          true
-        }
-        private def loadKey(r: org.apache.spark.sql.Row): Unit = {
-          var i = 0
-          while (i < nKeys) { curKey(i) = r.get(i + 1); i += 1 }
-        }
-        /** Close the current bucket: arm the pair cursor (small) or produce
-          * the star marker row (degenerate). */
-        private def closeBucket(): Unit = {
-          if (star) {
-            out = mk(rep, rep, starN, repPay, repPay)
-            star = false; starN = 0L
-          } else if (ids.length > 1) {
-            emitting = true; emitI = 0; emitJ = 1
-          }
-          inBucket = false
-          if (!emitting) clearBuf()
-        }
-        private def advance(): Unit = {
-          while (out == null) {
-            if (emitting) {
-              if (emitI == -1) {
-                // star-drain: the buffered tail flows out as (rep, member)
-                if (emitJ < ids.length) {
-                  val j = emitJ; emitJ += 1
-                  if (ids(j) != rep &&
-                      (keepFn == null || keepFn(repPay, payAt(j))))
-                    out = mk(rep, ids(j), 0L, repPay, payAt(j))
-                } else { emitting = false; clearBuf() }
-              } else {
-                // strict i<j over the ascending-sorted ids; equal ids (callers
-                // never produce them, but be safe) skip like the old a<b filter
-                if (ids(emitI) != ids(emitJ) &&
-                    (keepFn == null || keepFn(payAt(emitI), payAt(emitJ))))
-                  out = mk(ids(emitI), ids(emitJ), 0L, payAt(emitI), payAt(emitJ))
-                emitJ += 1
-                if (emitJ >= ids.length) { emitI += 1; emitJ = emitI + 1 }
-                if (emitI >= ids.length - 1) { emitting = false; clearBuf() }
-              }
-            } else if (pendingRow != null) {
-              val r = pendingRow; pendingRow = null
-              loadKey(r); inBucket = true
-              add(r)
-            } else if (it.hasNext) {
-              val r = it.next()
-              if (!inBucket) {
-                loadKey(r); inBucket = true
-                add(r)
-              } else if (sameKey(r)) {
-                if (star) {
-                  val id = r.getLong(0)
-                  starN += 1
-                  if (id != rep) {
-                    val p = payOf(r)
-                    if (keepFn == null || keepFn(repPay, p))
-                      out = mk(rep, id, 0L, repPay, p)
-                  }
-                } else {
-                  add(r)
-                  if (ids.length > cap) {
-                    // overflow: degrade to a star — drain the buffered tail
-                    // through the pending emitter as (rep, member) rows
-                    star = true; rep = ids.head
-                    repPay = payAt(0)
-                    starN = ids.length.toLong
-                    emitting = true; emitI = -1; emitJ = 1 // star-drain mode
-                  }
-                }
-              } else {
-                pendingRow = r
-                closeBucket()
-              }
-            } else if (inBucket) {
-              closeBucket()
-            } else return
-          }
-        }
-        def hasNext: Boolean = { if (out == null) advance(); out != null }
-        def next(): org.apache.spark.sql.Row = {
-          if (out == null) advance()
-          val r = out; out = null; r
+      // a member is its id and its payload values
+      def member(r: org.apache.spark.sql.Row): (Long, Array[Any]) =
+        (r.getLong(0), Array.tabulate[Any](nPay)(i => r.get(1 + nKeys + i)))
+      def mk(a: (Long, Array[Any]), b: (Long, Array[Any]), bn: Long): org.apache.spark.sql.Row = {
+        val vals = new Array[Any](3 + 2 * nPay)
+        vals(0) = a._1; vals(1) = b._1; vals(2) = bn
+        System.arraycopy(a._2, 0, vals, 3, nPay)
+        System.arraycopy(b._2, 0, vals, 3 + nPay, nPay)
+        new org.apache.spark.sql.catalyst.expressions.GenericRow(vals)
+      }
+      // a pair is kept when its ids differ (callers never repeat an id within
+      // a bucket, but be safe) and the caller's predicate holds
+      def kept(a: (Long, Array[Any]), b: (Long, Array[Any])): Boolean =
+        a._1 != b._1 && (keepFn == null || keepFn(a._2, b._2))
+      Sorted.runs(it)(r => Seq.tabulate(nKeys)(i => r.get(1 + i))).flatMap { case (_, rows) =>
+        val members = rows.map(member)
+        val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, Array[Any])]
+        while (buf.length <= cap && members.hasNext) buf += members.next()
+        if (buf.length <= cap) {
+          // the pairwise set, i < j over the ascending ids
+          for {
+            i <- buf.indices.iterator
+            j <- (i + 1 until buf.length).iterator
+            if kept(buf(i), buf(j))
+          } yield mk(buf(i), buf(j), 0L)
+        } else {
+          // a star: every other member streams out as (rep, member), then
+          // one marker row (id_a = id_b = rep, __bn = bucket size), built
+          // only once the tail is read (`++` takes its operand by name)
+          val rep = buf.head
+          var n = 1L
+          (buf.iterator.drop(1) ++ members).flatMap { m =>
+            n += 1
+            if (kept(rep, m)) Iterator.single(mk(rep, m, 0L)) else Iterator.empty
+          } ++ Iterator.single(mk(rep, rep, n))
         }
       }
     }(org.apache.spark.sql.Encoders.row(outSchema))
@@ -746,47 +657,17 @@ object TextOps {
    * Sequence-packing plan (GPT-style): documents are logically concatenated
    * in ascending `idCol` order and cut into fixed `chunkTokens` windows; each
    * document is assigned its global token offset and the [first, last] chunk
-   * it lands in. The global running sum is a DISTRIBUTED prefix sum — range
-   * partition by id, per-partition totals (one tiny aggregate, collected:
-   * O(partitions) longs), broadcast cumulative offsets, then a
-   * partition-LOCAL ordered window — never a global single-task window, so
-   * the plan is the same shape at 10^12 documents. Pure integer arithmetic:
-   * the oracle replays it as one SUM() OVER (ORDER BY id).
+   * it lands in. The global running sum is [[Sorted.runningTotals]]'s
+   * distributed prefix sum over the range-partitioned ids, never a global
+   * single-task window, so the plan is the same shape at 10^12 documents.
+   * Pure integer arithmetic: the oracle replays it as one
+   * SUM() OVER (ORDER BY id).
    */
   def packPlan(df: DataFrame, idCol: String, tokenCol: String,
                chunkTokens: Int): DataFrame = {
-    val spark = df.sparkSession
-    val parts = math.max(spark.sessionState.conf.numShufflePartitions, 1)
-    val ranged = df.select(col(idCol), col(tokenCol).cast("long").as("__n"))
-      .repartitionByRange(parts, col(idCol))
-      .withColumn("__pid", spark_partition_id())
-      .persist()
-    // partition totals -> exclusive offsets (partition ids are ordered by the
-    // range partitioner, so offsets accumulate in id order)
-    val totals = ranged.groupBy("__pid").agg(sum(col("__n")).as("__t"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
-    val offsets = totals.scanLeft((0, 0L)) { case ((_, acc), (pid, t)) => (pid, acc + t) }
-      .init.map(_._2).zip(totals.map(_._1)).map { case (off, pid) => pid -> off }.toMap
-    val offB = spark.sparkContext.broadcast(offsets)
-    // partition-LOCAL cumsum in one mapPartitions pass over the range-sorted
-    // rows: a Window.partitionBy(__pid) here would re-Exchange the whole
-    // table to hashpartitioning(__pid) on top of the range shuffle
-    // (plan-probed) — sortWithinPartitions + an imperative running sum keeps
-    // the range partitioning and adds ZERO shuffle
-    val sorted = ranged.sortWithinPartitions(col(idCol))
-    val outSchema = org.apache.spark.sql.types.StructType(sorted.schema.fields :+
-      org.apache.spark.sql.types.StructField("cum_before",
-        org.apache.spark.sql.types.LongType, nullable = false))
-    val cum = sorted.mapPartitions { it =>
-      var acc = Option.empty[Long]
-      it.map { r =>
-        val n = r.getAs[Long]("__n")
-        val before = acc.getOrElse(offB.value.getOrElse(r.getAs[Int]("__pid"), 0L))
-        acc = Some(before + n)
-        org.apache.spark.sql.Row.fromSeq(r.toSeq :+ before)
-      }
-    }(org.apache.spark.sql.Encoders.row(outSchema))
-    cum
+    val tokens = df.select(col(idCol), col(tokenCol).cast("long").as("__n"))
+    Sorted.runningTotals(tokens, Nil, Seq(col(idCol)), Seq("__n" -> col("__n")))
+      .withColumnRenamed("__n_before", "cum_before")
       // integral `div`, not floor(x / c): double division loses exactness
       // past 2^53 total tokens (~10^15 — a real corpus size)
       .withColumn("chunk_first", call_function("div", col("cum_before"), lit(chunkTokens.toLong)))

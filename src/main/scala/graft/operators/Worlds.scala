@@ -29,16 +29,6 @@ object Worlds {
       .where(col("__rn") === 1).drop("__rn", "__prec")
   }
 
-  /** Merge many worlds, first wins on id collisions (b6 MergeFeatures order). */
-  def merge(worlds: Seq[DataFrame], idCols: Seq[String]): DataFrame = {
-    val tagged = worlds.zipWithIndex.map { case (wdf, i) =>
-      wdf.withColumn("__prec", lit(i))
-    }.reduce(_ unionByName _)
-    val w = Window.partitionBy(idCols.map(col): _*).orderBy(col("__prec").asc)
-    tagged.withColumn("__rn", row_number().over(w))
-      .where(col("__rn") === 1).drop("__rn", "__prec")
-  }
-
   /** add-tag (api/functions/change.go:20-42): upsert one key in the tags map. */
   def addTag(features: DataFrame, key: String, value: Column): DataFrame =
     features.withColumn("tags",

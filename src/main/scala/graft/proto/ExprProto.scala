@@ -25,6 +25,8 @@ object ExprProto {
 
   // ---- wire primitives -------------------------------------------------------
 
+  /** The protobuf wire writer: NodeProto replies here and MVT tiles
+    * (render.Mvt) are written with it. */
   final class Writer {
     private val buf = new java.io.ByteArrayOutputStream()
     def varint(v: Long): Unit = {
@@ -42,6 +44,12 @@ object ExprProto {
     }
     def bytes(field: Int, b: Array[Byte]): Unit = { key(field, 2); varint(b.length); buf.write(b) }
     def string(field: Int, s: String): Unit = bytes(field, s.getBytes("UTF-8"))
+    /** A packed repeated varint field: one length-delimited run of varints. */
+    def packed(field: Int, vs: Seq[Long]): Unit = {
+      val w = new Writer
+      vs.foreach(w.varint)
+      bytes(field, w.result)
+    }
     def result: Array[Byte] = buf.toByteArray
   }
 
@@ -272,10 +280,7 @@ object ExprProto {
     w.result
   }
 
-  /** Decode NodeProto bytes back to a shell expression. */
-  def decode(bytes: Array[Byte]): Shell.Expr = decodeNode(new Reader(bytes))
-
-  private def decodeNode(r: Reader): Shell.Expr = {
+  private[graft] def decodeNode(r: Reader): Shell.Expr = {
     var out: Shell.Expr = Shell.SymbolE("")
     while (r.hasNext) {
       val (f, wt) = r.readKey()

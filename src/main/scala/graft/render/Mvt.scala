@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.locationtech.jts.geom._
 import graft.core.GeoOps
+import graft.proto.ExprProto.Writer
+import graft.operators.Sorted
 
 /**
  * Mapbox Vector Tile encoder — the rendering sink of the reference
@@ -60,27 +62,6 @@ object Mvt {
       }
     }
     pts.indices.collect { case i if keep(i) => pts(i) }.toArray
-  }
-
-  // ---- protobuf wire writer ----
-
-  final class Writer {
-    private val buf = new java.io.ByteArrayOutputStream()
-    def varint(v: Long): Unit = {
-      var x = v
-      while ((x & ~0x7fL) != 0) { buf.write(((x & 0x7f) | 0x80).toInt); x >>>= 7 }
-      buf.write(x.toInt)
-    }
-    def key(field: Int, wire: Int): Unit = varint((field << 3) | wire)
-    def bytes(field: Int, b: Array[Byte]): Unit = { key(field, 2); varint(b.length); buf.write(b) }
-    def string(field: Int, s: String): Unit = bytes(field, s.getBytes("UTF-8"))
-    def uint(field: Int, v: Long): Unit = { key(field, 0); varint(v) }
-    def packed(field: Int, vs: Seq[Long]): Unit = {
-      val w = new Writer
-      vs.foreach(w.varint)
-      bytes(field, w.result)
-    }
-    def result: Array[Byte] = buf.toByteArray
   }
 
   @inline def zigzag(v: Long): Long = (v << 1) ^ (v >> 63)
@@ -242,45 +223,14 @@ object Mvt {
       .repartition(np, col("__tile"))
       .sortWithinPartitions(col("__tile"), col("layer"), col("srank"), col("fid"))
       .mapPartitions { it =>
-        new Iterator[org.apache.spark.sql.Row] {
-          private var curTile = 0L
-          private var haveTile = false
-          private var curLayer: String = null
-          private var layerKept = 0
-          private val fs = scala.collection.mutable.ArrayBuffer.empty[TileFeature]
-          private var out: org.apache.spark.sql.Row = null
-          private def close(): org.apache.spark.sql.Row = {
-            val z = GeoOps.tileIdZ(curTile)
-            val tx = GeoOps.tileIdX(curTile)
-            val ty = GeoOps.tileIdY(curTile)
-            val row = org.apache.spark.sql.Row(z, tx, ty,
-              encodeTile(z, tx, ty, fs.toSeq, rankB))
-            fs.clear(); curLayer = null; layerKept = 0
-            row
-          }
-          private def advance(): Unit = {
-            while (out == null && (it.hasNext || haveTile)) {
-              if (it.hasNext) {
-                val r = it.next()
-                val tile = r.getLong(0)
-                if (!haveTile) { haveTile = true; curTile = tile }
-                else if (tile != curTile) { out = close(); curTile = tile }
-                val layer = r.getString(2)
-                if (layer != curLayer) { curLayer = layer; layerKept = 0 }
-                if (layerKept < MaxFeaturesPerTile) {
-                  layerKept += 1
-                  fs += TileFeature(r.getLong(1), layer, r.getAs[Array[Byte]](3),
-                    Option(r.getAs[scala.collection.Map[String, String]](4))
-                      .map(_.toMap).getOrElse(Map.empty), r.getInt(5))
-                }
-              } else { out = close(); haveTile = false }
-            }
-          }
-          def hasNext: Boolean = { if (out == null) advance(); out != null }
-          def next(): org.apache.spark.sql.Row = {
-            if (out == null) advance()
-            val r = out; out = null; r
-          }
+        Sorted.runs(it)(_.getLong(0)).map { case (tile, rows) =>
+          val fs = Sorted.runs(rows)(_.getString(2)).flatMap(_._2.take(MaxFeaturesPerTile))
+            .map(r => TileFeature(r.getLong(1), r.getString(2), r.getAs[Array[Byte]](3),
+              Option(r.getAs[scala.collection.Map[String, String]](4))
+                .map(_.toMap).getOrElse(Map.empty), r.getInt(5)))
+            .toSeq
+          val (z, tx, ty) = (GeoOps.tileIdZ(tile), GeoOps.tileIdX(tile), GeoOps.tileIdY(tile))
+          org.apache.spark.sql.Row(z, tx, ty, encodeTile(z, tx, ty, fs, rankB))
         }
       }(org.apache.spark.sql.Encoders.row(outSchema))
   }

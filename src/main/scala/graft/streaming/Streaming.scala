@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.operators.Sorted
 
 /**
  * Event-time aggregation over the events table. The reference itself is
@@ -53,38 +54,21 @@ object Streaming {
     src.repartition(np, col("user_id"))
       .sortWithinPartitions("user_id", "ts")
       .mapPartitions { it =>
-        new Iterator[org.apache.spark.sql.Row] {
-          private var haveUser = false
-          private var user: Any = null
-          private var idx = 0L
-          private var n = 0L
-          private var tStart: java.time.LocalDateTime = null
-          private var tLast: java.time.LocalDateTime = null
-          private var out: org.apache.spark.sql.Row = null
-          private def close(): org.apache.spark.sql.Row =
-            org.apache.spark.sql.Row(user, idx, n, tStart, tLast)
-          private def advance(): Unit = {
-            while (out == null && (it.hasNext || haveUser)) {
-              if (it.hasNext) {
-                val r = it.next()
-                val u = r.get(0)
-                val t = r.getAs[java.time.LocalDateTime](1)
-                if (!haveUser) {
-                  haveUser = true; user = u; idx = 0L; n = 1L; tStart = t; tLast = t
-                } else if (u != user) {
-                  out = close()
-                  user = u; idx = 0L; n = 1L; tStart = t; tLast = t
-                } else if (micros(t) - micros(tLast) > gap) {
-                  out = close()
-                  idx += 1; n = 1L; tStart = t; tLast = t
-                } else { n += 1L; tLast = t }
-              } else { out = close(); haveUser = false }
-            }
-          }
-          def hasNext: Boolean = { if (out == null) advance(); out != null }
-          def next(): org.apache.spark.sql.Row = {
-            if (out == null) advance()
-            val r = out; out = null; r
+        Sorted.runs(it)(_.get(0)).flatMap { case (user, events) =>
+          // a user's session index grows at each gap of more than 30 minutes
+          var idx = -1L
+          var last = 0L
+          Sorted.runs(events) { r =>
+            val t = micros(r.getAs[java.time.LocalDateTime](1))
+            if (idx < 0 || t - last > gap) idx += 1
+            last = t
+            idx
+          }.map { case (session, rows) =>
+            val first = rows.next().getAs[java.time.LocalDateTime](1)
+            var n = 1L
+            var end = first
+            rows.foreach { r => n += 1; end = r.getAs[java.time.LocalDateTime](1) }
+            org.apache.spark.sql.Row(user, session, n, first, end)
           }
         }
       }(org.apache.spark.sql.Encoders.row(outSchema))

@@ -5,6 +5,14 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class CellsSpec extends AnyFunSuite {
 
+  /** True if `anc` is `cell` or an ancestor of it. */
+  private def contains(anc: Long, cell: Long): Boolean = {
+    val la = Cells.level(anc); val lc = Cells.level(cell)
+    la <= lc && Cells.parentAt(cell, la) == anc
+  }
+
+  private def parent(cell: Long): Long = Cells.parentAt(cell, Cells.level(cell) - 1)
+
   // deterministic property sampling (seeded; no external generator lib)
   private def samples(n: Int = 500): Seq[(Double, Double, Int)] = {
     val rnd = new scala.util.Random(42)
@@ -44,7 +52,7 @@ class CellsSpec extends AnyFunSuite {
       val la = l / 2; val lc = math.max(l, la + 1)
       val anc = Cells.cellOf(lat, lng, la)
       val cell = Cells.cellOf(lat, lng, lc)
-      assert(Cells.contains(anc, cell))
+      assert(contains(anc, cell))
     }
   }
 
@@ -52,7 +60,7 @@ class CellsSpec extends AnyFunSuite {
     val c = Cells.cellOf(51.53, -0.12, 10)
     val kids = Cells.children(c)
     assert(kids.length == 4 && kids.distinct.length == 4)
-    kids.foreach(k => assert(Cells.parent(k) == c))
+    kids.foreach(k => assert(parent(k) == c))
   }
 
   test("neighbor ring has 8r cells in the grid interior") {
@@ -73,7 +81,7 @@ class CellsSpec extends AnyFunSuite {
       assert(cover.nonEmpty && cover.length <= 5)
       // pairwise disjoint
       for (a <- cover; b <- cover if a != b)
-        assert(!Cells.contains(a, b) && !Cells.contains(b, a), s"cells $a,$b overlap")
+        assert(!contains(a, b) && !contains(b, a), s"cells $a,$b overlap")
       // superset: sampled interior points must land under some covering cell
       val env = g.getEnvelopeInternal
       val rnd = new scala.util.Random(42)
@@ -82,7 +90,7 @@ class CellsSpec extends AnyFunSuite {
         val lat = env.getMinY + rnd.nextDouble() * env.getHeight
         if (g.covers(GeoOps.point(lat, lng))) {
           val pc = Cells.cellOf(lat, lng, Cells.MaxLevel)
-          assert(cover.exists(c => Cells.contains(c, pc)),
+          assert(cover.exists(c => contains(c, pc)),
             s"point ($lat,$lng) inside geometry but outside covering of $wkt")
         }
       }

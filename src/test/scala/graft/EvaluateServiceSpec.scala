@@ -140,7 +140,7 @@ class EvaluateServiceSpec extends SparkSuite {
       val frames = grpcFrames(postGrpcWeb(port, "/b6.grpc.B6/Evaluate", grpcFrame(0, req)))
       val trailer = new String(frames.collect { case (f, p) if (f & 0x80) != 0 => p }.head, "UTF-8")
       assert(trailer.contains("grpc-status: 0"), trailer)
-      val result = ExprProto.decode(ExprProtoClient.decodeEvaluateResponse(
+      val result = ExprProtoClient.decode(ExprProtoClient.decodeEvaluateResponse(
         frames.collectFirst { case (f, p) if (f & 0x80) == 0 => p }.get))
       assert(result == IntE(42), result)
 
@@ -150,7 +150,7 @@ class EvaluateServiceSpec extends SparkSuite {
           CallE(SymbolE("find"), List(QueryE(graft.query.Keyed("#amenity"))))),
           pipelined = true), "1", None)
       val countFrames = grpcFrames(postGrpcWeb(port, "/b6.grpc.B6/Evaluate", grpcFrame(0, count)))
-      val countResult = ExprProto.decode(ExprProtoClient.decodeEvaluateResponse(
+      val countResult = ExprProtoClient.decode(ExprProtoClient.decodeEvaluateResponse(
         countFrames.collectFirst { case (f, p) if (f & 0x80) == 0 => p }.get))
       assert(countResult.isInstanceOf[IntE] && countResult.asInstanceOf[IntE].v > 0, countResult)
 
@@ -287,7 +287,7 @@ class EvaluateServiceSpec extends SparkSuite {
         pipelined = true), "1", None)
       val (trailer, msg) = grpcWeb(port, "/b6.grpc.B6/Evaluate", req)
       assert(trailer.contains("grpc-status: 0"), trailer)
-      assert(ExprProto.decode(ExprProtoClient.decodeEvaluateResponse(msg.get)) == IntE(cafes))
+      assert(ExprProtoClient.decode(ExprProtoClient.decodeEvaluateResponse(msg.get)) == IntE(cafes))
 
       val scenario = ("collection", "graft/sf-grpcweb", 4L)
       sfReg.findOrCreate(WorldId(scenario._1, scenario._2, scenario._3))

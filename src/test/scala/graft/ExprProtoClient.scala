@@ -7,6 +7,9 @@ import graft.shell.Shell
   * caller encodes and decodes around the server's [[ExprProto]] codec. */
 object ExprProtoClient {
 
+  /** Decode NodeProto bytes back to a shell expression. */
+  def decode(bytes: Array[Byte]): Shell.Expr = ExprProto.decodeNode(new ExprProto.Reader(bytes))
+
   /** EvaluateRequestProto: request=1 (NodeProto), version=2, root=3. */
   def encodeEvaluateRequest(node: Shell.Expr, version: String,
                             root: Option[(String, String, Long)]): Array[Byte] = {

@@ -37,7 +37,7 @@ class ExprProtoSpec extends AnyFunSuite {
     corpus.foreach { src =>
       val ast = Shell.parse(src)
       val bytes = ExprProto.encode(ast)
-      val back = ExprProto.decode(bytes)
+      val back = ExprProtoClient.decode(bytes)
       assert(back == ast, s"AST round-trip failed for: $src\n  got $back\n  want $ast")
       val bytes2 = ExprProto.encode(back)
       assert(java.util.Arrays.equals(bytes, bytes2),
@@ -55,7 +55,7 @@ class ExprProtoSpec extends AnyFunSuite {
       Shell.LatLngE(0.0, -99.1663))
     zeros.foreach { ast =>
       val bytes = ExprProto.encode(ast)
-      val back = ExprProto.decode(bytes)
+      val back = ExprProtoClient.decode(bytes)
       assert(back == ast, s"zero-value round-trip failed: $ast -> $back")
       assert(java.util.Arrays.equals(bytes, ExprProto.encode(back)))
     }
@@ -76,7 +76,7 @@ class ExprProtoSpec extends AnyFunSuite {
     assert(noRoot.isEmpty)
     // response wraps the result NodeProto (api.proto:249-251)
     val resp = ExprProto.encodeEvaluateResponse(ExprProto.encode(Shell.IntE(13)))
-    assert(ExprProto.decode(ExprProtoClient.decodeEvaluateResponse(resp)) == Shell.IntE(13))
+    assert(ExprProtoClient.decode(ExprProtoClient.decodeEvaluateResponse(resp)) == Shell.IntE(13))
     // DeleteWorldRequestProto / ListWorldsResponseProto (api.proto:253-263)
     assert(ExprProto.decodeDeleteWorldRequest(
       ExprProtoClient.encodeDeleteWorldRequest(("area", "osm", 42L))) == (("area", "osm", 42L)))
@@ -98,7 +98,7 @@ class ExprProtoSpec extends AnyFunSuite {
     // the field after the literal
     val shortDouble = Array[Byte](0x12, 0x08, 0x29, 0, 0, 0, 0, 0, 0, 0xf0.toByte) ++
       ExprProto.encode(Shell.SymbolE("go"))
-    intercept[IllegalArgumentException](ExprProto.decode(shortDouble))
+    intercept[IllegalArgumentException](ExprProtoClient.decode(shortDouble))
   }
 
   test("result-only literal arms: bool, nil, collection, applied change") {

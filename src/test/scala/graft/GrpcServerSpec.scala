@@ -95,7 +95,7 @@ class GrpcServerSpec extends SparkSuite {
       assert(hdrs.get("content-type").contains("application/grpc"), hdrs)
       assert(hdrs.get("grpc-status").contains("0"), hdrs)
       val frames = EvaluateService.grpcFrames(body)
-      val result = ExprProto.decode(ExprProtoClient.decodeEvaluateResponse(
+      val result = ExprProtoClient.decode(ExprProtoClient.decodeEvaluateResponse(
         frames.collectFirst { case (f, p) if (f & 0x80) == 0 => p }.get))
       assert(result == IntE(42), result)
 
@@ -107,7 +107,7 @@ class GrpcServerSpec extends SparkSuite {
           pipelined = true), "1", None)
       val (hdrs2, body2) = unaryCall(conn, port, "/b6.grpc.B6/Evaluate", count)
       assert(hdrs2.get("grpc-status").contains("0"), hdrs2)
-      val countResult = ExprProto.decode(ExprProtoClient.decodeEvaluateResponse(
+      val countResult = ExprProtoClient.decode(ExprProtoClient.decodeEvaluateResponse(
         EvaluateService.grpcFrames(body2)
           .collectFirst { case (f, p) if (f & 0x80) == 0 => p }.get))
       assert(countResult.isInstanceOf[IntE] && countResult.asInstanceOf[IntE].v > 0, countResult)
@@ -148,7 +148,7 @@ class GrpcServerSpec extends SparkSuite {
         pipelined = true), "1", None)
       val (hdrs, body) = unaryCall(conn, port, "/b6.grpc.B6/Evaluate", req)
       assert(hdrs.get("grpc-status").contains("0"), hdrs)
-      val result = ExprProto.decode(ExprProtoClient.decodeEvaluateResponse(
+      val result = ExprProtoClient.decode(ExprProtoClient.decodeEvaluateResponse(
         EvaluateService.grpcFrames(body).collectFirst { case (f, p) if (f & 0x80) == 0 => p }.get))
       assert(result == IntE(cafes), result)
 

