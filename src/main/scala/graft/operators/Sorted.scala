@@ -8,8 +8,9 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
 /**
  * The two sorted-order walks graft's operators share. The reference answers
  * queries by walking sorted iterators (its query algebra compiles to
- * sorted-iterator set operations over posting lists, b6/search/); graft does
- * the same walk inside Spark partitions:
+ * sorted-iterator set operations over posting lists, e.g. the leapfrog
+ * intersection in search/intersection.go:17-85); graft does the same walk
+ * inside Spark partitions:
  *  - [[runs]] splits a key-sorted partition into runs of equal keys
  *    (sessions per user, features per tile and layer, members per bucket);
  *  - [[runningTotals]] numbers rows globally: each row gets the sums of its
@@ -77,6 +78,7 @@ object Sorted {
     val spark = rows.sparkSession
     val np = math.max(spark.sessionState.conf.numShufflePartitions, 1)
     val sortKey = restart.map(col) ++ order
+    val m = weights.length
     val ranged = rows.repartitionByRange(np, sortKey: _*)
       .withColumn("__pid", spark_partition_id())
       .persist()
@@ -88,7 +90,7 @@ object Sorted {
     val keyOf: Row => Seq[Any] = r => (0 until nKey).map(r.get)
     val offsets = Map.newBuilder[Seq[Any], Array[Long]]
     val totals = perPart.groupBy(r => keyOf(r).tail).map { case (k, parts) =>
-      val acc = new Array[Long](weights.length)
+      val acc = new Array[Long](m)
       parts.sortBy(_.getInt(0)).foreach { r =>
         offsets += keyOf(r) -> acc.clone()
         acc.indices.foreach(i => acc(i) += r.getLong(nKey + i))
@@ -98,12 +100,11 @@ object Sorted {
     val lookup = spark.sparkContext.broadcast((offsets.result(), totals))
     val n = rows.schema.length
     val weighted = ranged.select(col("*") +:
-      weights.indices.map(i => weights(i)._2.cast("long").as(s"__w$i")): _*)
+      weights.zipWithIndex.map { case ((_, w), i) => w.cast("long").as(s"__w$i") }: _*)
     val outSchema = StructType(rows.schema.fields ++
       weights.map(w => StructField(s"${w._1}_before", LongType, nullable = false)) ++
       weights.map(w => StructField(s"${w._1}_total", LongType, nullable = false)))
     val keyIdx = n +: restart.map(rows.schema.fieldIndex)
-    val m = weights.length
     weighted.sortWithinPartitions(sortKey: _*).mapPartitions { it =>
       val (offs, tots) = lookup.value
       runs(it)(r => keyIdx.map(r.get)).flatMap { case (k, run) =>
